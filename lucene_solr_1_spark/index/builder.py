@@ -315,7 +315,7 @@ def update_documents(
     keys = tuple(
         r[0] for r in corpus_df.select(key_field).distinct().collect()
     )
-    pairs = dels.pairs_for_terms(spark, index_dir, manifest, key_field, keys)
+    pairs = dels.pairs_for_terms(index_dir, manifest, key_field, keys)
     # build the new segments first (resumable side files), commit last
     pid_offset = max(s["partition_id"] for s in manifest["segments"]) + 1
     isrt = manifest.get("index_sort")

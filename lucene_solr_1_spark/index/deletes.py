@@ -25,10 +25,11 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
+from ..kernels.forcodec import decode_doc_deltas
 from . import manifest as mf
-from .builder import postings_paths
+from . import segfiles
 
 
 def _deletes_dir(index_dir: str) -> str:
@@ -67,41 +68,37 @@ def _publish(index_dir: str, manifest: dict, pairs: pd.DataFrame, reason: str) -
 
 
 def pairs_for_terms(
-    spark: SparkSession, index_dir: str, manifest: dict, field: str,
-    terms: tuple,
+    index_dir: str, manifest: dict, field: str, terms: tuple,
 ) -> pd.DataFrame:
     """(segment_id, doc_id) pairs of every doc whose `field` contains any
-    of `terms` — the postings-decode half of deleteDocuments(Term...).
-    Distributed: the terms' posting rows (pruned by parquet predicate
-    pushdown) are decoded in an Arrow UDF; only the matched doc lists
-    come back to the driver (the tombstone set)."""
-    post = spark.read.parquet(*postings_paths(index_dir, manifest))
-
-    def _decode(batches):
-        from ..kernels.forcodec import decode_all
-
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                docs = np.cumsum(
-                    decode_all(bytes(r.docs_enc), np.asarray(r.docs_offsets))
-                )
-                yield pd.DataFrame({"segment_id": r.segment_id, "doc_id": docs})
-
-    return (
-        post.where((F.col("field") == field) & (F.col("term").isin(list(terms))))
-        .mapInPandas(_decode, schema="segment_id string, doc_id bigint")
-        .toPandas()
-        .drop_duplicates()
+    of `terms` — the postings-decode half of deleteDocuments(Term...),
+    resolved per segment on the driver like Lucene's writer does: the
+    terms' posting rows are read from the segment files
+    (index/segfiles.py) and their doc streams decoded. No Spark job."""
+    rows = segfiles.read_postings(
+        index_dir, manifest, {(field, t) for t in terms},
+        ["segment_id", "docs_enc", "docs_offsets"],
     )
+    docs = [
+        decode_doc_deltas(bytes(enc), np.asarray(offs))
+        for enc, offs in zip(rows["docs_enc"], rows["docs_offsets"])
+    ]
+    return pd.DataFrame({
+        "segment_id": np.repeat(
+            rows["segment_id"].to_numpy(object), [len(d) for d in docs]
+        ),
+        "doc_id": np.concatenate(docs) if docs else np.empty(0, np.int64),
+    }).drop_duplicates(ignore_index=True)
 
 
 def delete_by_term(
     spark: SparkSession, index_dir: str, term: str, field: str = "content"
 ) -> dict:
     """IndexWriter.deleteDocuments(Term): tombstone every doc whose `field`
-    contains `term`."""
+    contains `term`. The term is resolved on the driver (pairs_for_terms),
+    so `spark` goes unused; it keeps the writer functions' signature."""
     manifest = mf.read_manifest(index_dir)
-    pairs = pairs_for_terms(spark, index_dir, manifest, field, (term,))
+    pairs = pairs_for_terms(index_dir, manifest, field, (term,))
     return _publish(index_dir, manifest, pairs, f"term:{term}")
 
 

@@ -49,7 +49,7 @@ def update_numeric_docvalue(
             f"available: {NUMERIC_DOCVALUES}"
         )
     manifest = mf.read_manifest(index_dir)
-    pairs = dels.pairs_for_terms(spark, index_dir, manifest, term_field, (term,))
+    pairs = dels.pairs_for_terms(index_dir, manifest, term_field, (term,))
     if len(pairs) == 0:
         return manifest
     affected = set(pairs["segment_id"])

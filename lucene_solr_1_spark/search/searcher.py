@@ -4,15 +4,18 @@ search flow:
  1. rewrite the query tree; expand multi-term queries against the term
     dictionary (a Catalyst filter over the postings table — predicate
     pushdown replaces the FST seek; TopTermsRewrite cap 1024).
- 2. global-stats barrier: per-term docFreq summed across segments (one
-    tiny aggregation), docCount/sumTTF from the manifest — then bake
-    float32 weights into a picklable plan (createWeight analog).
+ 2. global-stats barrier: per-term docFreq summed across segments, read
+    on the driver from the segment files' field/term/doc_freq columns
+    (no Spark job; index/segfiles.py), docCount/sumTTF from the manifest
+    — then bake float32 weights into a picklable plan (createWeight
+    analog).
  3. per-segment scoring: ONLY the pruned posting rows of the query terms
     reach the kernels (norm bytes ride inside each row — no norms-table
     join or shuffle); applyInPandas runs the DAAT kernel → per-segment
     top-k (IndexSearcher leaf slices on executors).
  4. driver k-way merge with the reference tie-break: score desc, then
-    global docID asc (TopDocs.merge, TopDocs.java:203-265).
+    global docID asc (TopDocs.merge, TopDocs.java:203-265); the top-k
+    stored fields are read on the driver from their segments' docmaps.
 
 TOTAL_HITS_THRESHOLD = 1000 (IndexSearcher.java:101): once a segment kernel
 has ≥1000 hits it may prune, reporting relation GREATER_THAN_OR_EQUAL_TO.
@@ -21,13 +24,14 @@ has ≥1000 hits it may prune, reporting relation GREATER_THAN_OR_EQUAL_TO.
 from __future__ import annotations
 
 import re
-from functools import partial
+from functools import cached_property, partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..index import manifest as mf
+from ..index import segfiles
 from ..index.builder import norms_paths, postings_paths
 from ..kernels import bm25
 from ..kernels.osa import osa_udf
@@ -41,6 +45,11 @@ from .query import (
 )
 
 TOTAL_HITS_THRESHOLD = 1000
+
+_STORED_COLUMNS = [
+    "segment_id", "doc_id", "repo", "path", "commit", "lang", "dl",
+    "n_chars", "content",
+]
 
 _HIT_SCHEMA = (
     "segment_id string, doc_id bigint, score float, total bigint, relation string"
@@ -179,7 +188,6 @@ class LuceneSparkSearcher:
                 f"{index_dir} was built before multi-field support "
                 "(postings lack the 'field' column) — rebuild the index"
             )
-        self._norms = spark.read.parquet(*norms_paths(index_dir, self.manifest))
         if cache_postings:
             self._postings = self._postings.cache()
         self._sentinels = None
@@ -201,6 +209,14 @@ class LuceneSparkSearcher:
             self.manifest.get("analyzer", "standard"), STANDARD
         )
 
+    @cached_property
+    def _norms(self) -> DataFrame:
+        """The docmap/doc-values table as a Spark scan, opened on first use
+        (doc-values filters, MatchAll, offsets highlighting): stored-field
+        and real-time-get reads go through index/segfiles.py instead, so
+        a plain search never pays the scan's schema-inference job."""
+        return self.spark.read.parquet(*norms_paths(self.index_dir, self.manifest))
+
     def _analyze_query(self, q: Query) -> Query:
         cfg = self.analyzer_cfg
         if not (cfg.stem or cfg.possessive or cfg.ascii_fold
@@ -214,7 +230,8 @@ class LuceneSparkSearcher:
                 or getattr(cfg, "hyphen_spec", None) is not None
                 or getattr(cfg, "char_filters", ())
                 or getattr(cfg, "token_pattern", "")
-                or getattr(cfg, "cjk_bigram", 0)):
+                or getattr(cfg, "cjk_bigram", 0)
+                or getattr(cfg, "turkish_case", False)):
             # standard/english indexes: today's raw-term behavior, exactly
             return q
         from ..index.segment import KEYWORD_FIELDS
@@ -766,41 +783,31 @@ class LuceneSparkSearcher:
 
     # ---------------- stats + search --------------------------------------
 
+    def _term_stats(self, pairs: set, column: str, cache: dict) -> dict:
+        """Per (field, term) key, `column` (doc_freq or ttf) summed over
+        every segment's posting row — read driver-side from the segment
+        files (TermStates.build seeking each leaf's term dictionary), no
+        Spark job. Cached for the searcher's lifetime: the index is
+        immutable under this manifest, so entries never go stale."""
+        missing = pairs - cache.keys()
+        if missing:
+            rows = segfiles.read_postings(
+                self.index_dir, self.manifest, missing, ["field", "term", column]
+            )
+            found = rows.groupby(["field", "term"])[column].sum()
+            for key in missing:
+                cache[key] = int(found.get(key, 0))
+        return {key: cache[key] for key in pairs}
+
     def _global_df(self, pairs: set) -> dict:
         """Global docFreq per (field, term) key (the createWeight stats
-        barrier). Cached across queries for the searcher's lifetime — the
-        TermStates / LRUQueryCache analog: repeated terms skip the
-        aggregation job entirely (the index is immutable under this
-        manifest, so entries never go stale)."""
-        missing = pairs - self._df_cache.keys()
-        if missing:
-            rows = (
-                self._postings.where(self._terms_filter(missing))
-                .groupBy("field", "term")
-                .agg(F.sum("doc_freq").alias("df"))
-                .collect()
-            )
-            found = {(r["field"], r["term"]): int(r["df"]) for r in rows}
-            for key in missing:
-                self._df_cache[key] = found.get(key, 0)
-        return {key: self._df_cache[key] for key in pairs}
+        barrier)."""
+        return self._term_stats(pairs, "doc_freq", self._df_cache)
 
     def _global_ttf(self, pairs: set) -> dict:
         """Global totalTermFreq per (field, term) key — the
-        TermStatistics.totalTermFreq stat LM similarities consume.
-        Same cached one-job aggregation shape as _global_df."""
-        missing = pairs - self._ttf_cache.keys()
-        if missing:
-            rows = (
-                self._postings.where(self._terms_filter(missing))
-                .groupBy("field", "term")
-                .agg(F.sum("ttf").alias("ttf"))
-                .collect()
-            )
-            found = {(r["field"], r["term"]): int(r["ttf"]) for r in rows}
-            for key in missing:
-                self._ttf_cache[key] = found.get(key, 0)
-        return {key: self._ttf_cache[key] for key in pairs}
+        TermStatistics.totalTermFreq stat LM similarities consume."""
+        return self._term_stats(pairs, "ttf", self._ttf_cache)
 
     def search(
         self,
@@ -854,7 +861,7 @@ class LuceneSparkSearcher:
         """Normalize the user-facing `similarity` arg into the compile_plan
         sim dict, fetching global ttf stats for LM sims (the
         CollectionStatistics.sumTotalTermFreq / TermStatistics.totalTermFreq
-        barrier — same one-job shape as _global_df)."""
+        barrier — read driver-side like _global_df)."""
         if similarity in (None, "bm25"):
             return None
         name, param = similarity, None
@@ -1656,18 +1663,10 @@ class LuceneSparkSearcher:
             )
             for sid, g in post.groupby("segment_id")
         }
-        stored = (
-            self._norms.join(
-                F.broadcast(
-                    self.spark.createDataFrame(hits[["segment_id", "doc_id"]])
-                ),
-                on=["segment_id", "doc_id"],
-            )
-            .select("segment_id", "doc_id", "path", "content",
-                    "off_starts", "off_ends")
-            .toPandas()
-            .set_index(["segment_id", "doc_id"])
-        )
+        stored = segfiles.read_docmap(
+            self.index_dir, self.manifest, hits[["segment_id", "doc_id"]],
+            ["segment_id", "doc_id", "path", "content", "off_starts", "off_ends"],
+        ).set_index(["segment_id", "doc_id"])
         # FastVectorHighlighter-grade positional highlighting
         # (highlighter/.../vectorhighlight/FastVectorHighlighter.java:277
         # posture): for phrase/span queries the highlighted region is the
@@ -1837,35 +1836,24 @@ class LuceneSparkSearcher:
     def get_documents(self, paths: tuple) -> pd.DataFrame:
         """Real-time get (solr/core/src/java/org/apache/solr/handler/
         component/RealTimeGetComponent.java use case): fetch stored fields
-        by unique key with NO search — one pushed-down docmap scan
-        (PushedFilters: path IN (...)), tombstones masked so a replaced
-        doc returns only its LIVE version. Rows come back in path order."""
-        out = (
-            self._norms.where(F.col("path").isin(list(paths)))
-            .select("segment_id", "doc_id", "repo", "path", "commit",
-                    "lang", "dl", "n_chars", "content")
-            .toPandas()
+        by unique key with NO search — a driver-side read of each docmap's
+        `path` column, tombstones masked so a replaced doc returns only
+        its LIVE version. Rows come back in path order."""
+        out = segfiles.read_docmap_by_path(
+            self.index_dir, self.manifest, paths, _STORED_COLUMNS
         )
-        if self.tombstones:
-            import numpy as _np
-
-            keep = _np.ones(len(out), dtype=bool)
-            for i, (sid, did) in enumerate(zip(out["segment_id"], out["doc_id"])):
-                dead = self.tombstones.get(sid)
-                if dead is not None and did in dead:
-                    keep[i] = False
-            out = out[keep]
+        live = [
+            did not in self.tombstones.get(sid, ())
+            for sid, did in zip(out["segment_id"], out["doc_id"])
+        ]
+        out = out[np.asarray(live, dtype=bool)]
         return out.sort_values(["path", "segment_id"]).reset_index(drop=True)
 
     def _fetch_stored(self, hits: pd.DataFrame) -> pd.DataFrame:
-        """Stored-fields retrieval = broadcast join of the tiny hit set
-        against the norms/docmap table (SURVEY.md §2.1)."""
-        pairs = hits[["segment_id", "doc_id"]]
-        hit_df = self.spark.createDataFrame(pairs)
-        out = (
-            self._norms.join(F.broadcast(hit_df), on=["segment_id", "doc_id"])
-            .select("segment_id", "doc_id", "repo", "path", "commit", "lang",
-                    "dl", "n_chars", "content")
-            .toPandas()
+        """Stored-fields retrieval (StoredFieldsReader analog): the hits'
+        docmap rows read driver-side from their segments' files — no
+        Spark job (SURVEY.md §2.1)."""
+        return segfiles.read_docmap(
+            self.index_dir, self.manifest, hits[["segment_id", "doc_id"]],
+            _STORED_COLUMNS,
         )
-        return out

@@ -4,6 +4,8 @@
    segments that hold NONE of the query's terms (sentinel dispatch).
 2. _match_all paging honors the score component of `after` and returns
    the same column order as search().
+3. An index analyzed with only `turkish_case` still re-analyzes query
+   terms (the searcher's query-analysis short-circuit lists the flag).
 """
 
 import numpy as np
@@ -79,3 +81,27 @@ def test_match_all_columns_match_search(searcher):
     assert list(ma.columns) == list(ts.columns)
     ma_empty = searcher.search(MatchAll(), k=3, with_stored=False, after=(0.0, -1))
     assert list(ma_empty.columns) == list(ts.columns)
+
+
+def test_turkish_case_only_index_reanalyzes_query_terms(spark, tmp_path, monkeypatch):
+    """A custom chain whose ONLY reshaping flag is turkish_case must still
+    route query terms through the index analyzer: I/İ are Turkish-lowered
+    at index time, so a raw query term would never match."""
+    import pandas as pd
+
+    from lucene_solr_1_spark.kernels.analyzer import ANALYZERS, AnalyzerConfig
+
+    cfg = AnalyzerConfig(turkish_case=True)
+    monkeypatch.setitem(ANALYZERS, "turkish_case_only", cfg)
+    docs = pd.DataFrame({
+        "repo": "r", "path": ["a.txt", "b.txt"], "commit": "c", "lang": "tr",
+        "content": ["IŞIK yanıyor", "İSTANBUL güzel"],
+    })
+    d = str(tmp_path / "idx_tr_case")
+    m = build_index(spark, spark.createDataFrame(docs), d, num_segments=1, cfg=cfg)
+    assert m["analyzer"] == "turkish_case_only"
+    s = LuceneSparkSearcher(spark, d)
+    assert s._analyze_query(Term("IŞIK")) == Term("ışık")
+    assert s._analyze_query(Term("İSTANBUL")) == Term("istanbul")
+    assert s.search(Term("IŞIK"), k=5)["path"].tolist() == ["a.txt"]
+    assert s.search(Term("İSTANBUL"), k=5)["path"].tolist() == ["b.txt"]

@@ -89,19 +89,17 @@ def test_service_local_routing(local_setup):
         )
 
 
-def test_local_mode_zero_jobs_when_warm(local_setup, spark):
+def test_local_mode_zero_jobs_when_warm(local_setup, count_jobs):
     """Once the term cache is warm, repeated local queries run without
     ANY Spark job — the resident single-node posture."""
     s = local_setup
     s.search_local(Term("return"), k=10)  # warm the term cache
-    tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    t0 = time.monotonic()
     n = 30
-    for _ in range(n):
-        s.search_local(Term("return"), k=10)
-    wall = time.monotonic() - t0
-    after_ids = tracker.getJobIdsForGroup(None)
-    assert len(after_ids) == len(before)  # zero new Spark jobs
+    with count_jobs() as jobs:
+        t0 = time.monotonic()
+        for _ in range(n):
+            s.search_local(Term("return"), k=10)
+        wall = time.monotonic() - t0
+    assert jobs == []  # zero new Spark jobs
     # and it's fast: well under the ~0.5 s/job dispatch floor
     assert wall / n < 0.05, f"{wall / n:.4f}s per warm local query"
