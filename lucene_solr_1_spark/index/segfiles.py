@@ -98,6 +98,14 @@ def read_postings(
     return _read_rows([(p, match) for p in paths], ["field", "term"], columns)
 
 
+def postings_columns(index_dir: str, manifest: dict) -> list[str]:
+    """Column names of the committed postings files, from the first
+    file's schema (the one `_read_rows` takes): segments written before
+    payloads lack `pay_enc`."""
+    first = _parquet_files(postings_paths(index_dir, manifest)[0])[0]
+    return pq.read_schema(first).names
+
+
 def _isin(column: str, values: pa.Array) -> Callable[[pa.Table], pa.Array]:
     return lambda t: pc.is_in(t[column], value_set=values)
 

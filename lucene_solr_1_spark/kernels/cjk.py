@@ -48,11 +48,11 @@ def cjk_width_fold(text: str) -> str:
     fullwidth Latin/digits to ASCII and halfwidth Katakana (plus its
     combining voice marks) to composed fullwidth. Runs keep the voice
     mark adjacent to its base so NFKC composes it (ｶ + ﾞ -> ガ)."""
-    if "＀" <= max(text, default="\x00"):  # cheap reject: no chars >= U+FF00
-        return _WIDTH_RUN.sub(
-            lambda m: unicodedata.normalize("NFKC", m.group(0)), text
-        )
-    return text
+    if _WIDTH_RUN.search(text) is None:  # cheap reject: no width forms
+        return text
+    return _WIDTH_RUN.sub(
+        lambda m: unicodedata.normalize("NFKC", m.group(0)), text
+    )
 
 
 def script_of(ch: str) -> int:

@@ -11,8 +11,14 @@ search flow:
     analog).
  3. per-segment scoring: ONLY the pruned posting rows of the query terms
     reach the kernels (norm bytes ride inside each row — no norms-table
-    join or shuffle); applyInPandas runs the DAAT kernel → per-segment
-    top-k (IndexSearcher leaf slices on executors).
+    join or shuffle); the DAAT kernel → per-segment top-k. A query whose
+    postings fit one leaf slice (summed global ttf of its keys ≤
+    MAX_DOCS_PER_SLICE, no doc-values channel, no matchall) is scored on
+    the driver: its posting rows are read from the segment files and the
+    same kernel runs once per segment in this process, as
+    IndexSearcher.search runs a single slice on the caller thread — a
+    Spark dispatch costs ~100x the kernel work of such a query. Bigger
+    queries run the kernel in applyInPandas (leaf slices on executors).
  4. driver k-way merge with the reference tie-break: score desc, then
     global docID asc (TopDocs.merge, TopDocs.java:203-265); the top-k
     stored fields are read on the driver from their segments' docmaps.
@@ -46,6 +52,11 @@ from .query import (
 
 TOTAL_HITS_THRESHOLD = 1000
 
+# IndexSearcher.MAX_DOCS_PER_SLICE: a query whose keys' summed global ttf
+# (the positions a positional plan decodes; an upper bound on postings for
+# every other plan) stays within it is one slice, scored on the driver.
+MAX_DOCS_PER_SLICE = 250_000
+
 _STORED_COLUMNS = [
     "segment_id", "doc_id", "repo", "path", "commit", "lang", "dl",
     "n_chars", "content",
@@ -54,6 +65,11 @@ _STORED_COLUMNS = [
 _HIT_SCHEMA = (
     "segment_id string, doc_id bigint, score float, total bigint, relation string"
 )
+# the pandas dtypes toPandas() gives _HIT_SCHEMA
+_HIT_DTYPES = {
+    "segment_id": object, "doc_id": "int64", "score": "float32",
+    "total": "int64", "relation": object,
+}
 
 
 def _allowed_from_pdf(allowed_pdf):
@@ -142,9 +158,13 @@ class LuceneSparkSearcher:
         storage memory (the hot-searcher / OS-page-cache posture a
         resident Lucene process gets for free): repeated queries skip the
         parquet scan, cutting the latency tail ~2x. Memory is bounded by
-        index size — opt in per hot index, don't default it at 100 TB."""
+        index size — opt in per hot index, don't default it at 100 TB.
+        It only serves the Spark dispatch: queries that fit one slice
+        (MAX_DOCS_PER_SLICE) read their postings on the driver and never
+        touch it, and the scan is opened (and cached) on first use."""
         self.spark = spark
         self.index_dir = index_dir
+        self.cache_postings = cache_postings
         self.manifest = mf.read_manifest(index_dir)
         if self.manifest is None:
             raise FileNotFoundError(f"no committed manifest in {index_dir}")
@@ -182,14 +202,6 @@ class LuceneSparkSearcher:
         # tombstoned local docIDs per segment (live-docs analog) — tiny,
         # shipped to the scoring kernels alongside the query plan
         self.tombstones = read_tombstones(index_dir, self.manifest)
-        self._postings = spark.read.parquet(*postings_paths(index_dir, self.manifest))
-        if "field" not in self._postings.columns:
-            raise ValueError(
-                f"{index_dir} was built before multi-field support "
-                "(postings lack the 'field' column) — rebuild the index"
-            )
-        if cache_postings:
-            self._postings = self._postings.cache()
         self._sentinels = None
         # whole-result LRU keyed by (query, k, wand, after) — the
         # LRUQueryCache analog at query granularity: the index is
@@ -208,6 +220,25 @@ class LuceneSparkSearcher:
         self.analyzer_cfg = ANALYZERS.get(
             self.manifest.get("analyzer", "standard"), STANDARD
         )
+
+    @cached_property
+    def _postings(self) -> DataFrame:
+        """The postings table as a Spark scan, opened on first use (the
+        Spark dispatch, multi-term expansion, local mode's posting fetch):
+        opening a searcher and scoring a one-slice query never pays the
+        scan's schema-inference job."""
+        post = self.spark.read.parquet(*postings_paths(self.index_dir, self.manifest))
+        if "field" not in post.columns:
+            raise ValueError(
+                f"{self.index_dir} was built before multi-field support "
+                "(postings lack the 'field' column) — rebuild the index"
+            )
+        return post.cache() if self.cache_postings else post
+
+    @cached_property
+    def _postings_columns(self) -> list[str]:
+        """Column names of the postings files, as their scan sees them."""
+        return segfiles.postings_columns(self.index_dir, self.manifest)
 
     @cached_property
     def _norms(self) -> DataFrame:
@@ -681,12 +712,14 @@ class LuceneSparkSearcher:
             return MatchNone()
         return rewrite(Bool.of(*clauses))
 
-    def _prune_positions(self, post: DataFrame, *plans) -> DataFrame:
-        """Drop the position-stream columns from the kernel input when no
-        plan needs positions — the .doc-vs-.pos file distinction
-        (Lucene50PostingsFormat): term/bool/WAND queries never read the
-        prox stream, and it is the LARGEST posting column, so parquet
-        column pruning cuts the scan accordingly."""
+    @staticmethod
+    def _kernel_columns(columns: list[str], *plans) -> list[str]:
+        """The posting columns the plans' kernels read. The position
+        streams are dropped when no plan needs positions — the
+        .doc-vs-.pos file distinction (Lucene50PostingsFormat):
+        term/bool/WAND queries never read the prox stream, and it is the
+        LARGEST posting column, so parquet column pruning cuts the scan
+        accordingly."""
         types = set().union(*(K.plan_node_types(p) for p in plans)) if plans else set()
         drop = set()
         if not ({"phrase", "multiphrase", "span", "intervals", "payload"} & types):
@@ -695,10 +728,11 @@ class LuceneSparkSearcher:
             # the payload stream is read ONLY by payload nodes (.pay
             # column pruning, like .pos for non-positional queries)
             drop.add("pay_enc")
-        if not drop:
-            return post
-        keep = [c for c in post.columns if c not in drop]
-        return post.select(*keep)
+        return [c for c in columns if c not in drop]
+
+    def _prune_positions(self, post: DataFrame, *plans) -> DataFrame:
+        keep = self._kernel_columns(post.columns, *plans)
+        return post if len(keep) == len(post.columns) else post.select(*keep)
 
     def _numeric_allowed_df(self, nrs, vsources=()) -> DataFrame:
         """(segment_id, doc_id, set_id, val) rows: one filtered scan of
@@ -783,31 +817,39 @@ class LuceneSparkSearcher:
 
     # ---------------- stats + search --------------------------------------
 
-    def _term_stats(self, pairs: set, column: str, cache: dict) -> dict:
-        """Per (field, term) key, `column` (doc_freq or ttf) summed over
-        every segment's posting row — read driver-side from the segment
-        files (TermStates.build seeking each leaf's term dictionary), no
-        Spark job. Cached for the searcher's lifetime: the index is
-        immutable under this manifest, so entries never go stale."""
-        missing = pairs - cache.keys()
+    def _term_stats(self, pairs: set) -> None:
+        """Fill the df and ttf caches for (field, term) keys: doc_freq and
+        ttf summed over every segment's posting row, read together
+        driver-side from the segment files (TermStates.build seeking each
+        leaf's term dictionary), no Spark job. Cached for the searcher's
+        lifetime: the index is immutable under this manifest, so entries
+        never go stale."""
+        # _expand_fuzzy primes df alone; ttf is filled only here
+        missing = pairs - self._ttf_cache.keys()
         if missing:
             rows = segfiles.read_postings(
-                self.index_dir, self.manifest, missing, ["field", "term", column]
+                self.index_dir, self.manifest, missing,
+                ["field", "term", "doc_freq", "ttf"],
             )
-            found = rows.groupby(["field", "term"])[column].sum()
+            found = rows.groupby(["field", "term"])[["doc_freq", "ttf"]].sum()
+            stats = {
+                (f, t): (int(df), int(ttf))
+                for (f, t), df, ttf in found.itertuples(name=None)
+            }
             for key in missing:
-                cache[key] = int(found.get(key, 0))
-        return {key: cache[key] for key in pairs}
+                self._df_cache[key], self._ttf_cache[key] = stats.get(key, (0, 0))
 
     def _global_df(self, pairs: set) -> dict:
         """Global docFreq per (field, term) key (the createWeight stats
         barrier)."""
-        return self._term_stats(pairs, "doc_freq", self._df_cache)
+        self._term_stats(pairs)
+        return {key: self._df_cache[key] for key in pairs}
 
     def _global_ttf(self, pairs: set) -> dict:
         """Global totalTermFreq per (field, term) key — the
         TermStatistics.totalTermFreq stat LM similarities consume."""
-        return self._term_stats(pairs, "ttf", self._ttf_cache)
+        self._term_stats(pairs)
+        return {key: self._ttf_cache[key] for key in pairs}
 
     def search(
         self,
@@ -828,6 +870,17 @@ class LuceneSparkSearcher:
         (unified SmallFloat norm encoding); strictly-positive sims
         keep block-max WAND pruning (impact UBs scored through the sim),
         zero-clamping sims (lmd/dfi) route exhaustive.
+
+        Routing (IndexSearcher.search's `leafSlices.length <= 1` branch):
+        a query whose keys' summed global ttf is at most
+        MAX_DOCS_PER_SLICE, with no doc-values filter or value source and
+        no MatchAll, is scored on the driver — its posting rows are read
+        from the segment files and the same per-segment kernel and merge
+        run in this process, so a cold search runs no Spark job. For such
+        a query the Spark dispatch (scan → exchange → applyInPandas)
+        costs ~100x the kernel work. Bigger queries, top-level multi-term
+        queries, doc-values filters and MatchAll plans run the kernel on
+        the executors; both routes return the same frame.
 
         Results are LRU-cached per (query, k, use_wand, after, similarity)
         — the filter/query-cache analog (search/LRUQueryCache.java):
@@ -947,17 +1000,18 @@ class LuceneSparkSearcher:
         """Compile + per-segment kernel dispatch: returns the RAW
         per-segment top-k hit rows (pre-merge), or None if the query
         rewrites to MatchNone. Shared by search() (score merge) and
-        search_sorted() (index-sort merge)."""
-        if isinstance(q, self._MTQ_TYPES) and not isinstance(q, Fuzzy):
-            # top-level multi-term query: CONSTANT_SCORE_REWRITE fast path
-            # (MultiTermQuery.java default) — the dictionary predicate goes
-            # straight into the postings scan; no expansion round-trip, no
-            # per-term stats barrier. Fuzzy is EXCLUDED: FuzzyQuery's
-            # default rewrite is the top-terms SCORING rewrite with
-            # per-term distance boosts (FuzzyQuery.java), handled in
-            # expand().
+        search_sorted() (index-sort merge). A one-slice query is scored
+        on the driver (_score_on_driver), everything else in Spark."""
+        # top-level multi-term query: CONSTANT_SCORE_REWRITE fast path
+        # (MultiTermQuery.java default) — the dictionary predicate goes
+        # straight into the postings scan; no expansion round-trip, no
+        # per-term stats barrier. Fuzzy is EXCLUDED: FuzzyQuery's default
+        # rewrite is the top-terms SCORING rewrite with per-term distance
+        # boosts (FuzzyQuery.java), handled in expand().
+        mtq = isinstance(q, self._MTQ_TYPES) and not isinstance(q, Fuzzy)
+        terms: set = set()
+        if mtq:
             plan = {"type": "anyterm", "score": np.float32(1.0)}
-            post = self._postings.where(self._mtq_cond(q))
         else:
             q = rewrite(self.expand(q))
             if isinstance(q, MatchNone):
@@ -967,11 +1021,6 @@ class LuceneSparkSearcher:
                 q, self._global_df(terms), self.doc_counts,
                 sim=self._sim_ctx(similarity, terms),
             )
-            post = self._postings.where(self._terms_filter(terms)) if terms else self._postings.limit(0)
-        if "matchall" in K.plan_node_types(plan):
-            # the plan matches docs without postings: dispatch EVERY segment
-            post = self._union_sentinels(post)
-        post = self._prune_positions(post, plan)
         kernel = partial(
             _kernel_udf, plan=plan, cache=self.caches, k=k,
             use_wand=use_wand, after=after, doc_bases=self.doc_base,
@@ -979,6 +1028,20 @@ class LuceneSparkSearcher:
         )
         nrs = numeric_ranges(q)
         vsf = value_source_fields(q)
+        matchall = "matchall" in K.plan_node_types(plan)
+        if (terms and not (nrs or vsf or matchall)
+                and sum(self._global_ttf(terms).values()) <= MAX_DOCS_PER_SLICE):
+            return self._score_on_driver(terms, plan, kernel)
+        if mtq:
+            post = self._postings.where(self._mtq_cond(q))
+        elif terms:
+            post = self._postings.where(self._terms_filter(terms))
+        else:
+            post = self._postings.limit(0)
+        if matchall:
+            # the plan matches docs without postings: dispatch EVERY segment
+            post = self._union_sentinels(post)
+        post = self._prune_positions(post, plan)
         if nrs or vsf:
             # doc-values FILTER resolution (PointRangeQuery analog): the
             # norms/docmap table is range-filtered DISTRIBUTED (parquet
@@ -1002,6 +1065,20 @@ class LuceneSparkSearcher:
                 .toPandas()
             )
         return hits
+
+    def _score_on_driver(self, terms: set, plan: dict, kernel) -> pd.DataFrame:
+        """The one-slice route of _dispatch_segments: the keys' posting
+        rows are read from the segment files and each segment's rows go
+        through the same kernel the Spark dispatch runs, so both routes
+        return the same hit rows."""
+        rows = segfiles.read_postings(
+            self.index_dir, self.manifest, terms,
+            self._kernel_columns(self._postings_columns, plan),
+        )
+        frames = [kernel((sid,), g) for sid, g in rows.groupby("segment_id", sort=False)]
+        if not frames:
+            return pd.DataFrame({c: pd.Series(dtype=t) for c, t in _HIT_DTYPES.items()})
+        return pd.concat(frames, ignore_index=True).astype(_HIT_DTYPES)
 
     def search_sorted(self, q: Query, k: int = 10) -> pd.DataFrame:
         """Early-terminating field-sorted top-k over a SORT-BUILT index

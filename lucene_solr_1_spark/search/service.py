@@ -14,7 +14,9 @@ Three throughput levers, coarsest to finest:
   highest throughput, one latency for the whole batch;
 - `SearcherService.search_all`: N independent jobs on a thread pool —
   per-query latencies, dispatch overlapped;
-- plain `search()`: one query, one job.
+- plain `search()`: one query; a query whose postings fit one slice
+  (searcher.MAX_DOCS_PER_SLICE) is scored on the calling thread with no
+  Spark job, a bigger one is one dispatch job.
 """
 
 from __future__ import annotations

@@ -132,6 +132,13 @@ def test_width_fold():
     assert terms == ["test", "ガギ"]
 
 
+def test_width_fold_astral_chars():
+    # emoji and astral Han sort above U+FFEF but are not width forms
+    astral = "ok 😀 𠀋𠂉 done"
+    assert cjk_width_fold(astral) == astral
+    assert cjk_width_fold("😀Ｔｅｓｔ𠀋ｶﾞ") == "😀Test𠀋ガ"
+
+
 def test_segment_token_types():
     assert segment_token("学生") == [("学", HAN), ("生", HAN)]
     assert segment_token("くの") == [("く", HIRAGANA), ("の", HIRAGANA)]

@@ -5,8 +5,8 @@ read from the committed segment files without a Spark job. Each must
 equal a Spark scan of the same files on every awkward index shape:
 tombstones, a doc-values generation (`norms-g<N>.parquet`), merged
 segments written as a directory of part files, and keys absent from
-every segment. A cold search launches at most 2 Spark jobs and
-delete_by_term none.
+every segment. Opening a searcher and running a cold one-slice search
+launches no Spark job, and neither does delete_by_term.
 """
 
 import os
@@ -24,6 +24,7 @@ from lucene_solr_1_spark.index.builder import (
 )
 from lucene_solr_1_spark.index.docvalues import update_numeric_docvalue
 from lucene_solr_1_spark.index.merge import merge_down
+from lucene_solr_1_spark.search import searcher as S
 from lucene_solr_1_spark.search.query import Term
 from lucene_solr_1_spark.search.searcher import LuceneSparkSearcher
 
@@ -154,15 +155,22 @@ def test_update_documents_replaces_by_key(spark, corpus, tmp_path):
     assert sorted(hits["path"]) == sorted(new["path"])
 
 
-def test_cold_search_and_delete_job_counts(spark, corpus, tmp_path, count_jobs):
+def test_cold_search_and_delete_job_counts(spark, corpus, tmp_path, count_jobs,
+                                           monkeypatch):
     d = str(tmp_path / "idx_jobs")
     build_index(spark, spark.createDataFrame(corpus.iloc[:40]), d, num_segments=2)
     path = corpus["path"].iloc[7]
-    s = LuceneSparkSearcher(spark, d)
+    q = Term(path, field="path")
     with count_jobs() as jobs:
-        hits = s.search(Term(path, field="path"), k=1, with_stored=True)
+        hits = LuceneSparkSearcher(spark, d).search(q, k=1, with_stored=True)
     assert hits["path"].tolist() == [path]
-    assert len(jobs) <= 2, jobs
+    assert jobs == []
+    # above the slice bound the same query goes through the Spark dispatch
+    monkeypatch.setattr(S, "MAX_DOCS_PER_SLICE", 0)
+    with count_jobs() as jobs:
+        dispatched = LuceneSparkSearcher(spark, d).search(q, k=1, with_stored=True)
+    assert jobs
+    pd.testing.assert_frame_equal(dispatched, hits)
     with count_jobs() as jobs:
         D.delete_by_term(spark, d, path, field="path")
     assert jobs == []
