@@ -19,6 +19,8 @@ disjunction sums accumulate in float64 and cast to float32 at the end
 
 from __future__ import annotations
 
+import copy
+
 import numpy as np
 
 from ..kernels import bm25
@@ -458,18 +460,31 @@ class SegmentData:
     local-docID array from a doc-values FILTER (NumericRange)."""
 
     def __init__(self, postings_pdf, n_docs: int, allowed=None):
-        if "field" in postings_pdf.columns:
-            self.rows = {
-                (r.field, r.term): r for r in postings_pdf.itertuples(index=False)
-            }
-        else:  # pre-multi-field frame (tests/back-compat): content only
-            self.rows = {
-                ("content", r.term): r
-                for r in postings_pdf.itertuples(index=False)
-            }
+        self.rows: dict = {}
+        self.add_rows(postings_pdf)
         self.n_docs = n_docs
         self.allowed = allowed
         self._decoded: dict = {}
+
+    def add_rows(self, postings_pdf) -> None:
+        """Add posting rows of keys this segment view does not hold yet
+        (the driver-local cache grows as queries bring new keys)."""
+        if "field" in postings_pdf.columns:
+            self.rows.update(
+                ((r.field, r.term), r) for r in postings_pdf.itertuples(index=False)
+            )
+        else:  # pre-multi-field frame (tests/back-compat): content only
+            self.rows.update(
+                (("content", r.term), r) for r in postings_pdf.itertuples(index=False)
+            )
+
+    def with_allowed(self, allowed) -> "SegmentData":
+        """This segment's rows and decode cache under another doc-values
+        channel: a per-query view, so a query never writes to a
+        SegmentData other queries share."""
+        view = copy.copy(self)
+        view.allowed = allowed
+        return view
 
     def postings(self, key):
         """(docs, freqs, norms) fully decoded, or empties. `key` is a

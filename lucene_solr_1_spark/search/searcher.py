@@ -1,27 +1,34 @@
 """Distributed IndexSearcher (SURVEY.md §3.2 Spark shape).
 
-search flow:
- 1. rewrite the query tree; expand multi-term queries against the term
-    dictionary (a Catalyst filter over the postings table — predicate
-    pushdown replaces the FST seek; TopTermsRewrite cap 1024).
- 2. global-stats barrier: per-term docFreq summed across segments, read
-    on the driver from the segment files' field/term/doc_freq columns
-    (no Spark job; index/segfiles.py), docCount/sumTTF from the manifest
-    — then bake float32 weights into a picklable plan (createWeight
-    analog).
- 3. per-segment scoring: ONLY the pruned posting rows of the query terms
-    reach the kernels (norm bytes ride inside each row — no norms-table
-    join or shuffle); the DAAT kernel → per-segment top-k. A query whose
+One query pipeline — search, search_many, rescore, search_local and
+search_sorted all run the same three steps (IndexSearcher.search builds a
+Weight once and runs it per leaf slice):
+ 1. _prepare: analyze → rewrite; a bare MatchAll short-circuits, a
+    top-level multi-term query is scored constant 1.0 over every term it
+    matches (CONSTANT_SCORE_REWRITE: a Catalyst predicate over the
+    postings table, no clause cap), anything else is expanded against
+    the term dictionary (TopTermsRewrite cap 1024), rewritten and
+    compiled behind the global-stats barrier: per-term docFreq summed
+    across segments, read on the driver from the segment files'
+    field/term/doc_freq columns (no Spark job; index/segfiles.py),
+    docCount/sumTTF from the manifest — baked into a picklable float32
+    plan (createWeight analog).
+ 2. _score: one route decision per batch of plans, then one per-segment
+    step (_score_segment) over ONLY the pruned posting rows of the
+    plans' keys (norm bytes ride inside each row — no norms-table join
+    or shuffle); the DAAT kernel → per-segment top-k. A batch whose
     postings fit one leaf slice (summed global ttf of its keys ≤
     MAX_DOCS_PER_SLICE, no doc-values channel, no matchall) is scored on
-    the driver: its posting rows are read from the segment files and the
-    same kernel runs once per segment in this process, as
+    the driver from rows read out of the segment files, as
     IndexSearcher.search runs a single slice on the caller thread — a
     Spark dispatch costs ~100x the kernel work of such a query. Bigger
-    queries run the kernel in applyInPandas (leaf slices on executors).
- 4. driver k-way merge with the reference tie-break: score desc, then
-    global docID asc (TopDocs.merge, TopDocs.java:203-265); the top-k
-    stored fields are read on the driver from their segments' docmaps.
+    batches run the same step in applyInPandas (leaf slices on
+    executors); search_local runs it on the driver over its persistent
+    per-key cache.
+ 3. _merge: NumPy k-way merge with the reference tie-break: score desc,
+    then global docID asc (TopDocs.merge, TopDocs.java:203-265); the
+    top-k stored fields are read on the driver from their segments'
+    docmaps.
 
 TOTAL_HITS_THRESHOLD = 1000 (IndexSearcher.java:101): once a segment kernel
 has ≥1000 hits it may prune, reporting relation GREATER_THAN_OR_EQUAL_TO.
@@ -30,7 +37,8 @@ has ≥1000 hits it may prune, reporting relation GREATER_THAN_OR_EQUAL_TO.
 from __future__ import annotations
 
 import re
-from functools import cached_property, partial
+from functools import cached_property, partial, reduce
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -43,8 +51,8 @@ from ..kernels import bm25
 from ..kernels.osa import osa_udf
 from . import kernel as K
 from .query import (
-    Blended, Bool, Clause, FunctionScore, Fuzzy, MatchNone, NUMERIC_DOCVALUES,
-    NumericSet, Occur,
+    Blended, Bool, Clause, FunctionScore, Fuzzy, MatchAll, MatchNone,
+    NUMERIC_DOCVALUES, NumericSet, Occur,
     Prefix, Query, Regexp, Synonym, Term, TermRange, Wildcard,
     numeric_ranges, query_terms, rewrite, value_source_fields,
     MAX_CLAUSE_COUNT,
@@ -62,14 +70,34 @@ _STORED_COLUMNS = [
     "n_chars", "content",
 ]
 
+# a bare MatchAll: search() and search_local() answer it from the docmap
+# (_match_all); a batch or a wrapping plan scores it in the kernel
+_MATCH_ALL = {"type": "matchall", "score": np.float32(1.0)}
+
+# the Spark route's hit rows (one per per-segment top-k hit)
 _HIT_SCHEMA = (
-    "segment_id string, doc_id bigint, score float, total bigint, relation string"
+    "query string, segment_id string, doc_id bigint, score float, "
+    "total bigint, relation string"
 )
-# the pandas dtypes toPandas() gives _HIT_SCHEMA
-_HIT_DTYPES = {
-    "segment_id": object, "doc_id": "int64", "score": "float32",
-    "total": "int64", "relation": object,
-}
+
+
+class _Prepared(NamedTuple):
+    """A query made ready to score: its compiled plan (None when it
+    rewrote to MatchNone), the (field, term) keys whose posting rows it
+    reads, its NumericRange sets and value-source fields (the doc-values
+    channel), and the top-level multi-term query scored constant 1.0
+    (None otherwise)."""
+    plan: dict | None
+    keys: set
+    nrs: set
+    vsf: set
+    mtq: Query | None
+
+
+_NOTHING = _Prepared(None, set(), set(), set(), None)
+
+# posting rows of a segment that holds none of the keys
+_NO_ROWS = pd.DataFrame(columns=["field", "term"])
 
 
 def _allowed_from_pdf(allowed_pdf):
@@ -89,66 +117,46 @@ def _allowed_from_pdf(allowed_pdf):
     return out
 
 
-def _kernel_udf(key, postings_pdf, plan, cache, k, use_wand,
-                after=None, doc_bases=None, tombstones=None, doc_counts=None,
-                allowed_pdf=None):
-    segment_id = key[0]
-    n_docs = (doc_counts or {}).get(segment_id, 0)
-    seg = K.SegmentData(postings_pdf, n_docs, allowed=_allowed_from_pdf(allowed_pdf))
-    base = (doc_bases or {}).get(segment_id, 0)
-    deleted = (tombstones or {}).get(segment_id)
-    if use_wand and K.wand_applicable(plan):
-        docs, scores, total, relation = K.score_wand(
-            plan, seg, cache, k, after=after, doc_base=base, deleted=deleted
-        )
-    else:
-        docs, scores, total, relation = K.score_exhaustive(
-            plan, seg, cache, k, after=after, doc_base=base, deleted=deleted
-        )
-    return pd.DataFrame(
-        {
-            "segment_id": segment_id,
-            "doc_id": docs,
-            "score": scores.astype(np.float32),
-            "total": np.int64(total),
-            "relation": relation,
-        }
-    )
-
-
-def _kernel_many_udf(key, postings_pdf, plans, cache, k, use_wand,
-                     tombstones=None, doc_counts=None, allowed_pdf=None):
-    """Batch kernel: one SegmentData (shared decode cache) scores every
-    compiled plan; output rows carry the query name."""
-    segment_id = key[0]
-    seg = K.SegmentData(
-        postings_pdf, (doc_counts or {}).get(segment_id, 0),
-        allowed=_allowed_from_pdf(allowed_pdf),
-    )
-    deleted = (tombstones or {}).get(segment_id)
-    frames = []
+def _score_segment(seg, plans: dict, caches, k: int, use_wand: bool, after,
+                   doc_base: int, deleted, allowed=None) -> dict:
+    """Score every plan of a batch against one segment: the per-segment
+    step of every route. Plans share `seg`'s decode cache; the doc-values
+    sets of this call ride in a view of `seg`, so the shared SegmentData
+    is never written. Returns {name: (docs, float32 scores, total,
+    relation)}."""
+    if allowed is not None:
+        seg = seg.with_allowed(allowed)
+    out = {}
     for name, plan in plans.items():
-        if use_wand and K.wand_applicable(plan):
-            docs, scores, total, relation = K.score_wand(
-                plan, seg, cache, k, deleted=deleted
-            )
-        else:
-            docs, scores, total, relation = K.score_exhaustive(
-                plan, seg, cache, k, deleted=deleted
-            )
-        frames.append(
-            pd.DataFrame(
-                {
-                    "query": name,
-                    "segment_id": segment_id,
-                    "doc_id": docs,
-                    "score": scores.astype(np.float32),
-                    "total": np.int64(total),
-                    "relation": relation,
-                }
-            )
+        score = (K.score_wand if use_wand and K.wand_applicable(plan)
+                 else K.score_exhaustive)
+        docs, scores, total, relation = score(
+            plan, seg, caches, k, after=after, doc_base=doc_base, deleted=deleted
         )
-    return pd.concat(frames, ignore_index=True)
+        out[name] = (docs, scores.astype(np.float32), int(total), relation)
+    return out
+
+
+def _segment_udf(key, postings_pdf, allowed_pdf, *, plans, caches, k, use_wand,
+                 after, doc_bases, tombstones, doc_counts) -> pd.DataFrame:
+    """applyInPandas body of the Spark route: one segment's posting rows
+    (and cogrouped doc-values rows) through _score_segment, returned as
+    _HIT_SCHEMA rows tagged with the plan name."""
+    sid = key[0]
+    res = _score_segment(
+        K.SegmentData(postings_pdf, doc_counts.get(sid, 0)), plans, caches, k,
+        use_wand, after, doc_bases.get(sid, 0), tombstones.get(sid),
+        _allowed_from_pdf(allowed_pdf),
+    )
+    lens = [len(r[0]) for r in res.values()]
+    return pd.DataFrame({
+        "query": np.repeat(np.asarray(list(res), dtype=object), lens),
+        "segment_id": sid,
+        "doc_id": np.concatenate([r[0] for r in res.values()]).astype(np.int64),
+        "score": np.concatenate([r[1] for r in res.values()]),
+        "total": np.repeat(np.asarray([r[2] for r in res.values()], np.int64), lens),
+        "relation": np.repeat(np.asarray([r[3] for r in res.values()], object), lens),
+    })
 
 
 class LuceneSparkSearcher:
@@ -202,7 +210,6 @@ class LuceneSparkSearcher:
         # tombstoned local docIDs per segment (live-docs analog) — tiny,
         # shipped to the scoring kernels alongside the query plan
         self.tombstones = read_tombstones(index_dir, self.manifest)
-        self._sentinels = None
         # whole-result LRU keyed by (query, k, wand, after) — the
         # LRUQueryCache analog at query granularity: the index is
         # IMMUTABLE under this manifest generation, so entries never go
@@ -270,30 +277,25 @@ class LuceneSparkSearcher:
 
         return analyze_query_terms(q, cfg, frozenset(KEYWORD_FIELDS))
 
-    def _sentinel_rows(self):
+    @cached_property
+    def _sentinels(self) -> DataFrame:
         """One zero-posting row per live segment, unioned into the kernel
         input whenever the compiled plan can match docs WITHOUT postings
         (MatchAll inside a Bool): groupBy(segment_id) otherwise dispatches
         kernels only for segments holding the query's terms, silently
-        dropping every all-match doc in term-free segments."""
-        if self._sentinels is None:
-            from ..index.schemas import POSTINGS_DDL
+        dropping every all-match doc in term-free segments. Project it to
+        the postings scan's columns (pre-payload indexes lack pay_enc)."""
+        from ..index.schemas import POSTINGS_DDL
 
-            rows = [
-                (sid, "\x00", K.SENTINEL_TERM, 0, 0,
-                 bytearray(), [], bytearray(), [], bytearray(), [],
-                 bytearray(), [], [], [], bytearray())
-                for sid in self.doc_base
-            ]
-            self._sentinels = self.spark.createDataFrame(
-                rows, schema="segment_id string, " + POSTINGS_DDL
-            )
-        return self._sentinels
-
-    def _union_sentinels(self, post: DataFrame) -> DataFrame:
-        """Union sentinel rows, projected to the postings scan's actual
-        columns (pre-payload indexes lack pay_enc)."""
-        return post.unionByName(self._sentinel_rows().select(post.columns))
+        rows = [
+            (sid, "\x00", K.SENTINEL_TERM, 0, 0,
+             bytearray(), [], bytearray(), [], bytearray(), [],
+             bytearray(), [], [], [], bytearray())
+            for sid in self.doc_base
+        ]
+        return self.spark.createDataFrame(
+            rows, schema="segment_id string, " + POSTINGS_DDL
+        )
 
     # ---------------- multi-term expansion (§2.5 PrefixQuery etc.) --------
 
@@ -310,12 +312,16 @@ class LuceneSparkSearcher:
             cond = c if cond is None else cond | c
         return cond if cond is not None else F.lit(False)
 
-    def _expand_terms(self, cond, cap: int = MAX_CLAUSE_COUNT) -> list[str]:
+    def _expand_terms(self, cond, cap: int | None = MAX_CLAUSE_COUNT) -> list[str]:
+        """Terms matching a dictionary predicate: the top `cap` by global
+        docFreq then term (TopTermsRewrite), or all of them (cap=None,
+        CONSTANT_SCORE_REWRITE)."""
         t = self._postings.groupBy("field", "term").agg(
             F.sum("doc_freq").alias("df")
-        )
-        rows = t.where(cond).orderBy(F.desc("df"), F.asc("term")).limit(cap).collect()
-        return [r["term"] for r in rows]
+        ).where(cond)
+        if cap is not None:
+            t = t.orderBy(F.desc("df"), F.asc("term")).limit(cap)
+        return [r["term"] for r in t.collect()]
 
     def _mtq_cond(self, q: Query):
         """Column predicate over the term dictionary for a multi-term query
@@ -730,28 +736,26 @@ class LuceneSparkSearcher:
             drop.add("pay_enc")
         return [c for c in columns if c not in drop]
 
-    def _prune_positions(self, post: DataFrame, *plans) -> DataFrame:
-        keep = self._kernel_columns(post.columns, *plans)
-        return post if len(keep) == len(post.columns) else post.select(*keep)
-
-    def _numeric_allowed_df(self, nrs, vsources=()) -> DataFrame:
+    def _numeric_allowed_df(self, nrs, vsources=(), held=None) -> DataFrame | None:
         """(segment_id, doc_id, set_id, val) rows: one filtered scan of
-        the norms table per distinct NumericRange (val = NULL), plus one
-        full projection per FunctionScore value-source field (val = the
-        doc-value) — all unioned, all distributed (the docvalues columnar
-        read analog; no driver-side collect)."""
+        the norms table per distinct NumericRange (val = NULL), one full
+        projection per FunctionScore value-source field (val = the
+        doc-value) and the driver-held doc sets ({set_id: {segment_id:
+        sorted docIDs}}) — all unioned, all distributed (the docvalues
+        columnar read analog; no driver-side collect). None when empty."""
         from .query import RangeField
 
-        out = None
+        def col(name: str):
+            if name not in NUMERIC_DOCVALUES:
+                raise ValueError(
+                    f"unknown numeric doc-values field {name!r}; "
+                    f"available: {NUMERIC_DOCVALUES}"
+                )
+            return F.col(name)
+
+        parts = []
         for nr in sorted(nrs, key=K.numeric_set_id):
             if isinstance(nr, RangeField):
-                for mn, mx in nr.dims:
-                    for col in (mn, mx):
-                        if col not in NUMERIC_DOCVALUES:
-                            raise ValueError(
-                                f"unknown numeric doc-values field {col!r};"
-                                f" available: {NUMERIC_DOCVALUES}"
-                            )
                 # RangeFieldQuery.QueryType per-dim relations, ANDed over
                 # dimensions (parquet pushes the comparisons into the
                 # doc-values scan exactly like the BETWEEN path)
@@ -759,11 +763,11 @@ class LuceneSparkSearcher:
                     cond = F.lit(True)
                     for (mn, mx), lo, hi in zip(nr.dims, nr.lower, nr.upper):
                         if rel == "intersects":
-                            c = (F.col(mn) <= hi) & (F.col(mx) >= lo)
+                            c = (col(mn) <= hi) & (col(mx) >= lo)
                         elif rel == "within":
-                            c = (F.col(mn) >= lo) & (F.col(mx) <= hi)
+                            c = (col(mn) >= lo) & (col(mx) <= hi)
                         else:  # contains
-                            c = (F.col(mn) <= lo) & (F.col(mx) >= hi)
+                            c = (col(mn) <= lo) & (col(mx) >= hi)
                         cond = cond & c
                     return cond
 
@@ -773,47 +777,37 @@ class LuceneSparkSearcher:
                     cond = _rel("intersects") & ~_rel("within")
                 else:
                     cond = _rel(nr.relation)
-                part = self._norms.where(cond).select(
-                    "segment_id", "doc_id",
-                    F.lit(K.numeric_set_id(nr)).alias("set_id"),
-                    F.lit(None).cast("double").alias("val"),
-                )
-                out = part if out is None else out.unionByName(part)
-                continue
-            if nr.field not in NUMERIC_DOCVALUES:
-                raise ValueError(
-                    f"unknown numeric doc-values field {nr.field!r}; "
-                    f"available: {NUMERIC_DOCVALUES}"
-                )
-            if isinstance(nr, NumericSet):
+            elif isinstance(nr, NumericSet):
                 # PointInSetQuery: explicit value set (parquet turns this
                 # into an In pushdown over the doc-values column)
-                cond = F.col(nr.field).isin([int(v) for v in nr.values])
+                cond = col(nr.field).isin([int(v) for v in nr.values])
             else:
-                cond = F.lit(True)
+                c, cond = col(nr.field), F.lit(True)
                 if nr.lower is not None:
-                    cond = cond & (F.col(nr.field) >= int(nr.lower))
+                    cond = cond & (c >= int(nr.lower))
                 if nr.upper is not None:
-                    cond = cond & (F.col(nr.field) <= int(nr.upper))
-            part = self._norms.where(cond).select(
+                    cond = cond & (c <= int(nr.upper))
+            parts.append(self._norms.where(cond).select(
                 "segment_id", "doc_id",
                 F.lit(K.numeric_set_id(nr)).alias("set_id"),
                 F.lit(None).cast("double").alias("val"),
-            )
-            out = part if out is None else out.unionByName(part)
+            ))
         for field in sorted(vsources):
-            if field not in NUMERIC_DOCVALUES:
-                raise ValueError(
-                    f"unknown numeric doc-values field {field!r}; "
-                    f"available: {NUMERIC_DOCVALUES}"
-                )
-            part = self._norms.select(
+            parts.append(self._norms.select(
                 "segment_id", "doc_id",
                 F.lit(f"values:{field}").alias("set_id"),
-                F.col(field).cast("double").alias("val"),
-            )
-            out = part if out is None else out.unionByName(part)
-        return out
+                col(field).cast("double").alias("val"),
+            ))
+        if held:
+            parts.append(self.spark.createDataFrame(
+                pd.concat([
+                    pd.DataFrame({"segment_id": sid, "doc_id": docs,
+                                  "set_id": set_id, "val": np.nan})
+                    for set_id, per in held.items() for sid, docs in per.items()
+                ], ignore_index=True),
+                schema="segment_id string, doc_id bigint, set_id string, val double",
+            ))
+        return reduce(DataFrame.unionByName, parts) if parts else None
 
     # ---------------- stats + search --------------------------------------
 
@@ -871,16 +865,16 @@ class LuceneSparkSearcher:
         keep block-max WAND pruning (impact UBs scored through the sim),
         zero-clamping sims (lmd/dfi) route exhaustive.
 
-        Routing (IndexSearcher.search's `leafSlices.length <= 1` branch):
-        a query whose keys' summed global ttf is at most
+        Routing (IndexSearcher.search's `leafSlices.length <= 1` branch,
+        see _score): a query whose keys' summed global ttf is at most
         MAX_DOCS_PER_SLICE, with no doc-values filter or value source and
-        no MatchAll, is scored on the driver — its posting rows are read
-        from the segment files and the same per-segment kernel and merge
-        run in this process, so a cold search runs no Spark job. For such
-        a query the Spark dispatch (scan → exchange → applyInPandas)
+        no MatchAll, is scored on the driver from posting rows read out
+        of the segment files, so a cold search runs no Spark job. For
+        such a query the Spark dispatch (scan → exchange → applyInPandas)
         costs ~100x the kernel work. Bigger queries, top-level multi-term
-        queries, doc-values filters and MatchAll plans run the kernel on
-        the executors; both routes return the same frame.
+        queries, doc-values filters and MatchAll plans run the same
+        per-segment step on the executors; both routes return the same
+        frame.
 
         Results are LRU-cached per (query, k, use_wand, after, similarity)
         — the filter/query-cache analog (search/LRUQueryCache.java):
@@ -970,115 +964,214 @@ class LuceneSparkSearcher:
             return sim
         raise ValueError(f"unknown similarity {similarity!r}")
 
-    def _search_uncached(
-        self,
-        q: Query,
-        k: int,
-        use_wand: bool,
-        with_stored: bool,
-        after: tuple | None,
-        similarity=None,
-    ) -> pd.DataFrame:
+    # ---------------- prepare → score → merge ------------------------------
+
+    def _prepare(self, q: Query, similarity=None) -> _Prepared:
+        """analyze → rewrite, then one of three: a bare MatchAll
+        short-circuits (_MATCH_ALL); a top-level multi-term query takes
+        MultiTermQuery's default CONSTANT_SCORE_REWRITE — every matching
+        term, score 1.0, no clause cap and no per-term stats barrier;
+        anything else is expanded against the term dictionary, rewritten
+        and compiled with global stats. Fuzzy is not constant-score:
+        FuzzyQuery's default rewrite is the top-terms SCORING rewrite with
+        per-term distance boosts (FuzzyQuery.java), handled in expand()."""
         q = rewrite(self._analyze_query(q))
-        from .query import MatchAll
-
         if isinstance(q, MatchAll):
-            return self._match_all(k, after, with_stored)
-        hits = self._dispatch_segments(q, k, use_wand, after, similarity)
-        if hits is None:  # rewrote to MatchNone
-            out = pd.DataFrame(
-                columns=["rank", "score", "global_doc_id", "segment_id", "doc_id"]
-            )
-            out.attrs["total_hits"] = 0
-            out.attrs["relation"] = "EQUAL_TO"
-            return out
-        return self._merge_hits(hits, k, with_stored)
-
-    def _dispatch_segments(
-        self, q: Query, k: int, use_wand: bool, after: tuple | None, similarity
-    ) -> pd.DataFrame | None:
-        """Compile + per-segment kernel dispatch: returns the RAW
-        per-segment top-k hit rows (pre-merge), or None if the query
-        rewrites to MatchNone. Shared by search() (score merge) and
-        search_sorted() (index-sort merge). A one-slice query is scored
-        on the driver (_score_on_driver), everything else in Spark."""
-        # top-level multi-term query: CONSTANT_SCORE_REWRITE fast path
-        # (MultiTermQuery.java default) — the dictionary predicate goes
-        # straight into the postings scan; no expansion round-trip, no
-        # per-term stats barrier. Fuzzy is EXCLUDED: FuzzyQuery's default
-        # rewrite is the top-terms SCORING rewrite with per-term distance
-        # boosts (FuzzyQuery.java), handled in expand().
-        mtq = isinstance(q, self._MTQ_TYPES) and not isinstance(q, Fuzzy)
-        terms: set = set()
-        if mtq:
+            return _Prepared(_MATCH_ALL, set(), set(), set(), None)
+        if isinstance(q, self._MTQ_TYPES) and not isinstance(q, Fuzzy):
             plan = {"type": "anyterm", "score": np.float32(1.0)}
-        else:
-            q = rewrite(self.expand(q))
-            if isinstance(q, MatchNone):
-                return None
-            terms = query_terms(q)
-            plan = K.compile_plan(
-                q, self._global_df(terms), self.doc_counts,
-                sim=self._sim_ctx(similarity, terms),
-            )
-        kernel = partial(
-            _kernel_udf, plan=plan, cache=self.caches, k=k,
-            use_wand=use_wand, after=after, doc_bases=self.doc_base,
-            tombstones=self.tombstones, doc_counts=self.seg_doc_count,
+            return _Prepared(plan, set(), set(), set(), q)
+        q = rewrite(self.expand(q))
+        if isinstance(q, MatchNone):
+            return _NOTHING
+        keys = query_terms(q)
+        plan = K.compile_plan(
+            q, self._global_df(keys), self.doc_counts,
+            sim=self._sim_ctx(similarity, keys),
         )
-        nrs = numeric_ranges(q)
-        vsf = value_source_fields(q)
-        matchall = "matchall" in K.plan_node_types(plan)
-        if (terms and not (nrs or vsf or matchall)
-                and sum(self._global_ttf(terms).values()) <= MAX_DOCS_PER_SLICE):
-            return self._score_on_driver(terms, plan, kernel)
-        if mtq:
-            post = self._postings.where(self._mtq_cond(q))
-        elif terms:
-            post = self._postings.where(self._terms_filter(terms))
-        else:
-            post = self._postings.limit(0)
-        if matchall:
-            # the plan matches docs without postings: dispatch EVERY segment
-            post = self._union_sentinels(post)
-        post = self._prune_positions(post, plan)
-        if nrs or vsf:
-            # doc-values FILTER resolution (PointRangeQuery analog): the
-            # norms/docmap table is range-filtered DISTRIBUTED (parquet
-            # row-group min/max pruning = the BKD-tree cut) and cogrouped
-            # with the posting rows per segment — no driver-side collect
-            # of the (potentially huge) match set.
-            allowed = self._numeric_allowed_df(nrs, vsf)
-            grouped = post.groupBy("segment_id").cogroup(
-                allowed.groupBy("segment_id")
-            )
-            hits = grouped.applyInPandas(
-                lambda key, l, r: kernel(key, l, allowed_pdf=r),
-                schema=_HIT_SCHEMA,
-            ).toPandas()
-        else:
-            # scoring input = ONLY the pruned posting rows (norm bytes ride
-            # in each row — no norms-table join/shuffle; schemas.py norms_enc)
-            hits = (
-                post.groupBy("segment_id")
-                .applyInPandas(kernel, schema=_HIT_SCHEMA)
-                .toPandas()
-            )
-        return hits
+        return _Prepared(plan, keys, numeric_ranges(q), value_source_fields(q), None)
 
-    def _score_on_driver(self, terms: set, plan: dict, kernel) -> pd.DataFrame:
-        """The one-slice route of _dispatch_segments: the keys' posting
-        rows are read from the segment files and each segment's rows go
-        through the same kernel the Spark dispatch runs, so both routes
-        return the same hit rows."""
+    def _score(self, prepared: dict, k: int, use_wand: bool, after=None,
+               source: str = "files", extra: dict | None = None) -> dict:
+        """Score a batch of prepared queries: the one route decision and
+        the one per-segment loop of every entry point. Returns {name:
+        [(segment_id, docs, scores, total, relation), ...]} for _merge.
+
+        Routes (IndexSearcher.search's `leafSlices.length <= 1` branch):
+        with `source="files"` a batch that has keys, no doc-values
+        channel, no matchall and a summed global ttf of its keys within
+        MAX_DOCS_PER_SLICE is scored here from posting rows read out of
+        the segment files; any other batch goes to the Spark dispatch
+        (_score_spark). `source="cache"` (search_local) scores here from
+        the persistent per-key cache, whatever the size. `extra` adds
+        driver-held doc sets ({set_id: {segment_id: sorted docIDs}}) to
+        the doc-values channel (rescore's first-pass docs)."""
+        parts: dict = {n: [] for n in prepared}
+        if source == "cache" or len(prepared) > 1:
+            prepared = {n: self._list_terms(p) for n, p in prepared.items()}
+        plans = {n: p.plan for n, p in prepared.items() if p.plan is not None}
+        if not plans:
+            return parts
+        keys = set().union(*(p.keys for p in prepared.values()))
+        nrs = set().union(*(p.nrs for p in prepared.values()))
+        vsf = set().union(*(p.vsf for p in prepared.values()))
+        matchall = any("matchall" in K.plan_node_types(p) for p in plans.values())
+        extra = extra or {}
+        dv: dict = {}
+        if source == "cache":
+            segs = self._cached_segments(keys, matchall)
+            if nrs or vsf:
+                dv = self._local_allowed_maps(nrs, vsf)
+        elif (keys and not (nrs or vsf or matchall)
+              and sum(self._global_ttf(keys).values()) <= MAX_DOCS_PER_SLICE):
+            segs = self._file_segments(keys, plans)
+        else:
+            mtqs = [p.mtq for p in prepared.values() if p.mtq is not None]
+            return self._score_spark(plans, keys, mtqs, nrs, vsf, extra,
+                                     k, use_wand, after, parts)
+        for set_id, per in extra.items():
+            for sid, docs in per.items():
+                dv.setdefault(sid, {})[set_id] = docs
+        # segments with doc-values rows but no posting rows still score,
+        # as the Spark route's cogroup calls the kernel for them
+        for sid in set(segs) | set(dv):
+            seg = segs.get(sid) or K.SegmentData(_NO_ROWS, self.seg_doc_count.get(sid, 0))
+            res = _score_segment(
+                seg, plans, self.caches, k, use_wand, after,
+                self.doc_base.get(sid, 0), self.tombstones.get(sid), dv.get(sid),
+            )
+            for n, r in res.items():
+                parts[n].append((sid, *r))
+        return parts
+
+    def _list_terms(self, prepared: _Prepared) -> _Prepared:
+        """A constant-score multi-term query with its matching terms
+        listed under the plan's "keys" — all of them, as the scan
+        predicate matches them — for a segment view that also holds
+        other keys' rows (a batch, the local cache, explain)."""
+        m = prepared.mtq
+        if m is None:
+            return prepared
+        keys = {(m.field, t) for t in self._expand_terms(self._mtq_cond(m), cap=None)}
+        return _Prepared({**prepared.plan, "keys": sorted(keys)}, keys, set(), set(), None)
+
+    def _file_segments(self, keys: set, plans: dict) -> dict:
+        """{segment_id: SegmentData} over the keys' posting rows read from
+        the segment files — the columns the plans' kernels read only."""
         rows = segfiles.read_postings(
-            self.index_dir, self.manifest, terms,
-            self._kernel_columns(self._postings_columns, plan),
+            self.index_dir, self.manifest, keys,
+            self._kernel_columns(self._postings_columns, *plans.values()),
         )
-        frames = [kernel((sid,), g) for sid, g in rows.groupby("segment_id", sort=False)]
-        if not frames:
-            return pd.DataFrame({c: pd.Series(dtype=t) for c, t in _HIT_DTYPES.items()})
-        return pd.concat(frames, ignore_index=True).astype(_HIT_DTYPES)
+        return {
+            sid: K.SegmentData(g, self.seg_doc_count.get(sid, 0))
+            for sid, g in rows.groupby("segment_id", sort=False)
+        }
+
+    def _cached_segments(self, keys: set, matchall: bool) -> dict:
+        """{segment_id: SegmentData} from the persistent local cache: the
+        segments holding at least one of the keys, or all of them for a
+        matchall plan. A key's posting rows are read from the segment
+        files once (segfiles.read_postings, no Spark job) and kept, with
+        their decoded arrays, for the searcher's lifetime — the hot
+        shard's page-cache analog, safe because the index is immutable
+        under this manifest generation."""
+        if not hasattr(self, "_local_segs"):
+            self._local_segs = {
+                sid: K.SegmentData(_NO_ROWS, n) for sid, n in self.seg_doc_count.items()
+            }
+            self._local_keys: set = set()
+        missing = keys - self._local_keys
+        if missing:
+            rows = segfiles.read_postings(
+                self.index_dir, self.manifest, missing, self._postings_columns
+            )
+            for sid, g in rows.groupby("segment_id", sort=False):
+                self._local_segs[sid].add_rows(g)
+            self._local_keys |= missing
+        return {
+            sid: seg for sid, seg in self._local_segs.items()
+            if matchall or any(kk in seg.rows for kk in keys)
+        }
+
+    def _score_spark(self, plans: dict, keys: set, mtqs, nrs: set, vsf: set,
+                     extra: dict, k: int, use_wand: bool, after, parts: dict) -> dict:
+        """The Spark route of _score: the posting rows of the keys (and of
+        multi-term predicates) are scanned, grouped per segment and scored
+        by _score_segment in applyInPandas (leaf slices on executors); a
+        doc-values channel is range-filtered distributed (parquet
+        row-group min/max pruning = the BKD-tree cut) and cogrouped with
+        the posting rows — no driver-side collect of the match set."""
+        cond = self._terms_filter(keys) if keys else None
+        for m in mtqs:
+            cond = self._mtq_cond(m) if cond is None else cond | self._mtq_cond(m)
+        post = self._postings.where(cond) if cond is not None else self._postings.limit(0)
+        if any("matchall" in K.plan_node_types(p) for p in plans.values()):
+            # the plan matches docs without postings: dispatch EVERY segment
+            post = post.unionByName(self._sentinels.select(post.columns))
+        post = post.select(*self._kernel_columns(post.columns, *plans.values()))
+        udf = partial(
+            _segment_udf, plans=plans, caches=self.caches, k=k, use_wand=use_wand,
+            after=after, doc_bases=self.doc_base, tombstones=self.tombstones,
+            doc_counts=self.seg_doc_count,
+        )
+        allowed = self._numeric_allowed_df(nrs, vsf, extra)
+        grouped = post.groupBy("segment_id")
+        if allowed is not None:
+            hits = grouped.cogroup(allowed.groupBy("segment_id")).applyInPandas(
+                udf, schema=_HIT_SCHEMA)
+        else:
+            hits = grouped.applyInPandas(
+                lambda key, pdf: udf(key, pdf, None), schema=_HIT_SCHEMA)
+        for (name, sid), g in hits.toPandas().groupby(["query", "segment_id"], sort=False):
+            parts[name].append((
+                sid, g["doc_id"].to_numpy(np.int64), g["score"].to_numpy(np.float32),
+                int(g["total"].iloc[0]), g["relation"].iloc[0],
+            ))
+        return parts
+
+    def _merge(self, parts: list, k: int | None) -> pd.DataFrame:
+        """TopDocs.merge (TopDocs.java:203-265), the one top-k merge:
+        per-segment hits ranked score desc, then global docID asc, cut to
+        k (None keeps all); total_hits sums the segments' totals and the
+        relation is EQUAL_TO only if every segment's is. NumPy only — it
+        runs on every driver-local query."""
+        total = sum(p[3] for p in parts)
+        equal = all(p[4] == "EQUAL_TO" for p in parts)
+        parts = [p for p in parts if len(p[1])]
+        seg = np.repeat(np.arange(len(parts)), [len(p[1]) for p in parts])
+        docs = np.concatenate([p[1] for p in parts] + [np.empty(0, np.int64)])
+        scores = np.concatenate([p[2] for p in parts] + [np.empty(0, np.float32)])
+        bases = np.asarray([self.doc_base.get(p[0], 0) for p in parts], dtype=np.int64)
+        gids = bases[seg] + docs
+        order = np.lexsort((gids, -scores.astype(np.float64)))[:k]
+        out = pd.DataFrame({
+            "rank": np.arange(len(order)),
+            "segment_id": np.asarray([p[0] for p in parts], dtype=object)[seg[order]],
+            "doc_id": docs[order],
+            "score": scores[order],
+            "global_doc_id": gids[order],
+        })
+        out.attrs["total_hits"] = total
+        out.attrs["relation"] = "EQUAL_TO" if equal else "GREATER_THAN_OR_EQUAL_TO"
+        return out
+
+    def _with_stored(self, hits: pd.DataFrame) -> pd.DataFrame:
+        """`hits` joined with their stored fields, attrs kept."""
+        if not len(hits):
+            return hits
+        out = hits.merge(self._fetch_stored(hits), on=["segment_id", "doc_id"], how="left")
+        out.attrs.update(hits.attrs)
+        return out
+
+    def _search_uncached(self, q: Query, k: int, use_wand: bool, with_stored: bool,
+                         after: tuple | None, similarity=None,
+                         source: str = "files") -> pd.DataFrame:
+        prepared = self._prepare(q, similarity)
+        if prepared.plan is _MATCH_ALL:
+            return self._match_all(k, after, with_stored)
+        parts = self._score({"q": prepared}, k, use_wand, after, source)
+        hits = self._merge(parts["q"], k)
+        return self._with_stored(hits) if with_stored else hits
 
     def search_sorted(self, q: Query, k: int = 10) -> pd.DataFrame:
         """Early-terminating field-sorted top-k over a SORT-BUILT index
@@ -1091,24 +1184,23 @@ class LuceneSparkSearcher:
         relation is GREATER_THAN_OR_EQUAL_TO, exactly like the
         reference's early-terminated collector.
 
-        Scoring is skipped by wrapping the match plan in ConstantScore:
-        with all scores equal, the kernel's (score desc, docID asc)
+        Scoring is skipped by wrapping the match plan in a constant-score
+        node: with all scores equal, the kernel's (score desc, docID asc)
         top-k degenerates to first-k-by-docID — the early-termination
         cut expressed in the existing kernel contract."""
-        from .query import ConstantScore
-
         srt = self.manifest.get("index_sort")
         if not srt:
             raise ValueError(
                 "search_sorted needs an index built with index_sort="
                 f"'n_chars' (manifest has none: {self.index_dir})"
             )
-        q = rewrite(self._analyze_query(q))
-        hits = self._dispatch_segments(
-            ConstantScore(q, 1.0), k, use_wand=False, after=None,
-            similarity=None,
-        )
-        if hits is None or not len(hits):
+        prepared = self._prepare(q)
+        if prepared.plan is not None:
+            prepared = prepared._replace(plan={
+                "type": "const", "node": prepared.plan, "score": np.float32(1.0),
+            })
+        hits = self._merge(self._score({"q": prepared}, k, use_wand=False)["q"], None)
+        if not len(hits):
             out = pd.DataFrame(
                 columns=["rank", "global_doc_id", "segment_id", "doc_id",
                          srt["field"]]
@@ -1116,55 +1208,16 @@ class LuceneSparkSearcher:
             out.attrs["total_hits"] = 0
             out.attrs["relation"] = "EQUAL_TO"
             return out
-        hits["global_doc_id"] = (
-            hits["segment_id"].map(self.doc_base) + hits["doc_id"]
-        )
-        total_hits = int(hits.groupby("segment_id")["total"].first().sum())
         # stored fields ride along (the sort value itself is one of them)
-        hits = hits.merge(
-            self._fetch_stored(hits), on=["segment_id", "doc_id"], how="left"
-        )
-        hits = hits.sort_values(
+        out = self._with_stored(hits).sort_values(
             [srt["field"], "global_doc_id"],
             ascending=[not srt.get("desc"), True], kind="mergesort",
         ).head(k).reset_index(drop=True)
-        hits = hits.drop(columns=["score", "total", "relation"], errors="ignore")
-        hits.insert(0, "rank", np.arange(len(hits)))
-        hits.attrs["total_hits"] = total_hits
-        hits.attrs["relation"] = "GREATER_THAN_OR_EQUAL_TO"
-        return hits
-
-    def _merge_hits(self, hits: pd.DataFrame, k: int, with_stored: bool) -> pd.DataFrame:
-        """TopDocs.merge: score desc → global docID asc (leaf order, doc
-        order) — shared by the distributed and driver-local paths."""
-        if len(hits):
-            hits["global_doc_id"] = (
-                hits["segment_id"].map(self.doc_base) + hits["doc_id"]
-            )
-            totals = hits.groupby("segment_id").agg(
-                total=("total", "first"), relation=("relation", "first")
-            )
-            total_hits = int(totals["total"].sum())
-            relation = (
-                "EQUAL_TO"
-                if (totals["relation"] == "EQUAL_TO").all()
-                else "GREATER_THAN_OR_EQUAL_TO"
-            )
-            hits = hits.sort_values(
-                ["score", "global_doc_id"], ascending=[False, True], kind="mergesort"
-            ).head(k)
-        else:
-            hits = hits.assign(global_doc_id=pd.Series(dtype="int64"))
-            total_hits, relation = 0, "EQUAL_TO"
-        hits = hits.reset_index(drop=True)
-        hits.insert(0, "rank", np.arange(len(hits)))
-        hits = hits.drop(columns=["total", "relation"], errors="ignore")
-        if with_stored and len(hits):
-            stored = self._fetch_stored(hits)
-            hits = hits.merge(stored, on=["segment_id", "doc_id"], how="left")
-        hits.attrs["total_hits"] = total_hits
-        hits.attrs["relation"] = relation
-        return hits
+        out = out.drop(columns=["rank", "score"])
+        out.insert(0, "rank", np.arange(len(out)))
+        out.attrs["total_hits"] = hits.attrs["total_hits"]
+        out.attrs["relation"] = "GREATER_THAN_OR_EQUAL_TO"
+        return out
 
     def search_many(
         self,
@@ -1172,79 +1225,32 @@ class LuceneSparkSearcher:
         k: int = 10,
         use_wand: bool = True,
     ) -> pd.DataFrame:
-        """Batch search: ALL queries scored in ONE Spark job.
+        """Batch search: every query is prepared as in search() and the
+        batch is scored as ONE — one route decision, and on the Spark
+        route one job.
 
         The reference's benchmark harness issues thousands of sequential
         searches (micro-standard.alg); per-job dispatch would dominate on
-        Spark, so the batch path ships every compiled plan to the segment
-        kernels together — posting rows for the union of query terms are
-        scanned once, per-term decodes are shared across queries via the
-        SegmentData cache, and the driver merge runs per query. Returns a
-        frame with a `query` column; per-query rank/tie-break semantics
-        identical to search().
+        Spark, so the batch ships every compiled plan to the segment
+        kernels together — posting rows for the union of query keys are
+        read once and per-term decodes are shared across queries via the
+        SegmentData cache. Returns a frame with a `query` column whose
+        rows per query equal search(with_stored=False); attrs
+        `total_hits` and `relation` map each query name to its value.
         """
-        compiled: dict[str, dict] = {}
-        all_terms: set = set()
-        empties: list[str] = []
-        prepared: dict[str, Query] = {}
-        all_nrs: set = set()
-        all_vsf: set = set()
-        for name, q in queries.items():
-            q = rewrite(self.expand(rewrite(self._analyze_query(q))))
-            all_nrs |= numeric_ranges(q)
-            all_vsf |= value_source_fields(q)
-            if isinstance(q, MatchNone):
-                empties.append(name)
-                continue
-            prepared[name] = q
-            all_terms |= query_terms(q)
-        gdf = self._global_df(all_terms)
-        for name, q in prepared.items():
-            compiled[name] = K.compile_plan(q, gdf, self.doc_counts)
-        if not compiled:
-            return pd.DataFrame(
-                columns=["query", "rank", "score", "global_doc_id", "segment_id", "doc_id"]
-            )
-        post = self._postings.where(self._terms_filter(all_terms))
-        if any("matchall" in K.plan_node_types(p) for p in compiled.values()):
-            post = self._union_sentinels(post)
-        post = self._prune_positions(post, *compiled.values())
-        kernel = partial(
-            _kernel_many_udf, plans=compiled, cache=self.caches, k=k,
-            use_wand=use_wand, tombstones=self.tombstones,
-            doc_counts=self.seg_doc_count,
-        )
-        if all_nrs or all_vsf:
-            allowed = self._numeric_allowed_df(all_nrs, all_vsf)
-            hits = (
-                post.groupBy("segment_id")
-                .cogroup(allowed.groupBy("segment_id"))
-                .applyInPandas(
-                    lambda key, l, r: kernel(key, l, allowed_pdf=r),
-                    schema="query string, " + _HIT_SCHEMA,
-                )
-                .toPandas()
-            )
+        prepared = {name: self._prepare(q) for name, q in queries.items()}
+        parts = self._score(prepared, k, use_wand)
+        frames = {name: self._merge(parts[name], k) for name in prepared}
+        for name, hits in frames.items():
+            hits.insert(0, "query", name)
+        if frames:
+            out = pd.concat(frames.values(), ignore_index=True)
         else:
-            hits = (
-                post.groupBy("segment_id")
-                .applyInPandas(kernel, schema="query string, " + _HIT_SCHEMA)
-                .toPandas()
-            )
-        out_frames = []
-        for name in compiled:
-            h = hits[hits["query"] == name].copy()
-            if len(h):
-                h["global_doc_id"] = h["segment_id"].map(self.doc_base) + h["doc_id"]
-                h = h.sort_values(
-                    ["score", "global_doc_id"], ascending=[False, True], kind="mergesort"
-                ).head(k)
-            else:
-                h = h.assign(global_doc_id=pd.Series(dtype="int64"))
-            h = h.reset_index(drop=True)
-            h.insert(1, "rank", np.arange(len(h)))
-            out_frames.append(h.drop(columns=["total", "relation"], errors="ignore"))
-        return pd.concat(out_frames, ignore_index=True)
+            out = self._merge([], k)
+            out.insert(0, "query", pd.Series(dtype=object))
+        out.attrs["total_hits"] = {n: h.attrs["total_hits"] for n, h in frames.items()}
+        out.attrs["relation"] = {n: h.attrs["relation"] for n, h in frames.items()}
+        return out
 
     def rescore(
         self,
@@ -1263,117 +1269,61 @@ class LuceneSparkSearcher:
         matches, else the first-pass score unchanged; re-ranked by
         (score desc, global docID asc) and truncated to k.
 
-        Spark shape: the first pass is the normal WAND path; the second
-        pass ships the tiny first-pass doc set to the segment kernels
-        through the SAME cogrouped allowed channel NumericRange filters
-        use (set_id "rescore:first"), compiled as
-        Bool(MUST=rescore_q, FILTER=docidset) — so each segment scores
-        rescore_q against at most first_k candidate docs, never its full
-        posting lists. FILTER makes WAND inapplicable by invariant, so
-        the second pass routes exhaustive (which is exactly Lucene's
-        ScoreMode.COMPLETE advance-and-score loop)."""
+        The second pass is an ordinary _score of
+        Bool(MUST=rescore_q, FILTER=docidset) whose doc set (set_id
+        "rescore:first") is the first-pass hits, added to the doc-values
+        channel — so each segment scores rescore_q against at most
+        first_k candidate docs, on whichever route the batch takes.
+        FILTER makes WAND inapplicable by invariant, so the second pass
+        routes exhaustive (which is exactly Lucene's ScoreMode.COMPLETE
+        advance-and-score loop)."""
         hits = self.search(
             first_q, k=first_k, use_wand=use_wand, with_stored=False
         )
-        attrs = dict(hits.attrs)
         if not len(hits):
             return hits
-        q2 = rewrite(self.expand(rewrite(self._analyze_query(rescore_q))))
-        if isinstance(q2, MatchNone):
-            hits2 = pd.DataFrame(columns=["segment_id", "doc_id", "score"])
-        else:
-            terms = query_terms(q2)
-            plan2 = {
+        prepared = self._prepare(rescore_q)
+        if prepared.plan is not None:
+            prepared = prepared._replace(plan={
                 "type": "bool",
                 "msm": 0,
                 "clauses": [
-                    {
-                        "occur": "MUST",
-                        "node": K.compile_plan(
-                            q2, self._global_df(terms), self.doc_counts
-                        ),
-                    },
-                    {
-                        "occur": "FILTER",
-                        "node": {
-                            "type": "docidset",
-                            "set_id": "rescore:first",
-                            "score": np.float32(1.0),
-                        },
-                    },
+                    {"occur": "MUST", "node": prepared.plan},
+                    {"occur": "FILTER", "node": {
+                        "type": "docidset", "set_id": "rescore:first",
+                        "score": np.float32(1.0),
+                    }},
                 ],
-            }
-            post = (
-                self._postings.where(self._terms_filter(terms))
-                if terms
-                else self._postings.limit(0)
-            )
-            if "matchall" in K.plan_node_types(plan2):
-                post = self._union_sentinels(post)
-            post = self._prune_positions(post, plan2)
-            allowed = self.spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "segment_id": hits["segment_id"].astype(str),
-                        "doc_id": hits["doc_id"].astype("int64"),
-                        "set_id": "rescore:first",
-                        "val": np.full(len(hits), np.nan, dtype=np.float64),
-                    }
-                ),
-                schema="segment_id string, doc_id bigint, set_id string, val double",
-            )
-            nrs = numeric_ranges(q2)
-            vsf = value_source_fields(q2)
-            if nrs or vsf:
-                allowed = allowed.unionByName(self._numeric_allowed_df(nrs, vsf))
-            kernel = partial(
-                _kernel_udf, plan=plan2, cache=self.caches, k=first_k,
-                use_wand=False, after=None, doc_bases=self.doc_base,
-                tombstones=self.tombstones, doc_counts=self.seg_doc_count,
-            )
-            hits2 = (
-                post.groupBy("segment_id")
-                .cogroup(allowed.groupBy("segment_id"))
-                .applyInPandas(
-                    lambda key, l, r: kernel(key, l, allowed_pdf=r),
-                    schema=_HIT_SCHEMA,
-                )
-                .toPandas()
-            )
+            })
+        first = {
+            sid: np.sort(g.to_numpy(np.int64))
+            for sid, g in hits.groupby("segment_id")["doc_id"]
+        }
+        second = self._score(
+            {"q": prepared}, first_k, use_wand=False, extra={"rescore:first": first}
+        )
         merged = hits.merge(
-            hits2[["segment_id", "doc_id", "score"]].rename(
-                columns={"score": "score2"}
-            ),
+            self._merge(second["q"], None)[["segment_id", "doc_id", "score"]]
+            .rename(columns={"score": "score2"}),
             on=["segment_id", "doc_id"],
             how="left",
         )
         first32 = merged["score"].to_numpy(np.float32)
-        second = merged["score2"].to_numpy(np.float64)  # NaN = no match
-        matched = ~np.isnan(second)
+        score2 = merged["score2"].to_numpy(np.float64)  # NaN = no match
+        matched = ~np.isnan(score2)
         combined = first32.copy()
         # Java compound assignment `score += weight * secondPassScore`:
         # double arithmetic, ONE float32 cast of the result
         # (QueryRescorer.java:173-176)
         combined[matched] = np.float32(
-            first32[matched].astype(np.float64) + float(weight) * second[matched]
+            first32[matched].astype(np.float64) + float(weight) * score2[matched]
         )
-        merged["score"] = combined
-        merged = (
-            merged.drop(columns=["score2"])
-            .sort_values(
-                ["score", "global_doc_id"], ascending=[False, True],
-                kind="mergesort",
-            )
-            .head(k)
-            .reset_index(drop=True)
-        )
-        merged["rank"] = np.arange(len(merged))
-        merged.attrs.update(attrs)
-        if with_stored and len(merged):
-            stored = self._fetch_stored(merged)
-            merged = merged.merge(stored, on=["segment_id", "doc_id"], how="left")
-            merged.attrs.update(attrs)
-        return merged
+        out = self._merge([
+            (sid, merged["doc_id"].to_numpy(np.int64)[idx], combined[idx], 0, "EQUAL_TO")
+            for sid, idx in merged.groupby("segment_id").indices.items()
+        ], k)
+        out.attrs.update(hits.attrs)
+        return self._with_stored(out) if with_stored else out
 
     def search_local(
         self,
@@ -1384,166 +1334,23 @@ class LuceneSparkSearcher:
         after: tuple | None = None,
         similarity=None,
     ) -> pd.DataFrame:
-        """Driver-LOCAL evaluation: the exact same compiled plan and
-        segment kernels run in-process over posting rows fetched once and
-        cached per (field, term) — repeated queries over a hot term set
-        execute with ZERO Spark jobs at NumPy speed (ms-level), matching
-        a resident single-node Lucene process. Results are IDENTICAL to
-        search() (same kernels, same merge, same tie-breaks — pinned by
-        tests/test_local_mode.py).
+        """Driver-LOCAL evaluation: the same prepare → score → merge as
+        search(), with the driver route fed from posting rows read once
+        per (field, term) from the segment files and kept — repeated
+        queries over a hot term set execute with ZERO Spark jobs at NumPy
+        speed (ms-level), matching a resident single-node Lucene process.
+        Results are IDENTICAL to search() for every query shape,
+        multi-term queries included (same prepare, kernels, merge and
+        tie-breaks — pinned by tests/test_local_mode.py and
+        tests/test_driver_route.py).
 
         This is the single-node-throughput parity mode for SMALL/HOT
         indexes (the postings working set must fit driver memory); the
         distributed search() path remains the 100 TB shape. Mirrors how
         a Lucene shard serves from page cache once warm."""
-        q0 = rewrite(self._analyze_query(q))
-        from .query import MatchAll
-
-        if isinstance(q0, MatchAll):
-            return self._match_all(k, after, with_stored)
-        if isinstance(q0, self._MTQ_TYPES) and not isinstance(q0, Fuzzy):
-            expanded = self._expand_terms(self._mtq_cond(q0))
-            keys = {(q0.field, t) for t in expanded}
-            plan: dict = {
-                "type": "anyterm",
-                "score": np.float32(1.0),
-                "keys": sorted(keys),
-            }
-            qq: Query = q0
-        else:
-            qq = rewrite(self.expand(q0))
-            if isinstance(qq, MatchNone):
-                out = pd.DataFrame(
-                    columns=["rank", "score", "global_doc_id", "segment_id", "doc_id"]
-                )
-                out.attrs["total_hits"] = 0
-                out.attrs["relation"] = "EQUAL_TO"
-                return out
-            keys = query_terms(qq)
-            plan = K.compile_plan(
-                qq, self._global_df(keys), self.doc_counts,
-                sim=self._sim_ctx(similarity, keys),
-            )
-        self._local_postings(keys)
-        segdata = self._local_segdata()
-        nrs = numeric_ranges(qq)
-        vsf = value_source_fields(qq)
-        allowed_maps = self._local_allowed_maps(nrs, vsf) if (nrs or vsf) else None
-        if "matchall" in K.plan_node_types(plan):
-            segs = sorted(self.doc_base)
-        else:
-            segs = sorted(
-                {
-                    sid
-                    for sid, seg in segdata.items()
-                    if any(kk in seg.rows for kk in keys)
-                }
-            )
-        parts = []  # (sid, local docs, float64 scores)
-        total_hits, all_equal = 0, True
-        for sid in segs:
-            seg = segdata[sid]
-            # per-query doc-values channel (NOT thread-safe: local mode
-            # assumes one caller, like an IndexSearcher instance)
-            seg.allowed = allowed_maps.get(sid) if allowed_maps else None
-            base = self.doc_base.get(sid, 0)
-            deleted = self.tombstones.get(sid)
-            if use_wand and K.wand_applicable(plan):
-                docs, scores, total, relation = K.score_wand(
-                    plan, seg, self.caches, k, after=after, doc_base=base,
-                    deleted=deleted,
-                )
-            else:
-                docs, scores, total, relation = K.score_exhaustive(
-                    plan, seg, self.caches, k, after=after, doc_base=base,
-                    deleted=deleted,
-                )
-            total_hits += int(total)
-            all_equal &= relation == "EQUAL_TO"
-            if len(docs):
-                parts.append((sid, docs, scores))
-        if parts:
-            sids = np.concatenate(
-                [np.full(len(d), i, dtype=np.int64) for i, (_, d, _) in enumerate(parts)]
-            )
-            docs = np.concatenate([d for _, d, _ in parts])
-            scores = np.concatenate([s for _, _, s in parts]).astype(np.float32)
-            bases = np.asarray(
-                [self.doc_base.get(sid, 0) for sid, _, _ in parts], dtype=np.int64
-            )
-            gids = bases[sids] + docs
-            order = np.lexsort((gids, -scores.astype(np.float64)))[:k]
-            sid_names = np.asarray([sid for sid, _, _ in parts], dtype=object)
-            out = pd.DataFrame(
-                {
-                    "segment_id": sid_names[sids[order]],
-                    "doc_id": docs[order],
-                    "score": scores[order],
-                    "global_doc_id": gids[order],
-                }
-            )
-        else:
-            out = pd.DataFrame(
-                {
-                    "segment_id": pd.Series(dtype="object"),
-                    "doc_id": pd.Series(dtype="int64"),
-                    "score": pd.Series(dtype="float32"),
-                    "global_doc_id": pd.Series(dtype="int64"),
-                }
-            )
-        out.insert(0, "rank", np.arange(len(out)))
-        if with_stored and len(out):
-            stored = self._fetch_stored(out)
-            out = out.merge(stored, on=["segment_id", "doc_id"], how="left")
-        out.attrs["total_hits"] = total_hits
-        out.attrs["relation"] = "EQUAL_TO" if all_equal else "GREATER_THAN_OR_EQUAL_TO"
-        return out
-
-    def _local_segdata(self) -> dict:
-        """Persistent per-segment SegmentData over ALL locally cached
-        posting rows — the FOR-block decode cache survives across
-        queries (a warm query touches no pandas rows at all). Rebuilt
-        only when new terms were fetched; existing decoded arrays are
-        carried over."""
-        rev = getattr(self, "_local_rev", 0)
-        if getattr(self, "_local_segs_rev", -1) != rev:
-            rows = (
-                pd.concat(list(self._local_rows.values()), ignore_index=True)
-                if getattr(self, "_local_rows", None)
-                else pd.DataFrame(columns=["field", "term"])
-            )
-            old = getattr(self, "_local_segs", {})
-            segs = {}
-            for sid in self.doc_base:
-                sub = (
-                    rows[rows["segment_id"] == sid]
-                    if "segment_id" in rows.columns
-                    else rows
-                )
-                seg = K.SegmentData(sub, self.seg_doc_count.get(sid, 0))
-                if sid in old:  # keep already-decoded postings
-                    seg._decoded.update(old[sid]._decoded)
-                segs[sid] = seg
-            self._local_segs = segs
-            self._local_segs_rev = rev
-        return self._local_segs
-
-    def _local_postings(self, keys: set) -> pd.DataFrame:
-        """Posting rows for (field, term) keys, fetched from the
-        distributed table ONCE per key and cached driver-side (the hot
-        shard's page-cache analog). Cache is safe: the index is immutable
-        under this manifest generation."""
-        if not hasattr(self, "_local_rows"):
-            self._local_rows: dict = {}
-            self._local_rev = 0
-        missing = sorted(kk for kk in keys if kk not in self._local_rows)
-        if missing:
-            pdf = self._postings.where(self._terms_filter(set(missing))).toPandas()
-            for kk in missing:
-                self._local_rows[kk] = pdf[
-                    (pdf["field"] == kk[0]) & (pdf["term"] == kk[1])
-                ]
-            self._local_rev += 1
+        return self._search_uncached(
+            q, k, use_wand, with_stored, after, similarity, source="cache"
+        )
 
     def _local_allowed_maps(self, nrs: set, vsf: set) -> dict:
         """Doc-values channel (NumericRange sets + FunctionScore values)
@@ -1555,16 +1362,15 @@ class LuceneSparkSearcher:
         need_nrs = {nr for nr in nrs if K.numeric_set_id(nr) not in self._local_sets}
         need_vsf = {f for f in vsf if f"values:{f}" not in self._local_sets}
         if need_nrs or need_vsf:
-            pdf = self._numeric_allowed_df(need_nrs, need_vsf).toPandas()
-            for (set_id, sid), g in pdf.groupby(["set_id", "segment_id"]):
-                per_sid = self._local_sets.setdefault(set_id, {})
-                payload = _allowed_from_pdf(g)
-                per_sid[sid] = payload[set_id]
             for set_id in (
                 {K.numeric_set_id(nr) for nr in need_nrs}
                 | {f"values:{f}" for f in need_vsf}
             ):
-                self._local_sets.setdefault(set_id, {})
+                self._local_sets[set_id] = {}
+            pdf = self._numeric_allowed_df(need_nrs, need_vsf).toPandas()
+            for sid, g in pdf.groupby("segment_id"):
+                for set_id, payload in _allowed_from_pdf(g).items():
+                    self._local_sets[set_id][sid] = payload
         wanted = [K.numeric_set_id(nr) for nr in nrs] + [f"values:{f}" for f in vsf]
         out: dict = {}
         for set_id in wanted:
@@ -1583,11 +1389,8 @@ class LuceneSparkSearcher:
         (score desc, docID asc) order nothing sorts after a lower score)."""
         n_deleted = sum(len(v) for v in self.tombstones.values())
         if after is not None and np.float32(after[0]) < np.float32(1.0):
-            hits = pd.DataFrame(
-                columns=["rank", "segment_id", "doc_id", "score", "global_doc_id"]
-            )
+            hits = self._merge([], k)
             hits.attrs["total_hits"] = self.doc_count - n_deleted
-            hits.attrs["relation"] = "EQUAL_TO"
             return hits
         # doc_base as a broadcast-joined frame, not a literal map: a
         # 100k-segment index would blow up a create_map expression tree
@@ -1622,12 +1425,9 @@ class LuceneSparkSearcher:
         hits = df.orderBy("global_doc_id").limit(k).toPandas()
         hits.insert(2, "score", np.float32(1.0))
         hits.insert(0, "rank", np.arange(len(hits)))
-        if with_stored and len(hits):
-            stored = self._fetch_stored(hits)
-            hits = hits.merge(stored, on=["segment_id", "doc_id"], how="left")
         hits.attrs["total_hits"] = self.doc_count - n_deleted
         hits.attrs["relation"] = "EQUAL_TO"
-        return hits
+        return self._with_stored(hits) if with_stored else hits
 
     def highlight_passages(
         self, hits: pd.DataFrame, q: Query, window: int = 10
@@ -1730,14 +1530,11 @@ class LuceneSparkSearcher:
                                snippet=pd.Series(dtype="object"))
         aq = rewrite(self.expand(rewrite(self._analyze_query(q))))
         terms = sorted(query_terms(aq))
-        segs = sorted(set(hits["segment_id"]))
-        post = self._postings.where(
-            F.col("segment_id").isin(segs) & self._terms_filter(set(terms))
-        ).toPandas()
+        post = segfiles.read_postings(
+            self.index_dir, self.manifest, set(terms), self._postings_columns
+        )
         seg_data = {
-            sid: K.SegmentData(
-                g.drop(columns=["segment_id"]), self.seg_doc_count.get(sid, 0)
-            )
+            sid: K.SegmentData(g, self.seg_doc_count.get(sid, 0))
             for sid, g in post.groupby("segment_id")
         }
         stored = segfiles.read_docmap(
@@ -1822,9 +1619,10 @@ class LuceneSparkSearcher:
         Explanation tree (BM25Similarity.explain, BM25Similarity.java:
         222-226 formula terms). The reference's similarity property tests
         assert explanation value == scorer score; tests do the same here.
-        `similarity` swaps the scoring model exactly as in search()."""
-        q = rewrite(self.expand(rewrite(self._analyze_query(q))))
-        if isinstance(q, MatchNone):
+        `similarity` swaps the scoring model exactly as in search(): the
+        plan is search()'s (_prepare), read from the segment files."""
+        prepared = self._list_terms(self._prepare(q, similarity))
+        if prepared.plan is None:
             return {"value": 0.0, "description": "MatchNone", "details": []}
         # locate the owning segment
         sid, base = None, -1
@@ -1832,18 +1630,10 @@ class LuceneSparkSearcher:
             if b <= global_doc_id and b > base:
                 sid, base = s, b
         local = global_doc_id - base
-        terms = query_terms(q)
-        plan = K.compile_plan(q, self._global_df(terms), self.doc_counts,
-                              sim=self._sim_ctx(similarity, terms))
-        post = (
-            self._postings.where(
-                (F.col("segment_id") == sid) & self._terms_filter(terms)
-            ).toPandas()
-            if terms
-            else pd.DataFrame(columns=["field", "term"])
-        )
-        seg = K.SegmentData(post, self.seg_doc_count.get(sid, local + 1))
-        return self._explain_node(plan, seg, local)
+        seg = self._file_segments(prepared.keys, {"q": prepared.plan}).get(sid)
+        if seg is None:
+            seg = K.SegmentData(_NO_ROWS, self.seg_doc_count.get(sid, local + 1))
+        return self._explain_node(prepared.plan, seg, local)
 
     def _explain_node(self, node: dict, seg, local: int) -> dict:
         from ..kernels.smallfloat import byte4_to_int

@@ -10,8 +10,9 @@ another's compute. Combine with `cache_postings=True` (postings pinned
 in executor storage) for the hot-index posture.
 
 Three throughput levers, coarsest to finest:
-- `search_many`: N queries fused into ONE job (shared scan + decode) —
-  highest throughput, one latency for the whole batch;
+- `search_many`: N queries scored as ONE batch (shared read + decode;
+  one Spark job, or none when the batch fits one slice) — highest
+  throughput, one latency for the whole batch;
 - `SearcherService.search_all`: N independent jobs on a thread pool —
   per-query latencies, dispatch overlapped;
 - plain `search()`: one query; a query whose postings fit one slice
@@ -47,9 +48,10 @@ class SearcherService:
         self._pool = ThreadPoolExecutor(max_workers=max_concurrent)
         import threading
 
-        # search_local mutates per-segment state (seg.allowed) and its
-        # caches — serialize it; at ~2 ms/query the lock still clears
-        # hundreds of qps, far above the distributed dispatch path
+        # search_local fills the searcher's shared local caches (posting
+        # rows per key, the per-segment SegmentData decode caches and the
+        # doc-values sets) — serialize it; at ~2 ms/query the lock still
+        # clears hundreds of qps, far above the distributed dispatch path
         self._local_lock = threading.Lock()
 
     def _search_local_locked(self, q, k: int, **kw):

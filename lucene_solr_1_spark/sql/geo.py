@@ -168,18 +168,20 @@ def _polygon_inside_sql(lats: tuple, lons: tuple) -> str:
     brackets the point and whose X at the point's Y lies right of it;
     odd = inside. ONE generator emits the SAME SQL text for Spark and
     DuckDB — multiply/divide only (IEEE-identical, no libm), the CASE
-    guard keeps the division off horizontal-miss edges."""
+    guard keeps the division off horizontal-miss edges. Vertices are
+    written in exponent form, which both engines lex as DOUBLE (a bare
+    decimal lexes as DECIMAL)."""
     _validate_polygon(lats, lons)
     n = len(lats)
     terms = []
     for i in range(n):
         j = (i + 1) % n
-        yi, xi = float(lats[i]), float(lons[i])
-        yj, xj = float(lats[j]), float(lons[j])
+        yi, xi = f"{float(lats[i]):.17e}", f"{float(lons[i]):.17e}"
+        yj, xj = f"{float(lats[j]):.17e}", f"{float(lons[j]):.17e}"
         terms.append(
-            f"(CASE WHEN (({yi!r} > lat) <> ({yj!r} > lat)) AND "
-            f"(lon < ({xj!r} - {xi!r}) * (lat - {yi!r}) / ({yj!r} - {yi!r})"
-            f" + {xi!r}) THEN 1 ELSE 0 END)"
+            f"(CASE WHEN (({yi} > lat) <> ({yj} > lat)) AND "
+            f"(lon < ({xj} - {xi}) * (lat - {yi}) / ({yj} - {yi})"
+            f" + {xi}) THEN 1 ELSE 0 END)"
         )
     return "((" + " + ".join(terms) + ") % 2) = 1"
 

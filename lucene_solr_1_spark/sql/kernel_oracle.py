@@ -22,6 +22,8 @@ cover the inverted-index/WAND path, not just the relational twins.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 
 from ..kernels.analyzer import SQL_TOKEN_PATTERN as TOKEN_PATTERN
@@ -2664,6 +2666,32 @@ def cjk_annotated_text_sql(col: str = "text") -> str:
     return expr
 
 
+def _replace_all_sql(expr: str, mapping: dict) -> str:
+    """DuckDB: every occurrence of each key of `mapping` in the text of
+    `expr` replaced by its value, in ONE pass over the original text. The
+    text is cut into key matches — a single alternation, longest key
+    first, so RE2's leftmost-first choice takes the longest — and runs of
+    other characters; only the matches are mapped, so no replacement is
+    ever scanned again (chained replace() calls would rescan it)."""
+    keys = sorted(mapping, key=lambda p: (-len(p), p))
+    cases = " ".join(
+        f"WHEN {_sql_str(p)} THEN {_sql_str(mapping[p])}"
+        for p in keys if mapping[p] != p
+    )
+    if not cases:
+        return expr
+
+    def esc(text: str) -> str:
+        return re.sub(r"([\\.^$|?*+()\[\]{}-])", r"\\\1", text)
+
+    firsts = "".join(sorted({esc(p[0]) for p in keys}))
+    pattern = "|".join(esc(p) for p in keys) + f"|[\\s\\S][^{firsts}]*"
+    pieces = f"regexp_extract_all({expr}, {_sql_str(pattern)})"
+    joined = f"array_to_string(list_transform({pieces}, x -> CASE x {cases} ELSE x END), '')"
+    # an empty text has no pieces, and array_to_string([]) is NULL
+    return f"coalesce({joined}, {expr})"
+
+
 def kernel_cjk_duck(query_text: str, k: int = 10) -> str:
     """Twin of a query against the CJK-bigram index over the annotated
     view (cjk/CJKBigramFilter.java + CJKAnalyzer.java:89-96): the corpus
@@ -2672,8 +2700,8 @@ def kernel_cjk_duck(query_text: str, k: int = 10) -> str:
     bigram expansion of each planted CJK string is generated by the
     ENGINE'S OWN cjk_expand (kernels/cjk.py — itself pinned by
     TestCJKBigramFilter-mirroring goldens), written back as a
-    space-separated token stream; longest plants replace first so the
-    3-char run never collides with its 2-char prefix plant. The query
+    space-separated token stream, all plants in one pass over the
+    annotated text (_replace_all_sql). The query
     text runs the same chain (tokenize_one under the CJK config): one
     bigram -> TermQuery, several -> the SHOULD sum the engine's
     Bool-of-parts produces."""
@@ -2683,14 +2711,10 @@ def kernel_cjk_duck(query_text: str, k: int = 10) -> str:
     q_terms = tuple(tokenize_one(query_text, _CJK_CFG)[0])
     if not q_terms:
         raise ValueError("query analyzes to no tokens under the CJK chain")
-    expr = cjk_annotated_text_sql("lower(text)")
-    plants = sorted({rep for _, rep in CJK_ANNOTATIONS},
-                    key=len, reverse=True)
-    for p in plants:
-        parts, _width = cjk_expand(p)
-        stream = " ".join(t for t, _ in parts)
-        if stream != p:
-            expr = f"replace({expr}, {_sql_str(p)}, {_sql_str(stream)})"
+    expr = _replace_all_sql(cjk_annotated_text_sql("lower(text)"), {
+        p: " ".join(t for t, _ in cjk_expand(p)[0])
+        for _, p in CJK_ANNOTATIONS
+    })
     toks = f"regexp_extract_all({expr}, '{CJK_TOKEN_PATTERN}')"
     stop_list = _sql_list(sorted(CJK_STOP_WORDS))
     cache_expr = _norm_cache_expr()

@@ -258,3 +258,28 @@ def test_e2e_index_and_search(tmp_path):
     # the cjk chain; a 3-char query becomes an OR of two bigrams
     hits2 = s.search(Term("会社員"), k=10, with_stored=False)
     assert len(hits2) == 3
+
+
+def test_oracle_plant_expansion_is_one_pass():
+    """kernel_cjk_duck's plant replacement runs in one pass over the
+    original text: two 3-char plants whose bigram streams overlap (both
+    hold 京都, itself a plant) give the engine's stream for each, and a
+    replacement that contains another plant is never replaced again."""
+    import duckdb
+
+    from lucene_solr_1_spark.sql.kernel_oracle import _replace_all_sql
+
+    def expand(mapping, text):
+        sql = _replace_all_sql("t", mapping)
+        return duckdb.execute(f"SELECT {sql} FROM (SELECT ? AS t)", [text]).fetchone()[0]
+
+    plants = ("東京都", "京都府", "京都")
+    mapping = {p: " ".join(t for t, _ in cjk_expand(p)[0]) for p in plants}
+    assert mapping["東京都"] == "東京 京都" and mapping["京都府"] == "京都 都府"
+    text = "x 東京都 y 京都府 z 京都\n東京都"
+    got = expand(mapping, text)
+    assert got == "x 東京 京都 y 京都 都府 z 京都\n東京 京都"
+    assert got.split() == [t for w in text.split() for t in tokenize_one(w, CJK)[0]]
+    # 社員 is inside 会社員's replacement: a chained replace would rewrite it
+    assert expand({"会社員": "会社 社員", "社員": "X"}, "会社員 社員") == "会社 社員 X"
+    assert expand(mapping, "") == ""

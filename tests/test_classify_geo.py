@@ -244,6 +244,16 @@ def test_geo_polygon_concave(spark, docs_pdf):
     assert in_box - want
 
 
+def test_geo_polygon_sql_has_exponent_float_literals():
+    """Every vertex literal is written in exponent form (DOUBLE in Spark
+    and DuckDB alike), none as a bare decimal (lexed as DECIMAL)."""
+    sql = G._polygon_inside_sql((10.37, 55.91, 30.23, -20.57, -45.11),
+                                (-120.3, -10.2, 79.6, 60.4, -80.7))
+    floats = re.findall(r"\d+\.\d+(?:e[+-]?\d+)?", sql)
+    assert floats and all("e" in f for f in floats), floats
+    assert "-1.20299999999999997e+02" in sql  # round-trips the double
+
+
 def test_geo_polygon_rejects_degenerate():
     with pytest.raises(ValueError, match=">= 3"):
         G.geo_polygon_duck((1.0, 2.0), (3.0, 4.0))

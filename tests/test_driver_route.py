@@ -1,12 +1,16 @@
-"""Driver-scored vs Spark-dispatched search: one answer per query.
+"""One query pipeline, four ways to run it: one answer per query.
 
 search() scores a query whose postings fit one slice (summed global ttf of
 its keys <= MAX_DOCS_PER_SLICE) on the driver and sends everything else
-through the Spark dispatch. Over seeded random queries on an index with
-tombstones and a merged (directory) segment, the driver route, the Spark
-route (forced by setting the bound to -1) and search_local must return
-equal frames and attrs, and the BM25 top-10 must match the brute-force
-oracle.
+through the Spark dispatch; search_local scores on the driver from its
+per-key cache and search_many scores a batch. Over seeded random queries
+on an index with tombstones and a merged (directory) segment, the driver
+route, the Spark route (forced by setting the bound to -1), search_local
+and a one-query search_many must return equal frames and attrs, and the
+BM25 top-10 of the benchmark shapes must match the brute-force oracle.
+Random query trees (Lucene's QueryUtils.check posture) mix Term, Phrase,
+nested Bool, Boost, ConstantScore, nested and top-level Prefix/Wildcard
+and a NumericRange filter; rescore must agree between its routes too.
 """
 
 import math
@@ -22,7 +26,9 @@ from lucene_solr_1_spark.index import manifest as mf
 from lucene_solr_1_spark.index.builder import build_index, postings_paths
 from lucene_solr_1_spark.index.merge import merge_down
 from lucene_solr_1_spark.search import searcher as S
-from lucene_solr_1_spark.search.query import Bool, Occur, Phrase, Term
+from lucene_solr_1_spark.search.query import (
+    Bool, Boost, ConstantScore, NumericRange, Occur, Phrase, Prefix, Term, Wildcard,
+)
 
 from .oracle import OracleIndex
 
@@ -115,29 +121,43 @@ def _assert_oracle_top_k(oracle: OracleIndex, deleted: set, spec: tuple, hits):
         assert math.isclose(want[doc_of[path]], score, rel_tol=RTOL), spec
 
 
-def _three_routes(s, monkeypatch, q, **kw) -> pd.DataFrame:
-    """search() on the driver route and on the Spark route, and
-    search_local: all three frames and attrs must be equal."""
+def _three_routes(s, monkeypatch, q, route="driver", **kw) -> pd.DataFrame:
+    """search() on `route` (None: the query rewrites to nothing and
+    scores nowhere) and on the forced Spark route,
+    search_local and, without paging or a similarity, a one-query
+    search_many: all frames and attrs must be equal."""
     routes = []
-    orig = S.LuceneSparkSearcher._score_on_driver
+    cls = S.LuceneSparkSearcher
 
-    def spy(self, *args):
-        routes.append("driver")
-        return orig(self, *args)
+    def spy(name, label):
+        orig = getattr(cls, name)
+
+        def wrapped(self, *args):
+            routes.append(label)
+            return orig(self, *args)
+        return wrapped
 
     with monkeypatch.context() as m:
-        m.setattr(S.LuceneSparkSearcher, "_score_on_driver", spy)
+        m.setattr(cls, "_file_segments", spy("_file_segments", "driver"))
+        m.setattr(cls, "_score_spark", spy("_score_spark", "spark"))
         s._result_cache.clear()
         driver = s.search(q, k=K, with_stored=True, **kw)
-        assert routes == ["driver"], q
+        taken = [route] if route else []
+        assert routes == taken, q
         m.setattr(S, "MAX_DOCS_PER_SLICE", -1)
         s._result_cache.clear()
         dispatched = s.search(q, k=K, with_stored=True, **kw)
-        assert routes == ["driver"], q
+        assert routes == taken + ["spark"] * len(taken), q
     local = s.search_local(q, k=K, with_stored=True, **kw)
     for other in (dispatched, local):
         pd.testing.assert_frame_equal(driver, other)
         assert driver.attrs == other.attrs, q
+    if not kw:
+        batch = s.search_many({"q": q}, k=K)
+        bare = driver[["rank", "segment_id", "doc_id", "score", "global_doc_id"]]
+        pd.testing.assert_frame_equal(bare, batch.drop(columns="query"))
+        assert (batch["query"] == "q").all()
+        assert batch.attrs == {k: {"q": v} for k, v in driver.attrs.items()}, q
     return driver
 
 
@@ -175,3 +195,136 @@ def test_routes_agree_with_after_paging_and_lmd(routed, monkeypatch):
             _three_routes(s, monkeypatch, q, after=after)
         if spec[0] != "phrase":  # LM similarities score single-term stats only
             _three_routes(s, monkeypatch, q, similarity="lmd")
+
+
+# ---------------- random query trees ----------------------------------------
+
+def _leaf(oracle: OracleIndex, rng: np.random.Generator, kind: str = ""):
+    """A Term, a 2-term Phrase, a Prefix or a Wildcard drawn from one
+    random document (`kind` picks one, else a weighted draw)."""
+    d = int(rng.integers(oracle.n_docs))
+    t = str(rng.choice(sorted(oracle.docs[d])))
+    kind = kind or str(rng.choice(["term", "term", "phrase", "prefix", "wildcard"]))
+    if kind == "phrase":
+        at = {p: w for w, ps in oracle.positions[d].items() for p in ps}
+        starts = [p for p in sorted(at) if p + 1 in at]
+        if starts:
+            p = starts[int(rng.integers(len(starts)))]
+            return Phrase((at[p], at[p + 1]))
+    if kind == "prefix":
+        return Prefix(t[: max(2, len(t) - 2)])
+    if kind == "wildcard":
+        i = int(rng.integers(len(t)))
+        return Wildcard(t[:i] + "?" + t[i + 1:])
+    return Term(t)
+
+
+def _tree(oracle: OracleIndex, rng: np.random.Generator, depth: int, kind: str = ""):
+    """A random query tree: leaves, Boost, ConstantScore and Bool with
+    MUST/SHOULD/FILTER/MUST_NOT clauses (the first one positive)."""
+    if not kind:
+        kind = str(rng.choice(["leaf", "boost", "const", "bool", "bool"])) if depth else "leaf"
+    if kind == "leaf":
+        return _leaf(oracle, rng)
+    if kind == "boost":
+        return Boost(_tree(oracle, rng, depth - 1), float(rng.choice([0.5, 2.0])))
+    if kind == "const":
+        return ConstantScore(_tree(oracle, rng, depth - 1), 1.5)
+    occurs = [Occur.MUST, Occur.SHOULD, Occur.FILTER, Occur.MUST_NOT]
+    clauses = [(occurs[int(rng.integers(3))], _tree(oracle, rng, depth - 1))]
+    for _ in range(int(rng.integers(1, 4))):
+        clauses.append((occurs[int(rng.integers(4))], _tree(oracle, rng, depth - 1)))
+    return Bool.of(*clauses)
+
+
+def _random_queries(oracle: OracleIndex, seed: int, n: int) -> list:
+    """Random Bool trees, random trees of any shape, top-level
+    Prefix/Wildcard (constant-score) and trees under a NumericRange
+    FILTER (a doc-values channel), in turn."""
+    rng = np.random.default_rng(seed)
+    out = []
+    for i in range(n):
+        if i % 4 == 0:
+            out.append(_tree(oracle, rng, 2, kind="bool"))
+        elif i % 4 == 1:
+            out.append(_leaf(oracle, rng, kind=("prefix", "wildcard")[i % 8 // 4]))
+        elif i % 4 == 2:
+            out.append(_tree(oracle, rng, 2))
+        else:
+            lo = int(rng.integers(20, 120))
+            out.append(Bool.of((Occur.MUST, _tree(oracle, rng, 2)),
+                               (Occur.FILTER, NumericRange("dl", lo, lo + 150))))
+    return out
+
+
+def _has_phrase(q) -> bool:
+    if isinstance(q, Phrase):
+        return True
+    if isinstance(q, Bool):
+        return any(_has_phrase(c.query) for c in q.clauses)
+    return isinstance(q, (Boost, ConstantScore)) and _has_phrase(q.query)
+
+
+def _route(s, q):
+    """The route search() must take: none for a query that rewrites to
+    nothing, Spark for a top-level multi-term query (scanned by
+    predicate) or a doc-values filter, else the driver (every key set
+    here is far below MAX_DOCS_PER_SLICE)."""
+    prepared = s._prepare(q)
+    if prepared.plan is None:
+        return None
+    return "spark" if prepared.mtq or prepared.nrs else "driver"
+
+
+def test_random_trees_agree_on_every_entry_point(routed, monkeypatch):
+    s, oracle, _ = routed
+    for q in _random_queries(oracle, SEED + 4, 24):
+        route = _route(s, q)
+        hits = _three_routes(s, monkeypatch, q, route=route)
+        if isinstance(q, (Prefix, Wildcard)):
+            assert (hits["score"] == 1.0).all(), q
+        if len(hits):
+            after = (float(hits["score"].iloc[-1]), int(hits["global_doc_id"].iloc[-1]))
+            _three_routes(s, monkeypatch, q, route=route, after=after)
+        if not _has_phrase(q):  # LM similarities score single-term stats only
+            _three_routes(s, monkeypatch, q, route=route, similarity="lmd")
+
+
+def test_rescore_routes_agree_on_random_trees(routed, monkeypatch):
+    s, oracle, _ = routed
+    queries = _random_queries(oracle, SEED + 5, 8)
+    for first, second in zip(queries, queries[1:]):
+        s._result_cache.clear()
+        driver = s.rescore(first, second, weight=2.0, first_k=40, k=K)
+        with monkeypatch.context() as m:
+            m.setattr(S, "MAX_DOCS_PER_SLICE", -1)
+            s._result_cache.clear()
+            dispatched = s.rescore(first, second, weight=2.0, first_k=40, k=K)
+        pd.testing.assert_frame_equal(driver, dispatched)
+        assert driver.attrs == dispatched.attrs, (first, second)
+
+
+def test_top_level_prefix_is_uncapped_constant_score(spark, tmp_path):
+    """Prefix("zq") over 1,100 unique zqNNNNN terms: more terms than
+    MAX_CLAUSE_COUNT (1024), all matched at constant score 1.0 by search,
+    search_local and search_many alike (CONSTANT_SCORE_REWRITE has no
+    clause limit)."""
+    n = 1100
+    pdf = pd.DataFrame({
+        "repo": "r", "path": [f"p/{i:05d}" for i in range(n)], "commit": "c",
+        "lang": "en", "content": [f"zq{i:05d} common" for i in range(n)],
+    })
+    d = str(tmp_path / "idx_zq")
+    build_index(spark, spark.createDataFrame(pdf), d, num_segments=2)
+    s = S.LuceneSparkSearcher(spark, d)
+    q = Prefix("zq")
+    single = s.search(q, k=n, with_stored=False)
+    local = s.search_local(q, k=n)
+    batch = s.search_many({"zq": q}, k=n)
+    for hits, total in (
+        (single, single.attrs["total_hits"]),
+        (local, local.attrs["total_hits"]),
+        (batch, batch.attrs["total_hits"]["zq"]),
+    ):
+        assert total == n
+        assert len(hits) == n and (hits["score"] == 1.0).all()

@@ -501,6 +501,7 @@ def test_explain_matches_score(searcher):
         Term("return"),
         Bool.of((Occur.MUST, Term("return")), (Occur.SHOULD, Term("int"))),
         Bool.of((Occur.SHOULD, Term("return")), (Occur.SHOULD, Term("class"))),
+        Prefix("retu"),  # constant-score multi-term query: 1.0 per hit
     ]
     for q in qs:
         hits = searcher.search(q, k=5, with_stored=False)

@@ -103,3 +103,15 @@ def test_local_mode_zero_jobs_when_warm(local_setup, count_jobs):
     assert jobs == []  # zero new Spark jobs
     # and it's fast: well under the ~0.5 s/job dispatch floor
     assert wall / n < 0.05, f"{wall / n:.4f}s per warm local query"
+
+
+def test_cold_local_term_runs_no_spark_job(local_setup, count_jobs):
+    """search_local reads a missing key's posting rows from the segment
+    files: opening a searcher and a cold term query launch no Spark job."""
+    with count_jobs() as jobs:
+        s = LuceneSparkSearcher(local_setup.spark, local_setup.index_dir)
+        hits = s.search_local(Term("return"), k=10)
+    assert jobs == []
+    pd.testing.assert_frame_equal(
+        hits, local_setup.search(Term("return"), k=10, with_stored=False)
+    )
