@@ -171,8 +171,14 @@ def build_index(
     """
     from functools import partial
 
+    from ..kernels.analyzer import analyzer_name
+
     if index_sort is not None and index_sort != "n_chars":
         raise ValueError("index_sort supports 'n_chars' (content length)")
+    # persist the analyzer by name: the searcher re-analyzes query terms
+    # with the chain the index was built with (IndexWriterConfig analog);
+    # an unregistered config raises here, before any segment is written
+    analyzer = analyzer_name(cfg)
     sort_spec = (index_sort, bool(index_sort_desc)) if index_sort else None
     df = corpus_df.select("repo", "path", "commit", "lang", "content")
     if not pre_partitioned:
@@ -204,12 +210,8 @@ def build_index(
         ),
         schema=MANIFEST_ROW_DDL,
     ).collect()
-    from ..kernels.analyzer import analyzer_name
-
     segments = [r.asDict() for r in rows]
-    # persist the analyzer by name: the searcher re-analyzes query terms
-    # with the chain the index was built with (IndexWriterConfig analog)
-    extra = {"num_segments": num_segments, "analyzer": analyzer_name(cfg)}
+    extra = {"num_segments": num_segments, "analyzer": analyzer}
     if store_offsets:
         extra["offsets"] = True
     if store_payloads:

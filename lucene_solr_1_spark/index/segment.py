@@ -217,28 +217,14 @@ def build_segment_frames(
     8 bytes/token of storage).
     """
     t0 = time.monotonic()
-    if (cfg.word_delimiter or cfg.html_strip
-            or getattr(cfg, "char_filters", ())
-            or getattr(cfg, "token_pattern", "")
-            # synonym graph flatten RENUMBERS positions and multi-word
-            # insertion EXTENDS them past the raw token count, so the
-            # per-raw-token offset/payload arrays no longer align
-            # (stacked-injection chains — phonetic/stem_keep/compound/
-            # common_grams — keep positions within the raw range and
-            # stay aligned)
-            or getattr(cfg, "synonyms", ())
-            # the CJK bigram expansion renumbers positions over the
-            # expanded stream (a run's width != its raw token count)
-            or getattr(cfg, "cjk_bigram", 0)) and (
-            store_offsets or store_payloads):
+    if cfg.breaks_alignment and (store_offsets or store_payloads):
         # offsets/payloads align 1:1 with RAW token positions in the
-        # ORIGINAL content; the word-delimiter graph renumbers positions
-        # and the HTML char filter changes the character stream, so these
-        # IndexOptions are mutually exclusive with them (the reference
-        # pairs these filters with offset-correction state we don't store)
+        # ORIGINAL content; a chain stage that renumbers positions or
+        # changes the character stream breaks that (the reference pairs
+        # these filters with offset-correction state we don't store)
+        names = [s.name for s in cfg.stages if s.breaks_alignment]
         raise ValueError(
-            "word_delimiter/html_strip/char_filters/token_pattern/"
-            "synonyms/cjk_bigram analyzers do not support "
+            f"analyzers with {'/'.join(names)} stages do not support "
             "store_offsets/store_payloads"
         )
     if not presorted:

@@ -1,6 +1,25 @@
-"""Analysis chain — StandardTokenizer-like tokenize + lowercase + stop,
-vectorized over pandas Series (used inside Arrow pandas UDFs; never
-row-at-a-time Python at the Spark level).
+"""Analysis chains — one ordered stage list per `AnalyzerConfig`.
+
+`AnalyzerConfig.stages` derives the chain once: char filters, the
+tokenizer, token filters, stacked-token filters and graph filters, in
+the reference's chain order. Every entry point runs that one list:
+
+  - `flatten_tokens` runs it over a batch of documents as flat
+    (terms, row_idx, pos) arrays — the index inversion input;
+  - `tokenize_one` (one text) and `analyze_series` (terms split by row)
+    are thin wrappers over it;
+  - `query_forms` runs one query token through the per-token stages for
+    `search.query.analyze_query_terms`.
+
+Token-level stages act on the UNIQUE terms of the stream (Zipf: the
+vocabulary is far smaller than the token stream) and gather back over
+integer codes, so a 1k-document batch pays per-vocabulary Python calls
+while a one-word query pays only a few small NumPy calls. Each stage
+declares what it does to queries and offsets; the searcher's query
+short-circuit, the query side's re-tokenize route and the segment
+builder's offsets/payloads guard read the derived
+`AnalyzerConfig.reshapes_query` / `retokenizes` / `breaks_alignment`, so
+a new stage reaches all of them by construction.
 
 Reference semantics:
   - StandardTokenizer: UAX#29 word-break; tokens longer than
@@ -10,7 +29,9 @@ Reference semantics:
     (unicode letters/digits/underscore) optionally joined by interior
     '.' or ''' between word chars (WB6/WB7 MidNumLetQ) — golden-token
     tests in tests/test_analyzer.py define the contract.
-  - LowerCaseFilter (analysis/LowerCaseFilter.java:40-46).
+  - LowerCaseFilter (analysis/LowerCaseFilter.java:40-46). The source is
+    lowercased before tokenizing, which equals tokenize-then-lowercase
+    on this tokenizer.
   - StopFilter: removed tokens still consume position increments
     (analysis/StopFilter.java, FilteringTokenFilter). NOTE the reference
     StandardAnalyzer defaults to an EMPTY stop set
@@ -24,33 +45,34 @@ Reference semantics:
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, replace
+from functools import lru_cache, partial
+from itertools import chain
+from typing import Callable
 
 import numpy as np
 import pandas as pd
 
+from .arabic import ARABIC_STOP_WORDS
 from .cjk import CJK_ALL, CJK_STOP_WORDS, cjk_expand, cjk_width_fold
-from .commongrams import common_grams_stream
+from .commongrams import SEPARATOR as GRAM_SEPARATOR
 from .compound import decompose as compound_decompose
+from .french import FRENCH_STOP_WORDS, elide, french_term
+from .german import GERMAN_STOP_WORDS, german_normalize, german_term
+from .htmlstrip import html_strip
 from .hyphenation import (HyphenationSpec, hyphen_decompose,
                           parse_pattern_values)
-from .arabic import ARABIC_STOP_WORDS
-from .turkish import TURKISH_STOP_WORDS, strip_apostrophe, turkish_lower
-from .french import (FRENCH_ARTICLES, FRENCH_STOP_WORDS, elide,
-                     french_array, french_term)
-from .german import (GERMAN_STOP_WORDS, german_array, german_normalize,
-                     german_term)
+from .phonetic import phonetic_code
+from .porter import porter_stem, strip_possessive
 from .romance import (FINNISH_STOP_WORDS, HUNGARIAN_STOP_WORDS,
                       ITALIAN_ARTICLES, ITALIAN_STOP_WORDS,
                       NORWEGIAN_STOP_WORDS, PORTUGUESE_STOP_WORDS,
                       RUSSIAN_STOP_WORDS, SPANISH_STOP_WORDS,
-                      SWEDISH_STOP_WORDS, light_stem, light_stem_array)
+                      SWEDISH_STOP_WORDS, light_stem)
 from .snowball import (DANISH_STOP_WORDS, DUTCH_STOP_WORDS,
                        ROMANIAN_STOP_WORDS)
-from .htmlstrip import html_strip, html_strip_series
-from .phonetic import phonetic_code
-from .porter import porter_stem, stem_array, strip_possessive
 from .synonyms import SYN_RULES, apply_synonym_graph, rules_map
+from .turkish import TURKISH_STOP_WORDS, strip_apostrophe, turkish_lower
 from .worddelim import WD_DEFAULT, wd_split
 
 # EnglishAnalyzer.ENGLISH_STOP_WORDS_SET (EnglishAnalyzer.java:43-55)
@@ -111,6 +133,75 @@ def ascii_fold(text: str) -> str:
 # sql/relational.py's regexp_extract_all pattern.
 SQL_TOKEN_PATTERN = "[a-z0-9_]+"
 _SQL_TOKEN_RE = re.compile(SQL_TOKEN_PATTERN)
+
+
+# The chain combinations AnalyzerConfig accepts, checked in order: each
+# (flag, needs one of, excludes, reason) rejects a config that sets `flag`
+# without any of `needs` or together with any of `excludes`.
+_STD_ONLY = "stem phonetic word_delimiter synonyms ascii_fold possessive"
+_COMPOSITION = (
+    ("stem_keep_original", "stem", "", "stem_keep_original requires stem=True"),
+    ("stem_keep_original", "", "word_delimiter",
+     "stem_keep_original is not supported with word_delimiter"),
+    ("phonetic", "", "word_delimiter",
+     "phonetic and word_delimiter filters are mutually exclusive in this "
+     "chain"),
+    ("german", "", _STD_ONLY + " french",
+     "german composes only with the standard chain (GermanAnalyzer.java:"
+     "132-142 has no Porter/phonetic/wd/synonym stages)"),
+    ("french", "", _STD_ONLY,
+     "french composes only with the standard chain (FrenchAnalyzer.java:"
+     "136-146 has no Porter/phonetic/wd/synonym stages)"),
+    ("light_lang", "", _STD_ONLY + " german french",
+     "light_lang composes only with the standard chain ({es,pt,it} "
+     "analyzers have no Porter/phonetic/wd/synonym stages)"),
+    ("stem_exclusions", "stem german french light_lang", "",
+     "stem_exclusions require a stemming stage"),
+    ("stem_exclusions", "",
+     "stem_keep_original phonetic word_delimiter synonyms common_grams "
+     "compound_dict",
+     "stem_exclusions compose with the plain stemming chains only "
+     "(KeywordRepeat/phonetic/wd/synonym/gram/compound chains are out of "
+     "the reference's exclusion slot)"),
+    ("token_pattern", "", "word_delimiter",
+     "token_pattern replaces the tokenizer; word_delimiter re-tokenizes the "
+     "case-preserving source — exclusive"),
+    ("common_grams", "",
+     "stem phonetic word_delimiter synonyms german stop_words",
+     "common_grams composes only with the standard chain and an empty stop "
+     "set (the grams ARE the stopword strategy)"),
+    ("compound_dict", "",
+     "stem phonetic word_delimiter synonyms german french common_grams "
+     "stem_keep_original",
+     "compound_dict composes only with the standard chain (+ stop words): "
+     "DictionaryCompoundWordTokenFilter sits directly after the stop filter "
+     "in the reference chains"),
+    ("hyphen_dict", "hyphen_spec", "", "hyphen_dict requires hyphen_spec"),
+    ("hyphen_spec", "",
+     "stem phonetic word_delimiter synonyms german french common_grams "
+     "stem_keep_original compound_dict",
+     "hyphen_spec composes only with the standard chain (+ stop words), and "
+     "is exclusive with compound_dict — one compound mode per chain, "
+     "matching the reference's either/or factory choice"),
+    ("synonyms", "", "word_delimiter phonetic stem",
+     "synonyms compose only with the standard chain (no word_delimiter/"
+     "phonetic/stem in this engine)"),
+    ("synonyms", "", "stop_words",
+     "synonyms require an empty stop set (the graph matcher assumes a dense "
+     "token stream)"),
+    ("cjk_output_unigrams", "cjk_bigram", "",
+     "cjk_output_unigrams requires cjk_bigram"),
+    ("turkish_case", "lowercase", "word_delimiter cjk_bigram ascii_fold",
+     "turkish_case replaces the plain lowercase step (requires "
+     "lowercase=True; exclusive with wd/cjk/fold)"),
+    ("cjk_bigram", "",
+     "stem german french light_lang word_delimiter phonetic synonyms "
+     "common_grams compound_dict token_pattern char_filters html_strip "
+     "ascii_fold possessive stem_keep_original stem_exclusions",
+     "cjk_bigram composes only with lowercase + stop words (CJKAnalyzer.java:"
+     "89-96 is width -> lower -> bigram -> stop; no other stages in the "
+     "reference chain)"),
+)
 
 
 @dataclass(frozen=True)
@@ -244,159 +335,47 @@ class AnalyzerConfig:
     cjk_output_unigrams: bool = False
     # TurkishLowerCaseFilter (tr/TurkishLowerCaseFilter.java:49-90):
     # I→ı (or i when a combining dot above follows), İ→i, everything
-    # else standard lowercase — replaces the plain lower() step in
-    # every analysis path. Composes with the Turkish snowball chain.
+    # else standard lowercase — replaces the plain lowercase stage.
+    # Composes with the Turkish snowball chain.
     turkish_case: bool = False
 
     def __post_init__(self):
-        if self.stem_keep_original and not self.stem:
-            raise ValueError("stem_keep_original requires stem=True")
-        if self.stem_keep_original and self.word_delimiter:
-            raise ValueError("stem_keep_original is not supported with "
-                             "word_delimiter")
-        if self.phonetic and self.word_delimiter:
-            raise ValueError(
-                "phonetic and word_delimiter filters are mutually "
-                "exclusive in this chain"
-            )
-        if self.german and (self.stem or self.phonetic
-                            or self.word_delimiter or self.synonyms
-                            or self.ascii_fold or self.possessive
-                            or self.french):
-            raise ValueError(
-                "german composes only with the standard chain "
-                "(GermanAnalyzer.java:132-142 has no Porter/phonetic/"
-                "wd/synonym stages)"
-            )
-        if self.french and (self.stem or self.phonetic
-                            or self.word_delimiter or self.synonyms
-                            or self.ascii_fold or self.possessive):
-            raise ValueError(
-                "french composes only with the standard chain "
-                "(FrenchAnalyzer.java:136-146 has no Porter/phonetic/"
-                "wd/synonym stages)"
-            )
-        if self.light_lang and (self.stem or self.phonetic
-                                or self.word_delimiter or self.synonyms
-                                or self.ascii_fold or self.possessive
-                                or self.german or self.french):
-            raise ValueError(
-                "light_lang composes only with the standard chain "
-                "({es,pt,it} analyzers have no Porter/phonetic/wd/"
-                "synonym stages)"
-            )
-        if self.stem_exclusions and not (
-            self.stem or self.german or self.french or self.light_lang
-        ):
-            raise ValueError("stem_exclusions require a stemming stage")
-        if self.stem_exclusions and (
-            self.stem_keep_original or self.phonetic
-            or self.word_delimiter or self.synonyms or self.common_grams
-            or self.compound_dict
-        ):
-            raise ValueError(
-                "stem_exclusions compose with the plain stemming chains "
-                "only (KeywordRepeat/phonetic/wd/synonym/gram/compound "
-                "chains are out of the reference's exclusion slot)"
-            )
-        if self.token_pattern and self.word_delimiter:
-            raise ValueError(
-                "token_pattern replaces the tokenizer; word_delimiter "
-                "re-tokenizes the case-preserving source — exclusive"
-            )
-        if self.common_grams and (
-            self.stem or self.phonetic or self.word_delimiter
-            or self.synonyms or self.german or self.stop_words
-        ):
-            raise ValueError(
-                "common_grams composes only with the standard chain and "
-                "an empty stop set (the grams ARE the stopword strategy)"
-            )
-        if self.compound_dict and (
-            self.stem or self.phonetic or self.word_delimiter
-            or self.synonyms or self.german or self.french
-            or self.common_grams or self.stem_keep_original
-        ):
-            raise ValueError(
-                "compound_dict composes only with the standard chain "
-                "(+ stop words): DictionaryCompoundWordTokenFilter sits "
-                "directly after the stop filter in the reference chains"
-            )
-        if self.hyphen_dict is not None and self.hyphen_spec is None:
-            raise ValueError("hyphen_dict requires hyphen_spec")
-        if self.hyphen_spec is not None and (
-            self.stem or self.phonetic or self.word_delimiter
-            or self.synonyms or self.german or self.french
-            or self.common_grams or self.stem_keep_original
-            or self.compound_dict
-        ):
-            raise ValueError(
-                "hyphen_spec composes only with the standard chain "
-                "(+ stop words), and is exclusive with compound_dict — "
-                "one compound mode per chain, matching the reference's "
-                "either/or factory choice"
-            )
-        if self.synonyms:
-            if self.word_delimiter or self.phonetic or self.stem:
-                raise ValueError(
-                    "synonyms compose only with the standard chain "
-                    "(no word_delimiter/phonetic/stem in this engine)"
-                )
-            if self.stop_words:
-                raise ValueError(
-                    "synonyms require an empty stop set (the graph "
-                    "matcher assumes a dense token stream)"
-                )
-        if self.cjk_output_unigrams and not self.cjk_bigram:
-            raise ValueError("cjk_output_unigrams requires cjk_bigram")
-        if self.turkish_case and (
-            not self.lowercase or self.word_delimiter or self.cjk_bigram
-            or self.ascii_fold
-        ):
-            raise ValueError(
-                "turkish_case replaces the plain lowercase step "
-                "(requires lowercase=True; exclusive with wd/cjk/fold)"
-            )
-        if self.cjk_bigram and (
-            self.stem or self.german or self.french or self.light_lang
-            or self.word_delimiter or self.phonetic or self.synonyms
-            or self.common_grams or self.compound_dict or self.token_pattern
-            or self.char_filters or self.html_strip or self.ascii_fold
-            or self.possessive or self.stem_keep_original
-            or self.stem_exclusions
-        ):
-            raise ValueError(
-                "cjk_bigram composes only with lowercase + stop words "
-                "(CJKAnalyzer.java:89-96 is width -> lower -> bigram -> "
-                "stop; no other stages in the reference chain)"
-            )
+        for flag, needs, excludes, why in _COMPOSITION:
+            if self._on(flag) and (
+                (needs and not any(map(self._on, needs.split())))
+                or any(map(self._on, excludes.split()))
+            ):
+                raise ValueError(why)
+
+    def _on(self, name: str) -> bool:
+        value = getattr(self, name)
+        # an empty hyphen_dict is a configured (empty) dictionary
+        return value is not None if name == "hyphen_dict" else bool(value)
 
     def with_english_stop(self) -> "AnalyzerConfig":
-        return AnalyzerConfig(
-            stop_words=ENGLISH_STOP_WORDS,
-            max_token_length=self.max_token_length,
-            lowercase=self.lowercase,
-            possessive=self.possessive,
-            stem=self.stem,
-            ascii_fold=self.ascii_fold,
-            word_delimiter=self.word_delimiter,
-            html_strip=self.html_strip,
-            char_filters=self.char_filters,
-            token_pattern=self.token_pattern,
-            phonetic=self.phonetic,
-            stem_keep_original=self.stem_keep_original,
-            german=self.german,
-            french=self.french,
-            light_lang=self.light_lang,
-            stem_exclusions=self.stem_exclusions,
-            synonyms=self.synonyms,
-            compound_dict=self.compound_dict,
-            hyphen_spec=self.hyphen_spec,
-            hyphen_dict=self.hyphen_dict,
-            turkish_case=self.turkish_case,
-            cjk_bigram=self.cjk_bigram,
-            cjk_output_unigrams=self.cjk_output_unigrams,
-        )
+        return replace(self, stop_words=ENGLISH_STOP_WORDS)
+
+    @property
+    def stages(self) -> tuple:
+        """The ordered chain of this config (derived once per config)."""
+        return _derive_stages(self)
+
+    @property
+    def reshapes_query(self) -> bool:
+        """Query terms must pass through the chain to match the index."""
+        return any(s.reshapes_query for s in self.stages)
+
+    @property
+    def retokenizes(self) -> bool:
+        """One query term can analyze to several tokens."""
+        return any(s.retokenizes for s in self.stages)
+
+    @property
+    def breaks_alignment(self) -> bool:
+        """Positions or characters stop lining up with the raw tokens of
+        the stored content (offsets/payloads cannot be stored)."""
+        return any(s.breaks_alignment for s in self.stages)
+
 
 
 STANDARD = AnalyzerConfig()
@@ -583,449 +562,113 @@ ANALYZERS: dict = {
 
 
 def analyzer_name(cfg: AnalyzerConfig) -> str:
+    """The registry name the manifest persists for `cfg`. Readers map the
+    name back through ANALYZERS, so a config outside the registry cannot
+    be persisted: it raises instead of silently reading back as another
+    chain."""
     for name, c in ANALYZERS.items():
         if c == cfg:
             return name
-    return "standard"  # unknown custom config: no query-side reshaping
-
-
-def tokenize_one(text: str, cfg: AnalyzerConfig = STANDARD) -> tuple[list, list]:
-    """Analyze one string → (terms, positions). Positions reflect the
-    pre-filter token index so stop/overlong removals keep increments."""
-    if not text:
-        return [], []
-    if cfg.html_strip:
-        text = html_strip(text)
-    for pat, rep in cfg.char_filters:
-        text = re.sub(pat, rep, text)
-    if cfg.word_delimiter:
-        return _tokenize_one_wd(text, cfg)
-    if cfg.cjk_bigram:
-        return _tokenize_one_cjk(text, cfg)
-    # Lowercase the source, then tokenize: identical result to Lucene's
-    # tokenize-then-LowerCaseFilter on ASCII-dominant code text, and keeps
-    # this path byte-identical to the vectorized analyze_series path.
-    if cfg.lowercase:
-        text = turkish_lower(text) if cfg.turkish_case else text.lower()
-    if cfg.ascii_fold:
-        text = ascii_fold(text)
-    tok_re = re.compile(cfg.token_pattern) if cfg.token_pattern else _TOKEN_RE
-    raw = tok_re.findall(text)
-    terms, positions = [], []
-    for pos, tok in enumerate(raw):
-        if len(tok) > cfg.max_token_length:
-            continue  # dropped but position consumed (StandardTokenizer.java:154-164)
-        if cfg.possessive:
-            tok = strip_possessive(tok)
-        if cfg.french:
-            tok = elide(tok)  # ElisionFilter BEFORE the stop check
-        if cfg.light_lang == "it":
-            tok = elide(tok, ITALIAN_ARTICLES)  # ItalianAnalyzer.java:128
-        if cfg.turkish_case:
-            tok = strip_apostrophe(tok)  # ApostropheFilter, pre-stop
-        if tok in cfg.stop_words:
-            continue  # position consumed (FilteringTokenFilter)
-        excluded = tok in cfg.stem_exclusions  # SetKeywordMarkerFilter
-        if cfg.french and not excluded:
-            tok = french_term(tok)  # light stem, 1:1
-        if cfg.german:
-            # normalization is not keyword-aware; the light stem is
-            tok = german_normalize(tok) if excluded else german_term(tok)
-        if cfg.light_lang and not excluded:
-            tok = light_stem(cfg.light_lang, tok)  # UniNE light, 1:1
-        if cfg.stem and not excluded:
-            stemmed = porter_stem(tok)
-            if cfg.stem_keep_original and stemmed != tok:
-                # KeywordRepeat order: original first, stem stacked
-                terms.append(tok)
-                positions.append(pos)
-            tok = stemmed
-        terms.append(tok)
-        positions.append(pos)
-        if cfg.phonetic:
-            code = phonetic_code(tok, cfg.phonetic)
-            if code:
-                terms.append(code)
-                positions.append(pos)  # posIncr 0: stacked at the token
-        if cfg.compound_dict:
-            # original passed through above; subwords stack at its
-            # position in discovery order (CompoundWordTokenFilterBase
-            # .java:90-116)
-            for sub in compound_decompose(tok, cfg.compound_dict):
-                terms.append(sub)
-                positions.append(pos)
-        if cfg.hyphen_spec is not None:
-            # hyphenation-driven parts, same stacking contract
-            for sub in hyphen_decompose(tok, cfg.hyphen_spec,
-                                        cfg.hyphen_dict):
-                terms.append(sub)
-                positions.append(pos)
-    if cfg.synonyms:
-        # SynonymGraphFilter + FlattenGraphFilter over the dense token
-        # stream; positions renumber through the flatten node mapping
-        return apply_synonym_graph(terms, rules_map(cfg.synonyms))
-    if cfg.common_grams:
-        return common_grams_stream(terms, cfg.common_grams, positions)
-    return terms, positions
-
-
-def _tokenize_one_cjk(text: str, cfg: AnalyzerConfig) -> tuple[list, list]:
-    """CJK chain (CJKAnalyzer.java:89-96): width fold -> lowercase ->
-    tokenize -> per-token bigram expansion -> stop filter. Positions
-    renumber over the expanded stream (each raw token consumes its
-    expansion width); the stop filter runs AFTER bigramming, exactly
-    the reference order — stop words are ASCII so they can only be
-    pass-through tokens, never bigram members. Scalar twin of the
-    _flatten_tokens_cjk vectorized path."""
-    text = cjk_width_fold(text)
-    if cfg.lowercase:
-        text = text.lower()
-    raw = _TOKEN_RE.findall(text)
-    terms, positions = [], []
-    pos = 0
-    for tok in raw:
-        if len(tok) > cfg.max_token_length:
-            pos += 1
-            continue
-        parts, width = cjk_expand(tok, cfg.cjk_bigram,
-                                  cfg.cjk_output_unigrams)
-        for ptext, prel in parts:
-            if ptext in cfg.stop_words:
-                continue  # position consumed (FilteringTokenFilter)
-            terms.append(ptext)
-            positions.append(pos + prel)
-        pos += width
-    return terms, positions
-
-
-def _tokenize_one_wd(text: str, cfg: AnalyzerConfig) -> tuple[list, list]:
-    """word_delimiter chain: tokenize CASE-PRESERVING source → wd_split →
-    lowercase → stop → stem. Positions renumber over the post-split
-    stream; a token's width shifts everything after it (graph
-    semantics). Scalar twin of the flatten_tokens wd path — the
-    scalar==vectorized test pins agreement."""
-    if cfg.ascii_fold:
-        text = ascii_fold(text)
-    raw = _TOKEN_RE.findall(text)
-    terms, positions = [], []
-    pos = 0
-    for tok in raw:
-        if len(tok) > cfg.max_token_length:
-            pos += 1
-            continue
-        parts, width = wd_split(tok, cfg.word_delimiter)
-        for ptext, pstart, _pend in parts:
-            t = ptext.lower() if cfg.lowercase else ptext
-            if t in cfg.stop_words:
-                continue
-            if cfg.stem:
-                t = porter_stem(t)
-            terms.append(t)
-            positions.append(pos + pstart)
-        pos += width
-    return terms, positions
-
-
-def analyze_series(texts: pd.Series, cfg: AnalyzerConfig = STANDARD) -> pd.Series:
-    """Vectorized analysis: Series[str] → Series[list[str]] of terms.
-
-    pandas .str.findall runs the regex in C per row — this is the Arrow
-    UDF hot path (no Spark-level per-row Python)."""
-    src = texts.fillna("")
-    if (cfg.phonetic or cfg.stem_keep_original or cfg.synonyms
-            or cfg.common_grams or cfg.compound_dict
-            or cfg.hyphen_spec is not None):
-        # stacked-token chains (posIncr-0 injection / graph rewrite):
-        # route through the scalar twin so shingle/ngram consumers see
-        # the full emitted stream — on the RAW source (tokenize_one
-        # applies html_strip/char_filters itself; applying them here
-        # first would run a non-idempotent char filter twice)
-        return src.map(lambda t: tokenize_one(t, cfg)[0])
-    if cfg.html_strip:
-        src = html_strip_series(src)
-    for pat, rep in cfg.char_filters:
-        src = src.str.replace(pat, rep, regex=True)
-    if cfg.word_delimiter:
-        return src.map(lambda t: _tokenize_one_wd(t, cfg)[0])
-    if cfg.cjk_bigram:
-        return src.map(lambda t: _tokenize_one_cjk(t, cfg)[0])
-    if cfg.lowercase:
-        src = src.map(turkish_lower) if cfg.turkish_case else src.str.lower()
-    if cfg.ascii_fold:
-        src = src.str.translate(_FOLD_TABLE)
-    tok_re = re.compile(cfg.token_pattern) if cfg.token_pattern else _TOKEN_RE
-    raw = src.str.findall(tok_re)
-    max_len = cfg.max_token_length
-    stop = cfg.stop_words
-    if (cfg.possessive or cfg.stem or cfg.german or cfg.french
-            or cfg.light_lang):
-        return raw.map(lambda toks: _filter_tokens(toks, cfg))
-    return raw.map(
-        lambda toks: [t for t in toks if len(t) <= max_len and t not in stop]
+    raise ValueError(
+        "analyzer config is not registered in ANALYZERS: the manifest "
+        "persists the analyzer by name, so register the config under a "
+        "name first"
     )
 
 
-def _filter_tokens(toks: list, cfg: AnalyzerConfig) -> list:
-    out = []
-    for t in toks:
-        if len(t) > cfg.max_token_length:
-            continue
-        if cfg.possessive:
-            t = strip_possessive(t)
-        if cfg.french:
-            t = elide(t)
-        if cfg.light_lang == "it":
-            t = elide(t, ITALIAN_ARTICLES)
-        if cfg.turkish_case:
-            t = strip_apostrophe(t)
-        if t in cfg.stop_words:
-            continue
-        excluded = t in cfg.stem_exclusions
-        if cfg.german:
-            t = german_normalize(t) if excluded else german_term(t)
-        if cfg.french and not excluded:
-            t = french_term(t)
-        if cfg.light_lang and not excluded:
-            t = light_stem(cfg.light_lang, t)
-        out.append(porter_stem(t) if cfg.stem and not excluded else t)
-    return out
+@dataclass(frozen=True)
+class Stage:
+    """One step of an analysis chain. `kind` says how it acts on the flat
+    (terms, row_idx, pos) stream:
 
+      text      str -> str over each document before tokenization
+      tokenize  document -> raw tokens; position = raw token index
+      split     token -> ([(part, rel_pos), ...], width): the parts
+                replace the token and later positions shift by width - 1
+      filter    token -> keep?; a dropped token still consumes its
+                position
+      map       token -> token
+      stack     token -> (token, *extra): the tuple replaces the token,
+                every member at its position
+      stream    (terms, row_idx, pos, n_docs) -> (terms, row_idx, pos)
+                over whole documents (graph filters)
 
-def analyze_with_positions(texts: pd.Series, cfg: AnalyzerConfig = STANDARD):
-    """Series[str] → (Series[list[str]], Series[list[int]]) with positions."""
-    out_terms, out_pos = [], []
-    for text in texts.fillna(""):
-        t, p = tokenize_one(text, cfg)
-        out_terms.append(t)
-        out_pos.append(p)
-    return pd.Series(out_terms, index=texts.index), pd.Series(out_pos, index=texts.index)
+    The flags declare what the stage means for queries and offsets:
 
-
-def flatten_tokens(texts: pd.Series, cfg: AnalyzerConfig = STANDARD):
-    """Vectorized inversion prep: Series[str] →
-    (terms np.ndarray[object], row_idx np.ndarray[int64], pos np.ndarray[int64],
-     doc_len np.ndarray[int64]) — doc_len is the post-filter token count
-    (the norm input). All steps are pandas/NumPy C loops.
+      reshapes_query    a query term must pass through the chain to match
+      retokenizes       one query term can become several tokens
+      breaks_alignment  positions or characters no longer line up with
+                        the raw tokens of the stored content
+      phrase_slots      (stack) the members become phrase alternatives
+      primary           (stack) index of the member a one-term query
+                        slot takes
     """
-    if cfg.html_strip:
-        texts = html_strip_series(texts.fillna(""))
-    if cfg.char_filters:
-        texts = texts.fillna("")
-        for pat, rep in cfg.char_filters:
-            texts = texts.str.replace(pat, rep, regex=True)
-    if cfg.word_delimiter:
-        return _flatten_tokens_wd(texts, cfg)
-    if cfg.cjk_bigram:
-        return _flatten_tokens_cjk(texts, cfg)
-    n = len(texts)
-    src = texts.fillna("")
-    if cfg.lowercase:
-        src = src.map(turkish_lower) if cfg.turkish_case else src.str.lower()
-    if cfg.ascii_fold:
-        src = src.str.translate(_FOLD_TABLE)
-    tok_re = re.compile(cfg.token_pattern) if cfg.token_pattern else _TOKEN_RE
-    tok_lists = src.str.findall(tok_re)
-    raw_counts = tok_lists.map(len).to_numpy(dtype=np.int64)
-    total = int(raw_counts.sum())
-    if total == 0:
-        z = np.empty(0, dtype=np.int64)
-        return np.empty(0, dtype=object), z, z, np.zeros(n, dtype=np.int64)
-    terms = np.concatenate(
-        [np.asarray(t, dtype=object) for t in tok_lists if t]
-    )
-    row_idx = np.repeat(np.arange(n, dtype=np.int64), raw_counts)
-    # position = raw token index within its document
-    offsets = np.concatenate(([0], np.cumsum(raw_counts)[:-1]))
-    pos = np.arange(total, dtype=np.int64) - np.repeat(offsets, raw_counts)
-    term_s = pd.Series(terms, dtype=object)
-    keep = (term_s.str.len() <= cfg.max_token_length).to_numpy()
-    if cfg.possessive:
-        # strip BEFORE the stop check (chain order: possessive -> stop)
-        term_s = term_s.str.replace(r"['’＇][sS]$", "", regex=True)
-        terms = term_s.to_numpy(dtype=object)
-    if cfg.french or cfg.light_lang == "it":
-        # ElisionFilter BEFORE the stop check: apostrophes are rare —
-        # rewrite only the tokens that carry one
-        arts = FRENCH_ARTICLES if cfg.french else ITALIAN_ARTICLES
-        has_apos = term_s.str.contains("['’]", regex=True).to_numpy()
-        if has_apos.any():
-            terms = term_s.to_numpy(dtype=object).copy()
-            idx = np.nonzero(has_apos)[0]
-            terms[idx] = [elide(t, arts) for t in terms[idx]]
-            term_s = pd.Series(terms, dtype=object)
-    if cfg.turkish_case:
-        # ApostropheFilter pre-stop: rewrite only tokens carrying one
-        has_apos = term_s.str.contains("['’]", regex=True).to_numpy()
-        if has_apos.any():
-            terms = term_s.to_numpy(dtype=object).copy()
-            idx = np.nonzero(has_apos)[0]
-            terms[idx] = [strip_apostrophe(t) for t in terms[idx]]
-            term_s = pd.Series(terms, dtype=object)
-    if cfg.stop_words:
-        keep &= ~term_s.isin(cfg.stop_words).to_numpy()
-    terms, row_idx, pos = terms[keep], row_idx[keep], pos[keep]
-    excl_mask = None
-    if cfg.stem_exclusions:
-        # SetKeywordMarkerFilter slot: mark post-stop tokens, restore
-        # them after the (vectorized) stem stages run
-        excl_mask = (
-            pd.Series(terms, dtype=object).isin(cfg.stem_exclusions)
-            .to_numpy()
-        )
-        if excl_mask.any():
-            excl_orig = terms[excl_mask].copy()
-        else:
-            excl_mask = None
-    if cfg.french:
-        terms = french_array(terms)
-    if cfg.german:
-        # per-UNIQUE-term normalize+light-stem, C-level gather back
-        terms = german_array(terms)
-    if cfg.light_lang:
-        terms = light_stem_array(cfg.light_lang, terms)
-    if cfg.stem:
-        if cfg.stem_keep_original:
-            terms, row_idx, pos = _inject_keep_original(terms, row_idx, pos)
-        else:
-            # per-UNIQUE-term stemming (Zipf: vocabulary << token stream),
-            # then a C-level map back over the token array
-            terms = stem_array(terms)
-    if excl_mask is not None:
-        terms = terms.copy()
-        if cfg.german:  # normalization still applies to keywords
-            terms[excl_mask] = [german_normalize(t) for t in excl_orig]
-        else:
-            terms[excl_mask] = excl_orig
-    if cfg.phonetic:
-        terms, row_idx, pos = _inject_phonetic(terms, row_idx, pos, cfg)
-    if cfg.synonyms:
-        terms, row_idx, pos = _apply_synonyms_flat(terms, row_idx, pos, n, cfg)
-    if cfg.common_grams:
-        terms, row_idx, pos = _inject_common_grams(terms, row_idx, pos, cfg)
-    if cfg.compound_dict:
-        terms, row_idx, pos = _inject_compound(terms, row_idx, pos, cfg)
-    if cfg.hyphen_spec is not None:
-        terms, row_idx, pos = _inject_hyphen(terms, row_idx, pos, cfg)
-    doc_len = np.bincount(row_idx, minlength=n).astype(np.int64)
-    return terms, row_idx, pos, doc_len
+
+    name: str
+    kind: str
+    fn: Callable
+    reshapes_query: bool = True
+    retokenizes: bool = False
+    breaks_alignment: bool = False
+    phrase_slots: bool = False
+    primary: int = 0
 
 
-def _inject_compound(terms, row_idx, pos, cfg: AnalyzerConfig):
-    """Vectorized DictionaryCompoundWordTokenFilter: after each token, its
-    dictionary subwords at the SAME position (original kept). Per-unique
-    decomposition (Zipf) then a variable-width segment gather —
-    stream-identical to the scalar tokenize_one ordering."""
-    codes, uniq = pd.factorize(pd.Series(terms, dtype=object), sort=False)
-    subs_u = [compound_decompose(u, cfg.compound_dict) for u in uniq]
-    counts_u = np.fromiter((1 + len(s) for s in subs_u), dtype=np.int64,
-                           count=len(subs_u))
-    counts = counts_u[codes]
-    total = int(counts.sum())
-    if total == len(terms):  # nothing decomposed
-        return terms, row_idx, pos
-    out_terms = np.empty(total, dtype=object)
-    out_rows = np.repeat(row_idx, counts)
-    out_pos = np.repeat(pos, counts)
-    first = np.cumsum(counts) - counts
-    out_terms[first] = terms
-    # scatter per (unique term, subword slot): loops vocabulary x
-    # subwords (tiny), each fill vectorized over that term's occurrences
-    for u in np.nonzero(counts_u > 1)[0]:
-        occ = first[codes == u]
-        for j, sub in enumerate(subs_u[u]):
-            out_terms[occ + 1 + j] = sub
-    return out_terms, out_rows, out_pos
+def _fits(limit: int, tok: str) -> bool:
+    return len(tok) <= limit
 
 
-def _inject_hyphen(terms, row_idx, pos, cfg: AnalyzerConfig):
-    """Vectorized HyphenationCompoundWordTokenFilter: after each token,
-    its hyphenation-derived parts at the SAME position (original kept).
-    Per-unique decomposition (Zipf) then the same variable-width segment
-    gather as _inject_compound — stream-identical to the scalar
-    tokenize_one ordering."""
-    from .hyphenation import hyphen_decompose as hdec
-
-    codes, uniq = pd.factorize(pd.Series(terms, dtype=object), sort=False)
-    subs_u = [hdec(u, cfg.hyphen_spec, cfg.hyphen_dict) for u in uniq]
-    counts_u = np.fromiter((1 + len(s) for s in subs_u), dtype=np.int64,
-                           count=len(subs_u))
-    counts = counts_u[codes]
-    total = int(counts.sum())
-    if total == len(terms):  # nothing decomposed
-        return terms, row_idx, pos
-    out_terms = np.empty(total, dtype=object)
-    out_rows = np.repeat(row_idx, counts)
-    out_pos = np.repeat(pos, counts)
-    first = np.cumsum(counts) - counts
-    out_terms[first] = terms
-    for u in np.nonzero(counts_u > 1)[0]:
-        occ = first[codes == u]
-        for j, sub in enumerate(subs_u[u]):
-            out_terms[occ + 1 + j] = sub
-    return out_terms, out_rows, out_pos
+def _not_in(words: frozenset, tok: str) -> bool:
+    return tok not in words
 
 
-def _inject_keep_original(terms, row_idx, pos):
-    """Vectorized KeywordRepeat+stem+RemoveDuplicates: ORIGINAL then STEM
-    at one position when they differ (per-unique stemming, then the same
-    segment gather as the phonetic injector)."""
-    codes, uniq = pd.factorize(pd.Series(terms, dtype=object), sort=False)
-    stems_u = stem_array(np.asarray(uniq, dtype=object))
-    differ = stems_u != np.asarray(uniq, dtype=object)
-    counts = np.where(differ[codes], 2, 1).astype(np.int64)
-    total = int(counts.sum())
-    out_terms = np.empty(total, dtype=object)
-    out_rows = np.repeat(row_idx, counts)
-    out_pos = np.repeat(pos, counts)
-    first = np.cumsum(counts) - counts
-    out_terms[first] = terms                      # original (or the stem
-    two = counts == 2                             #  when they are equal)
-    out_terms[first[two] + 1] = stems_u[codes[two]]
-    # single-output tokens where stem == original already hold the stem
-    return out_terms, out_rows, out_pos
+def _keyword_aware(stem: Callable, keywords: frozenset,
+                   keyword_form: Callable | None = None) -> Callable:
+    """SetKeywordMarkerFilter: tokens in `keywords` skip `stem` (taking
+    `keyword_form` instead, when given)."""
+    if not keywords:
+        return stem
+    keep = keyword_form or (lambda t: t)
+    return lambda t: keep(t) if t in keywords else stem(t)
 
 
-def _inject_phonetic(terms, row_idx, pos, cfg: AnalyzerConfig):
-    """Vectorized PhoneticFilter inject=true: after each token, its code
-    at the SAME position. Per-unique-term encoding (Zipf) then a segment
-    gather — stream-identical to the scalar tokenize_one ordering."""
-    codes, uniq = pd.factorize(pd.Series(terms, dtype=object), sort=False)
-    u_code = np.asarray(
-        [phonetic_code(u, cfg.phonetic) for u in uniq], dtype=object
-    )
-    has = np.asarray([bool(c) for c in u_code])
-    counts = np.where(has[codes], 2, 1).astype(np.int64)
-    total = int(counts.sum())
-    out_terms = np.empty(total, dtype=object)
-    out_rows = np.repeat(row_idx, counts)
-    out_pos = np.repeat(pos, counts)
-    first = np.cumsum(counts) - counts
-    out_terms[first] = terms
-    extra = first[counts == 2] + 1
-    out_terms[extra] = u_code[codes[counts == 2]]
-    return out_terms, out_rows, out_pos
+def _wd_parts(flags: int, tok: str):
+    parts, width = wd_split(tok, flags)
+    return [(text, start) for text, start, _end in parts], width
 
 
-def _apply_synonyms_flat(terms, row_idx, pos, n: int, cfg: AnalyzerConfig):
-    """Vectorized SynonymGraphFilter+flatten over the flattened token
-    stream: a C-level trigger scan (np.isin against the rule inputs'
-    first tokens) splits docs into a no-match FAST path (positions
-    renumber densely, everything stays NumPy) and a per-doc scalar graph
-    pass for the (typically rare) docs containing a trigger — work is
-    proportional to trigger-doc tokens, not corpus tokens. Must stay
-    stream-identical to tokenize_one (scalar==vectorized test)."""
-    smap = rules_map(cfg.synonyms)
+def _with_original(tok: str) -> tuple:
+    """KeywordRepeat + Porter + RemoveDuplicates: original then stem."""
+    stem = porter_stem(tok)
+    return (tok, stem) if stem != tok else (stem,)
+
+
+def _with_code(encoder: str, tok: str) -> tuple:
+    code = phonetic_code(tok, encoder)
+    return (tok, code) if code else (tok,)
+
+
+def _with_parts(decompose: Callable, tok: str) -> tuple:
+    return (tok, *decompose(tok))
+
+
+def _synonym_stream(smap, terms, row_idx, pos, n: int):
+    """SynonymGraphFilter + FlattenGraphFilter over the flat stream: a
+    per-token trigger test splits docs into a no-match fast path
+    (positions renumber densely, everything stays NumPy) and a per-doc
+    scalar graph pass for the docs containing a trigger — work is
+    proportional to trigger-doc tokens, not corpus tokens."""
     if len(terms) == 0 or not smap:
         return terms, row_idx, pos
-    # dense per-doc renumbering (the synonym stage's position contract —
-    # apply_synonym_graph numbers the flattened stream 0..k-1)
-    counts = np.bincount(row_idx, minlength=n).astype(np.int64)
+    # dense per-doc renumbering (apply_synonym_graph numbers the
+    # flattened stream 0..k-1)
+    counts = np.bincount(row_idx, minlength=n)
     offsets = np.cumsum(counts) - counts
     dense_pos = np.arange(len(terms), dtype=np.int64) - np.repeat(
         offsets[counts > 0], counts[counts > 0]
     )
-    triggers = np.asarray(list(smap.by_first), dtype=object)
-    hit = np.isin(terms, triggers)
+    hit = np.fromiter(map(smap.by_first.__contains__, terms.tolist()),
+                      bool, len(terms))
     if not hit.any():
         return terms, row_idx, dense_pos
     doc_hit = np.bincount(row_idx[hit], minlength=n) > 0
@@ -1036,188 +679,277 @@ def _apply_synonyms_flat(terms, row_idx, pos, n: int, cfg: AnalyzerConfig):
     out_s = [dense_pos[~tok_hit]]  # emission seq == dense pos on fast path
     for d in np.nonzero(doc_hit)[0]:
         lo, hi = offsets[d], offsets[d] + counts[d]
-        t, p = apply_synonym_graph(list(terms[lo:hi]), smap)
+        t, p = apply_synonym_graph(terms[lo:hi].tolist(), smap)
         k = len(t)
         out_t.append(np.asarray(t, dtype=object))
         out_r.append(np.full(k, d, dtype=np.int64))
         out_p.append(np.asarray(p, dtype=np.int64))
         out_s.append(np.arange(k, dtype=np.int64))
-    a_t = np.concatenate(out_t)
-    a_r = np.concatenate(out_r)
-    a_p = np.concatenate(out_p)
-    a_s = np.concatenate(out_s)
-    order = np.lexsort((a_s, a_r))
-    return a_t[order], a_r[order], a_p[order]
+    order = np.lexsort((np.concatenate(out_s), np.concatenate(out_r)))
+    return (np.concatenate(out_t)[order], np.concatenate(out_r)[order],
+            np.concatenate(out_p)[order])
 
 
-def _inject_common_grams(terms, row_idx, pos, cfg: AnalyzerConfig):
-    """Vectorized CommonGramsFilter: gram "t[i]_t[i+1]" stacked at
-    pos[i] for every consecutive same-doc pair where either member is
-    common — shifted-array masks plus one pandas str concat, then the
-    same (row, seq) gather the other injectors use (uni seq 2i, gram
-    seq 2i+1 preserves the filter's emission order)."""
-    n_tok = len(terms)
-    if n_tok < 2:
+def _common_grams_stream(common: frozenset, terms, row_idx, pos, n: int):
+    """CommonGramsFilter: a "left_right" gram follows every consecutive
+    same-doc pair where either member is common, stacked at the left
+    member's position (uni p, gram p, uni p+1 ... — the filter's
+    emission order; kernels/commongrams.py is the scalar contract)."""
+    if len(terms) < 2:
         return terms, row_idx, pos
-    ts = pd.Series(terms, dtype=object)
-    common = ts.isin(cfg.common_grams).to_numpy()
-    same_doc = row_idx[:-1] == row_idx[1:]
-    gram_at = same_doc & (common[:-1] | common[1:])  # left-member index
-    if not gram_at.any():
+    common_at = np.fromiter(map(common.__contains__, terms.tolist()),
+                            bool, len(terms))
+    left = np.nonzero((row_idx[:-1] == row_idx[1:])
+                      & (common_at[:-1] | common_at[1:]))[0]
+    if len(left) == 0:
         return terms, row_idx, pos
-    left = np.nonzero(gram_at)[0]
-    gram_terms = (
-        ts.iloc[left].reset_index(drop=True)
-        + "_"
-        + ts.iloc[left + 1].reset_index(drop=True)
-    ).to_numpy(dtype=object)
-    seq = np.arange(n_tok, dtype=np.int64) * 2
-    a_t = np.concatenate([terms, gram_terms])
-    a_r = np.concatenate([row_idx, row_idx[left]])
-    a_p = np.concatenate([pos, pos[left]])
-    a_s = np.concatenate([seq, seq[left] + 1])
-    order = np.lexsort((a_s, a_r))
-    return a_t[order], a_r[order], a_p[order]
+    grams = np.empty(len(left), dtype=object)
+    grams[:] = [a + GRAM_SEPARATOR + b for a, b in
+                zip(terms[left].tolist(), terms[left + 1].tolist())]
+    at = left + 1
+    return (np.insert(terms, at, grams), np.insert(row_idx, at, row_idx[left]),
+            np.insert(pos, at, pos[left]))
 
 
-def _flatten_tokens_cjk(texts: pd.Series, cfg: AnalyzerConfig):
-    """Vectorized inversion prep for the CJK bigram chain: width-fold +
-    lowercase the source, tokenize, expand per UNIQUE raw token (Zipf —
-    same trick as the wd flatten), then gather over per-unique part
-    slices. Positions = segmented exclusive cumsum of expansion widths
-    plus each part's in-token relative position. Must stay
-    stream-identical to _tokenize_one_cjk (scalar==vectorized test)."""
-    n = len(texts)
-    src = texts.fillna("")
-    # width folding is rare on this corpus: rewrite only rows carrying a
-    # halfwidth/fullwidth-forms char
-    has_wide = src.str.contains("[＀-￯]", regex=True)
-    if has_wide.any():
-        src = src.where(~has_wide, src[has_wide].map(cjk_width_fold))
-    if cfg.lowercase:
-        src = src.str.lower()
-    tok_lists = src.str.findall(_TOKEN_RE)
-    raw_counts = tok_lists.map(len).to_numpy(dtype=np.int64)
-    total = int(raw_counts.sum())
-    if total == 0:
-        z = np.empty(0, dtype=np.int64)
-        return np.empty(0, dtype=object), z, z, np.zeros(n, dtype=np.int64)
-    raw = np.concatenate([np.asarray(t, dtype=object) for t in tok_lists if t])
-    row_idx = np.repeat(np.arange(n, dtype=np.int64), raw_counts)
+@lru_cache(maxsize=None)
+def _derive_stages(cfg: AnalyzerConfig) -> tuple:
+    """The ordered stage list of `cfg` (the reference chain order; the
+    config's __post_init__ rejects the combinations this order does not
+    cover). Cached per config value: configs are few (the registry plus
+    the odd custom chain)."""
+    stages = []
 
-    codes, uniq = pd.factorize(pd.Series(raw), sort=False)
-    part_texts: list[str] = []
-    part_rel: list[int] = []
-    u_start = np.empty(len(uniq), dtype=np.int64)
-    u_count = np.empty(len(uniq), dtype=np.int64)
-    widths_u = np.empty(len(uniq), dtype=np.int64)
-    for i, u in enumerate(uniq):
-        u_start[i] = len(part_texts)
-        if len(u) > cfg.max_token_length:
-            parts, width = (), 1  # overlong raw token: dropped, 1 position
+    def add(name, kind, fn, **flags):
+        stages.append(Stage(name, kind, fn, **flags))
+
+    def tokenizer(rx=_TOKEN_RE, **flags):
+        add("tokenizer", "tokenize", rx.findall, **flags)
+        add("max_token_length", "filter",
+            partial(_fits, cfg.max_token_length), reshapes_query=False)
+
+    if cfg.html_strip:
+        add("html_strip", "text", html_strip, reshapes_query=False,
+            breaks_alignment=True)
+    for pat, rep in cfg.char_filters:
+        add("pattern_replace", "text", partial(re.compile(pat).sub, rep),
+            retokenizes=True, breaks_alignment=True)
+    if cfg.word_delimiter:
+        # WordDelimiterGraphFilter splits on case changes: the source
+        # keeps its case until the parts are lowercased
+        if cfg.ascii_fold:
+            add("ascii_fold", "text", ascii_fold)
+        tokenizer(reshapes_query=False)
+        add("word_delimiter", "split", partial(_wd_parts, cfg.word_delimiter),
+            retokenizes=True, breaks_alignment=True)
+        if cfg.lowercase:
+            add("lowercase", "map", str.lower, reshapes_query=False)
+    elif cfg.cjk_bigram:
+        # CJKAnalyzer.java:89-96: width fold -> lowercase -> bigram -> stop
+        add("cjk_width", "text", cjk_width_fold)
+        if cfg.lowercase:
+            add("lowercase", "text", str.lower, reshapes_query=False)
+        tokenizer(reshapes_query=False)
+        add("cjk_bigram", "split",
+            partial(cjk_expand, flags=cfg.cjk_bigram,
+                    output_unigrams=cfg.cjk_output_unigrams),
+            retokenizes=True, breaks_alignment=True)
+    else:
+        # the parser lowercases query terms itself, so plain lowercase
+        # does not reshape them; Turkish I/İ folding does
+        if cfg.turkish_case:
+            add("turkish_lowercase", "text", turkish_lower)
+        elif cfg.lowercase:
+            add("lowercase", "text", str.lower, reshapes_query=False)
+        if cfg.ascii_fold:
+            add("ascii_fold", "text", ascii_fold)
+        if cfg.token_pattern:
+            tokenizer(re.compile(cfg.token_pattern), retokenizes=True,
+                      breaks_alignment=True)
         else:
-            parts, width = cjk_expand(u, cfg.cjk_bigram,
-                                      cfg.cjk_output_unigrams)
-        for ptext, prel in parts:
-            part_texts.append(ptext)
-            part_rel.append(prel)
-        u_count[i] = len(part_texts) - u_start[i]
-        widths_u[i] = width
-    all_texts = np.asarray(part_texts, dtype=object)
-    all_rel = np.asarray(part_rel, dtype=np.int64)
-
-    widths = widths_u[codes]
-    counts = u_count[codes]
-    cum = np.cumsum(widths) - widths
-    doc_first = np.concatenate(([0], np.cumsum(raw_counts)[:-1]))
-    base = np.repeat(cum[np.minimum(doc_first, total - 1)], raw_counts)
-    start_pos = cum - base
-    n_parts = int(counts.sum())
-    if n_parts == 0:
-        z = np.empty(0, dtype=np.int64)
-        return np.empty(0, dtype=object), z, z, np.zeros(n, dtype=np.int64)
-    seg_base = np.cumsum(counts) - counts
-    within = np.arange(n_parts, dtype=np.int64) - np.repeat(seg_base, counts)
-    gather = np.repeat(u_start[codes], counts) + within
-    terms = all_texts[gather]
-    pos = np.repeat(start_pos, counts) + all_rel[gather]
-    rows = np.repeat(row_idx, counts)
-
+            tokenizer(reshapes_query=False)
+        if cfg.possessive:
+            add("possessive", "map", strip_possessive)
+        if cfg.french:
+            add("elision", "map", elide)  # pre-stop (FrenchAnalyzer)
+        if cfg.light_lang == "it":
+            add("elision", "map", partial(elide, articles=ITALIAN_ARTICLES))
+        if cfg.turkish_case:
+            add("apostrophe", "map", strip_apostrophe)  # pre-stop
     if cfg.stop_words:
-        keep = ~pd.Series(terms, dtype=object).isin(cfg.stop_words).to_numpy()
-        terms, rows, pos = terms[keep], rows[keep], pos[keep]
-    doc_len = np.bincount(rows, minlength=n).astype(np.int64)
-    return terms, rows, pos, doc_len
+        add("stop", "filter", partial(_not_in, cfg.stop_words),
+            reshapes_query=False)
+    keywords = cfg.stem_exclusions
+    if cfg.french:
+        add("french_light_stem", "map", _keyword_aware(french_term, keywords))
+    if cfg.german:
+        # GermanNormalizationFilter is not keyword-aware; the stem is
+        add("german_light_stem", "map",
+            _keyword_aware(german_term, keywords, german_normalize))
+    if cfg.light_lang:
+        add("light_stem", "map",
+            _keyword_aware(partial(light_stem, cfg.light_lang), keywords))
+    if cfg.stem and cfg.stem_keep_original:
+        add("keyword_repeat_porter", "stack", _with_original, primary=-1)
+    elif cfg.stem:
+        add("porter_stem", "map", _keyword_aware(porter_stem, keywords))
+    if cfg.phonetic:
+        add("phonetic", "stack", partial(_with_code, cfg.phonetic))
+    if cfg.compound_dict:
+        add("dictionary_compound", "stack",
+            partial(_with_parts, partial(compound_decompose,
+                                         dictionary=cfg.compound_dict)),
+            phrase_slots=True)
+    if cfg.hyphen_spec is not None:
+        add("hyphenation_compound", "stack",
+            partial(_with_parts, partial(hyphen_decompose,
+                                         spec=cfg.hyphen_spec,
+                                         dictionary=cfg.hyphen_dict)),
+            phrase_slots=True)
+    if cfg.synonyms:
+        # the flatten renumbers positions and multi-word rules extend
+        # them past the raw token count
+        add("synonym_graph", "stream",
+            partial(_synonym_stream, rules_map(cfg.synonyms)),
+            breaks_alignment=True)
+    if cfg.common_grams:
+        add("common_grams", "stream",
+            partial(_common_grams_stream, cfg.common_grams))
+    return tuple(stages)
 
 
-def _flatten_tokens_wd(texts: pd.Series, cfg: AnalyzerConfig):
-    """Vectorized inversion prep for the word_delimiter chain: tokenize
-    the CASE-PRESERVING source, split per UNIQUE raw token (Zipf: the
-    vocabulary is far smaller than the token stream — same trick as
-    stemming), then expand the stream with a gather over per-unique part
-    slices. Positions = segmented exclusive cumsum of token widths plus
-    each part's in-token start (graph position semantics). Must stay
-    stream-identical to _tokenize_one_wd (scalar==vectorized test)."""
-    n = len(texts)
-    src = texts.fillna("")
-    if cfg.ascii_fold:
-        src = src.str.translate(_FOLD_TABLE)
-    tok_lists = src.str.findall(_TOKEN_RE)
-    raw_counts = tok_lists.map(len).to_numpy(dtype=np.int64)
-    total = int(raw_counts.sum())
-    if total == 0:
-        z = np.empty(0, dtype=np.int64)
-        return np.empty(0, dtype=object), z, z, np.zeros(n, dtype=np.int64)
-    raw = np.concatenate([np.asarray(t, dtype=object) for t in tok_lists if t])
-    row_idx = np.repeat(np.arange(n, dtype=np.int64), raw_counts)
+def _encode(tokens: list):
+    """tokens -> (vocabulary, int64 codes into it)."""
+    ids = dict.fromkeys(tokens)
+    for i, tok in enumerate(ids):
+        ids[tok] = i
+    return list(ids), np.fromiter(map(ids.__getitem__, tokens), np.int64,
+                                  len(tokens))
 
-    codes, uniq = pd.factorize(pd.Series(raw), sort=False)
-    flags = cfg.word_delimiter
-    part_texts: list[str] = []
-    part_offs: list[int] = []
-    u_start = np.empty(len(uniq), dtype=np.int64)
-    u_count = np.empty(len(uniq), dtype=np.int64)
-    widths_u = np.empty(len(uniq), dtype=np.int64)
-    for i, u in enumerate(uniq):
-        u_start[i] = len(part_texts)
-        if len(u) > cfg.max_token_length:
-            parts, width = (), 1  # overlong raw token: dropped, 1 position
+
+def _take(vocab: list, codes: np.ndarray) -> np.ndarray:
+    return np.array(vocab, dtype=object)[codes]
+
+
+def _expand(stage: Stage, vocab: list, codes, row_idx, pos, n: int):
+    """A split or stack stage: each vocabulary entry becomes its parts,
+    then every token gathers its entry's part slice."""
+    split = stage.kind == "split"
+    parts, rels, sizes, extra = [], [], [], []
+    for tok in vocab:
+        if split:
+            out, width = stage.fn(tok)
+            parts.extend(text for text, _ in out)
+            rels.extend(rel for _, rel in out)
+            extra.append(width - 1)
         else:
-            parts, width = wd_split(u, flags)
-        for ptext, pstart, _pend in parts:
-            part_texts.append(ptext.lower() if cfg.lowercase else ptext)
-            part_offs.append(pstart)
-        u_count[i] = len(part_texts) - u_start[i]
-        widths_u[i] = width
-    all_texts = np.asarray(part_texts, dtype=object)
-    all_offs = np.asarray(part_offs, dtype=np.int64)
+            out = stage.fn(tok)
+            parts.extend(out)
+        sizes.append(len(out))
+    if all(k == 1 for k in sizes) and not any(extra) and not any(rels):
+        return parts, codes, row_idx, pos  # one part per token: a map
+    if any(extra):
+        # a token's start moves by the extra width of the earlier tokens
+        # of its document (dropped tokens kept width 1: no shift)
+        shift = np.asarray(extra, dtype=np.int64)[codes]
+        shift = np.cumsum(shift) - shift
+        per_doc = np.bincount(row_idx, minlength=n)
+        pos = pos + shift - shift[(np.cumsum(per_doc) - per_doc)[row_idx]]
+    sizes = np.asarray(sizes, dtype=np.int64)
+    first = np.cumsum(sizes) - sizes
+    counts = sizes[codes]
+    seg = np.cumsum(counts) - counts
+    new_codes = np.repeat(first[codes] - seg, counts)
+    new_codes += np.arange(len(new_codes), dtype=np.int64)
+    pos = np.repeat(pos, counts)
+    if any(rels):
+        pos += np.asarray(rels, dtype=np.int64)[new_codes]
+    return parts, new_codes, np.repeat(row_idx, counts), pos
 
-    widths = widths_u[codes]
-    counts = u_count[codes]
-    # per-token start position = exclusive cumsum of widths within its doc
-    cum = np.cumsum(widths) - widths
-    doc_first = np.concatenate(([0], np.cumsum(raw_counts)[:-1]))
-    base = np.repeat(cum[np.minimum(doc_first, total - 1)], raw_counts)
-    start_pos = cum - base
-    # gather each token's part slice [u_start, u_start + u_count)
-    n_parts = int(counts.sum())
-    if n_parts == 0:
-        z = np.empty(0, dtype=np.int64)
-        return np.empty(0, dtype=object), z, z, np.zeros(n, dtype=np.int64)
-    seg_base = np.cumsum(counts) - counts
-    within = np.arange(n_parts, dtype=np.int64) - np.repeat(seg_base, counts)
-    gather = np.repeat(u_start[codes], counts) + within
-    terms = all_texts[gather]
-    pos = np.repeat(start_pos, counts) + all_offs[gather]
-    rows = np.repeat(row_idx, counts)
 
-    if cfg.stop_words:
-        keep = ~pd.Series(terms, dtype=object).isin(cfg.stop_words).to_numpy()
-        terms, rows, pos = terms[keep], rows[keep], pos[keep]
-    if cfg.stem:
-        terms = stem_array(terms)
-    doc_len = np.bincount(rows, minlength=n).astype(np.int64)
-    return terms, rows, pos, doc_len
+def _run(texts: list, cfg: AnalyzerConfig):
+    """The chain of `cfg` over document texts -> flat (terms, row_idx,
+    pos). Tokens travel as int64 codes into a vocabulary; map, filter,
+    split and stack stages call their function once per vocabulary
+    entry."""
+    n = len(texts)
+    vocab, codes, row_idx, pos = [], None, None, None
+    for stage in cfg.stages:
+        kind = stage.kind
+        if kind == "text":
+            texts = list(map(stage.fn, texts))
+        elif kind == "tokenize":
+            tokens = list(map(stage.fn, texts))
+            counts = np.fromiter(map(len, tokens), np.int64, n)
+            vocab, codes = _encode(list(chain.from_iterable(tokens)))
+            row_idx = np.repeat(np.arange(n, dtype=np.int64), counts)
+            pos = np.arange(len(codes), dtype=np.int64) - np.repeat(
+                np.cumsum(counts) - counts, counts)
+        elif kind == "filter":
+            keep = list(map(stage.fn, vocab))
+            if not all(keep):
+                sel = np.asarray(keep, dtype=bool)[codes]
+                codes, row_idx, pos = codes[sel], row_idx[sel], pos[sel]
+        elif kind == "map":
+            vocab = list(map(stage.fn, vocab))
+        elif kind == "stream":
+            terms, row_idx, pos = stage.fn(_take(vocab, codes), row_idx, pos, n)
+            vocab, codes = terms.tolist(), np.arange(len(terms), dtype=np.int64)
+        else:
+            vocab, codes, row_idx, pos = _expand(stage, vocab, codes,
+                                                 row_idx, pos, n)
+    return _take(vocab, codes), row_idx, pos
+
+
+def flatten_tokens(texts: pd.Series, cfg: AnalyzerConfig = STANDARD):
+    """Inversion prep: Series[str] -> (terms ndarray[object], row_idx
+    int64, pos int64, doc_len int64). doc_len is the emitted token count
+    per row (the norm input)."""
+    terms, row_idx, pos = _run(texts.fillna("").tolist(), cfg)
+    return terms, row_idx, pos, np.bincount(row_idx, minlength=len(texts))
+
+
+def tokenize_one(text: str, cfg: AnalyzerConfig = STANDARD) -> tuple[list, list]:
+    """Analyze one string -> (terms, positions). Positions reflect the
+    pre-filter token index, so stop/overlong removals keep increments."""
+    if not text:
+        return [], []
+    terms, _, pos = _run([text], cfg)
+    return terms.tolist(), pos.tolist()
+
+
+def analyze_series(texts: pd.Series, cfg: AnalyzerConfig = STANDARD) -> pd.Series:
+    """Series[str] -> Series[list[str]] of each row's emitted terms."""
+    terms, _, _, doc_len = flatten_tokens(texts, cfg)
+    terms = terms.tolist()
+    ends = np.cumsum(doc_len).tolist()
+    return pd.Series([terms[a:b] for a, b in zip([0] + ends[:-1], ends)],
+                     index=texts.index, dtype=object)
+
+
+def query_forms(text: str, cfg: AnalyzerConfig, stacks: str = "all") -> tuple:
+    """One query token through the chain's per-token stages (text, map,
+    filter and stack; the query is one raw token, so the tokenizer,
+    split and stream stages do not apply). A token a filter drops comes
+    back as it is at that point: like a TermQuery for a stopped term, it
+    matches nothing. `stacks` picks which stack stages contribute all
+    their members: "all" (a Term's SynonymQuery), "phrase" (the stages
+    declaring phrase_slots) or "none"; the others contribute their
+    primary member."""
+    forms = (text,)
+    for stage in cfg.stages:
+        kind = stage.kind
+        if kind in ("text", "map"):
+            forms = tuple(map(stage.fn, forms))
+        elif kind == "filter":
+            if not all(map(stage.fn, forms)):
+                return forms
+        elif kind == "stack":
+            if stacks == "all" or (stacks == "phrase" and stage.phrase_slots):
+                forms = tuple(dict.fromkeys(
+                    m for f in forms for m in stage.fn(f)))
+            else:
+                forms = tuple(stage.fn(f)[stage.primary] for f in forms)
+    return forms
 
 
 def shingle_tokens(

@@ -25,9 +25,6 @@ default; articles: FrenchAnalyzer.DEFAULT_ARTICLES.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 FRENCH_ARTICLES = frozenset({
     "l", "m", "t", "qu", "n", "s", "j", "d", "c",
     "jusqu", "quoiqu", "lorsqu", "puisqu",
@@ -181,13 +178,3 @@ def french_term(word: str) -> str:
     covers the post-stop stage only (stemming; elision is applied by the
     chain before the stop filter)."""
     return french_light_stem(word)
-
-
-def french_array(terms: np.ndarray) -> np.ndarray:
-    """Per-UNIQUE-term stem, C-level gather back (porter.stem_array
-    shape)."""
-    if len(terms) == 0:
-        return terms
-    codes, uniq = pd.factorize(pd.Series(terms, dtype=object), sort=False)
-    mapped = np.asarray([french_light_stem(t) for t in uniq], dtype=object)
-    return mapped[codes]

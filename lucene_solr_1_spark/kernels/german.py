@@ -27,9 +27,6 @@ GermanAnalyzer's default.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 GERMAN_STOP_WORDS = frozenset({
     "aber", "alle", "allem", "allen", "aller", "alles", "als", "also",
     "am", "an", "ander", "andere", "anderem", "anderen", "anderer",
@@ -148,14 +145,3 @@ def german_term(word: str) -> str:
     """The two post-stop chain stages applied to one lowercased token
     (GermanAnalyzer.java:132-142 order: normalize, then light-stem)."""
     return german_light_stem(german_normalize(word))
-
-
-def german_array(terms: np.ndarray) -> np.ndarray:
-    """Per-UNIQUE-term normalization+stem (Zipf: vocabulary << token
-    stream), then a C-level gather back over the token array — the same
-    vectorization shape as porter.stem_array."""
-    if len(terms) == 0:
-        return terms
-    codes, uniq = pd.factorize(pd.Series(terms, dtype=object), sort=False)
-    mapped = np.asarray([german_term(t) for t in uniq], dtype=object)
-    return mapped[codes]

@@ -14,7 +14,7 @@ contract pinned by the reference test suite
   testEntities:102-109); a bare '&' survives
 
 The ordered step list `STRIP_STEPS` is the ONE spec: the Python engine
-(html_strip / the pandas vectorized twin) and the DuckDB oracle chain
+(html_strip) and the DuckDB oracle chain
 (sql/kernel_oracle.py html twin) are both generated from it. Numeric
 entities are decoded by a Python-only final step — the oracle generator
 asserts the corpus contains none (same posture as the tokenizer-compat
@@ -71,11 +71,3 @@ def html_strip(text: str) -> str:
     for pat, rep in _COMPILED:
         text = pat.sub(rep, text)
     return _NUMERIC_ENTITY.sub(_decode_numeric, text)
-
-
-def html_strip_series(texts):
-    """Vectorized pandas twin — same steps, C-level regex per step."""
-    s = texts
-    for pat, rep in _COMPILED:
-        s = s.str.replace(pat, rep, regex=True)
-    return s.map(lambda t: _NUMERIC_ENTITY.sub(_decode_numeric, t))

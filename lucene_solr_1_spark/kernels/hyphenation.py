@@ -25,16 +25,12 @@ analysis/compound/):
 
 The scalar `hyphen_decompose` below is the pinned contract (reference
 goldens over the public da_UTF8.xml pattern file in
-tests/test_hyphenation.py); `hyphen_subwords_for_array` is the
-per-unique-term vectorized twin used by the flatten path."""
+tests/test_hyphenation.py)."""
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-
-import numpy as np
-import pandas as pd
 
 from .compound import (DEFAULT_MAX_SUBWORD_SIZE, DEFAULT_MIN_SUBWORD_SIZE,
                        DEFAULT_MIN_WORD_SIZE)
@@ -214,15 +210,3 @@ def hyphen_decompose(
         if only_longest and longest is not None:
             out.append(longest)
     return out
-
-
-def hyphen_subwords_for_array(
-    terms: np.ndarray, spec: HyphenationSpec,
-    dictionary: frozenset | None,
-) -> list:
-    """Per-unique decomposition over a token array (Zipf: vocabulary <<
-    token stream) — the vectorized twin of per-token hyphen_decompose
-    (the scalar==vectorized stream test pins agreement)."""
-    codes, uniq = pd.factorize(pd.Series(terms, dtype=object), sort=False)
-    subs_u = [hyphen_decompose(u, spec, dictionary) for u in uniq]
-    return [subs_u[c] for c in codes]

@@ -25,9 +25,6 @@ from __future__ import annotations
 
 from functools import lru_cache
 
-import numpy as np
-import pandas as pd
-
 _VOWELS = frozenset("aeiou")
 
 
@@ -182,20 +179,3 @@ def strip_possessive(w: str) -> str:
     if len(w) >= 2 and w[-1] in "sS" and w[-2] in "'’＇":
         return w[:-2]
     return w
-
-
-def stem_unique_map(terms: np.ndarray) -> dict:
-    """Porter stems for the UNIQUE values only — the vectorization lever:
-    per-token cost collapses to per-vocabulary-entry cost (Zipf: the
-    vocabulary is orders of magnitude smaller than the token stream)."""
-    return {t: porter_stem(t) for t in pd.unique(pd.Series(terms, dtype=object))}
-
-
-def stem_array(terms: np.ndarray) -> np.ndarray:
-    """Apply porter_stem over an object ndarray via the unique-map trick."""
-    if len(terms) == 0:
-        return terms
-    s = pd.Series(terms, dtype=object)
-    uniq = pd.unique(s)
-    mapping = {t: porter_stem(t) for t in uniq}
-    return s.map(mapping).to_numpy(dtype=object)

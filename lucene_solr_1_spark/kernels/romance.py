@@ -25,9 +25,6 @@ reference ships verbatim (snowball/{spanish,portuguese,italian}_stop
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 SPANISH_STOP_WORDS = frozenset({
     "a", "al", "algo", "algunas", "algunos", "ante", "antes", "como",
     "con", "contra", "cual", "cuando", "de", "del", "desde", "donde",
@@ -785,14 +782,3 @@ LIGHT_STEMMERS = {
 
 def light_stem(lang: str, word: str) -> str:
     return LIGHT_STEMMERS[lang](word)
-
-
-def light_stem_array(lang: str, terms: np.ndarray) -> np.ndarray:
-    """Per-UNIQUE-term stem, C-level gather back (porter.stem_array
-    shape)."""
-    if len(terms) == 0:
-        return terms
-    fn = LIGHT_STEMMERS[lang]
-    codes, uniq = pd.factorize(pd.Series(terms, dtype=object), sort=False)
-    mapped = np.asarray([fn(t) for t in uniq], dtype=object)
-    return mapped[codes]

@@ -842,59 +842,17 @@ def analyze_query_terms(q: Query, cfg, keyword_fields: frozenset) -> Query:
     emits for analyzer-split tokens); Phrase slots flatten their parts
     into the sequence (createPhraseQuery). Span text keeps only the
     FIRST part — spans over split compounds are not representable in a
-    single SpanTerm (compose SpanNear of parts explicitly instead)."""
-    from ..kernels.porter import porter_stem, strip_possessive
+    single SpanTerm (compose SpanNear of parts explicitly instead).
 
-    def pre_stem(text: str) -> str:
-        """The analyzed token BEFORE stemming (possessive/lower/fold
-        applied) — the form KeywordRepeatFilter indexes as the
-        'original', so stem_keep's Synonym original member must match
-        it (raw lowercase alone diverges once ascii_fold/possessive
-        are in the chain)."""
-        from ..kernels.analyzer import ascii_fold
-
-        t = strip_possessive(text) if cfg.possessive else text
-        if cfg.lowercase:
-            if getattr(cfg, "turkish_case", False):
-                from ..kernels.turkish import turkish_lower
-
-                t = turkish_lower(t)
-            else:
-                t = t.lower()
-        if cfg.ascii_fold:
-            t = ascii_fold(t)
-        return t
+    Per-token forms come from the chain's own stages
+    (kernels.analyzer.query_forms): stacked-token stages (KeywordRepeat,
+    phonetic, compounds) turn a Term into a SynonymQuery of their
+    members, and the stages declaring phrase_slots turn a Phrase slot
+    into MultiPhrase alternatives."""
+    from ..kernels.analyzer import query_forms, tokenize_one
 
     def one(text: str) -> str:
-        t = pre_stem(text)
-        excl = getattr(cfg, "stem_exclusions", frozenset())
-        if cfg.stem and t not in cfg.stop_words and t not in excl:
-            t = porter_stem(t)
-        if getattr(cfg, "german", False) and t not in cfg.stop_words:
-            from ..kernels.german import german_normalize, german_term
-
-            # SetKeywordMarkerFilter skips the stem, not the normalization
-            t = german_normalize(t) if t in excl else german_term(t)
-        if getattr(cfg, "french", False):
-            from ..kernels.french import elide, french_term
-
-            t = elide(t)
-            if t not in cfg.stop_words and t not in excl:
-                t = french_term(t)
-        lang = getattr(cfg, "light_lang", "")
-        if lang:
-            from ..kernels.french import elide
-            from ..kernels.romance import ITALIAN_ARTICLES, light_stem
-
-            if lang == "it":
-                t = elide(t, ITALIAN_ARTICLES)
-            if getattr(cfg, "turkish_case", False):
-                from ..kernels.turkish import strip_apostrophe
-
-                t = strip_apostrophe(t)  # ApostropheFilter pre-stop
-            if t not in cfg.stop_words and t not in excl:
-                t = light_stem(lang, t)
-        return t
+        return query_forms(text, cfg, "none")[0]
 
     def many(text: str) -> list[str]:
         # chains that re-tokenize (wd / cjk bigram) or change the token
@@ -903,13 +861,9 @@ def analyze_query_terms(q: Query, cfg, keyword_fields: frozenset) -> Query:
         # under a hyphen-joining char filter becomes 'datadriven'; a CJK
         # run becomes its bigram sequence, and the multi-bigram Term ->
         # OR-of-parts below is QueryBuilder.analyzeMultiBoolean's shape)
-        if not (cfg.word_delimiter or getattr(cfg, "char_filters", ())
-                or getattr(cfg, "token_pattern", "")
-                or getattr(cfg, "cjk_bigram", 0)):
-            return [one(text)]
-        from ..kernels.analyzer import tokenize_one
-
-        return tokenize_one(text, cfg)[0]
+        if cfg.retokenizes:
+            return tokenize_one(text, cfg)[0]
+        return [one(text)]
 
     def walk(node, field=DEFAULT_FIELD):
         if isinstance(node, str):  # span term sugar
@@ -920,55 +874,25 @@ def analyze_query_terms(q: Query, cfg, keyword_fields: frozenset) -> Query:
         if isinstance(node, Term):
             if node.field in keyword_fields:
                 return node
-            parts = many(node.text)
-            if len(parts) > 1:
-                return Bool.of(
-                    *((Occur.SHOULD, Term(p, field=node.field)) for p in parts)
-                )
-            t = parts[0] if parts else one(node.text)
-            if getattr(cfg, "stem_keep_original", False):
-                # KeywordRepeat chain: the query analyzer also emits
-                # (original, stem) at one position -> SynonymQuery
-                base = pre_stem(node.text)
-                if base != t:
-                    return Synonym((base, t), field=node.field)
-            if cfg.phonetic:
-                # PhoneticFilter inject=true at query time: the analyzer
-                # emits (term, code) at one position -> QueryBuilder
-                # builds a SynonymQuery (PhoneticFilter.java:43-90)
-                from ..kernels.phonetic import phonetic_code
-
-                code = phonetic_code(t, cfg.phonetic)
-                if code:
-                    return Synonym((t, code), field=node.field)
-            if getattr(cfg, "synonyms", ()):
-                syn = _expand_synonym_term(t, cfg, node.field)
+            if cfg.retokenizes:
+                parts = many(node.text)
+                if len(parts) > 1:
+                    return Bool.of(*((Occur.SHOULD, Term(p, field=node.field))
+                                     for p in parts))
+                forms = (parts[0] if parts else one(node.text),)
+            else:
+                forms = query_forms(node.text, cfg)
+            if len(forms) > 1:
+                # stacked tokens at one position -> SynonymQuery
+                # (QueryBuilder over posIncr-0 tokens); members dedupe so
+                # a compound part equal to the whole token does not
+                # double-count the freq sum
+                return Synonym(forms, field=node.field)
+            if cfg.synonyms:
+                syn = _expand_synonym_term(forms[0], cfg, node.field)
                 if syn is not None:
                     return syn
-            if getattr(cfg, "compound_dict", frozenset()):
-                # DictionaryCompoundWordTokenFilter at query time emits
-                # (term, *subwords) at one position -> SynonymQuery;
-                # members dedupe (a dictionary hit equal to the whole
-                # token must not double-count the freq sum)
-                from ..kernels.compound import decompose
-
-                subs = decompose(t, cfg.compound_dict)
-                if subs:
-                    members = tuple(dict.fromkeys((t, *subs)))
-                    if len(members) > 1:
-                        return Synonym(members, field=node.field)
-            if getattr(cfg, "hyphen_spec", None) is not None:
-                # HyphenationCompoundWordTokenFilter at query time:
-                # (term, *parts) at one position -> SynonymQuery;
-                # members dedupe like the dictionary-compound chain
-                from ..kernels.hyphenation import hyphen_decompose
-
-                subs = hyphen_decompose(t, cfg.hyphen_spec, cfg.hyphen_dict)
-                if subs:
-                    members = tuple(dict.fromkeys((t, *subs)))
-                    if len(members) > 1:
-                        return Synonym(members, field=node.field)
-            return Term(t, field=node.field, df_override=node.df_override)
+            return Term(forms[0], field=node.field, df_override=node.df_override)
         if isinstance(node, MultiPhrase):
             if node.field in keyword_fields:
                 return node
@@ -992,12 +916,17 @@ def analyze_query_terms(q: Query, cfg, keyword_fields: frozenset) -> Query:
                 return node
             if isinstance(node, Synonym):
                 return Synonym(tuple(one(t) for t in node.terms), field=node.field)
-            terms = tuple(p for t in node.terms for p in (many(t) or [one(t)]))
-            if getattr(cfg, "synonyms", ()):
+            if cfg.retokenizes:
+                slots = tuple((p,) for t in node.terms
+                              for p in (many(t) or [one(t)]))
+            else:
+                slots = tuple(query_forms(t, cfg, "phrase") for t in node.terms)
+            terms = tuple(slot[0] for slot in slots)
+            if cfg.synonyms:
                 syn = _expand_synonym_phrase(terms, cfg, node)
                 if syn is not None:
                     return syn
-            if getattr(cfg, "common_grams", frozenset()):
+            if cfg.common_grams:
                 # CommonGramsQueryFilter: grams whenever possible,
                 # displaced unigrams dropped; every emitted token takes
                 # posIncr 1, so the rewritten phrase is consecutive
@@ -1007,32 +936,11 @@ def analyze_query_terms(q: Query, cfg, keyword_fields: frozenset) -> Query:
                 if len(toks) == 1:
                     return Term(toks[0], field=node.field)
                 return Phrase(tuple(toks), slop=node.slop, field=node.field)
-            if getattr(cfg, "compound_dict", frozenset()):
-                # stacked subwords at a slot -> MultiPhrase alternatives
+            if any(len(slot) > 1 for slot in slots):
+                # stacked parts at a slot -> MultiPhrase alternatives
                 # (QueryBuilder.createPhraseQuery over a stream with
                 # posIncr-0 tokens yields a MultiPhraseQuery)
-                from ..kernels.compound import decompose
-
-                slots = tuple(
-                    tuple(dict.fromkeys((t, *decompose(t, cfg.compound_dict))))
-                    for t in terms
-                )
-                if any(len(s) > 1 for s in slots):
-                    return MultiPhrase(slots, slop=node.slop, field=node.field)
-            if getattr(cfg, "hyphen_spec", None) is not None:
-                # stacked hyphenation parts at a slot -> MultiPhrase
-                # alternatives, same shape as the dictionary chain
-                from ..kernels.hyphenation import hyphen_decompose
-
-                slots = tuple(
-                    tuple(dict.fromkeys(
-                        (t, *hyphen_decompose(t, cfg.hyphen_spec,
-                                              cfg.hyphen_dict))
-                    ))
-                    for t in terms
-                )
-                if any(len(s) > 1 for s in slots):
-                    return MultiPhrase(slots, slop=node.slop, field=node.field)
+                return MultiPhrase(slots, slop=node.slop, field=node.field)
             return Phrase(terms, slop=node.slop, field=node.field)
         if isinstance(node, SpanOr):
             return SpanOr(

@@ -257,20 +257,9 @@ class LuceneSparkSearcher:
 
     def _analyze_query(self, q: Query) -> Query:
         cfg = self.analyzer_cfg
-        if not (cfg.stem or cfg.possessive or cfg.ascii_fold
-                or cfg.word_delimiter or cfg.phonetic
-                or cfg.stem_keep_original or getattr(cfg, "german", False)
-                or getattr(cfg, "french", False)
-                or getattr(cfg, "light_lang", "")
-                or getattr(cfg, "synonyms", ())
-                or getattr(cfg, "common_grams", frozenset())
-                or getattr(cfg, "compound_dict", frozenset())
-                or getattr(cfg, "hyphen_spec", None) is not None
-                or getattr(cfg, "char_filters", ())
-                or getattr(cfg, "token_pattern", "")
-                or getattr(cfg, "cjk_bigram", 0)
-                or getattr(cfg, "turkish_case", False)):
-            # standard/english indexes: today's raw-term behavior, exactly
+        if not cfg.reshapes_query:
+            # no stage of the index chain reshapes a parsed query term
+            # (standard/english): the raw terms match as they are
             return q
         from ..index.segment import KEYWORD_FIELDS
         from .query import analyze_query_terms

@@ -10,6 +10,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from lucene_solr_1_spark.session import get_spark  # noqa: E402
 
 
+def reference_file(path: str) -> str:
+    """`path` of a file from the reference checkout's test data; skips the
+    calling test, naming the file, when the checkout is absent (the
+    in-repo pins in test_stemmer_pins.py still cover those functions)."""
+    if not os.path.exists(path):
+        pytest.skip(f"reference test data not found: {path}")
+    return path
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=8)

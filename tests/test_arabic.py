@@ -16,6 +16,8 @@ from lucene_solr_1_spark.kernels.arabic import (
     fold_decimal_digits,
 )
 from lucene_solr_1_spark.kernels.romance import light_stem
+from tests.conftest import reference_file
+
 
 _TEST_DIR = (
     "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/"
@@ -24,7 +26,7 @@ _TEST_DIR = (
 
 
 def _golden_pairs(fname: str):
-    with open(f"{_TEST_DIR}/{fname}", encoding="utf-8") as f:
+    with open(reference_file(f"{_TEST_DIR}/{fname}"), encoding="utf-8") as f:
         src = f.read()
     pairs = re.findall(r'check\("([^"]*)",\s*"([^"]*)"\)', src)
     assert len(pairs) >= 10

@@ -23,9 +23,10 @@ from lucene_solr_1_spark.kernels.analyzer import (  # noqa: E402
 from lucene_solr_1_spark.kernels.french import (  # noqa: E402
     FRENCH_STOP_WORDS,
     elide,
-    french_array,
     french_light_stem,
 )
+from tests.conftest import reference_file  # noqa: E402
+
 
 _VOC_ZIP = (
     "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/"
@@ -36,7 +37,7 @@ _VOC_ZIP = (
 def test_light_stem_canonical_vocabulary():
     """The full 20k-word canonical vocabulary from the UniNE reference
     implementation (TestFrenchLightStemFilter.testVocabulary data)."""
-    with zipfile.ZipFile(_VOC_ZIP) as z:
+    with zipfile.ZipFile(reference_file(_VOC_ZIP)) as z:
         lines = z.read("frlight.txt").decode("utf-8").splitlines()
     pairs = [ln.split("\t") for ln in lines if ln]
     assert len(pairs) > 20000

@@ -23,11 +23,12 @@ from lucene_solr_1_spark.kernels.analyzer import (  # noqa: E402
 )
 from lucene_solr_1_spark.kernels.german import (  # noqa: E402
     GERMAN_STOP_WORDS,
-    german_array,
     german_light_stem,
     german_normalize,
     german_term,
 )
+from tests.conftest import reference_file  # noqa: E402
+
 
 _VOC_ZIP = (
     "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/"
@@ -39,7 +40,7 @@ def test_light_stem_canonical_vocabulary():
     """The full 35k-word canonical vocabulary from the UniNE reference
     implementation (same data TestGermanLightStemFilter.testVocabulary
     runs)."""
-    with zipfile.ZipFile(_VOC_ZIP) as z:
+    with zipfile.ZipFile(reference_file(_VOC_ZIP)) as z:
         lines = z.read("delight.txt").decode("utf-8").splitlines()
     pairs = [ln.split("\t") for ln in lines if ln]
     assert len(pairs) > 30000
@@ -105,9 +106,6 @@ def test_scalar_matches_vectorized():
     assert list(pos) == sp
     assert list(dl) == list(sdl)
     assert [x for lst in analyze_series(s, GERMAN) for x in lst] == st
-    # german_array standalone round-trip
-    arr = np.asarray(["haeuser", "haus", "haeuser"], dtype=object)
-    assert list(german_array(arr)) == ["haus", "haus", "haus"]
 
 
 def test_config_exclusivity():

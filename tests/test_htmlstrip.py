@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 
 from lucene_solr_1_spark.kernels.analyzer import HTML, AnalyzerConfig, tokenize_one
-from lucene_solr_1_spark.kernels.htmlstrip import html_strip, html_strip_series
+from lucene_solr_1_spark.kernels.htmlstrip import html_strip
 
 
 def test_reference_goldens():
@@ -41,18 +41,6 @@ def test_reference_goldens():
     assert html_strip('one<style type="text/css">\n.x{}\n</style>two') == "one\ntwo"
     # testComment: three dashes still a valid comment
     assert html_strip("<!--- three dashes, still a valid comment ---> ") == " "
-
-
-def test_series_twin_matches_scalar():
-    rows = [
-        "<p>a b</p> c &amp; d",
-        "one<script>x</script>two <b>three</b>",
-        "no markup at all",
-        "",
-        "&#72;&#105; <br> there",
-    ]
-    s = html_strip_series(pd.Series(rows))
-    assert s.tolist() == [html_strip(t) for t in rows]
 
 
 def test_chain_and_guards(spark, tmp_path_factory):

@@ -5,18 +5,19 @@ TestCompoundWordTokenFilter.java:48-135 + da_UTF8.xml, read at test
 time, not copied), plus scalar==vectorized stream agreement and the
 query-side Synonym/MultiPhrase reshaping."""
 
-import numpy as np
 import pandas as pd
 import pytest
 
 from lucene_solr_1_spark.kernels.analyzer import (
-    HYPHEN_DICT, HYPHEN_SPEC, HYPHENATION, AnalyzerConfig, analyze_series,
+    HYPHEN_SPEC, HYPHENATION, AnalyzerConfig, analyze_series,
     flatten_tokens, tokenize_one,
 )
 from lucene_solr_1_spark.kernels.hyphenation import (
-    HyphenationSpec, hyphen_decompose, hyphen_subwords_for_array,
+    HyphenationSpec, hyphen_decompose,
     hyphenation_points, parse_pattern_values, parse_patterns_xml,
 )
+from tests.conftest import reference_file
+
 
 DA_XML = (
     "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/"
@@ -26,7 +27,7 @@ DA_XML = (
 
 @pytest.fixture(scope="module")
 def da_spec():
-    with open(DA_XML, encoding="utf-8") as f:
+    with open(reference_file(DA_XML), encoding="utf-8") as f:
         return parse_patterns_xml(f.read())
 
 
@@ -161,15 +162,6 @@ def test_scalar_vectorized_flatten_agree():
         assert list(ft[m]) == terms
         assert list(fp[m]) == poss
         assert fd[i] == len(terms)
-
-
-def test_subwords_for_array_matches_scalar():
-    terms = np.asarray(
-        ["customer", "window", "merge", "customer", "x"], dtype=object
-    )
-    subs = hyphen_subwords_for_array(terms, HYPHEN_SPEC, HYPHEN_DICT)
-    for t, s in zip(terms, subs):
-        assert s == hyphen_decompose(t, HYPHEN_SPEC, HYPHEN_DICT)
 
 
 def test_query_side_synonym_and_multiphrase():

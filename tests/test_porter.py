@@ -14,8 +14,10 @@ from lucene_solr_1_spark.kernels.analyzer import (
     tokenize_one,
 )
 from lucene_solr_1_spark.kernels.porter import (
-    porter_stem, stem_array, strip_possessive,
+    porter_stem, strip_possessive,
 )
+from tests.conftest import reference_file
+
 
 _VOC_ZIP = (
     "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/"
@@ -26,7 +28,7 @@ _VOC_ZIP = (
 def test_porter_canonical_vocabulary():
     """The full 23k-word canonical test vocabulary (public-domain data
     from tartarus.org, same data TestPorterStemFilter uses)."""
-    with zipfile.ZipFile(_VOC_ZIP) as z:
+    with zipfile.ZipFile(reference_file(_VOC_ZIP)) as z:
         voc = z.read("voc.txt").decode().split()
         out = z.read("output.txt").decode().split()
     assert len(voc) == len(out) and len(voc) > 20000
@@ -95,11 +97,6 @@ def test_flatten_tokens_matches_tokenize_one_stemmed():
     # analyze_series agrees too
     for d, toks in enumerate(analyze_series(texts, ENGLISH_STEM)):
         assert toks == tokenize_one(texts[d], ENGLISH_STEM)[0]
-
-
-def test_stem_array_unique_map():
-    a = np.array(["merges", "merging", "merges", "dog"], dtype=object)
-    assert list(stem_array(a)) == ["merg", "merg", "merg", "dog"]
 
 
 def test_analyzer_names_roundtrip():

@@ -38,13 +38,14 @@ from lucene_solr_1_spark.kernels.romance import (  # noqa: E402
     russian_light_stem,
     hungarian_light_stem,
     italian_light_stem,
-    light_stem_array,
     portuguese_light_stem,
     norwegian_light_stem,
     norwegian_minimal_stem,
     spanish_light_stem,
     swedish_light_stem,
 )
+from tests.conftest import reference_file  # noqa: E402
+
 
 _BASE = (
     "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/"
@@ -64,7 +65,7 @@ _BASE = (
     ("fr/frminimaltestdata.zip", "frminimal.txt", french_minimal_stem),
 ])
 def test_light_stem_canonical_vocabulary(zname, inner, fn):
-    with zipfile.ZipFile(_BASE + zname) as z:
+    with zipfile.ZipFile(reference_file(_BASE + zname)) as z:
         lines = z.read(inner).decode("utf-8").splitlines()
     pairs = [ln.split("\t") for ln in lines if ln.strip()]
     assert len(pairs) > 20000
@@ -145,11 +146,6 @@ def test_scalar_matches_vectorized():
         assert list(pos) == sp
         assert list(dl) == list(sdl)
         assert [x for lst in analyze_series(s, cfg) for x in lst] == st
-        arr = np.asarray(st, dtype=object)
-        assert list(light_stem_array(cfg.light_lang, arr)) == [
-            {"es": spanish_light_stem, "pt": portuguese_light_stem,
-             "it": italian_light_stem}[cfg.light_lang](t) for t in st
-        ]
 
 
 def test_config_exclusivity():
@@ -240,7 +236,7 @@ def test_norwegian_reference_vocabularies():
                       ("nb_minimal.txt", _nb_minimal),
                       ("nn_minimal.txt", _nn_minimal)):
         pairs = []
-        for ln in open(base + fname, encoding="utf-8"):
+        for ln in open(reference_file(base + fname), encoding="utf-8"):
             ln = ln.strip()
             if not ln or ln.startswith("#"):
                 continue

@@ -18,6 +18,8 @@ from lucene_solr_1_spark.kernels.snowball import (
     DUTCH_STEM_OVERRIDES, danish_stem, dutch_stem, dutch_term,
     romanian_stem,
 )
+from tests.conftest import reference_file
+
 
 _VOC_ZIP = (
     "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/"
@@ -26,7 +28,7 @@ _VOC_ZIP = (
 
 
 def _vocab(lang: str):
-    with zipfile.ZipFile(_VOC_ZIP) as z:
+    with zipfile.ZipFile(reference_file(_VOC_ZIP)) as z:
         voc = z.read(f"{lang}/voc.txt").decode("utf-8").split()
         out = z.read(f"{lang}/output.txt").decode("utf-8").split()
     assert len(voc) == len(out) and len(voc) > 20000

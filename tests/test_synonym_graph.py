@@ -8,8 +8,8 @@ Goldens mirror the reference's expectations:
 including the documented LOSSINESS of index-time graph flattening (the
 "wtf the" false phrase match / "wtf happened" false miss).
 
-The vectorized inversion path (_apply_synonyms_flat) must stay
-stream-identical to tokenize_one — same invariant as phonetic/wd chains.
+The synonym_graph stream stage of the analysis chain runs for both
+flatten_tokens and tokenize_one; the stream tests pin that they agree.
 """
 
 import sys

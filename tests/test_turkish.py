@@ -18,6 +18,8 @@ from lucene_solr_1_spark.kernels.romance import light_stem
 from lucene_solr_1_spark.kernels.turkish import (
     TURKISH_STOP_WORDS, strip_apostrophe, turkish_lower, turkish_stem,
 )
+from tests.conftest import reference_file
+
 
 _VOC_ZIP = (
     "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/"
@@ -26,7 +28,7 @@ _VOC_ZIP = (
 
 
 def test_turkish_canonical_vocabulary():
-    with zipfile.ZipFile(_VOC_ZIP) as z:
+    with zipfile.ZipFile(reference_file(_VOC_ZIP)) as z:
         # splitlines, not split: some canonical stems are EMPTY lines
         voc = z.read("turkish/voc.txt").decode("utf-8").splitlines()
         out = z.read("turkish/output.txt").decode("utf-8").splitlines()
