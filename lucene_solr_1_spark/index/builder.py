@@ -1,16 +1,23 @@
 """Distributed index build — Spark partitions as DWPTs (SURVEY.md §3.1).
 
-Shape: read corpus → repartition(num_segments, doc key) →
-mapInPandas(analyze + invert + encode + write segment) → driver commits the
-manifest. The build is SHUFFLE-FREE except the single repartition (which is
-also what fixes docID determinism); inversion, compression and file writes
-are partition-local, so throughput scales linearly with executors — the
-basis of the N→4N ≥0.8 scaling target.
+Shape: read corpus → range-partition by doc key into num_segments ranges →
+per range analyze + invert + encode + write segment → driver commits the
+manifest. Every writer flushes through `_flush`, which builds the ranges in
+one of two places, writing the same segment files either way:
 
-Each task writes its own segment parquet files directly (the executors are
-the writers, as in any Spark sink), then a per-segment meta.json checkpoint
-marker. On re-run, a task whose (partition_id, input_fingerprint) checkpoint
-already exists skips the build entirely — resumability without recompute.
+- the driver, for an in-memory input (optimized plan = LocalRelation) of at
+  most MAX_DOCS_PER_FLUSH rows — Lucene's DocumentsWriterPerThread.flush of
+  a small RAM buffer, then visible to an NRT openIfChanged, with no cluster
+  round trip (at this size it costs more than the build);
+- Spark otherwise: repartitionByRange → mapInPandas(build). SHUFFLE-FREE
+  except that single repartition (which also fixes docID determinism);
+  inversion, compression and file writes are partition-local, so
+  throughput scales linearly with executors.
+
+Each task writes its own segment parquet files, then a per-segment
+meta.json checkpoint marker; a re-run whose (partition_id,
+input_fingerprint) checkpoint exists skips the build — resumability
+without recompute.
 
 Scale notes (100 TB): partition count is the segment-size knob (the RAM
 flush-trigger analog, IndexWriterConfig.java:94) — size partitions so one
@@ -20,23 +27,37 @@ plain strings; on a cluster they would be object-store URIs via fsspec.
 
 from __future__ import annotations
 
+import bisect
+import hashlib
+import json
+import math
 import os
 import time
+from functools import partial
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark import TaskContext
 
 from ..kernels.analyzer import AnalyzerConfig, STANDARD
 from . import manifest as mf
 from .schemas import MANIFEST_ROW_DDL
-from .segment import DOC_KEY, build_segment_frames, segment_fingerprint, content_sha
+from .segment import DOC_KEY, build_segment_frames, content_sha
 
 _POSTINGS_FILE = "postings.parquet"
 _NORMS_FILE = "norms.parquet"
+_CORPUS_COLUMNS = ["repo", "path", "commit", "lang", "content"]
+
+# DocumentsWriterPerThread flush on the driver: an in-memory input of at
+# most this many rows is built in-process, not by a Spark job. Break-even on
+# a 4-core host: add_documents of 200/300 docs at 4 segments took 0.76/0.90 s
+# on the driver vs 0.82/0.86 s on Spark (at 1 segment the driver wins to 2k).
+MAX_DOCS_PER_FLUSH = 250
 
 
 def _write_parquet(pdf: pd.DataFrame, path: str, segment_id: str) -> None:
@@ -46,20 +67,21 @@ def _write_parquet(pdf: pd.DataFrame, path: str, segment_id: str) -> None:
     pq.write_table(table, path, compression="zstd")
 
 
-def _build_partition(batches, index_dir: str, cfg: AnalyzerConfig, fail_partitions,
-                     pid_offset: int = 0, store_offsets: bool = False,
-                     index_sort: tuple | None = None,
-                     store_payloads: bool = False):
-    ctx = TaskContext.get()
-    pid = (ctx.partitionId() if ctx else 0) + pid_offset
+def _build_partition(batches, pid_offset: int = 0, **build):
+    """mapInPandas body: one segment from this task's partition."""
+    pid = TaskContext.get().partitionId() + pid_offset
+    yield pd.DataFrame([_build_segment(list(batches), pid, **build)])
+
+
+def _build_segment(pdfs: list, pid: int, index_dir: str, cfg: AnalyzerConfig,
+                   fail_partitions, store_offsets: bool = False,
+                   index_sort: tuple | None = None,
+                   store_payloads: bool = False) -> dict:
+    """Build (or reuse) segment `pid` from the rows in `pdfs`; returns its
+    manifest row."""
     if fail_partitions and pid in fail_partitions:
         raise RuntimeError(f"injected failure on partition {pid} (resume test)")
-    pdfs = [b for b in batches]
-    pdf = (
-        pd.concat(pdfs, ignore_index=True)
-        if pdfs
-        else pd.DataFrame(columns=["repo", "path", "commit", "lang", "content"])
-    )
+    pdf = pd.concat(pdfs, ignore_index=True) if pdfs else pd.DataFrame(columns=_CORPUS_COLUMNS)
     if index_sort:
         # IndexWriterConfig.setIndexSort analog: docIDs within the segment
         # follow (sort value, doc key) — doc key breaks value ties so the
@@ -80,10 +102,7 @@ def _build_partition(batches, index_dir: str, cfg: AnalyzerConfig, fail_partitio
 
     meta = mf.read_segment_meta(index_dir, segment_id)
     if meta is not None and meta.get("input_fingerprint") == fingerprint:
-        meta = dict(meta)
-        meta["reused"] = True
-        yield pd.DataFrame([_manifest_row(meta)])
-        return
+        return _manifest_row({**meta, "reused": True})
 
     t0 = time.monotonic()
     postings, norms, stats = build_segment_frames(
@@ -91,8 +110,6 @@ def _build_partition(batches, index_dir: str, cfg: AnalyzerConfig, fail_partitio
         store_payloads=store_payloads,
     )
     if isinstance(stats.get("field_stats"), dict):
-        import json
-
         stats["field_stats"] = json.dumps(stats["field_stats"], sort_keys=True)
     seg_dir = mf.segment_dir(index_dir, segment_id)
     os.makedirs(seg_dir, exist_ok=True)
@@ -107,12 +124,10 @@ def _build_partition(batches, index_dir: str, cfg: AnalyzerConfig, fail_partitio
         "reused": False,
     }
     mf.write_segment_meta(index_dir, segment_id, meta)  # checkpoint marker, LAST
-    yield pd.DataFrame([_manifest_row(meta)])
+    return _manifest_row(meta)
 
 
 def _fingerprint_of(pdf: pd.DataFrame) -> str:
-    import hashlib
-
     h = hashlib.sha256()
     for s in content_sha(pdf["content"]):
         h.update(s.encode())
@@ -124,6 +139,79 @@ _MANIFEST_FIELDS = [f.split()[0] for f in MANIFEST_ROW_DDL.split(", ")]
 
 def _manifest_row(meta: dict) -> dict:
     return {k: meta.get(k) for k in _MANIFEST_FIELDS}
+
+
+def _driver_rows(df: DataFrame) -> pd.DataFrame | None:
+    """`df`'s rows when its optimized plan is a LocalRelation (rows already
+    in driver memory: collecting them runs no Spark job) of at most
+    MAX_DOCS_PER_FLUSH rows, so the driver flushes it; else None (Spark)."""
+    plan = df._jdf.queryExecution().optimizedPlan() if hasattr(df, "_jdf") else None
+    if (plan is None or plan.nodeName() != "LocalRelation"
+            or plan.data().size() > MAX_DOCS_PER_FLUSH):
+        return None
+    return pd.DataFrame(df.collect(), columns=df.columns)
+
+
+def _range_chunks(rows: pd.DataFrame, num_segments: int,
+                  sort_spec: tuple | None) -> list[pd.DataFrame]:
+    """Cut `rows` into the partitions repartitionByRange(num_segments, key)
+    makes when its sample holds every row: RangePartitioner.determineBounds
+    with unit weights takes one bound per len/num_segments sorted keys (an
+    equal key never splits), a row goes to the first bound ≥ its key and
+    keeps its input order. Empty ranges build no segment; an empty input
+    builds one empty segment, like Spark's single empty partition."""
+    cols = [rows[c].tolist() for c in DOC_KEY]
+    if sort_spec:  # length(content) leads; Spark sorts it DESC nulls last
+        cols.insert(0, [
+            (math.inf if c is None else -len(c)) if sort_spec[1]
+            else None if c is None else len(c)
+            for c in rows["content"]
+        ])
+    # (is not null, value): an ascending key sorts nulls first
+    keys = [tuple((v is not None, v) for v in doc) for doc in zip(*cols)]
+    step = len(keys) / num_segments
+    target, bounds = step, []
+    for cum, key in enumerate(sorted(keys), 1):
+        if len(bounds) == num_segments - 1:
+            break
+        if cum >= target and (not bounds or key > bounds[-1]):
+            bounds.append(key)
+            target += step
+    part = np.array([bisect.bisect_left(bounds, k) for k in keys], dtype=np.int64)
+    return [rows[part == j] for j in np.unique(part)] or [rows]
+
+
+def _flush(df: DataFrame, rows: pd.DataFrame | None, index_dir: str,
+           num_segments: int, pid_offset: int = 0,
+           pre_partitioned: bool = False, **build) -> list[dict]:
+    """Build `df` (the corpus columns) as segments pid_offset, pid_offset+1,
+    ... and return their manifest rows; the caller commits. With `rows`
+    (_driver_rows) each range is built in-process, else in a Spark task."""
+    sort_spec = build.get("index_sort")
+    if rows is not None:
+        return [
+            _build_segment([chunk], pid_offset + i, index_dir=index_dir, **build)
+            for i, chunk in enumerate(_range_chunks(rows, num_segments, sort_spec))
+        ]
+    if not pre_partitioned:
+        # RANGE partition by doc key: segments hold contiguous key ranges,
+        # so global docID order (doc_base + local) equals the global
+        # (repo, path, commit) sort order — a content-defined total order.
+        # That makes equal-score tie-breaks (HitQueue: docID asc) identical
+        # for ANY segment count and identical to the brute-force oracle
+        # (randomized rank-identity tests pin this).
+        # On a sorted index the range key leads with the sort value, making
+        # the global docID order the global SORT order on a fresh build.
+        key = list(DOC_KEY)
+        if sort_spec:
+            skey = F.length("content")
+            key.insert(0, skey.desc() if sort_spec[1] else skey.asc())
+        df = df.repartitionByRange(num_segments, *key)
+    built = df.mapInPandas(
+        partial(_build_partition, index_dir=index_dir, pid_offset=pid_offset, **build),
+        schema=MANIFEST_ROW_DDL,
+    )
+    return [r.asDict() for r in built.collect()]
 
 
 def build_index(
@@ -140,6 +228,9 @@ def build_index(
     store_payloads: bool = False,
 ) -> dict:
     """Build (or resume) an index over `corpus_df`; returns the manifest.
+
+    An in-memory `corpus_df` of ≤ MAX_DOCS_PER_FLUSH rows is flushed on
+    the driver with no Spark job (DocumentsWriterPerThread.flush analog).
 
     `store_payloads=True` runs the DelimitedPayloadTokenFilter at index
     time (`tok|2.5` annotations become per-occurrence float32 payloads,
@@ -169,8 +260,6 @@ def build_index(
 
     `fail_partitions` injects task failures (resume tests only).
     """
-    from functools import partial
-
     from ..kernels.analyzer import analyzer_name
 
     if index_sort is not None and index_sort != "n_chars":
@@ -180,37 +269,13 @@ def build_index(
     # an unregistered config raises here, before any segment is written
     analyzer = analyzer_name(cfg)
     sort_spec = (index_sort, bool(index_sort_desc)) if index_sort else None
-    df = corpus_df.select("repo", "path", "commit", "lang", "content")
-    if not pre_partitioned:
-        # RANGE partition by doc key: segments hold contiguous key ranges,
-        # so global docID order (doc_base + local) equals the global
-        # (repo, path, commit) sort order — a content-defined total order.
-        # That makes equal-score tie-breaks (HitQueue: docID asc) identical
-        # for ANY segment count and identical to the brute-force oracle
-        # (randomized rank-identity tests pin this).
-        # With index_sort the range key leads with the sort value, making
-        # the global docID order the global SORT order on a fresh build.
-        if sort_spec:
-            from pyspark.sql import functions as F
-
-            skey = F.length("content")
-            skey = skey.desc() if sort_spec[1] else skey.asc()
-            df = df.repartitionByRange(num_segments, skey, *DOC_KEY)
-        else:
-            df = df.repartitionByRange(num_segments, *DOC_KEY)
-    rows = df.mapInPandas(
-        partial(
-            _build_partition,
-            index_dir=index_dir,
-            cfg=cfg,
-            fail_partitions=fail_partitions or set(),
-            store_offsets=store_offsets,
-            index_sort=sort_spec,
-            store_payloads=store_payloads,
-        ),
-        schema=MANIFEST_ROW_DDL,
-    ).collect()
-    segments = [r.asDict() for r in rows]
+    df = corpus_df.select(*_CORPUS_COLUMNS)
+    segments = _flush(
+        df, None if pre_partitioned else _driver_rows(df), index_dir,
+        num_segments, pre_partitioned=pre_partitioned, cfg=cfg,
+        fail_partitions=fail_partitions or set(), store_offsets=store_offsets,
+        index_sort=sort_spec, store_payloads=store_payloads,
+    )
     extra = {"num_segments": num_segments, "analyzer": analyzer}
     if store_offsets:
         extra["offsets"] = True
@@ -221,6 +286,37 @@ def build_index(
     prior = mf.read_manifest(index_dir)
     if prior and prior.get("tombstone_files"):
         extra["tombstone_files"] = prior["tombstone_files"]
+    return mf.commit_manifest(index_dir, segments, extra=extra)
+
+
+def _append(df: DataFrame, rows: pd.DataFrame | None, index_dir: str,
+            manifest: dict, num_segments: int, cfg: AnalyzerConfig | None = None,
+            deleted: pd.DataFrame | None = None) -> dict:
+    """Flush `df` as new segments after the index's last partition, with
+    the index's sticky options (analyzer unless `cfg`, offsets, payloads,
+    index sort), then commit them and the tombstones of the `deleted`
+    (segment_id, doc_id) pairs as ONE new generation."""
+    from ..kernels.analyzer import ANALYZERS
+    from .deletes import write_tombstones
+
+    isrt = manifest.get("index_sort")
+    segments = [dict(s) for s in manifest["segments"]] + _flush(
+        df, rows, index_dir, num_segments,
+        pid_offset=max(s["partition_id"] for s in manifest["segments"]) + 1,
+        cfg=cfg or ANALYZERS.get(manifest.get("analyzer", "standard"), STANDARD),
+        fail_partitions=set(),
+        store_offsets=bool(manifest.get("offsets")),
+        # sorted index: appended segments keep the per-segment sort
+        # guarantee (Lucene's index-sort contract for new flushes)
+        index_sort=(isrt["field"], bool(isrt["desc"])) if isrt else None,
+        store_payloads=bool(manifest.get("payloads")),
+    )
+    extra: dict = {"num_segments": len(segments)}
+    files = list(manifest.get("tombstone_files", []))
+    if deleted is not None and len(deleted):
+        files.append(write_tombstones(index_dir, deleted))
+    if files:
+        extra["tombstone_files"] = files
     return mf.commit_manifest(index_dir, segments, extra=extra)
 
 
@@ -235,55 +331,19 @@ def add_documents(
     DirectoryReader.openIfChanged / SearcherManager). New documents become
     NEW segment partitions appended to the manifest; existing segments,
     their docIDs and tombstones are untouched, so open searchers stay
-    valid and a re-opened searcher sees old + new atomically.
+    valid and a re-opened searcher sees old + new atomically. A small
+    in-memory batch (≤ MAX_DOCS_PER_FLUSH rows) flushes on the driver, as
+    DocumentsWriterPerThread.flush writes a small RAM buffer: no Spark job.
 
     `cfg=None` (default) analyzes with the INDEX's persisted analyzer —
     appending with a different chain than the existing segments would
     silently split the term space (an IndexWriter has ONE analyzer).
     """
-    from functools import partial
-
-    from ..kernels.analyzer import ANALYZERS
-
     manifest = mf.read_manifest(index_dir)
     if manifest is None:
         return build_index(spark, corpus_df, index_dir, num_segments, cfg or STANDARD)
-    if cfg is None:
-        cfg = ANALYZERS.get(manifest.get("analyzer", "standard"), STANDARD)
-    pid_offset = max(s["partition_id"] for s in manifest["segments"]) + 1
-    isrt = manifest.get("index_sort")
-    sort_spec = (isrt["field"], bool(isrt["desc"])) if isrt else None
-    df = corpus_df.select("repo", "path", "commit", "lang", "content")
-    if sort_spec:
-        # sorted index: appended segments keep the per-segment sort
-        # guarantee (Lucene's index-sort contract for new flushes)
-        from pyspark.sql import functions as F
-
-        skey = F.length("content")
-        skey = skey.desc() if sort_spec[1] else skey.asc()
-        df = df.repartitionByRange(num_segments, skey, *DOC_KEY)
-    else:
-        df = df.repartitionByRange(num_segments, *DOC_KEY)
-    rows = df.mapInPandas(
-        partial(
-            _build_partition,
-            index_dir=index_dir,
-            cfg=cfg,
-            fail_partitions=set(),
-            pid_offset=pid_offset,
-            store_offsets=bool(manifest.get("offsets")),
-            index_sort=sort_spec,
-            store_payloads=bool(manifest.get("payloads")),
-        ),
-        schema=MANIFEST_ROW_DDL,
-    ).collect()
-    segments = [dict(s) for s in manifest["segments"]] + [r.asDict() for r in rows]
-    extra = {"num_segments": len(segments)}
-    if manifest.get("analyzer"):
-        extra["analyzer"] = manifest["analyzer"]
-    if manifest.get("tombstone_files"):
-        extra["tombstone_files"] = manifest["tombstone_files"]
-    return mf.commit_manifest(index_dir, segments, extra=extra)
+    df = corpus_df.select(*_CORPUS_COLUMNS)
+    return _append(df, _driver_rows(df), index_dir, manifest, num_segments, cfg)
 
 
 def update_documents(
@@ -300,63 +360,25 @@ def update_documents(
     updateDocument atomicity contract, IndexWriter.java updateDocument /
     softUpdateDocuments). Stats follow Lucene: the replaced docs stay in
     df/avgdl until their segment merges (deletes are masks, not
-    subtractions).
+    subtractions). A small in-memory batch runs no Spark job: its keys
+    come from the collected rows and it flushes on the driver.
 
     Analysis always uses the index's persisted analyzer (an IndexWriter
     has ONE analyzer)."""
-    from functools import partial
-
-    from ..kernels.analyzer import ANALYZERS
-
-    from . import deletes as dels
+    from .deletes import pairs_for_terms
 
     manifest = mf.read_manifest(index_dir)
     if manifest is None:
         raise ValueError("update_documents requires an existing index")
-    cfg = ANALYZERS.get(manifest.get("analyzer", "standard"), STANDARD)
+    df = corpus_df.select(*_CORPUS_COLUMNS)
+    rows = _driver_rows(df)
     keys = tuple(
-        r[0] for r in corpus_df.select(key_field).distinct().collect()
+        rows[key_field].unique() if rows is not None and key_field in rows
+        else (r[0] for r in corpus_df.select(key_field).distinct().collect())
     )
-    pairs = dels.pairs_for_terms(index_dir, manifest, key_field, keys)
-    # build the new segments first (resumable side files), commit last
-    pid_offset = max(s["partition_id"] for s in manifest["segments"]) + 1
-    isrt = manifest.get("index_sort")
-    sort_spec = (isrt["field"], bool(isrt["desc"])) if isrt else None
-    df = corpus_df.select("repo", "path", "commit", "lang", "content")
-    df = df.repartitionByRange(num_segments, *DOC_KEY)
-    rows = df.mapInPandas(
-        partial(
-            _build_partition,
-            index_dir=index_dir,
-            cfg=cfg,
-            fail_partitions=set(),
-            pid_offset=pid_offset,
-            store_offsets=bool(manifest.get("offsets")),
-            index_sort=sort_spec,
-            store_payloads=bool(manifest.get("payloads")),
-        ),
-        schema=MANIFEST_ROW_DDL,
-    ).collect()
-    segments = [dict(s) for s in manifest["segments"]] + [r.asDict() for r in rows]
-    extra: dict = {"num_segments": len(segments)}
-    files = list(manifest.get("tombstone_files", []))
-    if len(pairs):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        import uuid as _uuid
-
-        os.makedirs(os.path.join(index_dir, "deletes"), exist_ok=True)
-        rel = os.path.join("deletes", f"del-{_uuid.uuid4().hex}.parquet")
-        pq.write_table(
-            pa.Table.from_pandas(
-                pairs[["segment_id", "doc_id"]], preserve_index=False
-            ),
-            os.path.join(index_dir, rel),
-        )
-        files.append(rel)
-    if files:
-        extra["tombstone_files"] = files
-    return mf.commit_manifest(index_dir, segments, extra=extra)
+    pairs = pairs_for_terms(index_dir, manifest, key_field, keys)
+    # the new segments are built first (resumable side files), commit last
+    return _append(df, rows, index_dir, manifest, num_segments, deleted=pairs)
 
 
 def atomic_update(
@@ -369,7 +391,8 @@ def atomic_update(
     processor/AtomicUpdateDocumentMerger.java, 'set' modifier): read the
     doc's STORED fields, overlay `set_fields`, and updateDocument — the
     caller never resupplies the whole document. Requires stored fields
-    (ours always are). One atomic commit via update_documents."""
+    (ours always are). One atomic commit via update_documents, flushed on
+    the driver: no Spark job."""
     from ..search.searcher import LuceneSparkSearcher
 
     allowed = {"repo", "commit", "lang", "content"}
@@ -380,7 +403,7 @@ def atomic_update(
     cur = s.get_documents((path,))
     if len(cur) == 0:
         raise KeyError(f"no live document with path {path!r}")
-    row = cur.iloc[0][["repo", "path", "commit", "lang", "content"]].to_dict()
+    row = cur.iloc[0][_CORPUS_COLUMNS].to_dict()
     row.update(set_fields)
     new_df = spark.createDataFrame(pd.DataFrame([row]))
     return update_documents(spark, new_df, index_dir, key_field="path")
@@ -421,16 +444,17 @@ def add_indexes(index_dir: str, *source_dirs: str) -> dict:
     Compatibility is checked like an IndexWriter would enforce via its
     config: analyzer name, offsets IndexOption, and index_sort must match
     the destination (mixing analyzers silently splits the term space)."""
-    import hashlib
     import shutil
+
+    from .deletes import write_tombstones
 
     dest = mf.read_manifest(index_dir)
     if dest is None:
         raise ValueError(f"destination {index_dir} has no committed manifest")
+    sources = [(sd, mf.read_manifest(sd)) for sd in source_dirs]
     for opt in ("analyzer", "offsets", "index_sort", "payloads"):
         want = dest.get(opt)
-        for sd in source_dirs:
-            src = mf.read_manifest(sd)
+        for sd, src in sources:
             if src is None:
                 raise ValueError(f"source {sd} has no committed manifest")
             if src.get(opt) != want:
@@ -442,8 +466,7 @@ def add_indexes(index_dir: str, *source_dirs: str) -> dict:
     existing_ids = {s["segment_id"] for s in segments}
     pid = max(s["partition_id"] for s in segments) + 1
     tombstone_files = list(dest.get("tombstone_files", []))
-    for sd in source_dirs:
-        src = mf.read_manifest(sd)
+    for sd, src in sources:
         id_map: dict[str, str] = {}
         for s in sorted(src["segments"], key=lambda x: x["partition_id"]):
             entry = dict(s)
@@ -480,18 +503,11 @@ def add_indexes(index_dir: str, *source_dirs: str) -> dict:
             src_path = os.path.join(sd, rel)
             pdf = pq.read_table(src_path).to_pandas()
             pdf["segment_id"] = pdf["segment_id"].map(lambda x: id_map.get(x, x))
-            os.makedirs(os.path.join(index_dir, "deletes"), exist_ok=True)
-            base = f"added-{hashlib.sha256((sd + rel).encode()).hexdigest()[:10]}.parquet"
-            new_rel = os.path.join("deletes", base)
-            pq.write_table(
-                pa.Table.from_pandas(pdf, preserve_index=False),
-                os.path.join(index_dir, new_rel),
-            )
-            tombstone_files.append(new_rel)
-    extra = {"num_segments": len(segments)}
-    for opt in ("analyzer",):
-        if dest.get(opt):
-            extra[opt] = dest[opt]
+            tombstone_files.append(write_tombstones(
+                index_dir, pdf,
+                f"added-{hashlib.sha256((sd + rel).encode()).hexdigest()[:10]}.parquet",
+            ))
+    extra = {"num_segments": len(segments)}  # commit carries the analyzer
     if tombstone_files:
         extra["tombstone_files"] = tombstone_files
     return mf.commit_manifest(index_dir, segments, extra=extra)
@@ -526,7 +542,7 @@ def split_index(
 
     import numpy as np
 
-    from .deletes import read_tombstones
+    from .deletes import read_tombstones, write_tombstones
 
     src = mf.read_manifest(index_dir)
     if src is None:
@@ -554,17 +570,13 @@ def split_index(
             )
         mf.write_segment_meta(out_dir, entry["segment_id"], dict(entry))
 
-    def _write_tombs(out_dir: str, pairs: pd.DataFrame, extra: dict) -> None:
-        if len(pairs):
-            os.makedirs(os.path.join(out_dir, "deletes"), exist_ok=True)
-            rel = os.path.join("deletes", "split.parquet")
-            pq.write_table(
-                pa.Table.from_pandas(
-                    pairs[["segment_id", "doc_id"]], preserve_index=False
-                ),
-                os.path.join(out_dir, rel),
-            )
-            extra["tombstone_files"] = [rel]
+    def _part_extra(out_dir: str, rows: list) -> dict:
+        extra = dict(sticky)
+        if rows:
+            extra["tombstone_files"] = [
+                write_tombstones(out_dir, pd.concat(rows), "split.parquet")
+            ]
+        return extra
 
     if mode == "segments":
         for i, out_dir in enumerate(out_dirs):
@@ -585,16 +597,9 @@ def split_index(
                     rows.append(pd.DataFrame(
                         {"segment_id": sid, "doc_id": tombs[sid]}
                     ))
-            extra = dict(sticky)
-            _write_tombs(
-                out_dir,
-                pd.concat(rows) if rows
-                else pd.DataFrame(columns=["segment_id", "doc_id"]),
-                extra,
-            )
-            manifests.append(
-                mf.commit_manifest(out_dir, [dict(s) for s in mine], extra=extra)
-            )
+            manifests.append(mf.commit_manifest(
+                out_dir, [dict(s) for s in mine], extra=_part_extra(out_dir, rows)
+            ))
         return manifests
 
     # mode == "docs": every part = all segments + complement tombstones
@@ -616,14 +621,7 @@ def split_index(
                 dels = np.union1d(dels, tombs[sid])
             if len(dels):
                 rows.append(pd.DataFrame({"segment_id": sid, "doc_id": dels}))
-        extra = dict(sticky)
-        _write_tombs(
-            out_dir,
-            pd.concat(rows) if rows
-            else pd.DataFrame(columns=["segment_id", "doc_id"]),
-            extra,
-        )
-        manifests.append(
-            mf.commit_manifest(out_dir, [dict(s) for s in segs], extra=extra)
-        )
+        manifests.append(mf.commit_manifest(
+            out_dir, [dict(s) for s in segs], extra=_part_extra(out_dir, rows)
+        ))
     return manifests

@@ -32,12 +32,6 @@ from . import manifest as mf
 from . import segfiles
 
 
-def _deletes_dir(index_dir: str) -> str:
-    d = os.path.join(index_dir, "deletes")
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
 def read_tombstones(index_dir: str, manifest: dict) -> dict[str, np.ndarray]:
     """{segment_id: sorted np.int64 array of deleted local docIDs}."""
     out: dict[str, np.ndarray] = {}
@@ -50,16 +44,23 @@ def read_tombstones(index_dir: str, manifest: dict) -> dict[str, np.ndarray]:
     return {sid: np.unique(ids) for sid, ids in out.items()}
 
 
-def _publish(index_dir: str, manifest: dict, pairs: pd.DataFrame, reason: str) -> dict:
-    if len(pairs) == 0:
-        return manifest
-    _deletes_dir(index_dir)
-    rel = os.path.join("deletes", f"del-{uuid.uuid4().hex}.parquet")
+def write_tombstones(index_dir: str, pairs: pd.DataFrame, name: str | None = None) -> str:
+    """Write (segment_id, doc_id) `pairs` as a tombstone file under
+    <index>/deletes/ (default name: a fresh del-<uuid>.parquet); returns
+    its index-relative path, the manifest's tombstone_files entry."""
+    os.makedirs(os.path.join(index_dir, "deletes"), exist_ok=True)
+    rel = os.path.join("deletes", name or f"del-{uuid.uuid4().hex}.parquet")
     pq.write_table(
         pa.Table.from_pandas(pairs[["segment_id", "doc_id"]], preserve_index=False),
         os.path.join(index_dir, rel),
     )
-    files = list(manifest.get("tombstone_files", [])) + [rel]
+    return rel
+
+
+def _publish(index_dir: str, manifest: dict, pairs: pd.DataFrame, reason: str) -> dict:
+    if len(pairs) == 0:
+        return manifest
+    files = list(manifest.get("tombstone_files", [])) + [write_tombstones(index_dir, pairs)]
     return mf.commit_manifest(
         index_dir,
         [dict(s) for s in manifest["segments"]],

@@ -542,10 +542,12 @@ def hybrid_rrf_spark(
 
     lex = bm25_bool_spark(spark, sf_dir, should=(term,), k=n).withColumn(
         "r_lex",
+        # one-partition window: it ranks only the <= n rows of the BM25 top-n
         F.row_number().over(Window.orderBy(F.desc("score"), F.asc("doc_id"))),
     )
     vec = cosine_topk_spark(spark, sf_dir, query_vec_id, n).withColumn(
         "r_vec",
+        # one-partition window: it ranks only the <= n rows of the cosine top-n
         F.row_number().over(Window.orderBy(F.desc("cos"), F.asc("vec_id"))),
     )
     j = lex.select("doc_id", "r_lex").join(
@@ -563,6 +565,7 @@ def hybrid_rrf_spark(
         .orderBy(F.desc("rrf"), F.asc("doc_id"))
         .limit(k)
     )
+    # one-partition window: it ranks only the <= k fused rows of limit(k)
     w = Window.orderBy(F.desc("rrf"), F.asc("doc_id"))
     return out.withColumn(
         "rank", (F.row_number().over(w) - 1).cast("bigint")

@@ -490,6 +490,7 @@ def grouping_topn_spark(
         F.count("*").cast("bigint").alias("group_total"),
     )
     top_groups = gstats.orderBy(F.desc("g_best"), F.asc("source")).limit(n_groups)
+    # one-partition window: it ranks only the <= n_groups rows of limit()
     gw = Window.orderBy(F.desc("g_best"), F.asc("source"))
     top_groups = top_groups.withColumn(
         "group_rank", F.row_number().over(gw).cast("bigint")
@@ -1385,6 +1386,7 @@ def query_elevation_spark(spark, sf_dir, term: str, elevated: tuple,
         .orderBy(F.col("score").desc(), F.col("doc_id"))
         .limit(max(k - e, 0))
     )
+    # one-partition window: it ranks only the <= k - e rows of limit()
     w = Window.orderBy(F.col("score").desc(), F.col("doc_id"))
     orgtop = orgtop.withColumn(
         "rank", (F.row_number().over(w) - 1 + e).cast("bigint")
@@ -1481,6 +1483,7 @@ def collapse_spark(spark, sf_dir, term: str, k: int = 10) -> DataFrame:
     w = Window.partitionBy("source").orderBy(F.desc("score"), F.asc("doc_id"))
     heads = j.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
     ranked = heads.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    # one-partition window: it ranks only the <= k heads of limit(k)
     wr = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return ranked.withColumn(
         "rank", (F.row_number().over(wr) - 1).cast("bigint")

@@ -1,18 +1,27 @@
 """Resumable build from per-partition checkpoints (FIXTURES.md §5 resume;
-north_rule: resumable from checkpoint with per-partition lineage+metrics)."""
+north_rule: resumable from checkpoint with per-partition lineage+metrics).
+
+Each check runs on both flush routes: the 64-doc corpus fits the driver
+flush by default, and the `_spark_route` tests force the Spark build (tasks,
+a failed job, killed siblings) by monkeypatching MAX_DOCS_PER_FLUSH to -1."""
 
 import glob
 import os
 
 import pytest
 
+from lucene_solr_1_spark.index import builder
 from lucene_solr_1_spark.index import manifest as mf
 from lucene_solr_1_spark.index.builder import build_index
 from lucene_solr_1_spark.search.query import Term
 from lucene_solr_1_spark.search.searcher import LuceneSparkSearcher
 
 
-def test_resume_after_partial_failure(spark, tiny_corpus_pdf, tmp_path_factory):
+def _force_spark_route(monkeypatch):
+    monkeypatch.setattr(builder, "MAX_DOCS_PER_FLUSH", -1)
+
+
+def _check_resume_after_partial_failure(spark, tiny_corpus_pdf, tmp_path_factory):
     index_dir = str(tmp_path_factory.mktemp("idx_resume"))
     df = spark.createDataFrame(tiny_corpus_pdf)
 
@@ -52,7 +61,7 @@ def test_resume_after_partial_failure(spark, tiny_corpus_pdf, tmp_path_factory):
     assert ha["score"].tolist() == hb["score"].tolist()
 
 
-def test_full_rerun_reuses_everything(spark, tiny_corpus_pdf, tmp_path_factory):
+def _check_full_rerun_reuses_everything(spark, tiny_corpus_pdf, tmp_path_factory):
     index_dir = str(tmp_path_factory.mktemp("idx_rerun"))
     df = spark.createDataFrame(tiny_corpus_pdf)
     m1 = build_index(spark, df, index_dir, num_segments=4)
@@ -62,3 +71,25 @@ def test_full_rerun_reuses_everything(spark, tiny_corpus_pdf, tmp_path_factory):
     assert [s["segment_id"] for s in m2["segments"]] == [
         s["segment_id"] for s in m1["segments"]
     ]
+
+
+def test_resume_after_partial_failure(spark, tiny_corpus_pdf, tmp_path_factory):
+    _check_resume_after_partial_failure(spark, tiny_corpus_pdf, tmp_path_factory)
+
+
+def test_resume_after_partial_failure_spark_route(
+    spark, tiny_corpus_pdf, tmp_path_factory, monkeypatch
+):
+    _force_spark_route(monkeypatch)
+    _check_resume_after_partial_failure(spark, tiny_corpus_pdf, tmp_path_factory)
+
+
+def test_full_rerun_reuses_everything(spark, tiny_corpus_pdf, tmp_path_factory):
+    _check_full_rerun_reuses_everything(spark, tiny_corpus_pdf, tmp_path_factory)
+
+
+def test_full_rerun_reuses_everything_spark_route(
+    spark, tiny_corpus_pdf, tmp_path_factory, monkeypatch
+):
+    _force_spark_route(monkeypatch)
+    _check_full_rerun_reuses_everything(spark, tiny_corpus_pdf, tmp_path_factory)
