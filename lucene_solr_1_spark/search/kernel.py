@@ -25,7 +25,7 @@ import numpy as np
 
 from ..kernels import bm25
 from ..kernels import similarity as simk
-from ..kernels.forcodec import decode_all, decode_block
+from ..kernels.forcodec import decode_all
 from .query import (
     Bool, Boost, ConstantScore, Covering, DisjunctionMax, FunctionExpr,
     FunctionScore, MatchAll,
@@ -505,9 +505,14 @@ class SegmentData:
         return out
 
     def positions(self, key):
-        """list-like: flat position array + per-posting offsets (by freqs)."""
+        """(docs, freqs, starts, pos): the flat position array and each
+        posting's run start in it (by freqs), or None. Decoded once and
+        memoized beside the postings; callers must not write to it."""
         if isinstance(key, str):
             key = ("content", key)
+        memo = (key, "positions")
+        if memo in self._decoded:
+            return self._decoded[memo]
         r = self.rows.get(key)
         if r is None:
             return None
@@ -517,7 +522,8 @@ class SegmentData:
         # absolute — rebuild via segmented cumsum
         starts = np.concatenate(([0], np.cumsum(freqs)[:-1]))
         pos = _segmented_cumsum(pos_deltas, starts)
-        return docs, freqs, starts, pos
+        out = self._decoded[memo] = (docs, freqs, starts, pos)
+        return out
 
     def payloads(self, key):
         """float32 payload per occurrence, aligned with the flat position
@@ -2117,6 +2123,10 @@ def score_exhaustive(plan: dict, seg: SegmentData, cache: np.ndarray, k: int,
 # dropping legitimate hits) — they stay exhaustive.
 _WAND_SAFE_SIMS = frozenset({"classic", "boolean", "lmjm", "dfr_inl2", "ib_ll", "f2exp"})
 
+# Docs per WAND window. A segment of at most this many docs is one
+# window, which WAND can never skip, so it is scored exhaustively.
+WAND_WINDOW = 4096
+
 
 def _spec_wand_ok(spec: dict) -> bool:
     if spec["name"] == "multi":
@@ -2244,7 +2254,8 @@ def _spec_positive(spec: dict) -> bool:
 
 
 def score_wand(plan: dict, seg: SegmentData, cache: np.ndarray, k: int,
-               window: int = 4096, after=None, doc_base: int = 0, deleted=None):
+               window: int = WAND_WINDOW, after=None, doc_base: int = 0,
+               deleted=None):
     """Block-max pruned top-k — identical results to score_exhaustive.
 
     Doc space is cut into fixed windows; each window's UB = Σ_t max UB of

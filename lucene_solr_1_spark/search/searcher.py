@@ -30,8 +30,12 @@ Weight once and runs it per leaf slice):
     top-k stored fields are read on the driver from their segments'
     docmaps.
 
-TOTAL_HITS_THRESHOLD = 1000 (IndexSearcher.java:101): once a segment kernel
-has ≥1000 hits it may prune, reporting relation GREATER_THAN_OR_EQUAL_TO.
+Total hits: a WAND segment kernel prunes as soon as it holds k hits and
+then reports relation GREATER_THAN_OR_EQUAL_TO, with total_hits counting
+only the windows it scored. Lucene's rule of counting exactly up to
+TOTAL_HITS_THRESHOLD = 1000 hits (IndexSearcher.java:101) before pruning
+is not implemented. A segment of at most K.WAND_WINDOW docs is scored
+exhaustively, so its count is always exact.
 """
 
 from __future__ import annotations
@@ -58,7 +62,6 @@ from .query import (
     MAX_CLAUSE_COUNT,
 )
 
-TOTAL_HITS_THRESHOLD = 1000
 
 # IndexSearcher.MAX_DOCS_PER_SLICE: a query whose keys' summed global ttf
 # (the positions a positional plan decodes; an upper bound on postings for
@@ -126,6 +129,9 @@ def _score_segment(seg, plans: dict, caches, k: int, use_wand: bool, after,
     relation)}."""
     if allowed is not None:
         seg = seg.with_allowed(allowed)
+    # a segment of one WAND window has nothing to skip: WAND would score
+    # every doc, as the exhaustive path does, after building its bounds
+    use_wand = use_wand and seg.n_docs > K.WAND_WINDOW
     out = {}
     for name, plan in plans.items():
         score = (K.score_wand if use_wand and K.wand_applicable(plan)
@@ -1133,13 +1139,15 @@ class LuceneSparkSearcher:
         bases = np.asarray([self.doc_base.get(p[0], 0) for p in parts], dtype=np.int64)
         gids = bases[seg] + docs
         order = np.lexsort((gids, -scores.astype(np.float64)))[:k]
+        # every column is a fresh fancy-indexed array, so the frame can
+        # take it without a copy and still never alias a decode cache
         out = pd.DataFrame({
             "rank": np.arange(len(order)),
             "segment_id": np.asarray([p[0] for p in parts], dtype=object)[seg[order]],
             "doc_id": docs[order],
             "score": scores[order],
             "global_doc_id": gids[order],
-        })
+        }, copy=False)
         out.attrs["total_hits"] = total
         out.attrs["relation"] = "EQUAL_TO" if equal else "GREATER_THAN_OR_EQUAL_TO"
         return out

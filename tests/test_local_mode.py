@@ -9,9 +9,11 @@ import pandas as pd
 import pytest
 
 from lucene_solr_1_spark.index.builder import build_index
+from lucene_solr_1_spark.kernels import forcodec
+from lucene_solr_1_spark.search import kernel as K
 from lucene_solr_1_spark.search.query import (
-    Bool, FunctionScore, Fuzzy, NumericRange, Occur, Phrase, Prefix,
-    SpanNear, SpanOr, Term, Wildcard,
+    Bool, FunctionScore, Fuzzy, IntervalsQuery, NumericRange, Occur, Phrase,
+    Prefix, SpanNear, SpanOr, Term, Wildcard,
 )
 from lucene_solr_1_spark.search.searcher import LuceneSparkSearcher
 
@@ -115,3 +117,58 @@ def test_cold_local_term_runs_no_spark_job(local_setup, count_jobs):
     pd.testing.assert_frame_equal(
         hits, local_setup.search(Term("return"), k=10, with_stored=False)
     )
+
+
+POSITIONAL = [
+    Phrase(("return", "int")),
+    SpanNear((SpanOr(("public", "private")), "static"), slop=3),
+    IntervalsQuery(("public", "static"), ordered=True),
+]
+
+
+@pytest.mark.parametrize("q", POSITIONAL, ids=[type(q).__name__ for q in POSITIONAL])
+def test_warm_positional_query_decodes_nothing(local_setup, monkeypatch, q):
+    """A warm search_local reads postings and positions from the decode
+    memo: a repeat of a phrase, span or interval query runs no FOR
+    decode."""
+    s = local_setup
+    want = s.search_local(q, k=10)
+    assert len(want)
+    calls = []
+
+    def counting(buf, offsets):
+        calls.append(len(offsets))
+        return forcodec.decode_all(buf, offsets)
+
+    monkeypatch.setattr(K, "decode_all", counting)
+    got = s.search_local(q, k=10)
+    assert calls == []
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_allowed_views_share_the_decode_memo(local_setup):
+    """with_allowed gives a per-query view whose decodes land in the
+    segment's one memo."""
+    s = local_setup
+    s.search_local(Term("return"), k=10)
+    seg = next(iter(s._local_segs.values()))
+    view = seg.with_allowed({"set": np.arange(3, dtype=np.int64)})
+    assert view._decoded is seg._decoded
+    key = ("content", "return")
+    seg._decoded.pop((key, "positions"), None)
+    got = view.positions(key)
+    assert seg.positions(key) is got
+    assert seg.allowed is None
+
+
+def test_mutating_a_result_leaves_the_next_one_alone(local_setup):
+    """The result frame owns its columns: writing into one in place does
+    not reach the decode memo or the next identical query."""
+    s = local_setup
+    q = Phrase(("return", "int"))
+    first = s.search_local(q, k=10)
+    want = first.copy()
+    first["doc_id"].to_numpy()[:] = -1
+    first["score"].to_numpy()[:] = 0
+    first.loc[:, "global_doc_id"] = -1
+    pd.testing.assert_frame_equal(s.search_local(q, k=10), want)

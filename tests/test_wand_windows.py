@@ -1,0 +1,150 @@
+"""Block-max WAND over several windows: identical top-k to exhaustive.
+
+The searcher scores a segment of at most K.WAND_WINDOW docs exhaustively,
+because a single window leaves WAND nothing to skip. Every index the
+other tests build has segments that small, so their WAND-vs-exhaustive
+checks compare the exhaustive path with itself. Here the kernels are
+called directly on one ~600-doc segment with tombstones, with windows of
+16, 64 and 256 docs, so WAND really visits, bounds and skips windows.
+"""
+
+import copy
+
+import numpy as np
+import pytest
+
+from lucene_solr_1_spark.corpus import make_corpus_pandas
+from lucene_solr_1_spark.index.segment import build_segment_frames
+from lucene_solr_1_spark.kernels import bm25
+from lucene_solr_1_spark.search import kernel as K
+from lucene_solr_1_spark.search import searcher as S
+from lucene_solr_1_spark.search.query import (
+    Bool, DisjunctionMax, Occur, Synonym, Term,
+)
+
+N_DOCS = 600
+N_DELETED = 30
+DOC_BASE = 1000
+K_TOP = 10
+WINDOWS = (16, 64, 256)
+
+# hot (df ~590), mid (df 92-262) and rare (df 9-26) terms of the corpus
+HOT, HOT2, MID, MID2, RARE, RARE2 = (
+    "return", "public", "id_0010", "id_0100", "id_0500", "id_1000",
+)
+
+SHAPES = {
+    "term_hot": Term(HOT),
+    "term_rare": Term(RARE),
+    "or": Bool.of((Occur.SHOULD, Term(HOT)), (Occur.SHOULD, Term(RARE)),
+                  (Occur.SHOULD, Term(MID2))),
+    "and": Bool.of((Occur.MUST, Term(HOT)), (Occur.MUST, Term(MID))),
+    "must_should": Bool.of((Occur.MUST, Term(MID)), (Occur.SHOULD, Term(RARE)),
+                           (Occur.SHOULD, Term(HOT2))),
+    "dismax_0": DisjunctionMax((Term(HOT), Term(MID2), Term(RARE2)), 0.0),
+    "dismax_037": DisjunctionMax((Term(HOT), Term(MID2), Term(RARE2)), 0.37),
+    "dismax_1": DisjunctionMax((Term(HOT), Term(MID2), Term(RARE2)), 1.0),
+    "synonym": Synonym((MID2, RARE, RARE2)),
+    "must_dismax_should_synonym": Bool.of(
+        (Occur.MUST, DisjunctionMax((Term(MID), Term(RARE)), 0.37)),
+        (Occur.SHOULD, Synonym((HOT2, RARE2))),
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def segment():
+    postings, _norms, stats = build_segment_frames(make_corpus_pandas(N_DOCS))
+    seg = K.SegmentData(postings, stats["doc_count"])
+    df = {(r.field, r.term): int(r.doc_freq) for r in postings.itertuples(index=False)}
+    cache = bm25.norm_cache(bm25.avg_field_length(stats["sum_ttf"], stats["doc_count"]))
+    rng = np.random.default_rng(8)
+    deleted = np.sort(rng.choice(stats["doc_count"], size=N_DELETED, replace=False))
+    return seg, df, stats["doc_count"], cache, deleted.astype(np.int64)
+
+
+def _plan(segment, q):
+    _seg, df, n_docs, _cache, _deleted = segment
+    plan = K.compile_plan(q, df, n_docs)
+    assert K.wand_applicable(plan)
+    return plan
+
+
+def _after(segment, plan):
+    """The (score, global docID) of the exhaustive top-k's 4th hit."""
+    seg, _df, _n, cache, deleted = segment
+    d, s, _t, _r = K.score_exhaustive(plan, seg, cache, K_TOP,
+                                      doc_base=DOC_BASE, deleted=deleted)
+    assert len(d) > 4
+    return float(s[3]), int(d[3]) + DOC_BASE
+
+
+_CASES = [(name, window, paged) for name in SHAPES for window in WINDOWS
+          for paged in (False, True)]
+
+
+@pytest.mark.parametrize("name,window,paged", _CASES)
+def test_wand_equals_exhaustive_over_windows(segment, name, window, paged):
+    seg, _df, _n, cache, deleted = segment
+    plan = _plan(segment, SHAPES[name])
+    after = _after(segment, plan) if paged else None
+    kw = dict(after=after, doc_base=DOC_BASE, deleted=deleted)
+    ed, es, et, er = K.score_exhaustive(plan, seg, cache, K_TOP, **kw)
+    wd, ws, wt, wr = K.score_wand(plan, seg, cache, K_TOP, window=window, **kw)
+    assert er == "EQUAL_TO"
+    np.testing.assert_array_equal(wd, ed)
+    assert ws.dtype == es.dtype == np.float32
+    np.testing.assert_array_equal(ws.view(np.uint32), es.view(np.uint32))
+    assert not np.isin(wd, deleted).any()
+    assert wt <= et
+    if wr == "EQUAL_TO":
+        assert wt == et
+
+
+def test_wand_prunes_some_window(segment):
+    """At least one case skips a window that holds matches: relation
+    GREATER_THAN_OR_EQUAL_TO and a total below the exhaustive count."""
+    seg, _df, _n, cache, deleted = segment
+    undercounted = []
+    for name, window, paged in _CASES:
+        plan = _plan(segment, SHAPES[name])
+        after = _after(segment, plan) if paged else None
+        kw = dict(after=after, doc_base=DOC_BASE, deleted=deleted)
+        _ed, _es, et, _er = K.score_exhaustive(plan, seg, cache, K_TOP, **kw)
+        _wd, _ws, wt, wr = K.score_wand(plan, seg, cache, K_TOP, window=window, **kw)
+        if wr == "GREATER_THAN_OR_EQUAL_TO" and wt < et:
+            undercounted.append((name, window, paged))
+    assert undercounted
+
+
+@pytest.mark.parametrize("n_docs,kernel", [
+    (K.WAND_WINDOW, "score_exhaustive"),
+    (K.WAND_WINDOW + 1, "score_wand"),
+])
+def test_score_segment_routes_by_window(segment, monkeypatch, n_docs, kernel):
+    """_score_segment sends a WAND-applicable plan to score_wand only when
+    the segment spans more than one window; both routes agree."""
+    seg, _df, _n, cache, deleted = segment
+    plan = _plan(segment, SHAPES["or"])
+    view = copy.copy(seg)
+    view.n_docs = n_docs
+    called = []
+
+    def spy(fn):
+        real = getattr(K, fn)
+
+        def wrapped(*args, **kwargs):
+            called.append(fn)
+            return real(*args, **kwargs)
+        return wrapped
+
+    for fn in ("score_wand", "score_exhaustive"):
+        monkeypatch.setattr(K, fn, spy(fn))
+    docs, scores, total, _rel = S._score_segment(
+        view, {"q": plan}, cache, K_TOP, True, None, DOC_BASE, deleted)["q"]
+    assert called[0] == kernel
+    ed, es, et, _er = K.score_exhaustive(plan, seg, cache, K_TOP,
+                                         doc_base=DOC_BASE, deleted=deleted)
+    np.testing.assert_array_equal(docs, ed)
+    np.testing.assert_array_equal(scores, es)
+    assert total == et
