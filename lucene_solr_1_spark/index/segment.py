@@ -5,7 +5,11 @@ its documents into one immutable segment (SURVEY.md §2.3;
 index/DocumentsWriterPerThread.java, index/TermsHashPerField.java:147-185,
 index/FreqProxTermsWriter.java:69-103, Lucene50PostingsWriter.java:207-380).
 The inversion is a vectorized sort + run-length pass instead of a per-doc
-hash insert; encoding produces our own FOR-block format (kernels/forcodec).
+hash insert, and it works on columns: the doc-delta, freq and
+position-delta streams of every term of a field are FOR-encoded by one
+`forcodec.encode_streams` call (our own block format, block for block what
+the scalar `encode_blocks` writes), and each term's row holds slices of
+the shared buffers — no per-term Python encode loop.
 
 Multi-field data model (document/Field.java, index/FieldInfos.java): the
 `content` field is analyzed (TextField analog — positions + freqs + norms);
@@ -19,12 +23,15 @@ from __future__ import annotations
 
 import hashlib
 import time
+from itertools import chain
 
 import numpy as np
 import pandas as pd
 
 from ..kernels.analyzer import AnalyzerConfig, STANDARD, _TOKEN_RE, flatten_tokens
-from ..kernels.forcodec import BLOCK_SIZE, encode_blocks, encode_doc_deltas
+from ..kernels.forcodec import block_layout, encode_streams
+# not called here: perfbench's --trace 1 wraps these two names on this module
+from ..kernels.forcodec import encode_blocks, encode_doc_deltas  # noqa: F401
 from ..kernels.smallfloat import int_to_byte4
 
 DOC_KEY = ["repo", "path", "commit"]
@@ -49,16 +56,10 @@ def content_sha(texts: pd.Series) -> pd.Series:
     return texts.fillna("").map(lambda t: hashlib.sha256(t.encode("utf-8")).hexdigest())
 
 
-def _enc8_batch(vals: np.ndarray) -> list[bytes]:
-    """Vectorized single-value ALL_EQUAL block encodings: for each v,
-    the exact bytes encode_blocks([v]) produces — [count-1=0][255][v le8]."""
-    n = len(vals)
-    arr = np.empty((n, 10), dtype=np.uint8)
-    arr[:, 0] = 0
-    arr[:, 1] = 255
-    arr[:, 2:] = vals.astype("<u8").view(np.uint8).reshape(n, 8)
-    flat = arr.tobytes()
-    return [flat[i * 10:(i + 1) * 10] for i in range(n)]
+def _split(seq, bounds: np.ndarray) -> list:
+    """Slices `seq[bounds[i]:bounds[i+1]]` (bytes or list) per stream."""
+    b = bounds.tolist()
+    return [seq[lo:hi] for lo, hi in zip(b[:-1], b[1:])]
 
 
 def _invert_rows(
@@ -68,114 +69,86 @@ def _invert_rows(
     positions: np.ndarray,
     norms_by_doc: np.ndarray,
     payloads: np.ndarray | None = None,
-) -> list[tuple]:
+) -> dict:
     """Invert one field's flattened token stream into posting rows.
 
     Input: parallel arrays (term, doc, position) + per-doc norm bytes.
-    Output: one tuple per distinct term in POSTINGS_COLS order — sorted
-    terms (UTF-8 order via pd.factorize(sort=True), the BytesRef term
-    order), delta-encoded doc/pos streams, per-block skip + impact
-    metadata (CompetitiveImpactAccumulator simplified to one competitive
-    pair (max_freq, min_norm) per block — a valid, slightly looser
-    upper bound for block-max WAND)."""
-    if len(terms) == 0:
-        return []
+    Output: {column: list} in POSTINGS_COLS order, one entry per distinct
+    term — sorted terms (UTF-8 order via pd.factorize(sort=True), the
+    BytesRef term order), delta-encoded doc/pos streams, per-block skip +
+    impact metadata (CompetitiveImpactAccumulator simplified to one
+    competitive pair (max_freq, min_norm) per block — a valid, slightly
+    looser upper bound for block-max WAND).
+
+    Built column-wise: every term's doc deltas (restarting at its first
+    posting), freqs and position deltas are laid back to back and encoded
+    by one `encode_streams` call; block_last_doc/max_freq/min_norm come
+    from one gather/`reduceat` over all doc blocks; each cell is a slice
+    of the shared buffers."""
     codes, uniq_terms = pd.factorize(pd.Series(terms), sort=True)
     order = np.lexsort((positions, doc_ids, codes))
     c, d, p = codes[order], doc_ids[order], positions[order]
-    # payload stream rides parallel to positions (the .pay alignment):
-    # pay[i] is the float32 payload of occurrence i in stream order
-    pay = payloads[order].astype("<f4") if payloads is not None else None
 
     # run-length over (term, doc): one posting per run
     pair_start = np.flatnonzero(
         np.concatenate(([True], (c[1:] != c[:-1]) | (d[1:] != d[:-1])))
     )
     pair_end = np.concatenate((pair_start[1:], [len(c)]))
-    pair_term = c[pair_start]
     pair_doc = d[pair_start]
     pair_freq = (pair_end - pair_start).astype(np.int64)
 
-    # position deltas within each (term, doc) run (prox deltas,
+    # position deltas restart at each (term, doc) run (prox deltas,
     # FreqProxTermsWriterPerField.java:79-96 semantics, our encoding)
-    prev = np.concatenate(([0], p[:-1]))
-    is_run_start = np.zeros(len(p), dtype=bool)
-    is_run_start[pair_start] = True
-    pos_delta = np.where(is_run_start, p, p - prev)
+    pos_delta = np.diff(p, prepend=np.int64(0))
+    pos_delta[pair_start] = p[pair_start]
 
-    # term boundaries over pairs
+    # term boundaries over postings; doc deltas restart at each term
+    pair_term = c[pair_start]
     term_start = np.flatnonzero(
         np.concatenate(([True], pair_term[1:] != pair_term[:-1]))
     )
     term_end = np.concatenate((term_start[1:], [len(pair_term)]))
+    doc_delta = np.diff(pair_doc, prepend=np.int64(0))
+    doc_delta[term_start] = pair_doc[term_start]
+    occ_start, occ_end = pair_start[term_start], pair_end[term_end - 1]
 
-    # singleton fast path: a term with ONE posting of freq 1 (the Zipf
-    # tail of content terms + unique keyword values like path/commit)
-    # always encodes to the fixed 10-byte ALL_EQUAL block [0, 255, v_le8]
-    # — build those byte strings vectorized instead of calling
-    # encode_blocks 4x per term (the round-1 verdict's per-term row loop).
-    is_single = (term_end - term_start) == 1
-    is_single &= pair_freq[term_start] == 1
-    sel = np.flatnonzero(is_single)
-    fast_j = {int(k): j for j, k in enumerate(sel)}
-    if len(sel):
-        ts_sel = term_start[sel]
-        s_docs = pair_doc[ts_sel]
-        s_pos = p[pair_start[ts_sel]]  # run start: absolute position
-        s_docs_b = _enc8_batch(s_docs)
-        s_pos_b = _enc8_batch(s_pos)
-        s_norms = norms_by_doc[s_docs].astype(np.uint8)
-        s_norm_flat = s_norms.tobytes()
-        s_pay_flat = (
-            pay[pair_start[ts_sel]].tobytes() if pay is not None else b""
-        )
-    _FREQ1 = b"\x00\xff" + (1).to_bytes(8, "little")
+    # one encode_streams pass over [doc deltas | freqs | position deltas]
+    n_terms, n_pairs = len(term_start), len(pair_doc)
+    enc, byte_b, offsets, block_b = encode_streams(
+        np.concatenate((doc_delta, pair_freq, pos_delta)),
+        np.concatenate((term_start, term_start + n_pairs, occ_start + 2 * n_pairs)),
+        np.concatenate((term_end, term_end + n_pairs, occ_end + 2 * n_pairs)),
+    )
+    offsets = offsets.tolist()
+    docs, freqs, pos = (slice(i * n_terms, (i + 1) * n_terms + 1) for i in range(3))
+    blocks = block_b[docs]
 
-    rows = []
-    for k, (ts, te) in enumerate(zip(term_start, term_end)):
-        j = fast_j.get(k)
-        if j is not None:
-            rows.append(
-                (
-                    field,
-                    uniq_terms[pair_term[ts]],
-                    1, 1,
-                    s_docs_b[j], [0], _FREQ1, [0], s_pos_b[j], [0],
-                    s_norm_flat[j:j + 1],
-                    [int(s_docs[j])], [1], [int(s_norms[j])],
-                    s_pay_flat[4 * j:4 * j + 4] if pay is not None else b"",
-                )
-            )
-            continue
-        docs = pair_doc[ts:te]
-        freqs = pair_freq[ts:te]
-        docs_enc, docs_off = encode_doc_deltas(docs)
-        freqs_enc, freqs_off = encode_blocks(freqs)
-        # flattened position-delta stream across this term's occurrences
-        occ_lo, occ_hi = pair_start[ts], pair_end[te - 1]
-        pos_enc, pos_off = encode_blocks(pos_delta[occ_lo:occ_hi])
-        # norm byte per posting doc (schemas.py norms_enc rationale)
-        doc_norms = norms_by_doc[docs]
-        n_pairs = len(docs)
-        blk_idx = np.arange(0, n_pairs, BLOCK_SIZE)
-        blk_last = docs[np.minimum(blk_idx + BLOCK_SIZE - 1, n_pairs - 1)]
-        blk_maxf = np.maximum.reduceat(freqs, blk_idx)
-        blk_minn = np.minimum.reduceat(doc_norms, blk_idx)
-        rows.append(
-            (
-                field,
-                uniq_terms[pair_term[ts]],
-                int(te - ts),
-                int(freqs.sum()),
-                docs_enc, docs_off.tolist(),
-                freqs_enc, freqs_off.tolist(),
-                pos_enc, pos_off.tolist(),
-                doc_norms.astype(np.uint8).tobytes(),
-                blk_last.tolist(), blk_maxf.tolist(), blk_minn.tolist(),
-                pay[occ_lo:occ_hi].tobytes() if pay is not None else b"",
-            )
-        )
-    return rows
+    # norm byte per posting doc (schemas.py norms_enc rationale), and
+    # per-block skip + impact data over every term's doc blocks at once
+    doc_norms = norms_by_doc[pair_doc]
+    first, count, _ = block_layout(term_end - term_start)
+    term_bounds = np.concatenate((term_start, [n_pairs]))
+    # payload stream rides parallel to positions (the .pay alignment):
+    # 4 bytes per occurrence, float32 in stream order
+    occ_bounds = np.concatenate((occ_start, [len(p)]))
+    pay = payloads[order].astype("<f4").tobytes() if payloads is not None else None
+    return {
+        "field": [field] * n_terms,
+        "term": list(uniq_terms),
+        "doc_freq": (term_end - term_start).tolist(),
+        "ttf": np.add.reduceat(pair_freq, term_start).tolist(),
+        "docs_enc": _split(enc, byte_b[docs]),
+        "docs_offsets": _split(offsets, blocks),
+        "freqs_enc": _split(enc, byte_b[freqs]),
+        "freqs_offsets": _split(offsets, block_b[freqs]),
+        "pos_enc": _split(enc, byte_b[pos]),
+        "pos_offsets": _split(offsets, block_b[pos]),
+        "norms_enc": _split(doc_norms.astype(np.uint8).tobytes(), term_bounds),
+        "block_last_doc": _split(pair_doc[first + count - 1].tolist(), blocks),
+        "block_max_freq": _split(np.maximum.reduceat(pair_freq, first).tolist(), blocks),
+        "block_min_norm": _split(np.minimum.reduceat(doc_norms, first).tolist(), blocks),
+        "pay_enc": (_split(pay, occ_bounds * 4) if pay is not None else [b""] * n_terms),
+    }
 
 
 def _token_span_columns(content_s: pd.Series) -> tuple[list, list]:
@@ -289,9 +262,12 @@ def build_segment_frames(
         "max_key": "|".join(pdf.iloc[-1][DOC_KEY]) if n_docs else "",
     }
 
-    rows = _invert_rows(CONTENT_FIELD, terms, doc_ids, positions,
-                        norms.astype(np.int64), payloads=pay_tok)
-    content_postings = len(rows)
+    fields = []
+    content_doc_freqs = []
+    if len(terms):
+        fields.append(_invert_rows(CONTENT_FIELD, terms, doc_ids, positions,
+                                   norms.astype(np.int64), payloads=pay_tok))
+        content_doc_freqs = fields[0]["doc_freq"]
 
     # keyword fields: one atomic term per doc, freq 1, position 0, dl 1
     # (StringField: indexed, not analyzed, no norms → norm byte for dl=1)
@@ -302,10 +278,10 @@ def build_segment_frames(
                            dtype=np.int64)
         for kw in KEYWORD_FIELDS:
             vals = pdf[kw].fillna("").to_numpy(dtype=object)
-            rows.extend(_invert_rows(kw, vals, kw_doc_ids, kw_pos, kw_norms))
+            fields.append(_invert_rows(kw, vals, kw_doc_ids, kw_pos, kw_norms))
             field_stats[kw] = {"sum_ttf": int(n_docs), "doc_count": int(n_docs)}
 
-    if not rows:
+    if not fields:
         empty = pd.DataFrame({c: pd.Series(dtype=object) for c in POSTINGS_COLS})
         stats.update(
             distinct_terms=0, total_postings=0,
@@ -313,12 +289,12 @@ def build_segment_frames(
         )
         return empty, norms_pdf, stats
 
-    postings_pdf = pd.DataFrame(rows, columns=POSTINGS_COLS)
+    postings_pdf = pd.DataFrame({
+        c: list(chain.from_iterable(f[c] for f in fields)) for c in POSTINGS_COLS
+    })
     stats.update(
-        distinct_terms=int(content_postings),
-        total_postings=int(
-            postings_pdf.loc[postings_pdf["field"] == CONTENT_FIELD, "doc_freq"].sum()
-        ),
+        distinct_terms=len(content_doc_freqs),
+        total_postings=sum(content_doc_freqs),
         build_wall_s=time.monotonic() - t0,
         field_stats=field_stats,
     )

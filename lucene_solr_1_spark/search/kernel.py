@@ -2378,7 +2378,8 @@ def score_wand(plan: dict, seg: SegmentData, cache: np.ndarray, k: int,
     pruned = False
     for w in order:
         if win_ub[w] <= 0:
-            pruned = True
+            # every weight is positive, so a UB-0 window (and every later
+            # one) holds no match: the count so far is exact
             break
         # strict <: a window whose UB equals θ may still hold an equal-score
         # doc with a SMALLER docID, which wins the tie-break (HitQueue.java)

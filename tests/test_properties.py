@@ -31,6 +31,33 @@ def test_doc_delta_roundtrip(vals):
     np.testing.assert_array_equal(fc.decode_doc_deltas(buf, offsets), docs)
 
 
+@settings(max_examples=200, deadline=None)
+@given(st.lists(
+    st.one_of(
+        st.lists(st.integers(min_value=0, max_value=2**62), max_size=300),
+        st.builds(lambda v, n: [v] * n,
+                  st.integers(min_value=0, max_value=2**62), st.integers(0, 300)),
+    ),
+    max_size=8,
+))
+def test_encode_streams_equals_encode_blocks(streams):
+    """The batch encoder gives every stream of a concatenation the bytes
+    and block offsets encode_blocks gives it alone, and they decode back
+    (zero-length, all-equal and all-zero streams included)."""
+    arrs = [np.asarray(s, dtype=np.int64) for s in streams]
+    lengths = np.asarray([len(a) for a in arrs], dtype=np.int64)
+    ends = np.cumsum(lengths)
+    values = np.concatenate(arrs) if arrs else np.empty(0, dtype=np.int64)
+    buf, byte_bounds, offsets, block_bounds = fc.encode_streams(values, ends - lengths, ends)
+    for i, arr in enumerate(arrs):
+        want_buf, want_off = fc.encode_blocks(arr)
+        got_buf = buf[byte_bounds[i]:byte_bounds[i + 1]]
+        got_off = offsets[block_bounds[i]:block_bounds[i + 1]]
+        assert got_buf == want_buf
+        np.testing.assert_array_equal(got_off, want_off)
+        np.testing.assert_array_equal(fc.decode_all(got_buf, got_off), arr)
+
+
 @settings(max_examples=300, deadline=None)
 @given(st.integers(min_value=0, max_value=2**31 - 1))
 def test_smallfloat_quantization_sound(x):

@@ -117,6 +117,21 @@ def test_wand_prunes_some_window(segment):
     assert undercounted
 
 
+def test_wand_count_is_exact_past_the_last_posting(segment):
+    """A term whose postings end before the last window leaves UB-0
+    windows behind its last block. With only positive weights they hold
+    no match, so stopping there is not pruning: with k above the term's
+    df (θ never prunes) WAND reports exhaustive scoring's exact count."""
+    seg, _df, _n, cache, deleted = segment
+    window, term = 16, "id_0242"
+    assert seg.rows[("content", term)].block_last_doc[-1] < seg.n_docs - window
+    plan = _plan(segment, Term(term))
+    kw = dict(doc_base=DOC_BASE, deleted=deleted)
+    _ed, _es, et, er = K.score_exhaustive(plan, seg, cache, 100, **kw)
+    wd, _ws, wt, wr = K.score_wand(plan, seg, cache, 100, window=window, **kw)
+    assert (wt, wr) == (et, er) == (len(wd), "EQUAL_TO")
+
+
 @pytest.mark.parametrize("n_docs,kernel", [
     (K.WAND_WINDOW, "score_exhaustive"),
     (K.WAND_WINDOW + 1, "score_wand"),
