@@ -1,40 +1,59 @@
 """Tiered segment merging (SURVEY.md §2.4).
 
 Driver-side policy chooses merge groups (TieredMergePolicy.java:96-103,312-560
-shape: bounded merge width, size-skew-scored candidates, small-segment floor);
-the merge itself is one Spark job per group: postings of the group segments
-are shuffled by `term` and re-encoded with rebased docIDs
-(SegmentMerger.java:100-180, DocIDMerger.java docBase arithmetic).
+shape: bounded merge width, size-skew-scored candidates, small-segment floor).
+The merge has SegmentMerger's shape (SegmentMerger.java:100-180): the driver
+computes one docmap per input segment (MergeState.DocMap: old local docID ->
+merged docID, or -1 for a doc the merge drops), and one Spark task per group
+reads the inputs' postings and live docmap files with pyarrow, decodes every
+posting row, sends its docs through the docmaps (a dropped doc leaves with
+its position and payload run) and re-inverts each field with the builder's
+`_invert_rows`. A round's disjoint groups run as ONE job,
+`spark.range(n).mapInPandas`, the builder's `_build_partition` pattern: the
+inputs are plain columnar files, so nothing is shuffled.
 
-Groups are CONTIGUOUS in partition order, and inputs are concatenated in
-that order, so global docIDs (doc_base + local) are unchanged by a merge —
-top-k results and tie-breaks are invariant (merge-invariance tests).
+A merged segment is therefore the segment a fresh build of its live
+documents, in merged docID order, writes — same rows, same block and impact
+metadata, one zstd file per table — and merging one snapshot twice writes
+the same bytes.
 
-Skew note: hot terms ('the', 'return') have the largest posting rows, but a
-merge shuffles ≤ len(group) PRE-AGGREGATED compressed rows per term — skew
-is structurally bounded by the group width, not by posting length. The
-row-level shuffle (norms rewrite) is salted by hash of doc key via
-repartition. New-block impact metadata is recomputed EXACTLY from the merged
-per-posting freq and norm streams (norms travel inside the posting rows).
+One docmap covers three cases:
+- the docBase shift: groups are CONTIGUOUS in partition order and inputs
+  concatenate in that order, so global docIDs (doc_base + local) are
+  unchanged by a merge — top-k results and tie-breaks are invariant
+  (merge-invariance tests);
+- reclaim: with `reclaim_deletes=True` tombstoned docs map to -1 and the
+  live docs close ranks, like Lucene dropping deletions at merge;
+- the index sort: on an index built with `index_sort`, merged docIDs follow
+  (sort value, doc key) with input order breaking ties, so a merged segment
+  keeps the per-segment sort (IndexSorter at merge).
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import time
 from functools import partial
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
-from ..kernels.forcodec import BLOCK_SIZE, decode_all, encode_blocks, encode_doc_deltas
+from ..kernels.forcodec import decode_all
 from . import manifest as mf
-from .builder import _write_parquet, _POSTINGS_FILE, _NORMS_FILE
-from .schemas import POSTINGS_DDL
-from .segment import POSTINGS_COLS
+from .builder import (
+    _NORMS_FILE, _POSTINGS_FILE, _manifest_row, _write_parquet, norms_paths,
+    postings_paths,
+)
+from .deletes import read_tombstones, write_tombstones
+from .schemas import MANIFEST_ROW_DDL
+from .segment import (
+    CONTENT_FIELD, DOC_KEY, KEYWORD_FIELDS, _invert_rows, _postings_frame,
+)
 
 MAX_MERGE_AT_ONCE = 10  # TieredMergePolicy.java:96 maxMergeAtOnce
 SEGS_PER_TIER = 10      # TieredMergePolicy.java:103 segsPerTier
@@ -92,218 +111,219 @@ def find_merges(manifest: dict, target_segments: int = SEGS_PER_TIER) -> list[li
     return groups
 
 
-def _merge_bucket(pdf: pd.DataFrame, seg_order: dict, seg_offset: dict,
-                  docmaps: dict | None = None) -> pd.DataFrame:
-    """Merge ONE HASH BUCKET of (field, term) groups — the kernel input is
-    a bucket (hash(field,term) % P), not a single term, so the per-group
-    Arrow/pandas round-trip cost is amortized over many terms: one output
-    DataFrame per bucket instead of one per term (the round-1 verdict's
-    'one 1-row DataFrame per term' interpreter tax).
+def _docmaps(index_dir: str, segs: list[dict], tombs: dict,
+             index_sort: dict | None) -> dict:
+    """MergeState.DocMap of each input segment of one group, in partition
+    order: {segment_id: int64 array, old local docID -> merged docID, or
+    -1 for a doc in `tombs`}. Live docs take merged docIDs in input order
+    (the docBase shift), or on a sorted index in the builder's (sort value,
+    doc key) order, input order breaking ties."""
+    lives = []
+    for s in segs:
+        live = np.ones(s["doc_count"], dtype=bool)
+        live[tombs.get(s["segment_id"], [])] = False
+        lives.append(np.flatnonzero(live))
+    # rank[j]: merged docID of the j-th live doc in input order
+    rank = np.arange(sum(len(docs) for docs in lives), dtype=np.int64)
+    if index_sort:
+        field = index_sort["field"]
+        keys = pd.concat([
+            pq.read_table(path, columns=["doc_id", field, *DOC_KEY])
+            .to_pandas().sort_values("doc_id").iloc[docs]
+            for path, docs in zip(norms_paths(index_dir, {"segments": segs}), lives)
+        ], ignore_index=True)
+        order = keys.sort_values(
+            [field, *DOC_KEY], ascending=[not index_sort["desc"], True, True, True],
+            kind="mergesort",
+        ).index.to_numpy()
+        rank[order] = np.arange(len(order), dtype=np.int64)
+    maps, base = {}, 0
+    for s, docs in zip(segs, lives):
+        m = np.full(s["doc_count"], -1, dtype=np.int64)
+        m[docs] = rank[base:base + len(docs)]
+        maps[s["segment_id"]] = m
+        base += len(docs)
+    return maps
 
-    The bucket is sorted ONCE (np.lexsort on the factorized (field,term)
-    key, segment order within a group) and groups are then walked as
-    SLICES over plain NumPy object arrays — no per-group sort_values /
-    itertuples / iloc (profiled at ~95% of merge wall before this).
-    `_merge_term_rows` stays as the pinned per-group contract; a
-    randomized slices==rows test enforces equivalence."""
-    if not len(pdf):
-        return pd.DataFrame({c: pd.Series(dtype=object) for c in POSTINGS_COLS})
-    has_pay = "pay_enc" in pdf.columns
-    seg_ord = pdf["segment_id"].map(seg_order).to_numpy()
-    codes, _ = pd.factorize(
-        pdf["field"].astype(str) + "\x00" + pdf["term"].astype(str), sort=False
+
+def _runs(deltas: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """Absolute values of back-to-back delta runs whose first entry is
+    absolute: a term's doc run, a posting's position run."""
+    sums = np.cumsum(deltas)
+    first = np.cumsum(lengths) - lengths
+    return sums - np.repeat(sums[first] - deltas[first], lengths)
+
+
+def _live_tokens(rows: pd.DataFrame, docmap: np.ndarray) -> tuple:
+    """One input's posting rows of one field, back to the token stream
+    `_invert_rows` takes: (term, merged doc, position, payload) per
+    occurrence of a live doc, plus (merged doc, norm byte) per posting."""
+    def stream(enc: str, offsets: str) -> np.ndarray:
+        return np.concatenate([decode_all(e, o) for e, o in zip(rows[enc], rows[offsets])])
+
+    freqs = stream("freqs_enc", "freqs_offsets")
+    docs = docmap[_runs(stream("docs_enc", "docs_offsets"), rows["doc_freq"].to_numpy())]
+    norms = np.frombuffer(b"".join(rows["norms_enc"]), dtype=np.uint8)
+    kept = docs >= 0
+    live = np.repeat(kept, freqs)
+    pay = b"".join(rows["pay_enc"]) if "pay_enc" in rows else b""
+    return (
+        np.repeat(rows["term"].to_numpy(), rows["ttf"].to_numpy())[live],
+        np.repeat(docs, freqs)[live],
+        _runs(stream("pos_enc", "pos_offsets"), freqs)[live],
+        np.frombuffer(pay, dtype="<f4")[live] if pay else np.empty(0, dtype="<f4"),
+        docs[kept],
+        norms[kept],
     )
-    order = np.lexsort((seg_ord, codes))
-    take = [c for c in POSTINGS_COLS if c in pdf.columns] + ["segment_id"]
-    cols = {c: pdf[c].to_numpy()[order] for c in take}
-    codes = codes[order]
-    cuts = np.flatnonzero(np.diff(codes)) + 1
-    starts = np.concatenate((np.zeros(1, dtype=np.int64), cuts))
-    ends = np.concatenate((cuts, np.asarray([len(codes)], dtype=np.int64)))
-    rows = [
-        _merge_term_slice(cols, int(s), int(e), seg_offset, docmaps, has_pay)
-        for s, e in zip(starts, ends)
+
+
+def _merge_segment(index_dir: str, meta: dict, inputs: list) -> dict:
+    """Write merged segment `meta["segment_id"]` from `inputs`, (postings
+    file, docmap file, docmap array) per input segment, and its meta.json
+    marker LAST; returns its manifest row."""
+    t0 = time.monotonic()
+    docmaps, tokens = [], {}
+    for postings_file, docmap_file, m in inputs:
+        rows = pq.read_table(docmap_file).to_pandas()
+        new = m[rows["doc_id"].to_numpy()]
+        docmaps.append(rows[new >= 0].assign(doc_id=new[new >= 0]))
+        postings = pq.read_table(postings_file).to_pandas()
+        for field, g in postings.groupby("field", sort=False):
+            tokens.setdefault(field, []).append(_live_tokens(g, m))
+    docmap = (
+        pd.concat(docmaps, ignore_index=True)
+        .sort_values("doc_id", ignore_index=True)
+        .drop(columns="segment_id")
+    )
+    n_docs = len(docmap)
+    fields = {}
+    for field in (CONTENT_FIELD, *KEYWORD_FIELDS):  # the builder's order
+        if field not in tokens:
+            continue
+        terms, docs, pos, pay, posting_docs, norms = (
+            np.concatenate(part) for part in zip(*tokens[field])
+        )
+        if not len(terms):
+            continue
+        norms_by_doc = np.zeros(n_docs, dtype=np.int64)
+        norms_by_doc[posting_docs] = norms
+        fields[field] = _invert_rows(field, terms, docs, pos, norms_by_doc,
+                                     payloads=pay if len(pay) else None)
+    content = fields.get(CONTENT_FIELD, {"term": [], "ttf": [], "doc_freq": []})
+    sum_ttf = int(np.sum(content["ttf"]))
+    field_stats = {CONTENT_FIELD: {"sum_ttf": sum_ttf, "doc_count": n_docs}}
+    if n_docs:
+        field_stats.update(
+            {kw: {"sum_ttf": n_docs, "doc_count": n_docs} for kw in KEYWORD_FIELDS}
+        )
+    sid = meta["segment_id"]
+    seg_dir = mf.segment_dir(index_dir, sid)
+    os.makedirs(seg_dir, exist_ok=True)
+    _write_parquet(_postings_frame(list(fields.values())),
+                   os.path.join(seg_dir, _POSTINGS_FILE), sid)
+    _write_parquet(docmap, os.path.join(seg_dir, _NORMS_FILE), sid)
+    meta = {
+        **meta,
+        "doc_count": n_docs,
+        "sum_ttf": sum_ttf,
+        "field_stats": json.dumps(field_stats, sort_keys=True),
+        "distinct_terms": len(content["term"]),
+        "total_postings": int(np.sum(content["doc_freq"])),
+        "build_wall_s": time.monotonic() - t0,
+        "reused": False,
+    }
+    mf.write_segment_meta(index_dir, sid, meta)
+    return _manifest_row(meta)
+
+
+def _merge_partition(batches, index_dir: str, plans: list):
+    """mapInPandas body: merge group `id` of the round (one per task)."""
+    for pdf in batches:
+        for i in pdf["id"]:
+            yield pd.DataFrame([_merge_segment(index_dir, *plans[i])])
+
+
+def _merge_group_job(
+    spark: SparkSession,
+    index_dir: str,
+    manifest: dict,
+    groups: list[list[str]],
+    reclaim_deletes: bool = False,
+) -> list[tuple[dict, dict]]:
+    """Merge the disjoint `groups` in ONE Spark job, one task per group.
+    Each task writes its segment's files and meta.json marker; NO manifest
+    commit. Returns (manifest entry, {input segment_id: docmap}) per group."""
+    by_id = {s["segment_id"]: s for s in manifest["segments"]}
+    tombs = read_tombstones(index_dir, manifest) if reclaim_deletes else {}
+    plans, maps = [], []
+    for group in groups:
+        segs = sorted((by_id[g] for g in group), key=lambda s: s["partition_id"])
+        docmaps = _docmaps(index_dir, segs, tombs, manifest.get("index_sort"))
+        fingerprint = hashlib.sha256(
+            "|".join(s["input_fingerprint"] for s in segs).encode()
+        ).hexdigest()
+        pid = segs[0]["partition_id"]
+        meta = {
+            "segment_id": f"m{manifest['generation']:03d}-{pid:05d}-{fingerprint[:10]}",
+            "partition_id": pid,
+            "input_fingerprint": fingerprint,
+            "min_key": segs[0].get("min_key", ""),
+            "max_key": segs[-1].get("max_key", ""),
+            "merged_from": [s["segment_id"] for s in segs],
+        }
+        plans.append((meta, list(zip(
+            postings_paths(index_dir, {"segments": segs}),
+            norms_paths(index_dir, {"segments": segs}),
+            (docmaps[s["segment_id"]] for s in segs),
+        ))))
+        maps.append(docmaps)
+    rows = {
+        r["segment_id"]: r.asDict()
+        for r in spark.range(len(plans), numPartitions=len(plans))
+        .mapInPandas(partial(_merge_partition, index_dir=index_dir, plans=plans),
+                     schema=MANIFEST_ROW_DDL)
+        .collect()
+    }
+    return [
+        ({**rows[meta["segment_id"]], "merged_from": meta["merged_from"]}, docmaps)
+        for (meta, _), docmaps in zip(plans, maps)
     ]
-    return pd.DataFrame(rows, columns=POSTINGS_COLS)
 
 
-def _merge_term_slice(cols: dict, s: int, e: int, seg_offset: dict,
-                      docmaps: dict | None, has_pay: bool) -> tuple:
-    """Merge one (field, term) group given as rows [s, e) of the bucket's
-    segment-ordered column arrays. Semantics identical to
-    `_merge_term_rows` (the pinned contract — see the equivalence test);
-    this form only changes HOW rows are accessed (array slices, not pandas).
-
-    Fast path: a term present in exactly ONE input segment (no reclaim)
-    keeps its freqs/pos/norms/pay streams and block max-freq/min-norm
-    metadata byte-identical — only the doc stream is rebased+re-encoded
-    and block_last_doc shifted. Positions are the bulk of posting bytes,
-    so singleton terms (the majority in a Zipf vocabulary) skip almost
-    all codec work."""
-    field = cols["field"][s]
-    term = cols["term"][s]
-    if e - s == 1 and docmaps is None:
-        off = seg_offset[cols["segment_id"][s]]
-        pay = bytes(cols["pay_enc"][s]) if has_pay and cols["pay_enc"][s] else b""
-        docs_enc, docs_off = bytes(cols["docs_enc"][s]), cols["docs_offsets"][s]
-        if off:
-            d = np.cumsum(decode_all(docs_enc, np.asarray(docs_off))) + off
-            docs_enc, docs_off = encode_doc_deltas(d)
-        return (
-            field, term, int(cols["doc_freq"][s]), int(cols["ttf"][s]),
-            docs_enc, np.asarray(docs_off).tolist(),
-            bytes(cols["freqs_enc"][s]),
-            np.asarray(cols["freqs_offsets"][s]).tolist(),
-            bytes(cols["pos_enc"][s]),
-            np.asarray(cols["pos_offsets"][s]).tolist(),
-            bytes(cols["norms_enc"][s]),
-            (np.asarray(cols["block_last_doc"][s], dtype=np.int64) + off).tolist(),
-            np.asarray(cols["block_max_freq"][s]).tolist(),
-            np.asarray(cols["block_min_norm"][s]).tolist(),
-            pay,
-        )
-    docs_parts, freqs_parts, pos_parts, norm_parts, pay_parts = [], [], [], [], []
-    for i in range(s, e):
-        d_local = np.cumsum(
-            decode_all(bytes(cols["docs_enc"][i]), np.asarray(cols["docs_offsets"][i]))
-        )
-        f = decode_all(bytes(cols["freqs_enc"][i]), np.asarray(cols["freqs_offsets"][i]))
-        p = decode_all(bytes(cols["pos_enc"][i]), np.asarray(cols["pos_offsets"][i]))
-        n = np.frombuffer(bytes(cols["norms_enc"][i]), dtype=np.uint8)
-        pay = (np.frombuffer(bytes(cols["pay_enc"][i]), dtype="<f4")
-               if has_pay and cols["pay_enc"][i] else None)
-        sid = cols["segment_id"][i]
-        if docmaps is None:
-            d = d_local + seg_offset[sid]
-        else:
-            m = docmaps[sid]
-            newd = m[d_local]
-            keep = newd >= 0
-            d = newd[keep]
-            occ_keep = np.repeat(keep, f)
-            p = p[occ_keep]
-            if pay is not None:
-                pay = pay[occ_keep]
-            f = f[keep]
-            n = n[keep]
-        docs_parts.append(d)
-        freqs_parts.append(f)
-        pos_parts.append(p)
-        norm_parts.append(n)
-        if pay is not None:
-            pay_parts.append(pay)
-    docs = np.concatenate(docs_parts)
-    freqs = np.concatenate(freqs_parts)
-    pos_flat = np.concatenate(pos_parts)
-    norms = np.concatenate(norm_parts)
-    pay_enc = (
-        np.concatenate(pay_parts).astype("<f4").tobytes() if pay_parts else b""
-    )
-    if len(docs) == 0:
-        return (field, term, 0, 0,
-                b"", [], b"", [], b"", [], b"", [], [], [], b"")
-    docs_enc, docs_off = encode_doc_deltas(docs)
-    freqs_enc, freqs_off = encode_blocks(freqs)
-    pos_enc, pos_off = encode_blocks(pos_flat)
-    n = len(docs)
-    blk_idx = np.arange(0, n, BLOCK_SIZE)
-    blk_last = docs[np.minimum(blk_idx + BLOCK_SIZE - 1, n - 1)]
-    blk_maxf = np.maximum.reduceat(freqs, blk_idx)
-    blk_minn = np.minimum.reduceat(norms.astype(np.int64), blk_idx)
-    return (
-        field, term, int(len(docs)), int(freqs.sum()),
-        docs_enc, docs_off.tolist(),
-        freqs_enc, freqs_off.tolist(),
-        pos_enc, pos_off.tolist(),
-        norms.tobytes(),
-        blk_last.tolist(), blk_maxf.tolist(), blk_minn.tolist(),
-        pay_enc,
-    )
+def _rewrite_tombstones(index_dir: str, manifest: dict, remap: dict) -> dict:
+    """Carry live-docs tombstones through merges: a tombstoned doc of a
+    merged segment moves to (new segment, docmap[doc]) per `remap`
+    ({old segment_id: (new segment_id, docmap)}), and is dropped where its
+    docmap is -1 (the merge reclaimed it); other segments' rows stay. All
+    of it lands in one new tombstone file (deletes.py two-phase publish)."""
+    if not manifest.get("tombstone_files"):
+        return {}
+    sids, docs = [], [np.empty(0, dtype=np.int64)]
+    for sid, dead in read_tombstones(index_dir, manifest).items():
+        if sid in remap:
+            sid, m = remap[sid]
+            dead = m[dead]
+            dead = dead[dead >= 0]
+        sids += [sid] * len(dead)
+        docs.append(dead)
+    pairs = pd.DataFrame({"segment_id": pd.Series(sids, dtype=object),
+                          "doc_id": np.concatenate(docs)})
+    return {"tombstone_files": [write_tombstones(index_dir, pairs)]}
 
 
-def _merge_term_rows(pdf: pd.DataFrame, seg_order: dict, seg_offset: dict,
-                     docmaps: dict | None = None) -> tuple:
-    """Merge the posting rows of one (field, term) across segments: decode →
-    rebase → concat (inputs already docID-sorted per segment; offsets are
-    ordered) → re-encode + rebuild block metadata. Returns ONE tuple in
-    POSTINGS_COLS order.
-
-    With `docmaps` (reclaim mode), each segment's map array sends old local
-    docIDs to compacted merged docIDs (-1 = tombstoned): deleted postings
-    and their position runs are dropped here, reclaiming the space —
-    SegmentMerger's liveDocs-aware merge. Position runs are self-contained
-    delta streams (first delta of a run is absolute), so masking whole runs
-    out of the flat stream is safe."""
-    pdf = pdf.sort_values("segment_id", key=lambda s: s.map(seg_order))
-    field = pdf.iloc[0]["field"]
-    docs_parts, freqs_parts, pos_parts, norm_parts, pay_parts = [], [], [], [], []
-    has_pay = "pay_enc" in pdf.columns
-    for r in pdf.itertuples(index=False):
-        d_local = np.cumsum(decode_all(bytes(r.docs_enc), np.asarray(r.docs_offsets)))
-        f = decode_all(bytes(r.freqs_enc), np.asarray(r.freqs_offsets))
-        p = decode_all(bytes(r.pos_enc), np.asarray(r.pos_offsets))
-        n = np.frombuffer(bytes(r.norms_enc), dtype=np.uint8)
-        # payload stream is position-aligned raw float32 — masked the
-        # same way as positions under reclaim
-        pay = (np.frombuffer(bytes(r.pay_enc), dtype="<f4")
-               if has_pay and r.pay_enc else None)
-        if docmaps is None:
-            d = d_local + seg_offset[r.segment_id]
-        else:
-            m = docmaps[r.segment_id]
-            newd = m[d_local]
-            keep = newd >= 0
-            d = newd[keep]
-            occ_keep = np.repeat(keep, f)
-            p = p[occ_keep]
-            if pay is not None:
-                pay = pay[occ_keep]
-            f = f[keep]
-            n = n[keep]
-        docs_parts.append(d)
-        freqs_parts.append(f)
-        pos_parts.append(p)
-        norm_parts.append(n)
-        if pay is not None:
-            pay_parts.append(pay)
-    docs = np.concatenate(docs_parts)
-    freqs = np.concatenate(freqs_parts)
-    pos_flat = np.concatenate(pos_parts)
-    norms = np.concatenate(norm_parts)
-    pay_enc = (
-        np.concatenate(pay_parts).astype("<f4").tobytes() if pay_parts else b""
-    )
-    if len(docs) == 0:
-        # every posting of this term was tombstoned — emit a doc_freq-0 row
-        # (filtered out before the segment write)
-        return (field, pdf.iloc[0]["term"], 0, 0,
-                b"", [], b"", [], b"", [], b"", [], [], [], b"")
-
-    docs_enc, docs_off = encode_doc_deltas(docs)
-    freqs_enc, freqs_off = encode_blocks(freqs)
-    pos_enc, pos_off = encode_blocks(pos_flat)
-
-    n = len(docs)
-    blk_idx = np.arange(0, n, BLOCK_SIZE)
-    blk_last = docs[np.minimum(blk_idx + BLOCK_SIZE - 1, n - 1)]
-    blk_maxf = np.maximum.reduceat(freqs, blk_idx)
-    # exact min_norm per new block — the per-posting norm bytes travel with
-    # the postings (norms_enc), so merged impacts are as tight as freshly
-    # built ones (no conservative widening)
-    blk_minn = np.minimum.reduceat(norms.astype(np.int64), blk_idx)
-    row = pdf.iloc[0]
-    return (
-        field,
-        row["term"],
-        int(len(docs)),
-        int(freqs.sum()),
-        docs_enc, docs_off.tolist(),
-        freqs_enc, freqs_off.tolist(),
-        pos_enc, pos_off.tolist(),
-        norms.tobytes(),
-        blk_last.tolist(), blk_maxf.tolist(), blk_minn.tolist(),
-        pay_enc,
-    )
+def _merge(spark: SparkSession, index_dir: str, manifest: dict,
+           groups: list[list[str]], reclaim_deletes: bool) -> dict:
+    """Merge `groups` in one job and publish them as ONE generation."""
+    merged = _merge_group_job(spark, index_dir, manifest, groups, reclaim_deletes)
+    gone = {sid for entry, _ in merged for sid in entry["merged_from"]}
+    live = [s for s in manifest["segments"] if s["segment_id"] not in gone]
+    live += [entry for entry, _ in merged]
+    extra = {"merge": [entry["segment_id"] for entry, _ in merged]}
+    extra.update(_rewrite_tombstones(index_dir, manifest, {
+        sid: (entry["segment_id"], m)
+        for entry, docmaps in merged for sid, m in docmaps.items()
+    }))
+    return mf.commit_manifest(index_dir, live, extra=extra)
 
 
 def merge_once(
@@ -318,217 +338,8 @@ def merge_once(
     merge and compacts docIDs (Lucene's behavior — deleted docs disappear
     when their segment is merged, and the group's tombstones with them).
     Default False keeps docIDs byte-stable (merge-invariance contract)."""
-    manifest = mf.read_manifest(index_dir)
-    meta, offsets = _merge_group_job(
-        spark, index_dir, manifest, group, reclaim_deletes
-    )
-    live = [s for s in manifest["segments"] if s["segment_id"] not in set(group)]
-    live.append(dict(meta))
-    extra = {"merge": meta["segment_id"]}
-    extra.update(
-        _rewrite_tombstones(
-            index_dir, manifest,
-            [(offsets, meta["segment_id"], reclaim_deletes)],
-        )
-    )
-    return mf.commit_manifest(index_dir, live, extra=extra)
-
-
-def _merge_group_job(
-    spark: SparkSession,
-    index_dir: str,
-    manifest: dict,
-    group: list[str],
-    reclaim_deletes: bool = False,
-) -> tuple[dict, dict]:
-    """Run the Spark merge job for one group: write the merged segment's
-    files + meta.json marker, NO manifest commit. Returns (meta, offsets).
-    Groups are disjoint, so these jobs run safely in parallel
-    (ConcurrentMergeScheduler — see merge_down(concurrent=True))."""
-    t0 = time.monotonic()
-    by_id = {s["segment_id"]: s for s in manifest["segments"]}
-    group_segs = sorted((by_id[g] for g in group), key=lambda s: s["partition_id"])
-    seg_order = {s["segment_id"]: i for i, s in enumerate(group_segs)}
-    offsets, base = {}, 0
-    docmaps: dict | None = None
-    if reclaim_deletes:
-        from .deletes import read_tombstones
-
-        tombs = read_tombstones(index_dir, manifest)
-        docmaps = {}
-        for s in group_segs:
-            n = s["doc_count"]
-            m = np.full(n, -1, dtype=np.int64)
-            live_mask = np.ones(n, dtype=bool)
-            dels = tombs.get(s["segment_id"])
-            if dels is not None and len(dels):
-                live_mask[dels] = False
-            live_idx = np.flatnonzero(live_mask)
-            m[live_idx] = base + np.arange(len(live_idx), dtype=np.int64)
-            docmaps[s["segment_id"]] = m
-            offsets[s["segment_id"]] = base  # informational; maps carry it
-            base += len(live_idx)
-    else:
-        for s in group_segs:
-            offsets[s["segment_id"]] = base
-            base += s["doc_count"]
-
-    fingerprint = hashlib.sha256(
-        "|".join(s["input_fingerprint"] for s in group_segs).encode()
-    ).hexdigest()
-    new_sid = f"m{manifest['generation']:03d}-{group_segs[0]['partition_id']:05d}-{fingerprint[:10]}"
-    seg_dir = mf.segment_dir(index_dir, new_sid)
-    os.makedirs(seg_dir, exist_ok=True)
-
-    paths = [
-        os.path.join(mf.segment_dir(index_dir, s["segment_id"]), _POSTINGS_FILE)
-        for s in group_segs
-    ]
-    postings = spark.read.parquet(*paths)
-    # bucketed merge: groupBy a HASH of (field, term) — every term's rows
-    # land in one bucket, one kernel call merges the whole bucket, so the
-    # per-group Arrow/pandas overhead is amortized over ~thousands of terms
-    # (complete-term-group guarantee comes from the hash, like a shuffle)
-    n_out = max(2, min(len(group), 8))
-    n_buckets = n_out * 32
-    merged = (
-        postings.groupBy(
-            F.pmod(F.hash("field", "term"), F.lit(n_buckets)).alias("_bucket")
-        )
-        .applyInPandas(
-            partial(
-                _merge_bucket, seg_order=seg_order, seg_offset=offsets,
-                docmaps=docmaps,
-            ),
-            schema=POSTINGS_DDL,
-        )
-        .where(F.col("doc_freq") > 0)
-        .withColumn("segment_id", F.lit(new_sid))
-    )
-    # distributed executor-side write, range-partitioned + sorted by term so
-    # parquet row-group min/max stats prune term lookups (the .tip analog)
-    merged.repartitionByRange(n_out, "field", "term").sortWithinPartitions(
-        "field", "term"
-    ).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(seg_dir, _POSTINGS_FILE))
-    # content-field rows only — same meaning as build_segment_frames'
-    # distinct_terms (keyword-field rows would inflate it by ~2x doc_count)
-    distinct_terms = (
-        spark.read.parquet(os.path.join(seg_dir, _POSTINGS_FILE))
-        .where(F.col("field") == "content")
-        .count()
-    )
-
-    npaths = [
-        os.path.join(
-            mf.segment_dir(index_dir, s["segment_id"]),
-            s.get("norms_file", _NORMS_FILE),
-        )
-        for s in group_segs
-    ]
-    raw_norms = spark.read.parquet(*npaths)
-    if docmaps is None:
-        off_expr = F.create_map(
-            *[x for sid, off in offsets.items() for x in (F.lit(sid), F.lit(off))]
-        )
-        norms = raw_norms.withColumn(
-            "doc_id", F.col("doc_id") + off_expr[F.col("segment_id")]
-        )
-        sum_ttf = int(sum(s["sum_ttf"] for s in group_segs))
-    else:
-        maps = docmaps
-
-        def _remap_norms(batches):
-            for npdf in batches:
-                npdf = npdf.reset_index(drop=True)
-                newd = np.empty(len(npdf), dtype=np.int64)
-                for sid, g in npdf.groupby("segment_id", sort=False):
-                    newd[g.index.to_numpy()] = maps[sid][g["doc_id"].to_numpy()]
-                npdf["doc_id"] = newd
-                yield npdf[npdf["doc_id"] >= 0]
-
-        norms = raw_norms.mapInPandas(_remap_norms, schema=raw_norms.schema)
-    norms = (
-        norms.withColumn("segment_id", F.lit(new_sid))
-        # salted row-level repartition: uniform spread regardless of input skew
-        .repartition(n_out, F.hash("repo", "path", "commit"))
-    )
-    norms.write.mode("overwrite").parquet(os.path.join(seg_dir, _NORMS_FILE))
-    if docmaps is not None:
-        # stats over the LIVE set only (reclaim updates docCount/sumTTF,
-        # like Lucene after a merge drops deletions)
-        sum_ttf = int(
-            spark.read.parquet(os.path.join(seg_dir, _NORMS_FILE))
-            .agg(F.sum("dl"))
-            .collect()[0][0]
-            or 0
-        )
-
-    import json as _json
-
-    from .segment import CONTENT_FIELD, KEYWORD_FIELDS
-
-    field_stats = {CONTENT_FIELD: {"sum_ttf": int(sum_ttf), "doc_count": int(base)}}
-    for kw in KEYWORD_FIELDS:
-        # keyword fields: one atomic term per live doc, dl 1
-        field_stats[kw] = {"sum_ttf": int(base), "doc_count": int(base)}
-    meta = {
-        "segment_id": new_sid,
-        "partition_id": group_segs[0]["partition_id"],
-        "input_fingerprint": fingerprint,
-        "doc_count": int(base),
-        "sum_ttf": sum_ttf,
-        "field_stats": _json.dumps(field_stats, sort_keys=True),
-        "distinct_terms": int(distinct_terms),
-        "total_postings": int(sum(s["total_postings"] for s in group_segs)),
-        "build_wall_s": time.monotonic() - t0,
-        "min_key": group_segs[0].get("min_key", ""),
-        "max_key": group_segs[-1].get("max_key", ""),
-        "reused": False,
-        "merged_from": [s["segment_id"] for s in group_segs],
-    }
-    mf.write_segment_meta(index_dir, new_sid, meta)
-    return meta, offsets
-
-
-def _rewrite_tombstones(index_dir, manifest, remaps: list) -> dict:
-    """Carry live-docs tombstones through one or more merges: for each
-    (offsets, new_sid, dropped) in `remaps`, rows of that group's segments
-    are remapped to (new_sid, doc_id + offset) — or DROPPED when the merge
-    reclaimed them — and everything is consolidated into one new tombstone
-    file (deletes.py two-phase publish)."""
-    files = manifest.get("tombstone_files", [])
-    if not files:
-        return {}
-    import uuid
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    frames = [
-        pq.read_table(os.path.join(index_dir, rel)).to_pandas() for rel in files
-    ]
-    pdf = pd.concat(frames, ignore_index=True)
-    parts = []
-    merged_sids: set = set()
-    for offsets, new_sid, dropped in remaps:
-        merged_sids |= set(offsets)
-        if dropped:
-            continue
-        grp = pdf[pdf["segment_id"].isin(offsets)].copy()
-        if len(grp):
-            grp["doc_id"] = grp["doc_id"] + grp["segment_id"].map(offsets)
-            grp["segment_id"] = new_sid
-            parts.append(grp)
-    out = pd.concat(
-        [pdf[~pdf["segment_id"].isin(merged_sids)], *parts], ignore_index=True
-    )
-    os.makedirs(os.path.join(index_dir, "deletes"), exist_ok=True)
-    rel = os.path.join("deletes", f"del-{uuid.uuid4().hex}.parquet")
-    pq.write_table(pa.Table.from_pandas(out, preserve_index=False),
-                   os.path.join(index_dir, rel))
-    return {"tombstone_files": [rel]}
+    return _merge(spark, index_dir, mf.read_manifest(index_dir), [group],
+                  reclaim_deletes)
 
 
 def merge_down(
@@ -537,50 +348,19 @@ def merge_down(
     target_segments: int = SEGS_PER_TIER,
     reclaim_deletes: bool = False,
     concurrent: bool = False,
-    max_concurrent: int = 4,
 ) -> dict:
     """Run merges until ≤ target_segments remain. `reclaim_deletes=True`
     drops tombstoned docs and compacts docIDs as segments merge.
 
     `concurrent=True` is the ConcurrentMergeScheduler analog: a round's
-    groups are DISJOINT, so their Spark merge jobs run on a driver thread
-    pool (Spark schedules the jobs fairly across executors); the round
-    then publishes ONE manifest generation covering all of them — commits
-    stay strictly serial, so two-phase atomicity is preserved."""
+    groups are DISJOINT, so they merge as the tasks of one Spark job and
+    the round publishes ONE manifest generation. Otherwise each group is
+    its own job and generation, in turn — commits stay strictly serial
+    either way, so two-phase atomicity is preserved."""
     manifest = mf.read_manifest(index_dir)
     while True:
         groups = find_merges(manifest, target_segments)
         if not groups:
             return manifest
-        if concurrent and len(groups) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(max_concurrent, len(groups))
-            ) as ex:
-                results = list(
-                    ex.map(
-                        lambda g: _merge_group_job(
-                            spark, index_dir, manifest, g, reclaim_deletes
-                        ),
-                        groups,
-                    )
-                )
-            merged_ids = set().union(*(set(g) for g in groups))
-            live = [
-                s for s in manifest["segments"] if s["segment_id"] not in merged_ids
-            ]
-            live.extend(dict(meta) for meta, _ in results)
-            extra = {"merge": [meta["segment_id"] for meta, _ in results]}
-            extra.update(
-                _rewrite_tombstones(
-                    index_dir, manifest,
-                    [(off, meta["segment_id"], reclaim_deletes) for meta, off in results],
-                )
-            )
-            manifest = mf.commit_manifest(index_dir, live, extra=extra)
-        else:
-            for g in groups:
-                manifest = merge_once(
-                    spark, index_dir, g, reclaim_deletes=reclaim_deletes
-                )
+        for batch in [groups] if concurrent else [[g] for g in groups]:
+            manifest = _merge(spark, index_dir, manifest, batch, reclaim_deletes)

@@ -8,15 +8,14 @@ Each file is read key columns first: `field`/`term` for postings,
 `doc_id` (or `path`) for the docmap. The requested columns are read only
 from the row groups that hold a hit, and only the hit rows are kept, so
 the heavy columns (`docs_enc`, `content`, ...) of a file without a hit
-are never decoded. Files are resolved through the manifest
+are never decoded. Every segment file is one parquet file (a flush and
+a merge write it the same way), resolved through the manifest
 (`postings_paths`/`norms_paths`), so doc-values generations
-(`norms-g<N>.parquet`) and merged segments written by Spark as a
-directory of part files both read correctly.
+(`norms-g<N>.parquet`) read correctly.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Callable, Iterable
 
 import numpy as np
@@ -28,18 +27,6 @@ import pyarrow.parquet as pq
 from .builder import norms_paths, postings_paths
 
 
-def _parquet_files(path: str) -> list[str]:
-    """A segment file is one parquet file, or (merged segments) a Spark
-    output directory of part files next to _SUCCESS/.crc markers."""
-    if not os.path.isdir(path):
-        return [path]
-    return [
-        os.path.join(path, f)
-        for f in sorted(os.listdir(path))
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    ]
-
-
 def _read_rows(
     sources: Iterable[tuple[str, Callable[[pa.Table], pa.Array]]],
     key_columns: list[str],
@@ -49,26 +36,25 @@ def _read_rows(
     `match` (a boolean mask over the key table), projected to `columns`."""
     frames, schema = [], None
     for path, match in sources:
-        for f in _parquet_files(path):
-            with pq.ParquetFile(f) as pf:
-                if schema is None:
-                    schema = pa.schema([pf.schema_arrow.field(c) for c in columns])
-                hit = np.flatnonzero(
-                    match(pf.read(columns=key_columns)).to_numpy(zero_copy_only=False)
-                )
-                if not len(hit):
-                    continue
-                # read only the row groups holding a hit, then take the hits
-                ends = np.cumsum([
-                    pf.metadata.row_group(i).num_rows
-                    for i in range(pf.num_row_groups)
-                ])
-                groups = np.unique(np.searchsorted(ends, hit, side="right"))
-                rows = np.concatenate(
-                    [np.arange(ends[g - 1] if g else 0, ends[g]) for g in groups]
-                )
-                table = pf.read_row_groups(groups.tolist(), columns=columns)
-            frames.append(table.take(np.searchsorted(rows, hit)).to_pandas())
+        with pq.ParquetFile(path) as pf:
+            if schema is None:
+                schema = pa.schema([pf.schema_arrow.field(c) for c in columns])
+            hit = np.flatnonzero(
+                match(pf.read(columns=key_columns)).to_numpy(zero_copy_only=False)
+            )
+            if not len(hit):
+                continue
+            # read only the row groups holding a hit, then take the hits
+            ends = np.cumsum([
+                pf.metadata.row_group(i).num_rows
+                for i in range(pf.num_row_groups)
+            ])
+            groups = np.unique(np.searchsorted(ends, hit, side="right"))
+            rows = np.concatenate(
+                [np.arange(ends[g - 1] if g else 0, ends[g]) for g in groups]
+            )
+            table = pf.read_row_groups(groups.tolist(), columns=columns)
+        frames.append(table.take(np.searchsorted(rows, hit)).to_pandas())
     if frames:
         return pd.concat(frames, ignore_index=True)
     if schema is None:
@@ -102,8 +88,7 @@ def postings_columns(index_dir: str, manifest: dict) -> list[str]:
     """Column names of the committed postings files, from the first
     file's schema (the one `_read_rows` takes): segments written before
     payloads lack `pay_enc`."""
-    first = _parquet_files(postings_paths(index_dir, manifest)[0])[0]
-    return pq.read_schema(first).names
+    return pq.read_schema(postings_paths(index_dir, manifest)[0]).names
 
 
 def _isin(column: str, values: pa.Array) -> Callable[[pa.Table], pa.Array]:

@@ -281,24 +281,23 @@ def build_segment_frames(
             fields.append(_invert_rows(kw, vals, kw_doc_ids, kw_pos, kw_norms))
             field_stats[kw] = {"sum_ttf": int(n_docs), "doc_count": int(n_docs)}
 
-    if not fields:
-        empty = pd.DataFrame({c: pd.Series(dtype=object) for c in POSTINGS_COLS})
-        stats.update(
-            distinct_terms=0, total_postings=0,
-            build_wall_s=time.monotonic() - t0, field_stats=field_stats,
-        )
-        return empty, norms_pdf, stats
-
-    postings_pdf = pd.DataFrame({
-        c: list(chain.from_iterable(f[c] for f in fields)) for c in POSTINGS_COLS
-    })
     stats.update(
         distinct_terms=len(content_doc_freqs),
         total_postings=sum(content_doc_freqs),
         build_wall_s=time.monotonic() - t0,
         field_stats=field_stats,
     )
-    return postings_pdf, norms_pdf, stats
+    return _postings_frame(fields), norms_pdf, stats
+
+
+def _postings_frame(fields: list[dict]) -> pd.DataFrame:
+    """A segment's posting rows: the `_invert_rows` output of each field,
+    field after field."""
+    if not fields:
+        return pd.DataFrame({c: pd.Series(dtype=object) for c in POSTINGS_COLS})
+    return pd.DataFrame({
+        c: list(chain.from_iterable(f[c] for f in fields)) for c in POSTINGS_COLS
+    })
 
 
 def segment_fingerprint(norms_pdf: pd.DataFrame) -> str:

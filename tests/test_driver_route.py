@@ -4,7 +4,7 @@ search() scores a query whose postings fit one slice (summed global ttf of
 its keys <= MAX_DOCS_PER_SLICE) on the driver and sends everything else
 through the Spark dispatch; search_local scores on the driver from its
 per-key cache and search_many scores a batch. Over seeded random queries
-on an index with tombstones and a merged (directory) segment, the driver
+on an index with tombstones and a merged segment, the driver
 route, the Spark route (forced by setting the bound to -1), search_local
 and a one-query search_many must return equal frames and attrs, and the
 BM25 top-10 of the benchmark shapes must match the brute-force oracle.
@@ -14,7 +14,6 @@ and a NumericRange filter; rescore must agree between its routes too.
 """
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -23,7 +22,7 @@ import pytest
 from lucene_solr_1_spark.corpus import KEYWORDS, make_corpus_pandas
 from lucene_solr_1_spark.index import deletes as D
 from lucene_solr_1_spark.index import manifest as mf
-from lucene_solr_1_spark.index.builder import build_index, postings_paths
+from lucene_solr_1_spark.index.builder import build_index
 from lucene_solr_1_spark.index.merge import merge_down
 from lucene_solr_1_spark.search import searcher as S
 from lucene_solr_1_spark.search.query import (
@@ -49,7 +48,7 @@ def routed(spark, tmp_path_factory):
     for path in sorted(deleted):
         D.delete_by_term(spark, d, path, field="path")
     m = mf.read_manifest(d)
-    assert any(os.path.isdir(p) for p in postings_paths(d, m))
+    assert any(s.get("merged_from") for s in m["segments"])
     assert len(m["segments"]) > 1
     s = S.LuceneSparkSearcher(spark, d)
     assert sum(len(v) for v in s.tombstones.values()) == N_DELETED

@@ -5,7 +5,8 @@ canEarlyTerminate path).
 Contracts pinned:
 - every segment's local docID order follows (sort value, doc key);
 - a fresh build is ALSO globally sorted (range partitioning on the key);
-- appends keep the per-segment guarantee (Lucene's contract);
+- appends keep the per-segment guarantee (Lucene's contract), and a merge
+  keeps it too: the merged segment is sorted (IndexSorter at merge);
 - search_sorted == brute-force field sort of the full match set, with
   relation GREATER_THAN_OR_EQUAL_TO;
 - the default (unsorted) build path is byte-identical to before — the
@@ -109,6 +110,36 @@ def test_search_sorted_survives_append(spark, tiny_corpus_pdf, tmp_path_factory)
     full = s.search(Term("return"), k=10_000, with_stored=True)
     ref = full.sort_values(["n_chars", "global_doc_id"], kind="mergesort").head(6)
     assert hits["global_doc_id"].tolist() == ref["global_doc_id"].tolist()
+
+
+@pytest.mark.parametrize("desc", [False, True])
+def test_merge_keeps_index_sort(spark, tmp_path, desc):
+    """Merging a sorted index's segments — built and appended, so their
+    value ranges overlap — writes one segment in (sort value, doc key)
+    order, and search_sorted's per-segment early termination stays exact."""
+    from lucene_solr_1_spark.corpus import make_corpus_pandas
+    from lucene_solr_1_spark.index.merge import merge_down
+
+    corpus = make_corpus_pandas(400)
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(corpus.iloc[:300]), d, num_segments=2,
+                index_sort="n_chars", index_sort_desc=desc)
+    add_documents(spark, spark.createDataFrame(corpus.iloc[300:]), d)
+    merge_down(spark, d, target_segments=1)
+    s = LuceneSparkSearcher(spark, d)
+    (seg,) = s.manifest["segments"]
+    docmap = _stored_lengths(s)
+    assert len(docmap) == len(corpus)
+    want = corpus.assign(n_chars=corpus["content"].str.len()).sort_values(
+        ["n_chars", "repo", "path", "commit"],
+        ascending=[not desc, True, True, True], kind="mergesort",
+    )
+    assert docmap["content"].tolist() == want["content"].tolist()
+    hits = s.search_sorted(Term("return"), k=8)
+    full = s.search(Term("return"), k=10_000, with_stored=True)
+    ref = full.sort_values(["n_chars", "global_doc_id"],
+                           ascending=[not desc, True], kind="mergesort").head(8)
+    assert hits["path"].tolist() == ref["path"].tolist()
 
 
 def test_sorted_desc(spark, tiny_corpus_pdf, tmp_path_factory):

@@ -1,10 +1,20 @@
 """Tiered merge tests: stats preserved, top-k invariant, docIDs stable
 (FIXTURES.md §5 merge invariance; SegmentMerger/TieredMergePolicy analogs)."""
 
-import numpy as np
+import hashlib
+import json
+import os
+import shutil
 
+import numpy as np
+import pandas as pd
+import pyarrow.parquet as pq
+import pytest
+
+from lucene_solr_1_spark.corpus import make_corpus_pandas
 from lucene_solr_1_spark.index import manifest as mf
 from lucene_solr_1_spark.index.builder import build_index
+from lucene_solr_1_spark.index.check import check_index
 from lucene_solr_1_spark.index.merge import find_merges, merge_down, merge_once
 from lucene_solr_1_spark.search.query import Bool, Occur, Phrase, SpanNear, Term
 from lucene_solr_1_spark.search.searcher import LuceneSparkSearcher
@@ -90,11 +100,6 @@ def test_merge_global_df_consistent(spark, small_corpus_pdf, tmp_path_factory):
 def test_concurrent_merge_matches_sequential(spark, tmp_path_factory):
     """merge_down(concurrent=True) — the ConcurrentMergeScheduler analog —
     produces the same live set, stats and rankings as sequential merging."""
-    from lucene_solr_1_spark.corpus import make_corpus_pandas
-    from lucene_solr_1_spark.index.check import check_index
-    from lucene_solr_1_spark.search.query import Term
-    from lucene_solr_1_spark.search.searcher import LuceneSparkSearcher
-
     pdf = make_corpus_pandas(300)
     outs = []
     for conc in (False, True):
@@ -111,56 +116,118 @@ def test_concurrent_merge_matches_sequential(spark, tmp_path_factory):
         )
     assert outs[0] == outs[1]
 
-def test_merge_bucket_matches_contract(spark, small_corpus_pdf, tmp_path_factory):
-    """The vectorized slice walker (_merge_bucket → _merge_term_slice) must
-    be row-identical to the pinned per-group contract (_merge_term_rows) —
-    including the singleton fast path (stream pass-through + doc rebase)
-    and reclaim mode (tombstone masking)."""
-    import pandas as pd
-    import pyarrow.dataset as ds
 
-    from lucene_solr_1_spark.index import merge as M
-    from lucene_solr_1_spark.index.builder import _POSTINGS_FILE
-    from lucene_solr_1_spark.index.segment import POSTINGS_COLS
+def _frame_rows(pdf: pd.DataFrame) -> dict:
+    """Columns as plain lists (array cells as lists) for exact comparison."""
+    return {
+        c: [v.tolist() if isinstance(v, np.ndarray) else v for v in pdf[c]]
+        for c in pdf.columns
+    }
 
-    df = spark.createDataFrame(small_corpus_pdf)
-    d = str(tmp_path_factory.mktemp("idx_bk"))
-    m = build_index(spark, df, d, num_segments=6)
+
+@pytest.mark.parametrize("shape", ["plain", "reclaim", "offsets"])
+def test_merged_segment_matches_fresh_build(spark, tmp_path, shape):
+    """SegmentMerger's contract: a merged segment's postings and docmap
+    equal build_segment_frames of its live documents in merged docID order
+    (input segments in partition order, each in docID order, tombstones
+    dropped) — row for row, blocks and impacts included. `reclaim` masks
+    random tombstones out of the doc, position and norm streams; every
+    shape merges terms held by one input segment and terms held by many."""
+    from lucene_solr_1_spark.index import deletes as D
+    from lucene_solr_1_spark.index.builder import _CORPUS_COLUMNS
+    from lucene_solr_1_spark.index.segment import build_segment_frames
+
+    corpus = make_corpus_pandas(240)
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(corpus), d, num_segments=6,
+                store_offsets=shape == "offsets")
+    if shape == "reclaim":
+        rng = np.random.default_rng(11)
+        for path in rng.choice(corpus["path"].to_numpy(), size=30, replace=False):
+            D.delete_by_term(spark, d, path, field="path")
+    m = mf.read_manifest(d)
     segs = sorted(m["segments"], key=lambda s: s["partition_id"])
-    frames = []
+    tombs = D.read_tombstones(d, m)
+    live, held_by = [], {}
     for s in segs:
-        p = f"{mf.segment_dir(d, s['segment_id'])}/{_POSTINGS_FILE}"
-        f = ds.dataset(p).to_table().to_pandas()
-        f["segment_id"] = s["segment_id"]
-        frames.append(f)
-    pdf = pd.concat(frames, ignore_index=True)
-    seg_order = {s["segment_id"]: i for i, s in enumerate(segs)}
-    offsets, base = {}, 0
-    for s in segs:
-        offsets[s["segment_id"]] = base
-        base += s["doc_count"]
-    rng = np.random.default_rng(7)
-    docmaps = {}
-    cbase = 0
-    for s in segs:
-        n = s["doc_count"]
-        keep = rng.random(n) > 0.2
-        mm = np.full(n, -1, dtype=np.int64)
-        mm[np.flatnonzero(keep)] = cbase + np.arange(int(keep.sum()))
-        docmaps[s["segment_id"]] = mm
-        cbase += int(keep.sum())
+        seg_dir = mf.segment_dir(d, s["segment_id"])
+        docs = pq.read_table(f"{seg_dir}/norms.parquet").to_pandas().sort_values("doc_id")
+        live.append(docs[~docs["doc_id"].isin(tombs.get(s["segment_id"], []))])
+        keys = pq.read_table(f"{seg_dir}/postings.parquet", columns=["field", "term"])
+        for key in zip(*keys.to_pydict().values()):
+            held_by[key] = held_by.get(key, 0) + 1
+    assert sum(len(t) for t in tombs.values()) == (30 if shape == "reclaim" else 0)
+    assert 1 in held_by.values() and max(held_by.values()) == len(segs)
+    want_postings, want_docmap, stats = build_segment_frames(
+        pd.concat(live)[_CORPUS_COLUMNS].reset_index(drop=True),
+        store_offsets=shape == "offsets", presorted=True,
+    )
 
-    for maps in (None, docmaps):
-        contract = pd.DataFrame(
-            [M._merge_term_rows(g, seg_order, offsets, maps)
-             for _, g in pdf.groupby(["field", "term"], sort=False)],
-            columns=POSTINGS_COLS,
-        )
-        fast = M._merge_bucket(pdf, seg_order, offsets, maps)
-        key = ["field", "term"]
-        contract = contract.sort_values(key, ignore_index=True)
-        fast = fast.sort_values(key, ignore_index=True)
-        assert len(contract) == len(fast)
-        for c in POSTINGS_COLS:
-            a, b = contract[c].tolist(), fast[c].tolist()
-            assert a == b, f"column {c} diverges"
+    merged = merge_down(spark, d, target_segments=1,
+                        reclaim_deletes=shape == "reclaim")
+    (seg,) = merged["segments"]
+    seg_dir = mf.segment_dir(d, seg["segment_id"])
+    for name, want in (("postings", want_postings), ("norms", want_docmap)):
+        got = pq.read_table(f"{seg_dir}/{name}.parquet").to_pandas()
+        assert set(got["segment_id"]) <= {seg["segment_id"]}
+        assert _frame_rows(got.drop(columns="segment_id")) == _frame_rows(want), name
+    for k in ("doc_count", "sum_ttf", "distinct_terms", "total_postings"):
+        assert seg[k] == stats[k], k
+    assert json.loads(seg["field_stats"]) == stats["field_stats"]
+    assert seg["segment_id"] not in D.read_tombstones(d, merged)
+
+
+def test_merge_is_byte_reproducible(spark, tmp_path):
+    """Merging one snapshot twice writes the same bytes: one file per
+    table, written from the same frames."""
+    src = tmp_path / "src"
+    build_index(spark, spark.createDataFrame(make_corpus_pandas(200)), str(src),
+                num_segments=6)
+    digests = []
+    for name in ("a", "b"):
+        d = tmp_path / name
+        shutil.copytree(src, d)
+        (seg,) = merge_down(spark, str(d), target_segments=1)["segments"]
+        seg_dir = mf.segment_dir(str(d), seg["segment_id"])
+        digests.append({
+            f: hashlib.sha256(open(os.path.join(seg_dir, f), "rb").read()).hexdigest()
+            for f in ("postings.parquet", "norms.parquet")
+        })
+    assert digests[0] == digests[1]
+
+
+def _commit(d: str, generation: int) -> dict:
+    with open(os.path.join(d, f"manifest-{generation}.json")) as fh:
+        return json.load(fh)
+
+
+def test_merge_job_and_commit_counts(spark, tmp_path, count_jobs):
+    """A merge round runs ONE Spark job — one task per group, no shuffle:
+    concurrent=True publishes the round as one generation, concurrent=False
+    publishes (and runs) each group on its own, and merge_once is one job
+    and one generation."""
+    pdf = make_corpus_pandas(180)
+    for concurrent in (True, False):
+        d = str(tmp_path / f"idx_{concurrent}")
+        m0 = build_index(spark, spark.createDataFrame(pdf), d, num_segments=12)
+        groups = find_merges(m0, target_segments=2)
+        assert len(groups) >= 2
+        with count_jobs() as jobs:
+            m = merge_down(spark, d, target_segments=2, concurrent=concurrent)
+        assert len(m["segments"]) <= 2
+        commits = [_commit(d, g) for g in range(m0["generation"] + 1, m["generation"] + 1)]
+        assert len(jobs) == len(commits)
+        if concurrent:
+            assert len(commits[0]["merge"]) == len(groups)
+        else:
+            assert len(commits) >= len(groups)
+            assert all(len(c["merge"]) == 1 for c in commits)
+        assert check_index(spark, d)["errors"] == []
+
+    d = str(tmp_path / "idx_once")
+    m0 = build_index(spark, spark.createDataFrame(pdf), d, num_segments=4)
+    with count_jobs() as jobs:
+        m = merge_once(spark, d, [s["segment_id"] for s in m0["segments"][:2]])
+    assert len(jobs) == 1
+    assert m["generation"] == m0["generation"] + 1
+    assert len(m["segments"]) == 3

@@ -4,9 +4,9 @@ Term statistics, stored fields, delete-term pairs and real-time get are
 read from the committed segment files without a Spark job. Each must
 equal a Spark scan of the same files on every awkward index shape:
 tombstones, a doc-values generation (`norms-g<N>.parquet`), merged
-segments written as a directory of part files, and keys absent from
-every segment. Opening a searcher and running a cold one-slice search
-launches no Spark job, and neither does delete_by_term.
+segments, and keys absent from every segment. Opening a searcher and
+running a cold one-slice search launches no Spark job, and neither does
+delete_by_term.
 """
 
 import os
@@ -135,10 +135,10 @@ def test_reads_match_spark_scan_on_every_index_shape(spark, corpus, tmp_path):
     hits = s.search(Term("python", field="lang"), k=5, with_stored=True)
     assert len(hits) and (hits["dl"] == 9999).all()
 
-    # merged segments: postings and docmap are directories of part files
+    # merged segments: postings and docmap are single files, like a flush's
     merge_down(spark, d, target_segments=1)
     m = mf.read_manifest(d)
-    assert all(os.path.isdir(p) for p in postings_paths(d, m) + norms_paths(d, m))
+    assert all(os.path.isfile(p) for p in postings_paths(d, m) + norms_paths(d, m))
     _check_equivalent(spark, d, paths)
 
 
