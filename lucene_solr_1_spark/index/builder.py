@@ -61,10 +61,13 @@ MAX_DOCS_PER_FLUSH = 250
 
 
 def _write_parquet(pdf: pd.DataFrame, path: str, segment_id: str) -> None:
+    from .segfiles import evict
+
     pdf = pdf.copy()
     pdf.insert(0, "segment_id", segment_id)
     table = pa.Table.from_pandas(pdf, preserve_index=False)
     pq.write_table(table, path, compression="zstd")
+    evict(path)
 
 
 def _build_partition(batches, pid_offset: int = 0, **build):
@@ -85,10 +88,17 @@ def _build_segment(pdfs: list, pid: int, index_dir: str, cfg: AnalyzerConfig,
     if index_sort:
         # IndexWriterConfig.setIndexSort analog: docIDs within the segment
         # follow (sort value, doc key) — doc key breaks value ties so the
-        # order stays content-defined and deterministic
+        # order stays content-defined and deterministic. The value is the
+        # STORED n_chars: with payloads, the length once build_segment_frames
+        # strips the `tok|<float>` annotations (a merge sorts by it too)
         field, desc = index_sort
+        text = pdf["content"]
+        if store_payloads:
+            from ..kernels.analyzer import parse_delimited_payloads
+
+            text = text.fillna("").map(lambda c: parse_delimited_payloads(c)[0])
         pdf = (
-            pdf.assign(_sort=pdf["content"].str.len())
+            pdf.assign(_sort=text.str.len())
             .sort_values(["_sort", *DOC_KEY],
                          ascending=[not desc, True, True, True],
                          kind="mergesort")
@@ -142,14 +152,24 @@ def _manifest_row(meta: dict) -> dict:
 
 
 def _driver_rows(df: DataFrame) -> pd.DataFrame | None:
-    """`df`'s rows when its optimized plan is a LocalRelation (rows already
-    in driver memory: collecting them runs no Spark job) of at most
-    MAX_DOCS_PER_FLUSH rows, so the driver flushes it; else None (Spark)."""
+    """`df`'s corpus columns when its optimized plan is a LocalRelation
+    (rows already in driver memory: collecting them runs no Spark job) of
+    at most MAX_DOCS_PER_FLUSH rows, so the driver flushes it; else None
+    (Spark). The caller's frame is collected as it is and projected in
+    pandas, so a driver flush analyzes no new Spark plan."""
     plan = df._jdf.queryExecution().optimizedPlan() if hasattr(df, "_jdf") else None
     if (plan is None or plan.nodeName() != "LocalRelation"
-            or plan.data().size() > MAX_DOCS_PER_FLUSH):
+            or plan.data().size() > MAX_DOCS_PER_FLUSH
+            or not set(_CORPUS_COLUMNS) <= set(df.columns)):
         return None
-    return pd.DataFrame(df.collect(), columns=df.columns)
+    return pd.DataFrame(df.collect(), columns=df.columns)[_CORPUS_COLUMNS]
+
+
+def _corpus(corpus_df: DataFrame) -> tuple[DataFrame | None, pd.DataFrame | None]:
+    """(None, driver rows) of a small in-memory `corpus_df`, else (its
+    corpus-column projection for the Spark build, None)."""
+    rows = _driver_rows(corpus_df)
+    return (None, rows) if rows is not None else (corpus_df.select(*_CORPUS_COLUMNS), None)
 
 
 def _range_chunks(rows: pd.DataFrame, num_segments: int,
@@ -181,12 +201,13 @@ def _range_chunks(rows: pd.DataFrame, num_segments: int,
     return [rows[part == j] for j in np.unique(part)] or [rows]
 
 
-def _flush(df: DataFrame, rows: pd.DataFrame | None, index_dir: str,
+def _flush(df: DataFrame | None, rows: pd.DataFrame | None, index_dir: str,
            num_segments: int, pid_offset: int = 0,
            pre_partitioned: bool = False, **build) -> list[dict]:
-    """Build `df` (the corpus columns) as segments pid_offset, pid_offset+1,
-    ... and return their manifest rows; the caller commits. With `rows`
-    (_driver_rows) each range is built in-process, else in a Spark task."""
+    """Build the corpus rows as segments pid_offset, pid_offset+1, ... and
+    return their manifest rows; the caller commits. With `rows`
+    (_driver_rows) each range is built in-process, else each range of the
+    Spark frame `df` (the corpus columns) in a Spark task."""
     sort_spec = build.get("index_sort")
     if rows is not None:
         return [
@@ -211,7 +232,13 @@ def _flush(df: DataFrame, rows: pd.DataFrame | None, index_dir: str,
         partial(_build_partition, index_dir=index_dir, pid_offset=pid_offset, **build),
         schema=MANIFEST_ROW_DDL,
     )
-    return [r.asDict() for r in built.collect()]
+    segments = [r.asDict() for r in built.collect()]
+    # the tasks wrote in other processes: drop this process's pooled copies
+    from .segfiles import evict
+
+    done = {"segments": segments}
+    evict(*postings_paths(index_dir, done), *norms_paths(index_dir, done))
+    return segments
 
 
 def build_index(
@@ -269,10 +296,10 @@ def build_index(
     # an unregistered config raises here, before any segment is written
     analyzer = analyzer_name(cfg)
     sort_spec = (index_sort, bool(index_sort_desc)) if index_sort else None
-    df = corpus_df.select(*_CORPUS_COLUMNS)
+    df, rows = ((corpus_df.select(*_CORPUS_COLUMNS), None) if pre_partitioned
+                else _corpus(corpus_df))
     segments = _flush(
-        df, None if pre_partitioned else _driver_rows(df), index_dir,
-        num_segments, pre_partitioned=pre_partitioned, cfg=cfg,
+        df, rows, index_dir, num_segments, pre_partitioned=pre_partitioned, cfg=cfg,
         fail_partitions=fail_partitions or set(), store_offsets=store_offsets,
         index_sort=sort_spec, store_payloads=store_payloads,
     )
@@ -289,7 +316,7 @@ def build_index(
     return mf.commit_manifest(index_dir, segments, extra=extra)
 
 
-def _append(df: DataFrame, rows: pd.DataFrame | None, index_dir: str,
+def _append(df: DataFrame | None, rows: pd.DataFrame | None, index_dir: str,
             manifest: dict, num_segments: int, cfg: AnalyzerConfig | None = None,
             deleted: pd.DataFrame | None = None) -> dict:
     """Flush `df` as new segments after the index's last partition, with
@@ -342,8 +369,8 @@ def add_documents(
     manifest = mf.read_manifest(index_dir)
     if manifest is None:
         return build_index(spark, corpus_df, index_dir, num_segments, cfg or STANDARD)
-    df = corpus_df.select(*_CORPUS_COLUMNS)
-    return _append(df, _driver_rows(df), index_dir, manifest, num_segments, cfg)
+    df, rows = _corpus(corpus_df)
+    return _append(df, rows, index_dir, manifest, num_segments, cfg)
 
 
 def update_documents(
@@ -370,8 +397,7 @@ def update_documents(
     manifest = mf.read_manifest(index_dir)
     if manifest is None:
         raise ValueError("update_documents requires an existing index")
-    df = corpus_df.select(*_CORPUS_COLUMNS)
-    rows = _driver_rows(df)
+    df, rows = _corpus(corpus_df)
     keys = tuple(
         rows[key_field].unique() if rows is not None and key_field in rows
         else (r[0] for r in corpus_df.select(key_field).distinct().collect())

@@ -32,16 +32,25 @@ from . import manifest as mf
 from . import segfiles
 
 
+def _load_tombstones(f) -> tuple[dict, int]:
+    """One tombstone file as {segment_id: np.int64 doc_ids}, and its size."""
+    t = pq.read_table(f, columns=["segment_id", "doc_id"])
+    sids = t["segment_id"].to_numpy(zero_copy_only=False)
+    docs = t["doc_id"].to_numpy(zero_copy_only=False).astype(np.int64)
+    ids = {sid: docs[sids == sid] for sid in sorted(set(sids))}
+    return ids, sum(a.nbytes + 64 for a in ids.values())
+
+
 def read_tombstones(index_dir: str, manifest: dict) -> dict[str, np.ndarray]:
-    """{segment_id: sorted np.int64 array of deleted local docIDs}."""
-    out: dict[str, np.ndarray] = {}
+    """{segment_id: sorted np.int64 array of deleted local docIDs}. Each
+    tombstone file is parsed once per process (segfiles' reader pool), so
+    reopening a searcher after a delete reads only the new file."""
+    out: dict[str, list] = {}
     for rel in manifest.get("tombstone_files", []):
-        pdf = pq.read_table(os.path.join(index_dir, rel)).to_pandas()
-        for sid, grp in pdf.groupby("segment_id"):
-            prev = out.get(sid)
-            ids = grp["doc_id"].to_numpy(dtype=np.int64)
-            out[sid] = ids if prev is None else np.concatenate((prev, ids))
-    return {sid: np.unique(ids) for sid, ids in out.items()}
+        per = segfiles.pooled_value(os.path.join(index_dir, rel), _load_tombstones)
+        for sid, ids in per.items():
+            out.setdefault(sid, []).append(ids)
+    return {sid: np.unique(np.concatenate(ids)) for sid, ids in out.items()}
 
 
 def write_tombstones(index_dir: str, pairs: pd.DataFrame, name: str | None = None) -> str:
@@ -50,10 +59,12 @@ def write_tombstones(index_dir: str, pairs: pd.DataFrame, name: str | None = Non
     its index-relative path, the manifest's tombstone_files entry."""
     os.makedirs(os.path.join(index_dir, "deletes"), exist_ok=True)
     rel = os.path.join("deletes", name or f"del-{uuid.uuid4().hex}.parquet")
+    path = os.path.join(index_dir, rel)
     pq.write_table(
         pa.Table.from_pandas(pairs[["segment_id", "doc_id"]], preserve_index=False),
-        os.path.join(index_dir, rel),
+        path,
     )
+    segfiles.evict(path)
     return rel
 
 
@@ -101,12 +112,6 @@ def delete_by_term(
     manifest = mf.read_manifest(index_dir)
     pairs = pairs_for_terms(index_dir, manifest, field, (term,))
     return _publish(index_dir, manifest, pairs, f"term:{term}")
-
-
-def delete_by_doc_ids(index_dir: str, pairs: pd.DataFrame) -> dict:
-    """Tombstone explicit (segment_id, doc_id) pairs (tests / upstream joins)."""
-    manifest = mf.read_manifest(index_dir)
-    return _publish(index_dir, manifest, pairs, "explicit")
 
 
 def live_doc_count(index_dir: str) -> int:

@@ -30,6 +30,7 @@ from pyspark.sql import SparkSession, functions as F
 from ..search.query import NUMERIC_DOCVALUES
 from . import deletes as dels
 from . import manifest as mf
+from . import segfiles
 from .builder import _NORMS_FILE, _write_parquet, norms_paths
 
 
@@ -95,6 +96,9 @@ def update_numeric_docvalue(
         .collect()
     )
     written = {r["segment_id"] for r in done}
+    # the tasks wrote in other processes: drop this process's pooled copies
+    segfiles.evict(*(os.path.join(mf.segment_dir(index_dir, sid), new_name)
+                     for sid in written))
     if written != affected:
         raise RuntimeError(f"dv update incomplete: {affected - written}")
     segments = []

@@ -45,6 +45,7 @@ from pyspark.sql import SparkSession
 
 from ..kernels.forcodec import decode_all
 from . import manifest as mf
+from . import segfiles
 from .builder import (
     _NORMS_FILE, _POSTINGS_FILE, _manifest_row, _write_parquet, norms_paths,
     postings_paths,
@@ -284,6 +285,9 @@ def _merge_group_job(
                      schema=MANIFEST_ROW_DDL)
         .collect()
     }
+    # the tasks wrote in other processes: drop this process's pooled copies
+    done = {"segments": list(rows.values())}
+    segfiles.evict(*postings_paths(index_dir, done), *norms_paths(index_dir, done))
     return [
         ({**rows[meta["segment_id"]], "merged_from": meta["merged_from"]}, docmaps)
         for (meta, _), docmaps in zip(plans, maps)

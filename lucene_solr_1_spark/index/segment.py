@@ -299,10 +299,3 @@ def _postings_frame(fields: list[dict]) -> pd.DataFrame:
         c: list(chain.from_iterable(f[c] for f in fields)) for c in POSTINGS_COLS
     })
 
-
-def segment_fingerprint(norms_pdf: pd.DataFrame) -> str:
-    """Input fingerprint for resume: sha256 over the sorted row shas."""
-    h = hashlib.sha256()
-    for s in norms_pdf["content_sha"]:
-        h.update(s.encode())
-    return h.hexdigest()

@@ -514,21 +514,6 @@ def _en_is_vowel(w: str, i: int) -> bool:
     return w[i] in "aeiouy"  # Y (marked consonant) is uppercase
 
 
-def _en_short_syllable_at(w: str, i: int) -> bool:
-    """Short syllable ending at index i+1 (spec: either a vowel followed
-    by a non-vowel other than w/x/Y and preceded by a non-vowel, or a
-    vowel at the beginning followed by a non-vowel)."""
-    if i < 0 or i + 1 >= len(w):
-        return False
-    if not _en_is_vowel(w, i) or _en_is_vowel(w, i + 1):
-        return False
-    if w[i + 1] in "wxY":
-        return False if i > 0 else False
-    if i == 0:
-        return True
-    return not _en_is_vowel(w, i - 1)
-
-
 def _en_ends_short_syllable(w: str) -> bool:
     n = len(w)
     if n < 2:

@@ -810,9 +810,10 @@ class LuceneSparkSearcher:
         """Fill the df and ttf caches for (field, term) keys: doc_freq and
         ttf summed over every segment's posting row, read together
         driver-side from the segment files (TermStates.build seeking each
-        leaf's term dictionary), no Spark job. Cached for the searcher's
-        lifetime: the index is immutable under this manifest, so entries
-        never go stale."""
+        leaf's term dictionary), no Spark job; once segfiles' reader pool
+        holds the files' key columns, no file is opened. Cached for the
+        searcher's lifetime: the index is immutable under this manifest,
+        so entries never go stale."""
         # _expand_fuzzy primes df alone; ttf is filled only here
         missing = pairs - self._ttf_cache.keys()
         if missing:
@@ -820,13 +821,12 @@ class LuceneSparkSearcher:
                 self.index_dir, self.manifest, missing,
                 ["field", "term", "doc_freq", "ttf"],
             )
-            found = rows.groupby(["field", "term"])[["doc_freq", "ttf"]].sum()
-            stats = {
-                (f, t): (int(df), int(ttf))
-                for (f, t), df, ttf in found.itertuples(name=None)
-            }
             for key in missing:
-                self._df_cache[key], self._ttf_cache[key] = stats.get(key, (0, 0))
+                self._df_cache[key] = self._ttf_cache[key] = 0
+            for key, df, ttf in zip(zip(rows["field"], rows["term"]),
+                                    rows["doc_freq"].tolist(), rows["ttf"].tolist()):
+                self._df_cache[key] += df
+                self._ttf_cache[key] += ttf
 
     def _global_df(self, pairs: set) -> dict:
         """Global docFreq per (field, term) key (the createWeight stats

@@ -1,6 +1,7 @@
 import os
 import sys
 import uuid
+from collections import Counter
 from contextlib import contextmanager
 
 import pytest
@@ -47,6 +48,53 @@ def count_jobs(spark):
     """`with count_jobs() as jobs: ...` — afterwards `len(jobs)` is the
     number of Spark jobs the block launched."""
     return lambda: _count_jobs(spark)
+
+
+class FileOpens:
+    """Parquet files opened inside a block, per path: `files[path]` counts
+    every open, `footers[path]` the opens that parse the file's footer
+    (any open not handed pooled metadata: a reader-pool load, a
+    tombstone parse, a plain read_table)."""
+
+    def __init__(self):
+        self.files: Counter = Counter()
+        self.footers: Counter = Counter()
+
+    def record(self, source, parses_footer: bool) -> None:
+        path = getattr(source, "name", source)
+        self.files[path] += 1
+        if parses_footer:
+            self.footers[path] += 1
+
+
+@contextmanager
+def _count_file_opens():
+    import pyarrow.parquet as pq
+
+    opens = FileOpens()
+    parquet_file, read_table = pq.ParquetFile, pq.read_table
+
+    def counted_parquet_file(source, *args, **kwargs):
+        opens.record(source, kwargs.get("metadata") is None)
+        return parquet_file(source, *args, **kwargs)
+
+    def counted_read_table(source, *args, **kwargs):
+        opens.record(source, True)
+        return read_table(source, *args, **kwargs)
+
+    pq.ParquetFile, pq.read_table = counted_parquet_file, counted_read_table
+    try:
+        yield opens
+    finally:
+        pq.ParquetFile, pq.read_table = parquet_file, read_table
+
+
+@pytest.fixture
+def count_file_opens():
+    """`with count_file_opens() as opens: ...` — afterwards `opens.files`
+    and `opens.footers` count the block's parquet opens per path
+    (pq.ParquetFile / pq.read_table calls, file objects by their name)."""
+    return _count_file_opens
 
 
 @pytest.fixture(scope="session")

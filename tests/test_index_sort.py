@@ -176,3 +176,31 @@ def test_unsorted_search_unaffected(spark, tiny_corpus_pdf, tmp_path_factory):
     got["gid"] = got["segment_id"].map(s.doc_base) + got["doc_id"]
     got = got.sort_values("gid")
     assert got["path"].tolist() == ref["path"].tolist()
+
+
+def test_payload_sort_follows_stored_length(spark, tmp_path):
+    """With store_payloads=True the sort value is the STORED n_chars (the
+    content once its `tok|<float>` annotations are stripped), not the raw
+    length: a flush and a merge of the same annotated docs give the same
+    docID order, and it is the stored-n_chars order."""
+    from lucene_solr_1_spark.index.merge import merge_down
+
+    docs = pd.DataFrame({
+        "repo": "r", "commit": "c", "lang": "python",
+        "path": [f"p{i}.py" for i in range(6)],
+        "content": ["aa|9.0 bb|9.0", "cccc dddd", "e|2.0 f|2.0 g|2.0 h|2.0",
+                    "iiiiiii", "jj kk|3.5", "l m n o p"],
+    })
+    opts = {"index_sort": "n_chars", "store_payloads": True}
+    flushed, merged = str(tmp_path / "flushed"), str(tmp_path / "merged")
+    build_index(spark, spark.createDataFrame(docs), flushed, num_segments=1, **opts)
+    build_index(spark, spark.createDataFrame(docs.iloc[:3]), merged, num_segments=1, **opts)
+    add_documents(spark, spark.createDataFrame(docs.iloc[3:]), merged, num_segments=1)
+    merge_down(spark, merged, target_segments=1)
+    a = _stored_lengths(LuceneSparkSearcher(spark, flushed))
+    b = _stored_lengths(LuceneSparkSearcher(spark, merged))
+    assert a["content"].tolist() == b["content"].tolist()
+    assert a["n_chars"].tolist() == [5, 5, 7, 7, 9, 9]
+    # the raw lengths (13, 9, 23, 7, 9, 9) would order them differently
+    assert a["content"].tolist() == ["aa bb", "jj kk", "e f g h", "iiiiiii",
+                                     "cccc dddd", "l m n o p"]
