@@ -89,16 +89,10 @@ def _build_segment(pdfs: list, pid: int, index_dir: str, cfg: AnalyzerConfig,
         # IndexWriterConfig.setIndexSort analog: docIDs within the segment
         # follow (sort value, doc key) — doc key breaks value ties so the
         # order stays content-defined and deterministic. The value is the
-        # STORED n_chars: with payloads, the length once build_segment_frames
-        # strips the `tok|<float>` annotations (a merge sorts by it too)
+        # STORED n_chars (_sort_values; a merge sorts by it too)
         field, desc = index_sort
-        text = pdf["content"]
-        if store_payloads:
-            from ..kernels.analyzer import parse_delimited_payloads
-
-            text = text.fillna("").map(lambda c: parse_delimited_payloads(c)[0])
         pdf = (
-            pdf.assign(_sort=text.str.len())
+            pdf.assign(_sort=_sort_values(pdf["content"], store_payloads))
             .sort_values(["_sort", *DOC_KEY],
                          ascending=[not desc, True, True, True],
                          kind="mergesort")
@@ -172,8 +166,21 @@ def _corpus(corpus_df: DataFrame) -> tuple[DataFrame | None, pd.DataFrame | None
     return (None, rows) if rows is not None else (corpus_df.select(*_CORPUS_COLUMNS), None)
 
 
+def _sort_values(content: pd.Series, payloads: bool) -> pd.Series:
+    """Each doc's index-sort value, its STORED n_chars: with payloads, the
+    length once the `tok|<float>` annotations are stripped (the text
+    build_segment_frames stores; missing content counts as ""), else the
+    content length (NaN where it is missing)."""
+    if payloads:
+        from ..kernels.analyzer import parse_delimited_payloads
+
+        content = content.fillna("").map(lambda c: parse_delimited_payloads(c)[0])
+    return content.str.len()
+
+
 def _range_chunks(rows: pd.DataFrame, num_segments: int,
-                  sort_spec: tuple | None) -> list[pd.DataFrame]:
+                  sort_spec: tuple | None,
+                  payloads: bool = False) -> list[pd.DataFrame]:
     """Cut `rows` into the partitions repartitionByRange(num_segments, key)
     makes when its sample holds every row: RangePartitioner.determineBounds
     with unit weights takes one bound per len/num_segments sorted keys (an
@@ -181,11 +188,11 @@ def _range_chunks(rows: pd.DataFrame, num_segments: int,
     keeps its input order. Empty ranges build no segment; an empty input
     builds one empty segment, like Spark's single empty partition."""
     cols = [rows[c].tolist() for c in DOC_KEY]
-    if sort_spec:  # length(content) leads; Spark sorts it DESC nulls last
+    if sort_spec:  # the sort value leads; Spark sorts it DESC nulls last
         cols.insert(0, [
-            (math.inf if c is None else -len(c)) if sort_spec[1]
-            else None if c is None else len(c)
-            for c in rows["content"]
+            (math.inf if pd.isna(n) else -n) if sort_spec[1]
+            else None if pd.isna(n) else n
+            for n in _sort_values(rows["content"], payloads).tolist()
         ])
     # (is not null, value): an ascending key sorts nulls first
     keys = [tuple((v is not None, v) for v in doc) for doc in zip(*cols)]
@@ -201,6 +208,15 @@ def _range_chunks(rows: pd.DataFrame, num_segments: int,
     return [rows[part == j] for j in np.unique(part)] or [rows]
 
 
+def _sort_value_udf():
+    """_sort_values of a payload build as a pandas UDF column."""
+    @F.pandas_udf("int")
+    def sort_value(content: pd.Series) -> pd.Series:
+        return _sort_values(content, payloads=True).astype("int32")
+
+    return sort_value
+
+
 def _flush(df: DataFrame | None, rows: pd.DataFrame | None, index_dir: str,
            num_segments: int, pid_offset: int = 0,
            pre_partitioned: bool = False, **build) -> list[dict]:
@@ -209,10 +225,12 @@ def _flush(df: DataFrame | None, rows: pd.DataFrame | None, index_dir: str,
     (_driver_rows) each range is built in-process, else each range of the
     Spark frame `df` (the corpus columns) in a Spark task."""
     sort_spec = build.get("index_sort")
+    payloads = bool(build.get("store_payloads"))
     if rows is not None:
+        chunks = _range_chunks(rows, num_segments, sort_spec, payloads)
         return [
             _build_segment([chunk], pid_offset + i, index_dir=index_dir, **build)
-            for i, chunk in enumerate(_range_chunks(rows, num_segments, sort_spec))
+            for i, chunk in enumerate(chunks)
         ]
     if not pre_partitioned:
         # RANGE partition by doc key: segments hold contiguous key ranges,
@@ -226,8 +244,15 @@ def _flush(df: DataFrame | None, rows: pd.DataFrame | None, index_dir: str,
         key = list(DOC_KEY)
         if sort_spec:
             skey = F.length("content")
+            if payloads:
+                # the stored length, by the same Python parse the segment
+                # sorts with (a Java regex would differ on \s, \d and $)
+                df = df.withColumn("_sort_value", _sort_value_udf()("content"))
+                skey = F.col("_sort_value")
             key.insert(0, skey.desc() if sort_spec[1] else skey.asc())
         df = df.repartitionByRange(num_segments, *key)
+        if "_sort_value" in df.columns:
+            df = df.drop("_sort_value")
     built = df.mapInPandas(
         partial(_build_partition, index_dir=index_dir, pid_offset=pid_offset, **build),
         schema=MANIFEST_ROW_DDL,

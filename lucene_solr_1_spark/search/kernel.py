@@ -20,6 +20,7 @@ disjunction sums accumulate in float64 and cast to float32 at the end
 from __future__ import annotations
 
 import copy
+from operator import itemgetter
 
 import numpy as np
 
@@ -486,6 +487,12 @@ class SegmentData:
         view.allowed = allowed
         return view
 
+    def _parts(self, key) -> list:
+        """[(docID shift, posting row)] of `key` in docID order: here the
+        segment's own row, unshifted."""
+        r = self.rows.get(key)
+        return [] if r is None else [(0, r)]
+
     def postings(self, key):
         """(docs, freqs, norms) fully decoded, or empties. `key` is a
         (field, term) tuple; a bare term string means the content field."""
@@ -493,14 +500,13 @@ class SegmentData:
             key = ("content", key)
         if key in self._decoded:
             return self._decoded[key]
-        r = self.rows.get(key)
-        if r is None:
+        parts = [_decode_postings(r, shift) for shift, r in self._parts(key)]
+        if not parts:
             out = (_EMPTY_I, _EMPTY_I, _EMPTY_I)
+        elif len(parts) == 1:
+            out = parts[0]
         else:
-            docs = np.cumsum(decode_all(bytes(r.docs_enc), np.asarray(r.docs_offsets)))
-            freqs = decode_all(bytes(r.freqs_enc), np.asarray(r.freqs_offsets))
-            norms = np.frombuffer(bytes(r.norms_enc), dtype=np.uint8).astype(np.int64)
-            out = (docs, freqs, norms)
+            out = tuple(np.concatenate(cols) for cols in zip(*parts))
         self._decoded[key] = out
         return out
 
@@ -513,11 +519,13 @@ class SegmentData:
         memo = (key, "positions")
         if memo in self._decoded:
             return self._decoded[memo]
-        r = self.rows.get(key)
-        if r is None:
+        parts = self._parts(key)
+        if not parts:
             return None
         docs, freqs, _norms = self.postings(key)
-        pos_deltas = decode_all(bytes(r.pos_enc), np.asarray(r.pos_offsets))
+        deltas = [decode_all(bytes(r.pos_enc), np.asarray(r.pos_offsets))
+                  for _, r in parts]
+        pos_deltas = deltas[0] if len(deltas) == 1 else np.concatenate(deltas)
         # positions are delta-coded per (term, doc) run; run starts are
         # absolute — rebuild via segmented cumsum
         starts = np.concatenate(([0], np.cumsum(freqs)[:-1]))
@@ -531,11 +539,52 @@ class SegmentData:
         None when the index stores no payloads for this term."""
         if isinstance(key, str):
             key = ("content", key)
-        r = self.rows.get(key)
-        pay = getattr(r, "pay_enc", None) if r is not None else None
-        if not pay:
+        # payloads are an index-wide option: every row of a key has a
+        # stream, or none has
+        pays = [np.frombuffer(bytes(pay), dtype="<f4") for _, r in self._parts(key)
+                if (pay := getattr(r, "pay_enc", None))]
+        if not pays:
             return None
-        return np.frombuffer(bytes(pay), dtype="<f4")
+        return pays[0] if len(pays) == 1 else np.concatenate(pays)
+
+
+class SliceData(SegmentData):
+    """Several small consecutive segments read as one (a leaf slice,
+    IndexSearcher.slices, through MultiPostingsEnum): a key's postings,
+    positions and payloads are its members' arrays concatenated in docID
+    order, each member's docIDs shifted by `shifts[segment_id]` (its
+    doc_base minus the slice's). `n_docs` spans every member, so matchall
+    covers them all. The slice owns the one decode memo: a member's
+    decoded arrays exist only inside the slice's. `rows` maps a key to
+    its members' [(shift, row)] in docID order."""
+
+    def __init__(self, postings_pdf, n_docs: int, shifts: dict, allowed=None):
+        self.shifts = shifts
+        super().__init__(postings_pdf, n_docs, allowed)
+
+    def add_rows(self, postings_pdf) -> None:
+        """Add members' posting rows (a frame with a segment_id column)
+        of keys this slice does not hold yet."""
+        keys = set()
+        for r in postings_pdf.itertuples(index=False):
+            key = (r.field, r.term)
+            self.rows.setdefault(key, []).append((self.shifts[r.segment_id], r))
+            keys.add(key)
+        for key in keys:
+            self.rows[key].sort(key=itemgetter(0))
+
+    def _parts(self, key) -> list:
+        return self.rows.get(key, [])
+
+
+def _decode_postings(r, shift: int):
+    """(docs shifted by `shift`, freqs, norms) of one posting row."""
+    docs = np.cumsum(decode_all(bytes(r.docs_enc), np.asarray(r.docs_offsets)))
+    if shift:
+        docs += shift
+    freqs = decode_all(bytes(r.freqs_enc), np.asarray(r.freqs_offsets))
+    norms = np.frombuffer(bytes(r.norms_enc), dtype=np.uint8).astype(np.int64)
+    return docs, freqs, norms
 
 
 def _segmented_cumsum(deltas: np.ndarray, starts: np.ndarray) -> np.ndarray:

@@ -13,18 +13,22 @@ Weight once and runs it per leaf slice):
     field/term/doc_freq columns (no Spark job; index/segfiles.py),
     docCount/sumTTF from the manifest — baked into a picklable float32
     plan (createWeight analog).
- 2. _score: one route decision per batch of plans, then one per-segment
+ 2. _score: one route decision per batch of plans, then one per-slice
     step (_score_segment) over ONLY the pruned posting rows of the
     plans' keys (norm bytes ride inside each row — no norms-table join
-    or shuffle); the DAAT kernel → per-segment top-k. A batch whose
-    postings fit one leaf slice (summed global ttf of its keys ≤
-    MAX_DOCS_PER_SLICE, no doc-values channel, no matchall) is scored on
-    the driver from rows read out of the segment files, as
-    IndexSearcher.search runs a single slice on the caller thread — a
-    Spark dispatch costs ~100x the kernel work of such a query. Bigger
-    batches run the same step in applyInPandas (leaf slices on
-    executors); search_local runs it on the driver over its persistent
-    per-key cache.
+    or shuffle); the DAAT kernel → per-slice top-k. A slice
+    (IndexSearcher.slices) is a maximal run of consecutive segments in
+    doc_base order, each of at most K.WAND_WINDOW docs, read as one
+    docBase-shifted segment (K.SliceData, the MultiPostingsEnum analog)
+    and scored exhaustively; a larger segment is its own slice and keeps
+    block-max WAND. A batch whose postings fit one thread (summed global
+    ttf of its keys ≤ MAX_DOCS_PER_SLICE, no doc-values channel, no
+    matchall) is scored on the driver from rows read out of the segment
+    files, as IndexSearcher.search runs a single slice on the caller
+    thread — a Spark dispatch costs ~100x the kernel work of such a
+    query. Bigger batches run the same step per segment in applyInPandas
+    (leaves on executors); search_local runs it on the driver over its
+    persistent per-slice cache.
  3. _merge: NumPy k-way merge with the reference tie-break: score desc,
     then global docID asc (TopDocs.merge, TopDocs.java:203-265); the
     top-k stored fields are read on the driver from their segments'
@@ -35,7 +39,7 @@ then reports relation GREATER_THAN_OR_EQUAL_TO, with total_hits counting
 only the windows it scored. Lucene's rule of counting exactly up to
 TOTAL_HITS_THRESHOLD = 1000 hits (IndexSearcher.java:101) before pruning
 is not implemented. A segment of at most K.WAND_WINDOW docs is scored
-exhaustively, so its count is always exact.
+exhaustively, alone or in a slice, so its count is always exact.
 """
 
 from __future__ import annotations
@@ -103,6 +107,58 @@ _NOTHING = _Prepared(None, set(), set(), set(), None)
 _NO_ROWS = pd.DataFrame(columns=["field", "term"])
 
 
+class _Slice(NamedTuple):
+    """A leaf slice on the driver routes: its segments in doc_base order,
+    each one's docID shift (its doc_base minus the slice's `base`), the
+    doc span and the tombstones in slice docIDs."""
+    sids: list
+    offsets: np.ndarray
+    base: int
+    n_docs: int
+    deleted: np.ndarray | None
+
+    def view(self, rows: pd.DataFrame):
+        """The kernel's input for this slice: a one-segment slice is its
+        segment, more are read as one (K.SliceData)."""
+        if len(self.sids) == 1:
+            return K.SegmentData(rows, self.n_docs)
+        return K.SliceData(rows, self.n_docs, dict(zip(self.sids, self.offsets.tolist())))
+
+    def allowed(self, dv: dict) -> dict | None:
+        """The members' doc-values sets ({segment_id: {set_id: sorted
+        docIDs | (docs, values)}}) as one set per set_id in slice
+        docIDs."""
+        if len(self.sids) == 1 or not dv:
+            return dv.get(self.sids[0])
+        out: dict = {}
+        for sid, shift in zip(self.sids, self.offsets):
+            for set_id, payload in dv.get(sid, {}).items():
+                out.setdefault(set_id, []).append((shift, payload))
+        for set_id, parts in out.items():
+            if isinstance(parts[0][1], tuple):  # (docs, values)
+                out[set_id] = (np.concatenate([d + s for s, (d, _) in parts]),
+                               np.concatenate([v for _, (_, v) in parts]))
+            else:
+                out[set_id] = np.concatenate([d + s for s, d in parts])
+        return out or None
+
+    def split(self, docs, scores, total: int, relation: str) -> list:
+        """A slice's hits as _merge parts, one (segment_id, local docs,
+        scores, total, relation) per member with hits (ReaderUtil.subIndex
+        by one searchsorted); the first part carries the slice's total."""
+        if len(self.sids) == 1:
+            return [(self.sids[0], docs, scores, total, relation)]
+        member = np.searchsorted(self.offsets, docs, side="right") - 1
+        parts = []
+        for m in np.unique(member):
+            sel = member == m
+            parts.append((self.sids[m], docs[sel] - self.offsets[m], scores[sel], 0, relation))
+        if not parts:
+            parts = [(self.sids[0], docs, scores, 0, relation)]
+        parts[0] = (*parts[0][:3], total, relation)
+        return parts
+
+
 def _allowed_from_pdf(allowed_pdf):
     """Cogrouped norms rows → {set_id: sorted unique local docIDs} for
     NumericRange filter sets, plus {"values:<field>": (sorted docs,
@@ -120,18 +176,26 @@ def _allowed_from_pdf(allowed_pdf):
     return out
 
 
+def _slice_index(slices: list) -> dict:
+    """{segment_id: index of its slice in `slices`}."""
+    return {sid: i for i, sl in enumerate(slices) for sid in sl.sids}
+
+
 def _score_segment(seg, plans: dict, caches, k: int, use_wand: bool, after,
                    doc_base: int, deleted, allowed=None) -> dict:
-    """Score every plan of a batch against one segment: the per-segment
-    step of every route. Plans share `seg`'s decode cache; the doc-values
-    sets of this call ride in a view of `seg`, so the shared SegmentData
-    is never written. Returns {name: (docs, float32 scores, total,
-    relation)}."""
+    """Score every plan of a batch against one leaf: a segment (the Spark
+    route, a large segment) or a slice of small ones read as one (the
+    driver routes), in its own docIDs from `doc_base` on. Plans share
+    `seg`'s decode cache; the doc-values sets of this call ride in a view
+    of `seg`, so the shared SegmentData is never written. Returns {name:
+    (docs, float32 scores, total, relation)}."""
     if allowed is not None:
         seg = seg.with_allowed(allowed)
     # a segment of one WAND window has nothing to skip: WAND would score
-    # every doc, as the exhaustive path does, after building its bounds
-    use_wand = use_wand and seg.n_docs > K.WAND_WINDOW
+    # every doc, as the exhaustive path does, after building its bounds;
+    # a slice of several segments is scored exhaustively, as each of them
+    use_wand = (use_wand and seg.n_docs > K.WAND_WINDOW
+                and not isinstance(seg, K.SliceData))
     out = {}
     for name, plan in plans.items():
         score = (K.score_wand if use_wand and K.wand_applicable(plan)
@@ -987,9 +1051,10 @@ class LuceneSparkSearcher:
         return _Prepared(plan, keys, numeric_ranges(q), value_source_fields(q), None)
 
     def _score(self, prepared: dict, k: int, use_wand: bool, after=None,
-               source: str = "files", extra: dict | None = None) -> dict:
+               source: str = "files", extra: dict | None = None,
+               slices: list | None = None) -> dict:
         """Score a batch of prepared queries: the one route decision and
-        the one per-segment loop of every entry point. Returns {name:
+        the one per-slice loop of every entry point. Returns {name:
         [(segment_id, docs, scores, total, relation), ...]} for _merge.
 
         Routes (IndexSearcher.search's `leafSlices.length <= 1` branch):
@@ -997,8 +1062,13 @@ class LuceneSparkSearcher:
         channel, no matchall and a summed global ttf of its keys within
         MAX_DOCS_PER_SLICE is scored here from posting rows read out of
         the segment files; any other batch goes to the Spark dispatch
-        (_score_spark). `source="cache"` (search_local) scores here from
-        the persistent per-key cache, whatever the size. `extra` adds
+        (_score_spark), one kernel call per segment. `source="cache"`
+        (search_local) scores here from the persistent per-slice cache,
+        whatever the size. Here each slice holding a key (every slice
+        for matchall) is one _score_segment call: its tombstones and
+        doc-values sets are in slice docIDs and its hits are split back
+        into (segment_id, local docID) parts. `slices` replaces the
+        searcher's (self._slices) on the files route. `extra` adds
         driver-held doc sets ({set_id: {segment_id: sorted docIDs}}) to
         the doc-values channel (rescore's first-pass docs)."""
         parts: dict = {n: [] for n in prepared}
@@ -1014,12 +1084,14 @@ class LuceneSparkSearcher:
         extra = extra or {}
         dv: dict = {}
         if source == "cache":
-            segs = self._cached_segments(keys, matchall)
+            slices = self._slices
+            views = self._cached_slices(keys, matchall)
             if nrs or vsf:
                 dv = self._local_allowed_maps(nrs, vsf)
         elif (keys and not (nrs or vsf or matchall)
               and sum(self._global_ttf(keys).values()) <= MAX_DOCS_PER_SLICE):
-            segs = self._file_segments(keys, plans)
+            slices = slices or self._slices
+            views = self._file_slices(keys, plans, slices)
         else:
             mtqs = [p.mtq for p in prepared.values() if p.mtq is not None]
             return self._score_spark(plans, keys, mtqs, nrs, vsf, extra,
@@ -1027,17 +1099,52 @@ class LuceneSparkSearcher:
         for set_id, per in extra.items():
             for sid, docs in per.items():
                 dv.setdefault(sid, {})[set_id] = docs
-        # segments with doc-values rows but no posting rows still score,
-        # as the Spark route's cogroup calls the kernel for them
-        for sid in set(segs) | set(dv):
-            seg = segs.get(sid) or K.SegmentData(_NO_ROWS, self.seg_doc_count.get(sid, 0))
-            res = _score_segment(
-                seg, plans, self.caches, k, use_wand, after,
-                self.doc_base.get(sid, 0), self.tombstones.get(sid), dv.get(sid),
-            )
+        # slices with doc-values rows but no posting rows still score,
+        # as the Spark route's cogroup calls the kernel for such segments
+        held = set(views)
+        if dv:
+            where = _slice_index(slices)
+            held |= {where[sid] for sid in dv}
+        for i in held:
+            sl = slices[i]
+            seg = views.get(i) or sl.view(_NO_ROWS)
+            res = _score_segment(seg, plans, self.caches, k, use_wand, after,
+                                 sl.base, sl.deleted, sl.allowed(dv))
             for n, r in res.items():
-                parts[n].append((sid, *r))
+                parts[n].extend(sl.split(*r))
         return parts
+
+    def _leaf_slices(self, max_docs: int) -> list[_Slice]:
+        """IndexSearcher.slices: maximal runs of consecutive segments in
+        doc_base order, each of at most `max_docs` docs and starting
+        where the previous one ends; a larger segment is a slice alone."""
+        runs: list[list] = []
+        for s in sorted(self.manifest["segments"], key=lambda s: s["doc_base"]):
+            prev = runs[-1][-1] if runs else None
+            if (prev is not None and prev["doc_count"] <= max_docs
+                    and s["doc_count"] <= max_docs
+                    and prev["doc_base"] + prev["doc_count"] == s["doc_base"]):
+                runs[-1].append(s)
+            else:
+                runs.append([s])
+        out = []
+        for run in runs:
+            base = run[0]["doc_base"]
+            sids = [s["segment_id"] for s in run]
+            offsets = np.asarray([s["doc_base"] - base for s in run], dtype=np.int64)
+            dels = [self.tombstones[sid] + off for sid, off in zip(sids, offsets)
+                    if len(self.tombstones.get(sid, ()))]
+            out.append(_Slice(
+                sids, offsets, base, sum(s["doc_count"] for s in run),
+                np.concatenate(dels) if dels else None,
+            ))
+        return out
+
+    @cached_property
+    def _slices(self) -> list[_Slice]:
+        """The searcher's leaf slices: runs of segments of at most
+        K.WAND_WINDOW docs, each scored by one kernel call."""
+        return self._leaf_slices(K.WAND_WINDOW)
 
     def _list_terms(self, prepared: _Prepared) -> _Prepared:
         """A constant-score multi-term query with its matching terms
@@ -1050,29 +1157,34 @@ class LuceneSparkSearcher:
         keys = {(m.field, t) for t in self._expand_terms(self._mtq_cond(m), cap=None)}
         return _Prepared({**prepared.plan, "keys": sorted(keys)}, keys, set(), set(), None)
 
-    def _file_segments(self, keys: set, plans: dict) -> dict:
-        """{segment_id: SegmentData} over the keys' posting rows read from
-        the segment files — the columns the plans' kernels read only."""
+    def _file_slices(self, keys: set, plans: dict, slices: list) -> dict:
+        """{slice index: view} over the keys' posting rows read from the
+        segment files — the columns the plans' kernels read only."""
         rows = segfiles.read_postings(
             self.index_dir, self.manifest, keys,
             self._kernel_columns(self._postings_columns, *plans.values()),
         )
-        return {
-            sid: K.SegmentData(g, self.seg_doc_count.get(sid, 0))
-            for sid, g in rows.groupby("segment_id", sort=False)
-        }
+        where = _slice_index(slices)
+        views: dict = {}
+        for sid, g in rows.groupby("segment_id", sort=False):
+            i = where[sid]
+            if i in views:
+                views[i].add_rows(g)
+            else:
+                views[i] = slices[i].view(g)
+        return views
 
-    def _cached_segments(self, keys: set, matchall: bool) -> dict:
-        """{segment_id: SegmentData} from the persistent local cache: the
-        segments holding at least one of the keys, or all of them for a
+    def _cached_slices(self, keys: set, matchall: bool) -> dict:
+        """{slice index: view} from the persistent local cache: the
+        slices holding at least one of the keys, or all of them for a
         matchall plan. A key's posting rows are read from the segment
         files once (segfiles.read_postings, no Spark job) and kept, with
-        their decoded arrays, for the searcher's lifetime — the hot
-        shard's page-cache analog, safe because the index is immutable
-        under this manifest generation."""
-        if not hasattr(self, "_local_segs"):
-            self._local_segs = {
-                sid: K.SegmentData(_NO_ROWS, n) for sid, n in self.seg_doc_count.items()
+        their decoded arrays, in their slice's view for the searcher's
+        lifetime — the hot shard's page-cache analog, safe because the
+        index is immutable under this manifest generation."""
+        if not hasattr(self, "_local_slices"):
+            self._local_slices = {
+                i: sl.view(_NO_ROWS) for i, sl in enumerate(self._slices)
             }
             self._local_keys: set = set()
         missing = keys - self._local_keys
@@ -1080,12 +1192,13 @@ class LuceneSparkSearcher:
             rows = segfiles.read_postings(
                 self.index_dir, self.manifest, missing, self._postings_columns
             )
+            where = _slice_index(self._slices)
             for sid, g in rows.groupby("segment_id", sort=False):
-                self._local_segs[sid].add_rows(g)
+                self._local_slices[where[sid]].add_rows(g)
             self._local_keys |= missing
         return {
-            sid: seg for sid, seg in self._local_segs.items()
-            if matchall or any(kk in seg.rows for kk in keys)
+            i: view for i, view in self._local_slices.items()
+            if matchall or any(kk in view.rows for kk in keys)
         }
 
     def _score_spark(self, plans: dict, keys: set, mtqs, nrs: set, vsf: set,
@@ -1196,7 +1309,11 @@ class LuceneSparkSearcher:
             prepared = prepared._replace(plan={
                 "type": "const", "node": prepared.plan, "score": np.float32(1.0),
             })
-        hits = self._merge(self._score({"q": prepared}, k, use_wand=False)["q"], None)
+        # early termination is per segment (TopFieldCollector's per-leaf
+        # cut): a segment's first k docIDs are its k best, a slice's are not
+        parts = self._score({"q": prepared}, k, use_wand=False,
+                            slices=self._leaf_slices(-1))
+        hits = self._merge(parts["q"], None)
         if not len(hits):
             out = pd.DataFrame(
                 columns=["rank", "global_doc_id", "segment_id", "doc_id",
@@ -1627,9 +1744,12 @@ class LuceneSparkSearcher:
             if b <= global_doc_id and b > base:
                 sid, base = s, b
         local = global_doc_id - base
-        seg = self._file_segments(prepared.keys, {"q": prepared.plan}).get(sid)
-        if seg is None:
-            seg = K.SegmentData(_NO_ROWS, self.seg_doc_count.get(sid, local + 1))
+        rows = segfiles.read_postings(
+            self.index_dir, self.manifest, prepared.keys,
+            self._kernel_columns(self._postings_columns, prepared.plan),
+        )
+        seg = K.SegmentData(rows[rows["segment_id"] == sid],
+                            self.seg_doc_count.get(sid, local + 1))
         return self._explain_node(prepared.plan, seg, local)
 
     def _explain_node(self, node: dict, seg, local: int) -> dict:

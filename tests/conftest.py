@@ -97,6 +97,49 @@ def count_file_opens():
     return _count_file_opens
 
 
+class KernelCalls(list):
+    """Scoring-kernel calls made inside a block, in order: one
+    `(kind, n_docs)` per K.score_exhaustive / K.score_wand call, `kind`
+    "exhaustive" or "wand", `n_docs` the doc span of the segment or
+    slice it scored. A WAND call that falls back to exhaustive scoring
+    counts once, as "wand"."""
+
+    def kinds(self) -> list:
+        return [kind for kind, _ in self]
+
+
+@contextmanager
+def _count_kernel_calls(monkeypatch):
+    from lucene_solr_1_spark.search import kernel as K
+
+    calls = KernelCalls()
+    depth = [0]
+
+    def counted(kind, fn):
+        def wrapper(plan, seg, *args, **kwargs):
+            if not depth[0]:
+                calls.append((kind, seg.n_docs))
+            depth[0] += 1
+            try:
+                return fn(plan, seg, *args, **kwargs)
+            finally:
+                depth[0] -= 1
+        return wrapper
+
+    with monkeypatch.context() as m:
+        m.setattr(K, "score_exhaustive", counted("exhaustive", K.score_exhaustive))
+        m.setattr(K, "score_wand", counted("wand", K.score_wand))
+        yield calls
+
+
+@pytest.fixture
+def count_kernel_calls(monkeypatch):
+    """`with count_kernel_calls() as calls: ...` — afterwards `calls` holds
+    one `(kind, n_docs)` per driver-side kernel call of the block (the
+    Spark route's calls run in worker processes and are not seen)."""
+    return lambda: _count_kernel_calls(monkeypatch)
+
+
 @pytest.fixture(scope="session")
 def tiny_corpus_pdf():
     from lucene_solr_1_spark.corpus import make_corpus_pandas

@@ -1,16 +1,20 @@
 """One query pipeline, four ways to run it: one answer per query.
 
-search() scores a query whose postings fit one slice (summed global ttf of
-its keys <= MAX_DOCS_PER_SLICE) on the driver and sends everything else
+search() scores a query whose postings fit one thread (summed global ttf
+of its keys <= MAX_DOCS_PER_SLICE) on the driver and sends everything else
 through the Spark dispatch; search_local scores on the driver from its
-per-key cache and search_many scores a batch. Over seeded random queries
-on an index with tombstones and a merged segment, the driver
+per-slice cache and search_many scores a batch. The driver routes score
+each leaf slice (a run of small segments) in one kernel call, the Spark
+route each segment. Over seeded random queries on an index with
+tombstones, a merged segment and appended tiny segments, the driver
 route, the Spark route (forced by setting the bound to -1), search_local
 and a one-query search_many must return equal frames and attrs, and the
 BM25 top-10 of the benchmark shapes must match the brute-force oracle.
 Random query trees (Lucene's QueryUtils.check posture) mix Term, Phrase,
-nested Bool, Boost, ConstantScore, nested and top-level Prefix/Wildcard
-and a NumericRange filter; rescore must agree between its routes too.
+nested Bool, Boost, ConstantScore, nested and top-level Prefix/Wildcard,
+a NumericRange filter, a FunctionScore and a MatchAll in a Bool; rescore
+must agree between its routes too, and so must payload queries and an
+index whose merged segment is forced above WAND_WINDOW.
 """
 
 import math
@@ -22,11 +26,13 @@ import pytest
 from lucene_solr_1_spark.corpus import KEYWORDS, make_corpus_pandas
 from lucene_solr_1_spark.index import deletes as D
 from lucene_solr_1_spark.index import manifest as mf
-from lucene_solr_1_spark.index.builder import build_index
+from lucene_solr_1_spark.index.builder import add_documents, build_index
 from lucene_solr_1_spark.index.merge import merge_down
+from lucene_solr_1_spark.search import kernel
 from lucene_solr_1_spark.search import searcher as S
 from lucene_solr_1_spark.search.query import (
-    Bool, Boost, ConstantScore, NumericRange, Occur, Phrase, Prefix, Term, Wildcard,
+    Bool, Boost, ConstantScore, FunctionScore, MatchAll, NumericRange, Occur,
+    PayloadScore, Phrase, Prefix, SpanNear, SpanOr, SpanTerm, Term, Wildcard,
 )
 
 from .oracle import OracleIndex
@@ -39,19 +45,27 @@ N_DELETED = 12
 
 @pytest.fixture(scope="module")
 def routed(spark, tmp_path_factory):
-    corpus = make_corpus_pandas(240)
+    """240 docs in 4 segments merged down to 3, two appended 4-doc
+    segments, and N_DELETED tombstones, one of them in an appended
+    segment: the driver routes read all five as one slice."""
+    corpus = make_corpus_pandas(248)
     d = str(tmp_path_factory.mktemp("idx_route") / "idx")
-    build_index(spark, spark.createDataFrame(corpus), d, num_segments=4)
+    build_index(spark, spark.createDataFrame(corpus.iloc[:240]), d, num_segments=4)
     merge_down(spark, d, target_segments=3)
+    for lo in (240, 244):
+        add_documents(spark, spark.createDataFrame(corpus.iloc[lo:lo + 4]), d,
+                      num_segments=1)
     rng = np.random.default_rng(SEED)
-    deleted = set(rng.choice(corpus["path"].to_numpy(), size=N_DELETED, replace=False))
+    deleted = set(rng.choice(corpus["path"].to_numpy()[:240], size=N_DELETED - 1,
+                             replace=False)) | {corpus["path"].iloc[245]}
     for path in sorted(deleted):
         D.delete_by_term(spark, d, path, field="path")
     m = mf.read_manifest(d)
     assert any(s.get("merged_from") for s in m["segments"])
-    assert len(m["segments"]) > 1
+    assert len(m["segments"]) == 5
     s = S.LuceneSparkSearcher(spark, d)
     assert sum(len(v) for v in s.tombstones.values()) == N_DELETED
+    assert [len(sl.sids) for sl in s._slices] == [5]
     return s, OracleIndex(corpus), deleted
 
 
@@ -137,7 +151,7 @@ def _three_routes(s, monkeypatch, q, route="driver", **kw) -> pd.DataFrame:
         return wrapped
 
     with monkeypatch.context() as m:
-        m.setattr(cls, "_file_segments", spy("_file_segments", "driver"))
+        m.setattr(cls, "_file_slices", spy("_file_slices", "driver"))
         m.setattr(cls, "_score_spark", spy("_score_spark", "spark"))
         s._result_cache.clear()
         driver = s.search(q, k=K, with_stored=True, **kw)
@@ -238,21 +252,31 @@ def _tree(oracle: OracleIndex, rng: np.random.Generator, depth: int, kind: str =
 
 def _random_queries(oracle: OracleIndex, seed: int, n: int) -> list:
     """Random Bool trees, random trees of any shape, top-level
-    Prefix/Wildcard (constant-score) and trees under a NumericRange
-    FILTER (a doc-values channel), in turn."""
+    Prefix/Wildcard (constant-score), trees under a NumericRange FILTER
+    and under a FunctionScore (the doc-values channel), and a MatchAll
+    beside a tree in a Bool, in turn."""
     rng = np.random.default_rng(seed)
     out = []
     for i in range(n):
-        if i % 4 == 0:
+        if i % 6 == 0:
             out.append(_tree(oracle, rng, 2, kind="bool"))
-        elif i % 4 == 1:
-            out.append(_leaf(oracle, rng, kind=("prefix", "wildcard")[i % 8 // 4]))
-        elif i % 4 == 2:
+        elif i % 6 == 1:
+            out.append(_leaf(oracle, rng, kind=("prefix", "wildcard")[i % 12 // 6]))
+        elif i % 6 == 2:
             out.append(_tree(oracle, rng, 2))
-        else:
+        elif i % 6 == 3:
             lo = int(rng.integers(20, 120))
             out.append(Bool.of((Occur.MUST, _tree(oracle, rng, 2)),
                                (Occur.FILTER, NumericRange("dl", lo, lo + 150))))
+        elif i % 6 == 4:
+            out.append(FunctionScore(_tree(oracle, rng, 1), "dl",
+                                     ("multiply", "sum")[i % 12 // 6], 0.01))
+        elif i % 12 // 6:  # every doc but the tree's matches
+            out.append(Bool.of((Occur.MUST, MatchAll()),
+                               (Occur.MUST_NOT, _tree(oracle, rng, 1))))
+        else:
+            out.append(Bool.of((Occur.SHOULD, MatchAll()),
+                               (Occur.SHOULD, _tree(oracle, rng, 1))))
     return out
 
 
@@ -261,23 +285,25 @@ def _has_phrase(q) -> bool:
         return True
     if isinstance(q, Bool):
         return any(_has_phrase(c.query) for c in q.clauses)
-    return isinstance(q, (Boost, ConstantScore)) and _has_phrase(q.query)
+    return isinstance(q, (Boost, ConstantScore, FunctionScore)) and _has_phrase(q.query)
 
 
 def _route(s, q):
     """The route search() must take: none for a query that rewrites to
     nothing, Spark for a top-level multi-term query (scanned by
-    predicate) or a doc-values filter, else the driver (every key set
-    here is far below MAX_DOCS_PER_SLICE)."""
+    predicate), a doc-values channel or a MatchAll inside the plan, else
+    the driver (every key set here is far below MAX_DOCS_PER_SLICE)."""
     prepared = s._prepare(q)
     if prepared.plan is None:
         return None
-    return "spark" if prepared.mtq or prepared.nrs else "driver"
+    spark = (prepared.mtq or prepared.nrs or prepared.vsf
+             or "matchall" in kernel.plan_node_types(prepared.plan))
+    return "spark" if spark else "driver"
 
 
 def test_random_trees_agree_on_every_entry_point(routed, monkeypatch):
     s, oracle, _ = routed
-    for q in _random_queries(oracle, SEED + 4, 24):
+    for q in _random_queries(oracle, SEED + 4, 30):
         route = _route(s, q)
         hits = _three_routes(s, monkeypatch, q, route=route)
         if isinstance(q, (Prefix, Wildcard)):
@@ -301,6 +327,77 @@ def test_rescore_routes_agree_on_random_trees(routed, monkeypatch):
             dispatched = s.rescore(first, second, weight=2.0, first_k=40, k=K)
         pd.testing.assert_frame_equal(driver, dispatched)
         assert driver.attrs == dispatched.attrs, (first, second)
+
+
+def test_routes_agree_around_a_large_segment(routed, monkeypatch, count_kernel_calls):
+    """With WAND_WINDOW under the merged segment's size, that segment is a
+    slice alone and keeps block-max WAND, and the small segments around
+    it form slices of their own: one kernel call per slice, and every
+    route still returns the same frames."""
+    s0, oracle, _ = routed
+    monkeypatch.setattr(kernel, "WAND_WINDOW", 100)
+    s = S.LuceneSparkSearcher(s0.spark, s0.index_dir)
+    (big,) = [sid for sid, n in s.seg_doc_count.items() if n > 100]
+    assert [big] in [sl.sids for sl in s._slices] and len(s._slices) > 1
+    for sl in s._slices:
+        assert sl.n_docs == sum(s.seg_doc_count[sid] for sid in sl.sids)
+    held = s._file_slices({("content", "return")}, {}, s._slices)
+    assert len(held) == len(s._slices)  # every slice holds the term
+    with count_kernel_calls() as calls:
+        hits = s.search_local(Term("return"), k=K)
+    assert sorted(calls) == sorted(
+        ("wand" if sl.sids == [big] else "exhaustive", sl.n_docs) for sl in s._slices)
+    assert hits.attrs["relation"] == "EQUAL_TO"
+    for q in [Term("return")] + _random_queries(oracle, SEED + 6, 12):
+        route = _route(s, q)
+        hits = _three_routes(s, monkeypatch, q, route=route)
+        if len(hits):
+            after = (float(hits["score"].iloc[-1]), int(hits["global_doc_id"].iloc[-1]))
+            _three_routes(s, monkeypatch, q, route=route, after=after)
+
+
+def test_cold_path_lookup_makes_one_kernel_call(spark, tmp_path, count_kernel_calls):
+    """On an NRT update's index shape (two segments, an appended
+    one-segment flush, a tombstone) a new searcher's path lookup reads
+    one segment's row and scores it in one kernel call."""
+    corpus = make_corpus_pandas(64)
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(corpus.iloc[:60]), d, num_segments=2)
+    add_documents(spark, spark.createDataFrame(corpus.iloc[60:]), d, num_segments=1)
+    D.delete_by_term(spark, d, corpus["path"].iloc[3], field="path")
+    s = S.LuceneSparkSearcher(spark, d)
+    assert len(s.doc_base) == 3
+    path = corpus["path"].iloc[62]
+    with count_kernel_calls() as calls:
+        hits = s.search(Term(path, field="path"), k=1, with_stored=True)
+    assert calls == [("exhaustive", 64)]
+    assert hits["path"].tolist() == [path]
+
+
+def test_routes_agree_on_a_payload_index(spark, tmp_path, monkeypatch):
+    """PayloadScore queries over a store_payloads index of three segments
+    and an appended one (one slice): the slice's concatenated payload
+    stream scores as the per-segment Spark route does."""
+    from .test_payloads import _annotated_corpus
+
+    pdf = _annotated_corpus(n_docs=40)
+    d = str(tmp_path / "idx_pay")
+    build_index(spark, spark.createDataFrame(pdf.iloc[:34]), d, num_segments=3,
+                store_payloads=True)
+    add_documents(spark, spark.createDataFrame(pdf.iloc[34:]), d, num_segments=1)
+    D.delete_by_term(spark, d, pdf["path"].iloc[5], field="path")
+    s = S.LuceneSparkSearcher(spark, d)
+    assert [len(sl.sids) for sl in s._slices] == [4]
+    queries = [
+        PayloadScore(SpanTerm("rain"), func=func, include_span_score=inc)
+        for func, inc in (("max", True), ("min", False), ("sum", True), ("avg", False))
+    ] + [PayloadScore(SpanNear(("rain", "snow"), slop=2, in_order=False), func="sum"),
+         PayloadScore(SpanOr(("hail", "fog")), func="avg")]
+    for q in queries:
+        hits = _three_routes(s, monkeypatch, q)
+        assert len(hits) == K, q
+        after = (float(hits["score"].iloc[-1]), int(hits["global_doc_id"].iloc[-1]))
+        _three_routes(s, monkeypatch, q, after=after)
 
 
 def test_top_level_prefix_is_uncapped_constant_score(spark, tmp_path):

@@ -178,11 +178,14 @@ def test_unsorted_search_unaffected(spark, tiny_corpus_pdf, tmp_path_factory):
     assert got["path"].tolist() == ref["path"].tolist()
 
 
-def test_payload_sort_follows_stored_length(spark, tmp_path):
+def test_payload_sort_follows_stored_length(spark, tmp_path, monkeypatch):
     """With store_payloads=True the sort value is the STORED n_chars (the
     content once its `tok|<float>` annotations are stripped), not the raw
     length: a flush and a merge of the same annotated docs give the same
-    docID order, and it is the stored-n_chars order."""
+    docID order, and it is the stored-n_chars order. A 2-segment build
+    is cut by that value too, on the driver and on the Spark route, so
+    its global order is the same."""
+    from lucene_solr_1_spark.index import builder as B
     from lucene_solr_1_spark.index.merge import merge_down
 
     docs = pd.DataFrame({
@@ -204,3 +207,13 @@ def test_payload_sort_follows_stored_length(spark, tmp_path):
     # the raw lengths (13, 9, 23, 7, 9, 9) would order them differently
     assert a["content"].tolist() == ["aa bb", "jj kk", "e f g h", "iiiiiii",
                                      "cccc dddd", "l m n o p"]
+    driver, spark_route = str(tmp_path / "driver2"), str(tmp_path / "spark2")
+    build_index(spark, spark.createDataFrame(docs), driver, num_segments=2, **opts)
+    monkeypatch.setattr(B, "MAX_DOCS_PER_FLUSH", 0)
+    build_index(spark, spark.createDataFrame(docs), spark_route, num_segments=2, **opts)
+    for d in (driver, spark_route):
+        s = LuceneSparkSearcher(spark, d)
+        assert len(s.doc_base) == 2
+        got = _stored_lengths(s)
+        assert got["n_chars"].tolist() == [5, 5, 7, 7, 9, 9]
+        assert got["content"].tolist() == a["content"].tolist()

@@ -147,18 +147,52 @@ def test_warm_positional_query_decodes_nothing(local_setup, monkeypatch, q):
 
 
 def test_allowed_views_share_the_decode_memo(local_setup):
-    """with_allowed gives a per-query view whose decodes land in the
-    segment's one memo."""
+    """The four small segments are one slice view (K.SliceData) in the
+    local cache; with_allowed gives a per-query view of it whose decodes
+    land in the slice's one memo."""
     s = local_setup
     s.search_local(Term("return"), k=10)
-    seg = next(iter(s._local_segs.values()))
-    view = seg.with_allowed({"set": np.arange(3, dtype=np.int64)})
-    assert view._decoded is seg._decoded
+    (sl,) = s._local_slices.values()
+    assert isinstance(sl, K.SliceData) and len(sl.shifts) == 4
+    view = sl.with_allowed({"set": np.arange(3, dtype=np.int64)})
+    assert view._decoded is sl._decoded
     key = ("content", "return")
-    seg._decoded.pop((key, "positions"), None)
+    sl._decoded.pop((key, "positions"), None)
     got = view.positions(key)
-    assert seg.positions(key) is got
-    assert seg.allowed is None
+    assert sl.positions(key) is got
+    assert sl.allowed is None
+
+
+def test_slice_view_is_its_segments_shifted(local_setup):
+    """A slice's postings and positions for a key are its segments' own,
+    docIDs shifted by each segment's doc_base, concatenated in order."""
+    s = local_setup
+    s.search_local(Term("return"), k=10)
+    (sl,) = s._local_slices.values()
+    key = ("content", "return")
+    want = [[], [], [], []]
+    for shift, row in sl.rows[key]:
+        seg = K.SegmentData(pd.DataFrame([row]), 0)
+        docs, freqs, _, pos = seg.positions(key)
+        for out, part in zip(want, (docs + shift, freqs, pos, seg.postings(key)[2])):
+            out.append(part)
+    docs, freqs, starts, pos = sl.positions(key)
+    for got, parts in zip((docs, freqs, pos, sl.postings(key)[2]), want):
+        np.testing.assert_array_equal(got, np.concatenate(parts))
+    assert (np.diff(docs) > 0).all()
+    np.testing.assert_array_equal(starts[1:], np.cumsum(freqs)[:-1])
+
+
+@pytest.mark.parametrize("q", QUERIES[:8], ids=[repr(q)[:50] for q in QUERIES[:8]])
+def test_warm_local_query_makes_one_kernel_call(local_setup, count_kernel_calls, q):
+    """The index's four small segments are one slice: a warm search_local
+    scores a plan in one exhaustive kernel call over all 600 docs."""
+    s = local_setup
+    want = s.search_local(q, k=10)
+    with count_kernel_calls() as calls:
+        got = s.search_local(q, k=10)
+    pd.testing.assert_frame_equal(got, want)
+    assert calls == ([] if q == Term("zzz_missing") else [("exhaustive", 600)])
 
 
 def test_mutating_a_result_leaves_the_next_one_alone(local_setup):
