@@ -866,7 +866,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Multi-dim range fields (document/LongRange.java newIntersectsQuery/
     # newWithinQuery/newCrossesQuery): the doc's stored range is
     # [dl, n_chars] (token count <= char count always holds); each
-    # relation rides the cogrouped doc-values channel as a FILTER
+    # relation rides the doc-values sets as a FILTER
     def _range_rel(rel, lo, hi):
         def inner(s, d):
             from lucene_solr_1_spark.search.query import RangeField
@@ -1030,7 +1030,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # QueryRescorer: first-pass top-50 by 'query', rescored by the
     # (merge OR spark) disjunction at weight 2.0 — second pass scored
-    # only on the first-pass doc set (cogrouped allowed channel)
+    # only on the first-pass doc set (a driver-held doc set)
     def _rescore(s, d):
         searcher = _get_index(s, d)
         from lucene_solr_1_spark.search.query import Bool as B, Occur as O

@@ -1,8 +1,10 @@
 """Driver-side reads of committed segment files — the per-leaf lookups a
 Lucene searcher makes in its own process (TermStates seeking each leaf's
-term dictionary, StoredFieldsReader reading the .fdt, the writer
-resolving delete terms per segment), done with pyarrow instead of a
-Spark job round trip.
+term dictionary, Terms.intersect walking it, NumericDocValues and
+StoredFieldsReader reading the .dvd and .fdt, the writer resolving delete
+terms per segment), done with pyarrow instead of a Spark job round trip.
+The searcher's Spark route runs the same reads inside its tasks, one leaf
+slice's segments each.
 
 Every segment file is one parquet file (a flush and a merge write it the
 same way), resolved through the manifest (`postings_paths`/
@@ -276,8 +278,35 @@ def read_postings(
     by_field: dict[str, list] = {}
     for f, t in keys:
         by_field.setdefault(f, []).append(t)
-    paths = postings_paths(index_dir, manifest)
+    paths = postings_paths(index_dir, manifest) if keys else []
     return _read_rows([(p, by_field) for p in paths], _POSTINGS_KEYS, "term", columns)
+
+
+def term_dictionary(index_dir: str, manifest: dict) -> pd.DataFrame:
+    """The committed segments' term dictionary, from the pooled key
+    columns (no file the pool holds is opened): one `field`, `term`,
+    `doc_freq` row per distinct key, doc_freq summed over the segments,
+    in (field, term) order — UTF-8 byte order, which is code-point
+    order."""
+    t = pa.concat_tables([
+        _reader(p, _POSTINGS_KEYS).value.keys.select(["field", "term", "doc_freq"])
+        for p in postings_paths(index_dir, manifest)
+    ], promote_options="permissive")
+    t = t.group_by(["field", "term"]).aggregate([("doc_freq", "sum")])
+    t = t.sort_by([("field", "ascending"), ("term", "ascending")])
+    return t.select(["field", "term", "doc_freq_sum"]).rename_columns(
+        ["field", "term", "doc_freq"]).to_pandas()
+
+
+def read_docvalues(index_dir: str, manifest: dict, columns: list[str]) -> dict:
+    """{segment_id: its docmap's `doc_id` and `columns`, whole, in doc_id
+    order} for every committed segment, through `norms_paths` so a
+    doc-values generation (`norms-g<N>.parquet`) is the one read."""
+    out = {}
+    for s, path in zip(manifest["segments"], norms_paths(index_dir, manifest)):
+        pdf = pq.read_table(path, columns=["doc_id", *columns]).to_pandas()
+        out[s["segment_id"]] = pdf.sort_values("doc_id", kind="stable")
+    return out
 
 
 def postings_columns(index_dir: str, manifest: dict) -> list[str]:

@@ -44,18 +44,6 @@ F32 = np.float32
 _EMPTY_I = np.empty(0, dtype=np.int64)
 _EMPTY_F = np.empty(0, dtype=np.float64)
 
-# Sentinel term unioned into the kernel input so that segments holding NONE
-# of the query's terms still dispatch a kernel (required whenever the plan
-# can match docs without postings, e.g. a Bool containing MatchAll:
-# '*:* -foo' must return docs from segments that contain no 'foo' at all).
-SENTINEL_TERM = "\x00seg"
-
-
-def _is_sentinel(term) -> bool:
-    t = term[-1] if isinstance(term, tuple) else term
-    return isinstance(t, str) and t.startswith("\x00")
-
-
 def plan_node_types(plan: dict) -> set:
     """All node types appearing anywhere in a compiled plan."""
     out = {plan["type"]}
@@ -386,7 +374,7 @@ def compile_plan(q: Query, global_df: dict, doc_count, boost: float = 1.0,
 
 def numeric_set_id(q) -> str:
     """Stable channel key for a doc-values filter leaf (NumericRange,
-    NumericSet or RangeField) — distinct filters get distinct cogroup
+    NumericSet or RangeField) — distinct filters get distinct
     set_ids (the key space stays injective across all three)."""
     if isinstance(q, NumericSet):
         return f"{q.field}:in:" + ",".join(str(v) for v in q.values)
@@ -740,7 +728,7 @@ def eval_node(node: dict, seg: SegmentData, cache):
         return docs, np.full(len(docs), float(node["score"]), dtype=np.float64)
     if t == "docidset":
         # pre-resolved doc-values match set (NumericRange): sorted local
-        # docIDs delivered via cogrouped norms rows (SegmentData.allowed,
+        # docIDs read from the docmap's columns (SegmentData.allowed,
         # keyed by set_id — one set per distinct range in the query).
         # Constant-score, like PointRangeQuery's ConstantScoreWeight.
         allowed = seg.allowed
@@ -751,15 +739,9 @@ def eval_node(node: dict, seg: SegmentData, cache):
         return allowed, np.full(len(allowed), float(node["score"]), dtype=np.float64)
     if t == "anyterm":
         # constant-score union of the expansion's posting rows (multi-term
-        # query CONSTANT_SCORE_REWRITE: score = boost, no per-term BM25).
-        # Distributed path: the Spark-side predicate already selected the
-        # rows, so default = every row shipped here. Local path: the
-        # SegmentData holds the whole term CACHE, so the plan carries the
-        # explicit expansion under "keys". Sentinel rows are skipped.
-        term_keys = node.get("keys")
-        if term_keys is None:
-            term_keys = [term for term in seg.rows if not _is_sentinel(term)]
-        parts = [seg.postings(tuple(term))[0] for term in term_keys]
+        # query CONSTANT_SCORE_REWRITE: score = boost, no per-term BM25)
+        # over the expanded (field, term) keys the plan lists
+        parts = [seg.postings(tuple(term))[0] for term in node["keys"]]
         parts = [d for d in parts if len(d)]
         if not parts:
             return _EMPTY_I, _EMPTY_F
@@ -768,8 +750,8 @@ def eval_node(node: dict, seg: SegmentData, cache):
     if t == "covering":
         # CoveringQuery (CoveringScorer.java:120-160): disjunction whose
         # required match count is per-doc — min_match(doc) =
-        # max(1, floor(value*scale + offset)) from the cogrouped
-        # doc-values channel; score = sum of matching clauses.
+        # max(1, floor(value*scale + offset)) from the doc-values
+        # sets; score = sum of matching clauses.
         subs = [eval_node(s, seg, cache) for s in node["nodes"]]
         subs = [(d, sc) for d, sc in subs if len(d)]
         if not subs:
@@ -816,7 +798,7 @@ def eval_node(node: dict, seg: SegmentData, cache):
         ).astype(F32).astype(np.float64)
     if t == "func":
         # FunctionScoreQuery: matching docs = inner's; score reshaped by a
-        # numeric doc-value delivered via the cogrouped norms channel
+        # numeric doc-value read from the docmap's columns
         # (SegmentData.allowed["values:<field>"] = (sorted docs, values)).
         # Final rounding through float32 mirrors Lucene's float score and
         # is replayed bit-exactly by kernel_oracle.kernel_function_score_duck.

@@ -240,7 +240,7 @@ class FunctionScore(Query):
     numeric doc-values column v (dl / n_chars — recency/stars/quality
     style boosting). multiply: score = f32(inner * (weight * v));
     sum: score = f32(inner + weight * v). Matching docs = inner's docs;
-    values ride the same cogrouped norms channel as NumericRange.
+    values ride the same doc-values sets as NumericRange.
 
     Feature modes — FeatureField's scoring functions and the distance
     feature query (document/FeatureField.java newSaturationQuery /
@@ -293,7 +293,7 @@ class Covering(Query):
     affine map floor(value(field) * scale + offset); per the reference,
     values < 1 are treated as 1 (min_match = max(1, ...)). Matching docs
     score as the SUM of their matching clauses (SHOULD semantics).
-    The values ride the same cogrouped doc-values channel as
+    The values ride the same doc-values sets as
     FunctionScore/NumericRange; WAND is inapplicable (the per-doc
     threshold invalidates fixed window upper bounds) so covering plans
     route exhaustive."""
@@ -409,7 +409,7 @@ class RangeField(Query):
     (RangeFieldQuery.QueryType.matches ANDs the per-dim tests; CROSSES
     = INTERSECTS && !WITHIN over the whole box,
     RangeFieldQuery.java:192-193). Constant-score; rides the same
-    cogrouped doc-values channel as NumericRange/NumericSet."""
+    doc-values sets as NumericRange/NumericSet."""
     dims: tuple  # ((min_col, max_col), ...), 1..4 dimensions
     lower: tuple  # query box min per dimension
     upper: tuple  # query box max per dimension
@@ -432,7 +432,7 @@ class NumericSet(Query):
     """PointInSetQuery analog (search/PointInSetQuery.java:63 — the
     query IntPoint.newSetQuery builds): docs whose numeric doc-value is
     one of an explicit value set. Constant-score; rides the same
-    cogrouped doc-values channel as NumericRange, so it composes as a
+    doc-values sets as NumericRange, so it composes as a
     FILTER/MUST clause with scored text exactly like the reference's
     IndexOrDocValuesQuery path."""
     field: str
@@ -1094,7 +1094,7 @@ def expr_fields(expr: tuple) -> set:
 
 def value_source_fields(q: Query) -> set:
     """Doc-values fields needed as SCORE INPUTS (FunctionScore leaves) —
-    resolved by the searcher via the cogrouped norms channel."""
+    resolved by the searcher from the docmap's columns."""
     if isinstance(q, FunctionScore):
         return {q.field} | value_source_fields(q.query)
     if isinstance(q, Covering):

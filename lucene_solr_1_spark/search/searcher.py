@@ -3,31 +3,33 @@
 One query pipeline — search, search_many, rescore, search_local and
 search_sorted all run the same three steps (IndexSearcher.search builds a
 Weight once and runs it per leaf slice):
- 1. _prepare: analyze → rewrite; a bare MatchAll short-circuits, a
-    top-level multi-term query is scored constant 1.0 over every term it
-    matches (CONSTANT_SCORE_REWRITE: a Catalyst predicate over the
-    postings table, no clause cap), anything else is expanded against
-    the term dictionary (TopTermsRewrite cap 1024), rewritten and
+ 1. _prepare: analyze → rewrite; a top-level multi-term query is scored
+    constant 1.0 over every term it matches (CONSTANT_SCORE_REWRITE: the
+    plan lists the terms, no clause cap), anything else is expanded
+    against the term dictionary (TopTermsRewrite cap 1024), rewritten and
     compiled behind the global-stats barrier: per-term docFreq summed
-    across segments, read on the driver from the segment files'
-    field/term/doc_freq columns (no Spark job; index/segfiles.py),
-    docCount/sumTTF from the manifest — baked into a picklable float32
-    plan (createWeight analog).
+    across segments, docCount/sumTTF from the manifest — baked into a
+    picklable float32 plan (createWeight analog). The term dictionary
+    (Terms.intersect) and the stats (TermStates.build) are read on the
+    driver from the segment files' field/term/doc_freq/ttf columns (no
+    Spark job; index/segfiles.py).
  2. _score: one route decision per batch of plans, then one per-slice
-    step (_score_segment) over ONLY the pruned posting rows of the
-    plans' keys (norm bytes ride inside each row — no norms-table join
-    or shuffle); the DAAT kernel → per-slice top-k. A slice
-    (IndexSearcher.slices) is a maximal run of consecutive segments in
-    doc_base order, each of at most K.WAND_WINDOW docs, read as one
-    docBase-shifted segment (K.SliceData, the MultiPostingsEnum analog)
-    and scored exhaustively; a larger segment is its own slice and keeps
-    block-max WAND. A batch whose postings fit one thread (summed global
-    ttf of its keys ≤ MAX_DOCS_PER_SLICE, no doc-values channel, no
-    matchall) is scored on the driver from rows read out of the segment
-    files, as IndexSearcher.search runs a single slice on the caller
-    thread — a Spark dispatch costs ~100x the kernel work of such a
-    query. Bigger batches run the same step per segment in applyInPandas
-    (leaves on executors); search_local runs it on the driver over its
+    step (_score_slice) over ONLY the pruned posting rows of the plans'
+    keys (norm bytes ride inside each row — no norms-table join) and the
+    batch's doc-values sets, read from the docmap files' columns; the
+    DAAT kernel → per-slice top-k. A slice (IndexSearcher.slices) is a
+    maximal run of consecutive segments in doc_base order, each of at
+    most K.WAND_WINDOW docs, read as one docBase-shifted segment
+    (K.SliceData, the MultiPostingsEnum analog) and scored
+    exhaustively; a larger segment is its own slice and keeps block-max
+    WAND. A batch whose work fits one thread (the summed global ttf of
+    its keys, plus doc_count when a plan reads every doc — a matchall,
+    a doc-values set or a value source — at most MAX_DOCS_PER_SLICE) is
+    scored on the driver, as IndexSearcher.search runs a single slice
+    on the caller thread — a Spark dispatch costs ~100x the kernel work
+    of such a query. A bigger batch runs the same step as one Spark
+    task per slice, reading the slice's own segment files (leaves on
+    executors, no shuffle); search_local runs it on the driver over its
     persistent per-slice cache.
  3. _merge: NumPy k-way merge with the reference tie-break: score desc,
     then global docID asc (TopDocs.merge, TopDocs.java:203-265); the
@@ -45,31 +47,31 @@ exhaustively, alone or in a slice, so its count is always exact.
 from __future__ import annotations
 
 import re
-from functools import cached_property, partial, reduce
+from functools import cached_property, partial
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from ..index import manifest as mf
 from ..index import segfiles
-from ..index.builder import norms_paths, postings_paths
 from ..kernels import bm25
-from ..kernels.osa import osa_udf
+from ..kernels.osa import osa_series
 from . import kernel as K
 from .query import (
-    Blended, Bool, Clause, FunctionScore, Fuzzy, MatchAll, MatchNone,
+    Blended, Bool, Clause, FunctionScore, Fuzzy, MatchNone,
     NUMERIC_DOCVALUES, NumericSet, Occur,
-    Prefix, Query, Regexp, Synonym, Term, TermRange, Wildcard,
+    Prefix, Query, RangeField, Regexp, Term, TermRange, Wildcard,
     numeric_ranges, query_terms, rewrite, value_source_fields,
     MAX_CLAUSE_COUNT,
 )
 
 
-# IndexSearcher.MAX_DOCS_PER_SLICE: a query whose keys' summed global ttf
-# (the positions a positional plan decodes; an upper bound on postings for
-# every other plan) stays within it is one slice, scored on the driver.
+# IndexSearcher.MAX_DOCS_PER_SLICE: a batch whose cost (its keys' summed
+# global ttf — the positions a positional plan decodes, an upper bound on
+# postings for every other plan — plus doc_count when a plan reads every
+# doc) stays within it is one slice, scored on the driver.
 MAX_DOCS_PER_SLICE = 250_000
 
 _STORED_COLUMNS = [
@@ -77,11 +79,7 @@ _STORED_COLUMNS = [
     "n_chars", "content",
 ]
 
-# a bare MatchAll: search() and search_local() answer it from the docmap
-# (_match_all); a batch or a wrapping plan scores it in the kernel
-_MATCH_ALL = {"type": "matchall", "score": np.float32(1.0)}
-
-# the Spark route's hit rows (one per per-segment top-k hit)
+# the Spark route's hit rows (one per per-slice top-k hit)
 _HIT_SCHEMA = (
     "query string, segment_id string, doc_id bigint, score float, "
     "total bigint, relation string"
@@ -91,26 +89,27 @@ _HIT_SCHEMA = (
 class _Prepared(NamedTuple):
     """A query made ready to score: its compiled plan (None when it
     rewrote to MatchNone), the (field, term) keys whose posting rows it
-    reads, its NumericRange sets and value-source fields (the doc-values
-    channel), and the top-level multi-term query scored constant 1.0
-    (None otherwise)."""
+    reads, and its NumericRange sets and value-source fields (the
+    doc-values sets)."""
     plan: dict | None
     keys: set
     nrs: set
     vsf: set
-    mtq: Query | None
 
 
-_NOTHING = _Prepared(None, set(), set(), set(), None)
+_NOTHING = _Prepared(None, set(), set(), set())
 
 # posting rows of a segment that holds none of the keys
 _NO_ROWS = pd.DataFrame(columns=["field", "term"])
 
+# the dictionary of a field no segment holds: (terms, doc_freqs)
+_NO_TERMS = (np.empty(0, object), np.empty(0, np.int64))
+
 
 class _Slice(NamedTuple):
-    """A leaf slice on the driver routes: its segments in doc_base order,
-    each one's docID shift (its doc_base minus the slice's `base`), the
-    doc span and the tombstones in slice docIDs."""
+    """A leaf slice: its segments in doc_base order, each one's docID
+    shift (its doc_base minus the slice's `base`), the doc span and the
+    tombstones in slice docIDs."""
     sids: list
     offsets: np.ndarray
     base: int
@@ -159,22 +158,137 @@ class _Slice(NamedTuple):
         return parts
 
 
-def _allowed_from_pdf(allowed_pdf):
-    """Cogrouped norms rows → {set_id: sorted unique local docIDs} for
-    NumericRange filter sets, plus {"values:<field>": (sorted docs,
-    aligned float64 values)} for FunctionScore value sources."""
-    if allowed_pdf is None or not len(allowed_pdf):
-        return None
+# ---------------- the term dictionary (Terms.intersect) --------------------
+
+def _fuzzy_parts(q: Fuzzy) -> tuple[int, str, bool]:
+    """(effective prefix length, fuzzy suffix, exact-only?) for a Fuzzy
+    query — FuzzyTermsEnum.java:129 clamps the prefix to the term length;
+    FuzzyQuery.java:151 degrades to exact-term match when maxEdits == 0
+    or the prefix covers the whole text."""
+    pl = min(max(q.prefix_length, 0), len(q.text))
+    exact_only = q.max_edits == 0 or pl >= len(q.text)
+    return pl, q.text[pl:], exact_only
+
+
+def _fuzzy_matches(q: Fuzzy, terms: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(ascending indices, edit distances) of the `terms` within q's
+    edits. Transpositions count ONE edit (FuzzyQuery.java:58
+    defaultTranspositions=true): the code-point length window and the
+    non-fuzzy prefix (FuzzyTermsEnum.java:129-141) pick the candidates,
+    and `osa_series` measures them. With a prefix the distance is the
+    SUFFIX's, as FuzzyTermsEnum's automata are prefix + lev(suffix)."""
+    pl, suffix, exact_only = _fuzzy_parts(q)
+    if exact_only:
+        idx = np.flatnonzero(terms == q.text)
+        return idx, np.zeros(len(idx), np.int64)
+    n, e, head = len(q.text), q.max_edits, q.text[:pl]
+    cand = np.flatnonzero(np.fromiter(
+        (n - e <= len(t) <= n + e and t.startswith(head) for t in terms),
+        bool, len(terms)))
+    dist = osa_series(pd.Series([t[pl:] for t in terms[cand]], dtype=object),
+                      suffix).to_numpy(np.int64)
+    keep = dist <= e
+    return cand[keep], dist[keep]
+
+
+def _wildcard_regex(pattern: str) -> str:
+    """A Wildcard pattern as a regex: `*` any run, `?` one character."""
+    return re.escape(pattern).replace(r"\*", ".*").replace(r"\?", ".")
+
+
+def _dictionary_matches(q: Query, terms: np.ndarray) -> np.ndarray:
+    """Ascending indices of the `terms` (one field's dictionary, in
+    code-point order) that the multi-term query `q` matches — its
+    automaton intersected with the term dictionary. Wildcard and Regexp
+    match whole terms (RegexpQuery); TermRange compares code points."""
+    if isinstance(q, Fuzzy):
+        return _fuzzy_matches(q, terms)[0]
+    if isinstance(q, Prefix):
+        hit = (t.startswith(q.prefix) for t in terms)
+    elif isinstance(q, (Wildcard, Regexp)):
+        rx = re.compile(_wildcard_regex(q.pattern) if isinstance(q, Wildcard)
+                        else q.pattern)
+        hit = (rx.fullmatch(t) is not None for t in terms)
+    elif isinstance(q, TermRange):
+        lo, hi = q.lower, q.upper
+        hit = ((lo is None or t > lo or (q.include_lower and t == lo))
+               and (hi is None or t < hi or (q.include_upper and t == hi))
+               for t in terms)
+    else:
+        raise TypeError(f"not a multi-term query: {q!r}")
+    return np.flatnonzero(np.fromiter(hit, bool, len(terms)))
+
+
+# ---------------- doc values (NumericDocValues) ---------------------------
+
+def _docvalue_columns(nrs, vsf) -> list[str]:
+    """The docmap columns that the doc-values sets `nrs` and value
+    sources `vsf` read; an unknown column raises ValueError."""
+    cols = set(vsf)
+    for nr in nrs:
+        cols |= ({c for dim in nr.dims for c in dim} if isinstance(nr, RangeField)
+                 else {nr.field})
+    for c in sorted(cols):
+        if c not in NUMERIC_DOCVALUES:
+            raise ValueError(
+                f"unknown numeric doc-values field {c!r}; "
+                f"available: {NUMERIC_DOCVALUES}"
+            )
+    return sorted(cols)
+
+
+def _range_match(nr, vals: dict) -> np.ndarray:
+    """The docs (as a mask over `vals`' float64 columns, NaN = null) that
+    a NumericRange, NumericSet or RangeField matches. A null matches no
+    comparison, so it matches no bounded range."""
+    if isinstance(nr, RangeField):
+        # RangeFieldQuery.QueryType per-dim relations, ANDed over the
+        # dimensions; crosses = INTERSECTS && !WITHIN over the whole box
+        # (RangeFieldQuery.java:192-193)
+        def rel(name):
+            m = np.ones(len(vals["doc_id"]), bool)
+            for (mn, mx), lo, hi in zip(nr.dims, nr.lower, nr.upper):
+                a, b = vals[mn], vals[mx]
+                if name == "intersects":
+                    m &= (a <= hi) & (b >= lo)
+                elif name == "within":
+                    m &= (a >= lo) & (b <= hi)
+                else:  # contains
+                    m &= (a <= lo) & (b >= hi)
+            return m
+
+        if nr.relation == "crosses":
+            return rel("intersects") & ~rel("within")
+        return rel(nr.relation)
+    v = vals[nr.field]
+    if isinstance(nr, NumericSet):  # PointInSetQuery
+        return np.isin(v, [int(x) for x in nr.values])
+    m = np.ones(len(v), bool)
+    if nr.lower is not None:
+        m &= v >= int(nr.lower)
+    if nr.upper is not None:
+        m &= v <= int(nr.upper)
+    return m
+
+
+def _doc_values(index_dir: str, manifest: dict, nrs, vsf) -> dict:
+    """The doc-values sets of the manifest's segments, read from the
+    docmap files' columns (the NumericDocValues / points read of each
+    leaf): {segment_id: {set_id: sorted docIDs}} for each NumericRange,
+    NumericSet or RangeField, and {"values:<field>": (sorted docs,
+    float64 values)} for each value-source field."""
+    cols = _docvalue_columns(nrs, vsf)
     out = {}
-    for set_id, g in allowed_pdf.groupby("set_id"):
-        docs = g["doc_id"].to_numpy(np.int64)
-        if str(set_id).startswith("values:"):
-            udocs, idx = np.unique(docs, return_index=True)
-            out[set_id] = (udocs, g["val"].to_numpy(np.float64)[idx])
-        else:
-            out[set_id] = np.sort(np.unique(docs))
+    for sid, pdf in segfiles.read_docvalues(index_dir, manifest, cols).items():
+        vals = {c: pdf[c].to_numpy(np.float64) for c in cols}
+        docs = vals["doc_id"] = pdf["doc_id"].to_numpy(np.int64)
+        sets = {K.numeric_set_id(nr): docs[_range_match(nr, vals)] for nr in nrs}
+        sets.update({f"values:{f}": (docs, vals[f]) for f in vsf})
+        out[sid] = sets
     return out
 
+
+# ---------------- the per-slice step --------------------------------------
 
 def _slice_index(slices: list) -> dict:
     """{segment_id: index of its slice in `slices`}."""
@@ -183,9 +297,9 @@ def _slice_index(slices: list) -> dict:
 
 def _score_segment(seg, plans: dict, caches, k: int, use_wand: bool, after,
                    doc_base: int, deleted, allowed=None) -> dict:
-    """Score every plan of a batch against one leaf: a segment (the Spark
-    route, a large segment) or a slice of small ones read as one (the
-    driver routes), in its own docIDs from `doc_base` on. Plans share
+    """Score every plan of a batch against one leaf: a large segment or a
+    slice of small ones read as one, in its own docIDs from `doc_base`
+    on. Plans share
     `seg`'s decode cache; the doc-values sets of this call ride in a view
     of `seg`, so the shared SegmentData is never written. Returns {name:
     (docs, float32 scores, total, relation)}."""
@@ -207,42 +321,51 @@ def _score_segment(seg, plans: dict, caches, k: int, use_wand: bool, after,
     return out
 
 
-def _segment_udf(key, postings_pdf, allowed_pdf, *, plans, caches, k, use_wand,
-                 after, doc_bases, tombstones, doc_counts) -> pd.DataFrame:
-    """applyInPandas body of the Spark route: one segment's posting rows
-    (and cogrouped doc-values rows) through _score_segment, returned as
-    _HIT_SCHEMA rows tagged with the plan name."""
-    sid = key[0]
-    res = _score_segment(
-        K.SegmentData(postings_pdf, doc_counts.get(sid, 0)), plans, caches, k,
-        use_wand, after, doc_bases.get(sid, 0), tombstones.get(sid),
-        _allowed_from_pdf(allowed_pdf),
-    )
-    lens = [len(r[0]) for r in res.values()]
-    return pd.DataFrame({
-        "query": np.repeat(np.asarray(list(res), dtype=object), lens),
-        "segment_id": sid,
-        "doc_id": np.concatenate([r[0] for r in res.values()]).astype(np.int64),
-        "score": np.concatenate([r[1] for r in res.values()]),
-        "total": np.repeat(np.asarray([r[2] for r in res.values()], np.int64), lens),
-        "relation": np.repeat(np.asarray([r[3] for r in res.values()], object), lens),
-    })
+def _score_slice(sl: _Slice, seg, dv: dict, extra: dict, *, plans: dict,
+                 caches, k: int, use_wand: bool, after) -> dict:
+    """The one per-slice step of every route: the slice's view `seg`
+    scored by _score_segment under its doc-values sets (`dv`, per
+    segment) and rescore's driver-held `extra` sets (already in slice
+    docIDs). Returns {name: [(segment_id, local docs, scores, total,
+    relation), ...]} for _merge."""
+    allowed = {**(sl.allowed(dv) or {}), **extra} or None
+    res = _score_segment(seg, plans, caches, k, use_wand, after, sl.base,
+                         sl.deleted, allowed)
+    return {name: sl.split(*r) for name, r in res.items()}
+
+
+def _slice_task(batches, *, index_dir: str, manifest: dict, slices: list,
+                keys: set, columns: list, nrs: set, vsf: set, extras: list,
+                **score):
+    """mapInPandas body of the Spark route: leaf slice `id` (one per
+    task) read from its own segment files — the keys' posting rows and
+    the doc-values sets — through _score_slice, returned as _HIT_SCHEMA
+    rows tagged with the plan name."""
+    for pdf in batches:
+        for i in pdf["id"].tolist():
+            sl = slices[i]
+            mine = {**manifest, "segments": [
+                s for s in manifest["segments"] if s["segment_id"] in sl.sids]}
+            rows = segfiles.read_postings(index_dir, mine, keys, columns)
+            dv = _doc_values(index_dir, mine, nrs, vsf) if nrs or vsf else {}
+            hits = [(name, p) for name, parts in
+                    _score_slice(sl, sl.view(rows), dv, extras[i], **score).items()
+                    for p in parts]
+            lens = [len(p[1]) for _, p in hits]
+            yield pd.DataFrame({
+                "query": np.repeat(np.asarray([n for n, _ in hits], dtype=object), lens),
+                "segment_id": np.repeat(np.asarray([p[0] for _, p in hits], dtype=object), lens),
+                "doc_id": np.concatenate([p[1] for _, p in hits]).astype(np.int64),
+                "score": np.concatenate([p[2] for _, p in hits]).astype(np.float32),
+                "total": np.repeat(np.asarray([p[3] for _, p in hits], np.int64), lens),
+                "relation": np.repeat(np.asarray([p[4] for _, p in hits], dtype=object), lens),
+            })
 
 
 class LuceneSparkSearcher:
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 cache_postings: bool = False):
-        """`cache_postings=True` pins the postings DataFrame in executor
-        storage memory (the hot-searcher / OS-page-cache posture a
-        resident Lucene process gets for free): repeated queries skip the
-        parquet scan, cutting the latency tail ~2x. Memory is bounded by
-        index size — opt in per hot index, don't default it at 100 TB.
-        It only serves the Spark dispatch: queries that fit one slice
-        (MAX_DOCS_PER_SLICE) read their postings on the driver and never
-        touch it, and the scan is opened (and cached) on first use."""
+    def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        self.cache_postings = cache_postings
         self.manifest = mf.read_manifest(index_dir)
         if self.manifest is None:
             raise FileNotFoundError(f"no committed manifest in {index_dir}")
@@ -275,6 +398,7 @@ class LuceneSparkSearcher:
         }
         self._df_cache: dict = {}
         self._ttf_cache: dict = {}
+        self._dv_sets: dict = {}  # set_id -> {segment_id: payload}
         from ..index.deletes import read_tombstones
 
         # tombstoned local docIDs per segment (live-docs analog) — tiny,
@@ -299,31 +423,9 @@ class LuceneSparkSearcher:
         )
 
     @cached_property
-    def _postings(self) -> DataFrame:
-        """The postings table as a Spark scan, opened on first use (the
-        Spark dispatch, multi-term expansion, local mode's posting fetch):
-        opening a searcher and scoring a one-slice query never pays the
-        scan's schema-inference job."""
-        post = self.spark.read.parquet(*postings_paths(self.index_dir, self.manifest))
-        if "field" not in post.columns:
-            raise ValueError(
-                f"{self.index_dir} was built before multi-field support "
-                "(postings lack the 'field' column) — rebuild the index"
-            )
-        return post.cache() if self.cache_postings else post
-
-    @cached_property
     def _postings_columns(self) -> list[str]:
         """Column names of the postings files, as their scan sees them."""
         return segfiles.postings_columns(self.index_dir, self.manifest)
-
-    @cached_property
-    def _norms(self) -> DataFrame:
-        """The docmap/doc-values table as a Spark scan, opened on first use
-        (doc-values filters, MatchAll, offsets highlighting): stored-field
-        and real-time-get reads go through index/segfiles.py instead, so
-        a plain search never pays the scan's schema-inference job."""
-        return self.spark.read.parquet(*norms_paths(self.index_dir, self.manifest))
 
     def _analyze_query(self, q: Query) -> Query:
         cfg = self.analyzer_cfg
@@ -336,149 +438,45 @@ class LuceneSparkSearcher:
 
         return analyze_query_terms(q, cfg, frozenset(KEYWORD_FIELDS))
 
-    @cached_property
-    def _sentinels(self) -> DataFrame:
-        """One zero-posting row per live segment, unioned into the kernel
-        input whenever the compiled plan can match docs WITHOUT postings
-        (MatchAll inside a Bool): groupBy(segment_id) otherwise dispatches
-        kernels only for segments holding the query's terms, silently
-        dropping every all-match doc in term-free segments. Project it to
-        the postings scan's columns (pre-payload indexes lack pay_enc)."""
-        from ..index.schemas import POSTINGS_DDL
-
-        rows = [
-            (sid, "\x00", K.SENTINEL_TERM, 0, 0,
-             bytearray(), [], bytearray(), [], bytearray(), [],
-             bytearray(), [], [], [], bytearray())
-            for sid in self.doc_base
-        ]
-        return self.spark.createDataFrame(
-            rows, schema="segment_id string, " + POSTINGS_DDL
-        )
-
     # ---------------- multi-term expansion (§2.5 PrefixQuery etc.) --------
 
-    def _terms_filter(self, pairs):
-        """Column predicate selecting the posting rows of a set of
-        (field, term) keys — one isin per field, OR-combined; Catalyst
-        pushes both columns to the parquet scan."""
-        by_field: dict[str, list] = {}
-        for f, t in pairs:
-            by_field.setdefault(f, []).append(t)
-        cond = None
-        for f in sorted(by_field):
-            c = (F.col("field") == f) & F.col("term").isin(by_field[f])
-            cond = c if cond is None else cond | c
-        return cond if cond is not None else F.lit(False)
+    @cached_property
+    def _dictionary(self) -> dict:
+        """{field: (terms, global doc_freqs)}: the committed segments'
+        term dictionary (segfiles.term_dictionary), terms in code-point
+        order, read on first use and kept for the searcher's lifetime."""
+        d = segfiles.term_dictionary(self.index_dir, self.manifest)
+        return {f: (g["term"].to_numpy(object), g["doc_freq"].to_numpy(np.int64))
+                for f, g in d.groupby("field", sort=False)}
 
-    def _expand_terms(self, cond, cap: int | None = MAX_CLAUSE_COUNT) -> list[str]:
-        """Terms matching a dictionary predicate: the top `cap` by global
-        docFreq then term (TopTermsRewrite), or all of them (cap=None,
-        CONSTANT_SCORE_REWRITE)."""
-        t = self._postings.groupBy("field", "term").agg(
-            F.sum("doc_freq").alias("df")
-        ).where(cond)
+    def _expand_terms(self, q: Query, cap: int | None = MAX_CLAUSE_COUNT) -> list[str]:
+        """Terms of q's field that the multi-term query `q` matches: the
+        top `cap` by global docFreq then term (TopTermsRewrite), or all
+        of them in term order (cap=None, CONSTANT_SCORE_REWRITE)."""
+        terms, dfs = self._dictionary.get(q.field, _NO_TERMS)
+        idx = _dictionary_matches(q, terms)
         if cap is not None:
-            t = t.orderBy(F.desc("df"), F.asc("term")).limit(cap)
-        return [r["term"] for r in t.collect()]
-
-    def _mtq_cond(self, q: Query):
-        """Column predicate over the term dictionary for a multi-term query
-        — Catalyst pushes it to the postings parquet scan (the FST-seek
-        analog; .explain shows PushedFilters). Scoped to the query's field."""
-        col = F.col("term")
-        in_field = F.col("field") == q.field
-        if isinstance(q, Prefix):
-            return in_field & col.startswith(q.prefix)
-        if isinstance(q, Wildcard):
-            rx = "^" + re.escape(q.pattern).replace(r"\*", ".*").replace(r"\?", ".") + "$"
-            return in_field & col.rlike(rx)
-        if isinstance(q, Regexp):
-            return in_field & col.rlike("^" + q.pattern + "$")
-        if isinstance(q, Fuzzy):
-            # Transpositions count ONE edit (FuzzyQuery.java:58
-            # defaultTranspositions=true): exact OSA distance via an
-            # Arrow-batched UDF behind Catalyst-pushable prefilters —
-            # the length window, the non-fuzzy prefix startswith, and
-            # levenshtein <= 2*max_edits (sound: osa <= e implies
-            # levenshtein <= 2e) reach the scan, the Python stage sees
-            # only the survivors.
-            pl, suffix, exact_only = self._fuzzy_parts(q)
-            if exact_only:
-                # FuzzyQuery.java:151 — maxEdits 0 or prefix covers the
-                # whole text: can only match the exact term
-                return in_field & (col == q.text)
-            cond = in_field
-            if pl:
-                # non-fuzzy prefix (FuzzyTermsEnum.java:129-141): exact
-                # prefix pushed down; edits measured on the suffixes
-                cond = cond & col.startswith(q.text[:pl])
-            suf_col = F.expr(f"substring(term, {pl + 1})") if pl else col
-            lo, hi = len(q.text) - q.max_edits, len(q.text) + q.max_edits
-            return cond & (F.length(col).between(lo, hi)) & (
-                F.levenshtein(suf_col, F.lit(suffix)) <= 2 * q.max_edits
-            ) & (osa_udf(suffix)(suf_col) <= q.max_edits)
-        if isinstance(q, TermRange):
-            cond = in_field
-            if q.lower is not None:
-                cond = cond & (col >= q.lower if q.include_lower else col > q.lower)
-            if q.upper is not None:
-                cond = cond & (col <= q.upper if q.include_upper else col < q.upper)
-            return cond
-        return None
+            idx = idx[np.lexsort((idx, -dfs[idx]))[:cap]]
+        return terms[idx].tolist()
 
     _MTQ_TYPES = (Prefix, Wildcard, Regexp, Fuzzy, TermRange)
 
-    @staticmethod
-    def _fuzzy_parts(q: Fuzzy) -> tuple[int, str, bool]:
-        """(effective prefix length, fuzzy suffix, exact-only?) for a
-        Fuzzy query — FuzzyTermsEnum.java:129 clamps the prefix to the
-        term length; FuzzyQuery.java:151 degrades to exact-term match
-        when maxEdits == 0 or the prefix covers the whole text."""
-        pl = min(max(q.prefix_length, 0), len(q.text))
-        exact_only = q.max_edits == 0 or pl >= len(q.text)
-        return pl, q.text[pl:], exact_only
-
     def _expand_fuzzy(self, q: Fuzzy, cap: int = MAX_CLAUSE_COUNT) -> list:
-        """[(term, edit_distance)] for a fuzzy query — distance computed in
-        the same dictionary scan that expands the term set; the per-term
-        global docFreq from that scan primes the stats cache so compile
-        does not re-aggregate the same terms in a second job.
+        """[(term, edit_distance)] for a fuzzy query.
 
         When the 1024 cap binds, the survivors are the top by BOOST
         (1 - ed/min(|term|, |query|)) then term — TopTermsRewrite.java:106
         keeps its priority queue by boost, so close-but-rare terms beat
-        popular-but-far ones (r2 VERDICT 'what's wrong' #5)."""
-        t = self._postings.groupBy("field", "term").agg(
-            F.sum("doc_freq").alias("df")
-        )
-        # with a non-fuzzy prefix the reported distance is the SUFFIX
-        # edit distance (FuzzyTermsEnum's automata are prefix+lev(suffix));
-        # the boost denominator below stays the FULL-length min
-        # (FuzzyTermsEnum.java:231-237)
-        pl, suffix, exact_only = self._fuzzy_parts(q)
-        if exact_only:
-            dist_col = F.lit(0)
-        elif pl:
-            dist_col = osa_udf(suffix)(F.expr(f"substring(term, {pl + 1})"))
-        else:
-            dist_col = osa_udf(q.text)(F.col("term"))
-        rows = (
-            t.where(self._mtq_cond(q))
-            .withColumn("dist", dist_col)
-            .withColumn(
-                "boost",
-                1.0
-                - F.col("dist")
-                / F.least(F.length("term"), F.lit(len(q.text))),
-            )
-            .orderBy(F.desc("boost"), F.asc("term"))
-            .limit(cap)
-            .collect()
-        )
-        for r in rows:
-            self._df_cache[(q.field, r["term"])] = int(r["df"])
-        return [(r["term"], int(r["dist"])) for r in rows]
+        popular-but-far ones (r2 VERDICT 'what's wrong' #5). With a
+        non-fuzzy prefix the distance is the suffix's while the boost
+        denominator stays the FULL-length min (FuzzyTermsEnum.java:
+        231-237)."""
+        terms = self._dictionary.get(q.field, _NO_TERMS)[0]
+        idx, dist = _fuzzy_matches(q, terms)
+        lens = np.fromiter((len(t) for t in terms[idx]), np.int64, len(idx))
+        boost = 1.0 - dist / np.minimum(lens, len(q.text))
+        order = np.lexsort((idx, -boost))[:cap]
+        return [(terms[i], int(d)) for i, d in zip(idx[order], dist[order])]
 
     def complex_phrase(self, slots: tuple, slop: int = 0,
                        field: str = "content") -> Query:
@@ -487,8 +485,8 @@ class LuceneSparkSearcher:
         ComplexPhraseQueryParser.java:40-120; Solr
         ComplexPhraseQParserPlugin.java): a phrase where a slot may be a
         wildcard/prefix pattern. Each pattern slot expands against the
-        LIVE term dictionary (the same pushdown + 1024-cap machinery as
-        standalone MTQs) and the whole thing evaluates as ONE
+        term dictionary (the same 1024-cap expansion as standalone
+        MTQs) and the whole thing evaluates as ONE
         MultiPhraseQuery — per-slot union posting streams, standard
         phrase matching, allTermStats weight."""
         from .query import MatchNone as _MN, MultiPhrase, Prefix, Wildcard
@@ -500,7 +498,7 @@ class LuceneSparkSearcher:
                     mtq: Query = Prefix(spec[:-1], field=field)
                 else:
                     mtq = Wildcard(spec, field=field)
-                alts = self._expand_terms(self._mtq_cond(mtq))
+                alts = self._expand_terms(mtq)
                 if not alts:
                     return _MN()  # a dead slot kills the phrase
                 positions.append(tuple(sorted(alts)))
@@ -550,7 +548,7 @@ class LuceneSparkSearcher:
             return _dc_replace(
                 q, source=self._expand_interval_tree(q.source, q.field))
         if isinstance(q, self._MTQ_TYPES):
-            terms = self._expand_terms(self._mtq_cond(q))
+            terms = self._expand_terms(q)
         elif isinstance(q, Bool):
             return Bool(
                 tuple(Clause(c.occur, self.expand(c.query)) for c in q.clauses),
@@ -632,32 +630,23 @@ class LuceneSparkSearcher:
                 src, minuend=w(src.minuend, field),
                 subtrahend=w(src.subtrahend, field))
         if isinstance(src, (IPrefix, IWildcard)):
-            col = F.col("term")
             if isinstance(src, IPrefix):
-                cond = col.startswith(src.prefix)
-                what = f"prefix {src.prefix!r}"
+                mtq, what = Prefix(src.prefix, field=field), f"prefix {src.prefix!r}"
             else:
-                rx = ("^" + re.escape(src.pattern)
-                      .replace(r"\*", ".*").replace(r"\?", ".") + "$")
-                cond = col.rlike(rx)
+                mtq = Wildcard(src.pattern, field=field)
                 what = f"wildcard {src.pattern!r}"
-            cap = src.max_expansions
-            rows = (
-                self._postings.where((F.col("field") == field) & cond)
-                .select("term").distinct()
-                .orderBy("term").limit(cap + 1).collect()
-            )
-            if len(rows) > cap:
+            terms = self._expand_terms(mtq, cap=None)
+            if len(terms) > src.max_expansions:
                 raise ValueError(
                     f"interval {what} expanded to too many terms "
-                    f"(limit {cap})"
+                    f"(limit {src.max_expansions})"
                 )
-            if not rows:
+            if not terms:
                 # impossible leaf — never indexed, yields no intervals
                 return ITerm("\x00<no-expansion>")
-            if len(rows) == 1:
-                return ITerm(rows[0]["term"])
-            return IOr(tuple(ITerm(r["term"]) for r in rows))
+            if len(terms) == 1:
+                return ITerm(terms[0])
+            return IOr(tuple(ITerm(t) for t in terms))
         if isinstance(src, (IOrdered, IUnordered, IOr, IAtLeast, IPhrase)):
             return _dc_replace(
                 src, sources=tuple(w(s, field) for s in src.sources))
@@ -675,7 +664,7 @@ class LuceneSparkSearcher:
         (spans/SpanMultiTermQueryWrapper.java:153-247 SpanRewriteMethod):
         walk the span algebra, replacing each wrapped MTQ with a SpanOr
         of SpanTerms expanded from the term dictionary (docFreq-ranked,
-        1024 cap — the same pushdown _expand_terms every MTQ uses). An
+        1024 cap — the _expand_terms every MTQ uses). An
         empty expansion becomes an impossible leaf (a term containing
         \\x00 can never be indexed), which produces no spans — exactly
         SpanOrQuery-with-zero-clauses semantics through the existing
@@ -692,7 +681,7 @@ class LuceneSparkSearcher:
             return q
         if isinstance(q, SpanMultiTerm):
             field = getattr(q.wrapped, "field", q.field)
-            terms = self._expand_terms(self._mtq_cond(q.wrapped))
+            terms = self._expand_terms(q.wrapped)
             if not terms:
                 return SpanTerm("\x00<no-expansion>", field=field)
             if len(terms) == 1:
@@ -795,79 +784,6 @@ class LuceneSparkSearcher:
             drop.add("pay_enc")
         return [c for c in columns if c not in drop]
 
-    def _numeric_allowed_df(self, nrs, vsources=(), held=None) -> DataFrame | None:
-        """(segment_id, doc_id, set_id, val) rows: one filtered scan of
-        the norms table per distinct NumericRange (val = NULL), one full
-        projection per FunctionScore value-source field (val = the
-        doc-value) and the driver-held doc sets ({set_id: {segment_id:
-        sorted docIDs}}) — all unioned, all distributed (the docvalues
-        columnar read analog; no driver-side collect). None when empty."""
-        from .query import RangeField
-
-        def col(name: str):
-            if name not in NUMERIC_DOCVALUES:
-                raise ValueError(
-                    f"unknown numeric doc-values field {name!r}; "
-                    f"available: {NUMERIC_DOCVALUES}"
-                )
-            return F.col(name)
-
-        parts = []
-        for nr in sorted(nrs, key=K.numeric_set_id):
-            if isinstance(nr, RangeField):
-                # RangeFieldQuery.QueryType per-dim relations, ANDed over
-                # dimensions (parquet pushes the comparisons into the
-                # doc-values scan exactly like the BETWEEN path)
-                def _rel(rel):
-                    cond = F.lit(True)
-                    for (mn, mx), lo, hi in zip(nr.dims, nr.lower, nr.upper):
-                        if rel == "intersects":
-                            c = (col(mn) <= hi) & (col(mx) >= lo)
-                        elif rel == "within":
-                            c = (col(mn) >= lo) & (col(mx) <= hi)
-                        else:  # contains
-                            c = (col(mn) <= lo) & (col(mx) >= hi)
-                        cond = cond & c
-                    return cond
-
-                if nr.relation == "crosses":
-                    # INTERSECTS && !WITHIN over the whole box
-                    # (RangeFieldQuery.java:192-193)
-                    cond = _rel("intersects") & ~_rel("within")
-                else:
-                    cond = _rel(nr.relation)
-            elif isinstance(nr, NumericSet):
-                # PointInSetQuery: explicit value set (parquet turns this
-                # into an In pushdown over the doc-values column)
-                cond = col(nr.field).isin([int(v) for v in nr.values])
-            else:
-                c, cond = col(nr.field), F.lit(True)
-                if nr.lower is not None:
-                    cond = cond & (c >= int(nr.lower))
-                if nr.upper is not None:
-                    cond = cond & (c <= int(nr.upper))
-            parts.append(self._norms.where(cond).select(
-                "segment_id", "doc_id",
-                F.lit(K.numeric_set_id(nr)).alias("set_id"),
-                F.lit(None).cast("double").alias("val"),
-            ))
-        for field in sorted(vsources):
-            parts.append(self._norms.select(
-                "segment_id", "doc_id",
-                F.lit(f"values:{field}").alias("set_id"),
-                col(field).cast("double").alias("val"),
-            ))
-        if held:
-            parts.append(self.spark.createDataFrame(
-                pd.concat([
-                    pd.DataFrame({"segment_id": sid, "doc_id": docs,
-                                  "set_id": set_id, "val": np.nan})
-                    for set_id, per in held.items() for sid, docs in per.items()
-                ], ignore_index=True),
-                schema="segment_id string, doc_id bigint, set_id string, val double",
-            ))
-        return reduce(DataFrame.unionByName, parts) if parts else None
-
     # ---------------- stats + search --------------------------------------
 
     def _term_stats(self, pairs: set) -> None:
@@ -878,7 +794,6 @@ class LuceneSparkSearcher:
         holds the files' key columns, no file is opened. Cached for the
         searcher's lifetime: the index is immutable under this manifest,
         so entries never go stale."""
-        # _expand_fuzzy primes df alone; ttf is filled only here
         missing = pairs - self._ttf_cache.keys()
         if missing:
             rows = segfiles.read_postings(
@@ -925,15 +840,13 @@ class LuceneSparkSearcher:
         zero-clamping sims (lmd/dfi) route exhaustive.
 
         Routing (IndexSearcher.search's `leafSlices.length <= 1` branch,
-        see _score): a query whose keys' summed global ttf is at most
-        MAX_DOCS_PER_SLICE, with no doc-values filter or value source and
-        no MatchAll, is scored on the driver from posting rows read out
-        of the segment files, so a cold search runs no Spark job. For
-        such a query the Spark dispatch (scan → exchange → applyInPandas)
-        costs ~100x the kernel work. Bigger queries, top-level multi-term
-        queries, doc-values filters and MatchAll plans run the same
-        per-segment step on the executors; both routes return the same
-        frame.
+        see _score): a query whose cost — its keys' summed global ttf,
+        plus doc_count when it holds a MatchAll, a doc-values filter or a
+        value source — is at most MAX_DOCS_PER_SLICE is scored on the
+        driver from the segment files, so a cold search runs no Spark
+        job; for such a query a Spark dispatch costs ~100x the kernel
+        work. A bigger query runs the same per-slice step as one Spark
+        task per leaf slice; both routes return the same frame.
 
         Results are LRU-cached per (query, k, use_wand, after, similarity)
         — the filter/query-cache analog (search/LRUQueryCache.java):
@@ -1026,20 +939,19 @@ class LuceneSparkSearcher:
     # ---------------- prepare → score → merge ------------------------------
 
     def _prepare(self, q: Query, similarity=None) -> _Prepared:
-        """analyze → rewrite, then one of three: a bare MatchAll
-        short-circuits (_MATCH_ALL); a top-level multi-term query takes
-        MultiTermQuery's default CONSTANT_SCORE_REWRITE — every matching
-        term, score 1.0, no clause cap and no per-term stats barrier;
-        anything else is expanded against the term dictionary, rewritten
-        and compiled with global stats. Fuzzy is not constant-score:
-        FuzzyQuery's default rewrite is the top-terms SCORING rewrite with
-        per-term distance boosts (FuzzyQuery.java), handled in expand()."""
+        """analyze → rewrite, then one of two: a top-level multi-term
+        query takes MultiTermQuery's default CONSTANT_SCORE_REWRITE —
+        every matching term listed under the plan's "keys", score 1.0, no
+        clause cap and no per-term stats barrier; anything else is
+        expanded against the term dictionary, rewritten and compiled with
+        global stats. Fuzzy is not constant-score: FuzzyQuery's default
+        rewrite is the top-terms SCORING rewrite with per-term distance
+        boosts (FuzzyQuery.java), handled in expand()."""
         q = rewrite(self._analyze_query(q))
-        if isinstance(q, MatchAll):
-            return _Prepared(_MATCH_ALL, set(), set(), set(), None)
         if isinstance(q, self._MTQ_TYPES) and not isinstance(q, Fuzzy):
-            plan = {"type": "anyterm", "score": np.float32(1.0)}
-            return _Prepared(plan, set(), set(), set(), q)
+            keys = {(q.field, t) for t in self._expand_terms(q, cap=None)}
+            plan = {"type": "anyterm", "score": np.float32(1.0), "keys": sorted(keys)}
+            return _Prepared(plan, keys, set(), set())
         q = rewrite(self.expand(q))
         if isinstance(q, MatchNone):
             return _NOTHING
@@ -1048,7 +960,7 @@ class LuceneSparkSearcher:
             q, self._global_df(keys), self.doc_counts,
             sim=self._sim_ctx(similarity, keys),
         )
-        return _Prepared(plan, keys, numeric_ranges(q), value_source_fields(q), None)
+        return _Prepared(plan, keys, numeric_ranges(q), value_source_fields(q))
 
     def _score(self, prepared: dict, k: int, use_wand: bool, after=None,
                source: str = "files", extra: dict | None = None,
@@ -1058,60 +970,48 @@ class LuceneSparkSearcher:
         [(segment_id, docs, scores, total, relation), ...]} for _merge.
 
         Routes (IndexSearcher.search's `leafSlices.length <= 1` branch):
-        with `source="files"` a batch that has keys, no doc-values
-        channel, no matchall and a summed global ttf of its keys within
-        MAX_DOCS_PER_SLICE is scored here from posting rows read out of
-        the segment files; any other batch goes to the Spark dispatch
-        (_score_spark), one kernel call per segment. `source="cache"`
-        (search_local) scores here from the persistent per-slice cache,
-        whatever the size. Here each slice holding a key (every slice
-        for matchall) is one _score_segment call: its tombstones and
-        doc-values sets are in slice docIDs and its hits are split back
-        into (segment_id, local docID) parts. `slices` replaces the
-        searcher's (self._slices) on the files route. `extra` adds
-        driver-held doc sets ({set_id: {segment_id: sorted docIDs}}) to
-        the doc-values channel (rescore's first-pass docs)."""
+        with `source="files"` a batch whose cost — the summed global ttf
+        of its keys, plus doc_count when a plan reads every doc (a
+        matchall, a doc-values set or a value source) — is within
+        MAX_DOCS_PER_SLICE is scored here from the segment files; any
+        other batch runs the same per-slice step as one Spark task per
+        slice (_score_spark). `source="cache"` (search_local) scores here
+        from the persistent per-slice cache, whatever the size. Here each
+        slice holding a key (every slice when a plan reads every doc) is
+        one _score_slice call: its tombstones and doc-values sets are in
+        slice docIDs and its hits are split back into (segment_id, local
+        docID) parts. `slices` replaces the searcher's (self._slices) on
+        the files route. `extra` adds driver-held doc sets ({segment_id:
+        {set_id: sorted docIDs}}, rescore's first-pass docs)."""
         parts: dict = {n: [] for n in prepared}
-        if source == "cache" or len(prepared) > 1:
-            prepared = {n: self._list_terms(p) for n, p in prepared.items()}
         plans = {n: p.plan for n, p in prepared.items() if p.plan is not None}
         if not plans:
             return parts
         keys = set().union(*(p.keys for p in prepared.values()))
         nrs = set().union(*(p.nrs for p in prepared.values()))
         vsf = set().union(*(p.vsf for p in prepared.values()))
-        matchall = any("matchall" in K.plan_node_types(p) for p in plans.values())
-        extra = extra or {}
-        dv: dict = {}
+        if nrs or vsf:
+            _docvalue_columns(nrs, vsf)  # an unknown field raises here, not in a task
+        whole = bool(nrs or vsf) or any(
+            "matchall" in K.plan_node_types(p) for p in plans.values())
+        slices = self._slices if source == "cache" else slices or self._slices
+        extras = ([sl.allowed(extra) or {} for sl in slices] if extra
+                  else [{}] * len(slices))
+        score = dict(plans=plans, caches=self.caches, k=k, use_wand=use_wand,
+                     after=after)
         if source == "cache":
-            slices = self._slices
-            views = self._cached_slices(keys, matchall)
-            if nrs or vsf:
-                dv = self._local_allowed_maps(nrs, vsf)
-        elif (keys and not (nrs or vsf or matchall)
-              and sum(self._global_ttf(keys).values()) <= MAX_DOCS_PER_SLICE):
-            slices = slices or self._slices
+            views = self._cached_slices(keys, whole)
+        elif (sum(self._global_ttf(keys).values())
+              + (self.doc_count if whole else 0)) <= MAX_DOCS_PER_SLICE:
             views = self._file_slices(keys, plans, slices)
         else:
-            mtqs = [p.mtq for p in prepared.values() if p.mtq is not None]
-            return self._score_spark(plans, keys, mtqs, nrs, vsf, extra,
-                                     k, use_wand, after, parts)
-        for set_id, per in extra.items():
-            for sid, docs in per.items():
-                dv.setdefault(sid, {})[set_id] = docs
-        # slices with doc-values rows but no posting rows still score,
-        # as the Spark route's cogroup calls the kernel for such segments
-        held = set(views)
-        if dv:
-            where = _slice_index(slices)
-            held |= {where[sid] for sid in dv}
-        for i in held:
+            return self._score_spark(slices, keys, nrs, vsf, extras, score, parts)
+        dv = self._local_allowed_maps(nrs, vsf) if nrs or vsf else {}
+        for i in (range(len(slices)) if whole else views):
             sl = slices[i]
             seg = views.get(i) or sl.view(_NO_ROWS)
-            res = _score_segment(seg, plans, self.caches, k, use_wand, after,
-                                 sl.base, sl.deleted, sl.allowed(dv))
-            for n, r in res.items():
-                parts[n].extend(sl.split(*r))
+            for n, p in _score_slice(sl, seg, dv, extras[i], **score).items():
+                parts[n].extend(p)
         return parts
 
     def _leaf_slices(self, max_docs: int) -> list[_Slice]:
@@ -1146,17 +1046,6 @@ class LuceneSparkSearcher:
         K.WAND_WINDOW docs, each scored by one kernel call."""
         return self._leaf_slices(K.WAND_WINDOW)
 
-    def _list_terms(self, prepared: _Prepared) -> _Prepared:
-        """A constant-score multi-term query with its matching terms
-        listed under the plan's "keys" — all of them, as the scan
-        predicate matches them — for a segment view that also holds
-        other keys' rows (a batch, the local cache, explain)."""
-        m = prepared.mtq
-        if m is None:
-            return prepared
-        keys = {(m.field, t) for t in self._expand_terms(self._mtq_cond(m), cap=None)}
-        return _Prepared({**prepared.plan, "keys": sorted(keys)}, keys, set(), set(), None)
-
     def _file_slices(self, keys: set, plans: dict, slices: list) -> dict:
         """{slice index: view} over the keys' posting rows read from the
         segment files — the columns the plans' kernels read only."""
@@ -1174,13 +1063,13 @@ class LuceneSparkSearcher:
                 views[i] = slices[i].view(g)
         return views
 
-    def _cached_slices(self, keys: set, matchall: bool) -> dict:
+    def _cached_slices(self, keys: set, whole: bool) -> dict:
         """{slice index: view} from the persistent local cache: the
         slices holding at least one of the keys, or all of them for a
-        matchall plan. A key's posting rows are read from the segment
-        files once (segfiles.read_postings, no Spark job) and kept, with
-        their decoded arrays, in their slice's view for the searcher's
-        lifetime — the hot shard's page-cache analog, safe because the
+        plan that reads every doc. A key's posting rows are read from the
+        segment files once (segfiles.read_postings, no Spark job) and
+        kept, with their decoded arrays, in their slice's view for the
+        searcher's lifetime — the hot shard's page-cache analog, safe because the
         index is immutable under this manifest generation."""
         if not hasattr(self, "_local_slices"):
             self._local_slices = {
@@ -1198,39 +1087,27 @@ class LuceneSparkSearcher:
             self._local_keys |= missing
         return {
             i: view for i, view in self._local_slices.items()
-            if matchall or any(kk in view.rows for kk in keys)
+            if whole or any(kk in view.rows for kk in keys)
         }
 
-    def _score_spark(self, plans: dict, keys: set, mtqs, nrs: set, vsf: set,
-                     extra: dict, k: int, use_wand: bool, after, parts: dict) -> dict:
-        """The Spark route of _score: the posting rows of the keys (and of
-        multi-term predicates) are scanned, grouped per segment and scored
-        by _score_segment in applyInPandas (leaf slices on executors); a
-        doc-values channel is range-filtered distributed (parquet
-        row-group min/max pruning = the BKD-tree cut) and cogrouped with
-        the posting rows — no driver-side collect of the match set."""
-        cond = self._terms_filter(keys) if keys else None
-        for m in mtqs:
-            cond = self._mtq_cond(m) if cond is None else cond | self._mtq_cond(m)
-        post = self._postings.where(cond) if cond is not None else self._postings.limit(0)
-        if any("matchall" in K.plan_node_types(p) for p in plans.values()):
-            # the plan matches docs without postings: dispatch EVERY segment
-            post = post.unionByName(self._sentinels.select(post.columns))
-        post = post.select(*self._kernel_columns(post.columns, *plans.values()))
-        udf = partial(
-            _segment_udf, plans=plans, caches=self.caches, k=k, use_wand=use_wand,
-            after=after, doc_bases=self.doc_base, tombstones=self.tombstones,
-            doc_counts=self.seg_doc_count,
+    def _score_spark(self, slices: list, keys: set, nrs: set, vsf: set,
+                     extras: list, score: dict, parts: dict) -> dict:
+        """The Spark route of _score: one job of one mapInPandas task per
+        leaf slice (spark.range(n, numPartitions=n) — no scan, no
+        shuffle), each running the driver's per-slice step over its own
+        segment files (_slice_task); executors must see the index
+        directory, as the merge's tasks do."""
+        task = partial(
+            _slice_task, index_dir=self.index_dir, manifest=self.manifest,
+            slices=slices, keys=keys, nrs=nrs, vsf=vsf, extras=extras,
+            columns=self._kernel_columns(self._postings_columns,
+                                         *score["plans"].values()),
+            **score,
         )
-        allowed = self._numeric_allowed_df(nrs, vsf, extra)
-        grouped = post.groupBy("segment_id")
-        if allowed is not None:
-            hits = grouped.cogroup(allowed.groupBy("segment_id")).applyInPandas(
-                udf, schema=_HIT_SCHEMA)
-        else:
-            hits = grouped.applyInPandas(
-                lambda key, pdf: udf(key, pdf, None), schema=_HIT_SCHEMA)
-        for (name, sid), g in hits.toPandas().groupby(["query", "segment_id"], sort=False):
+        n = len(slices)
+        hits = (self.spark.range(n, numPartitions=n)
+                .mapInPandas(task, schema=_HIT_SCHEMA).toPandas())
+        for (name, sid), g in hits.groupby(["query", "segment_id"], sort=False):
             parts[name].append((
                 sid, g["doc_id"].to_numpy(np.int64), g["score"].to_numpy(np.float32),
                 int(g["total"].iloc[0]), g["relation"].iloc[0],
@@ -1277,8 +1154,6 @@ class LuceneSparkSearcher:
                          after: tuple | None, similarity=None,
                          source: str = "files") -> pd.DataFrame:
         prepared = self._prepare(q, similarity)
-        if prepared.plan is _MATCH_ALL:
-            return self._match_all(k, after, with_stored)
         parts = self._score({"q": prepared}, k, use_wand, after, source)
         hits = self._merge(parts["q"], k)
         return self._with_stored(hits) if with_stored else hits
@@ -1386,7 +1261,7 @@ class LuceneSparkSearcher:
         The second pass is an ordinary _score of
         Bool(MUST=rescore_q, FILTER=docidset) whose doc set (set_id
         "rescore:first") is the first-pass hits, added to the doc-values
-        channel — so each segment scores rescore_q against at most
+        sets — so each segment scores rescore_q against at most
         first_k candidate docs, on whichever route the batch takes.
         FILTER makes WAND inapplicable by invariant, so the second pass
         routes exhaustive (which is exactly Lucene's ScoreMode.COMPLETE
@@ -1410,11 +1285,11 @@ class LuceneSparkSearcher:
                 ],
             })
         first = {
-            sid: np.sort(g.to_numpy(np.int64))
+            sid: {"rescore:first": np.sort(g.to_numpy(np.int64))}
             for sid, g in hits.groupby("segment_id")["doc_id"]
         }
         second = self._score(
-            {"q": prepared}, first_k, use_wand=False, extra={"rescore:first": first}
+            {"q": prepared}, first_k, use_wand=False, extra=first
         )
         merged = hits.merge(
             self._merge(second["q"], None)[["segment_id", "doc_id", "score"]]
@@ -1467,81 +1342,25 @@ class LuceneSparkSearcher:
         )
 
     def _local_allowed_maps(self, nrs: set, vsf: set) -> dict:
-        """Doc-values channel (NumericRange sets + FunctionScore values)
-        fetched once per distinct set_id, pre-grouped per segment into
-        the exact SegmentData.allowed payloads, and cached driver-side:
-        {segment_id: {set_id: sorted docIDs | (docs, values)}}."""
-        if not hasattr(self, "_local_sets"):
-            self._local_sets: dict = {}  # set_id -> {sid: payload}
-        need_nrs = {nr for nr in nrs if K.numeric_set_id(nr) not in self._local_sets}
-        need_vsf = {f for f in vsf if f"values:{f}" not in self._local_sets}
+        """The doc-values sets of a batch (NumericRange sets + FunctionScore
+        values), {segment_id: {set_id: sorted docIDs | (docs, values)}}:
+        each distinct set_id is read once from the docmap files
+        (_doc_values) and kept for the searcher's lifetime."""
+        need_nrs = {nr for nr in nrs if K.numeric_set_id(nr) not in self._dv_sets}
+        need_vsf = {f for f in vsf if f"values:{f}" not in self._dv_sets}
         if need_nrs or need_vsf:
-            for set_id in (
-                {K.numeric_set_id(nr) for nr in need_nrs}
-                | {f"values:{f}" for f in need_vsf}
-            ):
-                self._local_sets[set_id] = {}
-            pdf = self._numeric_allowed_df(need_nrs, need_vsf).toPandas()
-            for sid, g in pdf.groupby("segment_id"):
-                for set_id, payload in _allowed_from_pdf(g).items():
-                    self._local_sets[set_id][sid] = payload
-        wanted = [K.numeric_set_id(nr) for nr in nrs] + [f"values:{f}" for f in vsf]
+            fresh: dict = {}
+            read = _doc_values(self.index_dir, self.manifest, need_nrs, need_vsf)
+            for sid, sets in read.items():
+                for set_id, payload in sets.items():
+                    fresh.setdefault(set_id, {})[sid] = payload
+            # published whole: a concurrent search never sees a set half-filled
+            self._dv_sets.update(fresh)
         out: dict = {}
-        for set_id in wanted:
-            for sid, payload in self._local_sets[set_id].items():
+        for set_id in [K.numeric_set_id(nr) for nr in nrs] + [f"values:{f}" for f in vsf]:
+            for sid, payload in self._dv_sets.get(set_id, {}).items():
                 out.setdefault(sid, {})[set_id] = payload
         return out
-
-    def _match_all(self, k: int, after, with_stored: bool) -> pd.DataFrame:
-        """MatchAllDocsQuery: constant score 1.0 over the docmap — a
-        TakeOrdered over the norms table (no posting work at all). Ties
-        are all-equal, so ranking = global docID asc (HitQueue tie-break).
-
-        `after` semantics match apply_after (float32-compared): every hit
-        scores exactly 1.0, so an after-score > 1.0 keeps all docs,
-        == 1.0 pages by global docID, and < 1.0 yields nothing (under
-        (score desc, docID asc) order nothing sorts after a lower score)."""
-        n_deleted = sum(len(v) for v in self.tombstones.values())
-        if after is not None and np.float32(after[0]) < np.float32(1.0):
-            hits = self._merge([], k)
-            hits.attrs["total_hits"] = self.doc_count - n_deleted
-            return hits
-        # doc_base as a broadcast-joined frame, not a literal map: a
-        # 100k-segment index would blow up a create_map expression tree
-        bases = self.spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "segment_id": list(self.doc_base),
-                    "_doc_base": list(self.doc_base.values()),
-                }
-            )
-        )
-        df = (
-            self._norms.select("segment_id", "doc_id")
-            .join(F.broadcast(bases), "segment_id")
-            .withColumn("global_doc_id", F.col("_doc_base") + F.col("doc_id"))
-            .drop("_doc_base")
-        )
-        if n_deleted:
-            del_pdf = pd.concat(
-                [
-                    pd.DataFrame({"segment_id": sid, "doc_id": ids})
-                    for sid, ids in self.tombstones.items()
-                ]
-            )
-            df = df.join(
-                F.broadcast(self.spark.createDataFrame(del_pdf)),
-                on=["segment_id", "doc_id"],
-                how="left_anti",
-            )
-        if after is not None and np.float32(after[0]) == np.float32(1.0):
-            df = df.where(F.col("global_doc_id") > int(after[1]))
-        hits = df.orderBy("global_doc_id").limit(k).toPandas()
-        hits.insert(2, "score", np.float32(1.0))
-        hits.insert(0, "rank", np.arange(len(hits)))
-        hits.attrs["total_hits"] = self.doc_count - n_deleted
-        hits.attrs["relation"] = "EQUAL_TO"
-        return self._with_stored(hits) if with_stored else hits
 
     def highlight_passages(
         self, hits: pd.DataFrame, q: Query, window: int = 10
@@ -1735,7 +1554,7 @@ class LuceneSparkSearcher:
         assert explanation value == scorer score; tests do the same here.
         `similarity` swaps the scoring model exactly as in search(): the
         plan is search()'s (_prepare), read from the segment files."""
-        prepared = self._list_terms(self._prepare(q, similarity))
+        prepared = self._prepare(q, similarity)
         if prepared.plan is None:
             return {"value": 0.0, "description": "MatchNone", "details": []}
         # locate the owning segment
@@ -1801,21 +1620,14 @@ class LuceneSparkSearcher:
     def index_field_stats(self) -> pd.DataFrame:
         """Index introspection (Solr LukeRequestHandler / Lucene
         FieldInfos + Terms.getSumDocFreq surface): per field, the number
-        of distinct terms and the summed docFreq, aggregated from the
-        live posting rows (sentinel rows excluded). One distributed agg
-        over the postings scan — the per-field term dictionary sizes a
-        CheckIndex-style invariant can compare against corpus truth."""
-        out = (
-            self._postings.where(~F.col("term").startswith("\x00"))
-            .groupBy("field")
-            .agg(
-                F.count_distinct("term").cast("bigint").alias("n_terms"),
-                F.sum("doc_freq").cast("bigint").alias("sum_df"),
-            )
-            .orderBy("field")
-            .toPandas()
-        )
-        return out
+        of distinct terms and the summed docFreq of the term dictionary,
+        read on the driver from the segment files (no Spark job) — the
+        per-field term dictionary sizes a CheckIndex-style invariant can
+        compare against corpus truth."""
+        return pd.DataFrame(
+            [(f, len(t), int(df.sum())) for f, (t, df) in sorted(self._dictionary.items())],
+            columns=["field", "n_terms", "sum_df"],
+        ).astype({"n_terms": np.int64, "sum_df": np.int64})
 
     def get_documents(self, paths: tuple) -> pd.DataFrame:
         """Real-time get (solr/core/src/java/org/apache/solr/handler/

@@ -4,20 +4,20 @@ A Lucene/Solr deployment holds one IndexSearcher and serves many queries
 concurrently on a thread pool (IndexSearcher leaf slices,
 SolrIndexSearcher request threads). Spark's analog: ONE long-lived
 SparkSession + searcher, with a driver-side thread pool submitting
-independent search jobs — the Spark scheduler interleaves their stages
+independent searches — a query that fits one slice runs on its pool
+thread, and the Spark scheduler interleaves the tasks of bigger ones
 across executor slots, overlapping each query's dispatch latency with
-another's compute. Combine with `cache_postings=True` (postings pinned
-in executor storage) for the hot-index posture.
+another's compute.
 
 Three throughput levers, coarsest to finest:
 - `search_many`: N queries scored as ONE batch (shared read + decode;
   one Spark job, or none when the batch fits one slice) — highest
   throughput, one latency for the whole batch;
-- `SearcherService.search_all`: N independent jobs on a thread pool —
-  per-query latencies, dispatch overlapped;
-- plain `search()`: one query; a query whose postings fit one slice
+- `SearcherService.search_all`: N independent searches on a thread pool
+  — per-query latencies, dispatch overlapped;
+- plain `search()`: one query; a query whose work fits one slice
   (searcher.MAX_DOCS_PER_SLICE) is scored on the calling thread with no
-  Spark job, a bigger one is one dispatch job.
+  Spark job, a bigger one is one Spark job of one task per leaf slice.
 """
 
 from __future__ import annotations
@@ -35,15 +35,12 @@ class SearcherService:
         spark=None,
         index_dir: str | None = None,
         max_concurrent: int = 8,
-        cache_postings: bool = True,
         searcher: LuceneSparkSearcher | None = None,
     ):
         """Open an index (spark + index_dir) or wrap an existing
         `searcher` — callers reusing a warm searcher pass it directly."""
         if searcher is None:
-            searcher = LuceneSparkSearcher(
-                spark, index_dir, cache_postings=cache_postings
-            )
+            searcher = LuceneSparkSearcher(spark, index_dir)
         self.searcher = searcher
         self._pool = ThreadPoolExecutor(max_workers=max_concurrent)
         import threading

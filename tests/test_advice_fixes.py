@@ -1,8 +1,9 @@
 """Regression tests for the round-1 ADVICE findings:
 
 1. A Bool containing MatchAll (e.g. '*:* -foo') must return docs from
-   segments that hold NONE of the query's terms (sentinel dispatch).
-2. _match_all paging honors the score component of `after` and returns
+   segments that hold NONE of the query's terms (a plan that reads
+   every doc scores every leaf slice).
+2. MatchAll paging honors the score component of `after` and returns
    the same column order as search().
 3. An index analyzed with only `turkish_case` still re-analyzes query
    terms (the searcher's query-analysis short-circuit lists the flag).
@@ -33,8 +34,8 @@ def oracle(tiny_corpus_pdf):
 
 def test_matchall_in_bool_spans_all_segments(searcher, oracle):
     # 'tail_marker' lives in exactly one doc (corpus edge-case row 4), so
-    # 3 of the 4 segments hold no posting of any query term — before the
-    # sentinel-dispatch fix their docs silently vanished from the result.
+    # 3 of the 4 segments hold no posting of any query term — their docs
+    # must still be scored.
     q = parse("*:* -tail_marker")
     hits = searcher.search(q, k=oracle.n_docs + 5, with_stored=False)
     excluded = set(oracle.term_scores("tail_marker"))

@@ -1,23 +1,26 @@
 """One query pipeline, four ways to run it: one answer per query.
 
-search() scores a query whose postings fit one thread (summed global ttf
-of its keys <= MAX_DOCS_PER_SLICE) on the driver and sends everything else
-through the Spark dispatch; search_local scores on the driver from its
-per-slice cache and search_many scores a batch. The driver routes score
-each leaf slice (a run of small segments) in one kernel call, the Spark
-route each segment. Over seeded random queries on an index with
-tombstones, a merged segment and appended tiny segments, the driver
-route, the Spark route (forced by setting the bound to -1), search_local
-and a one-query search_many must return equal frames and attrs, and the
-BM25 top-10 of the benchmark shapes must match the brute-force oracle.
-Random query trees (Lucene's QueryUtils.check posture) mix Term, Phrase,
-nested Bool, Boost, ConstantScore, nested and top-level Prefix/Wildcard,
-a NumericRange filter, a FunctionScore and a MatchAll in a Bool; rescore
-must agree between its routes too, and so must payload queries and an
-index whose merged segment is forced above WAND_WINDOW.
+search() scores a query whose work fits one thread (the summed global
+ttf of its keys, plus doc_count when it reads every doc, at most
+MAX_DOCS_PER_SLICE) on the driver and sends everything else to Spark, one
+task per leaf slice; search_local scores on the driver from its
+per-slice cache and search_many scores a batch. Every route scores each
+leaf slice (a run of small segments) in one kernel call. Over seeded
+random queries on an index with tombstones, a merged segment and
+appended tiny segments, the driver route, the Spark route (forced by
+setting the bound to -1), search_local and a one-query search_many must
+return equal frames and attrs, and the BM25 top-10 of the benchmark
+shapes must match the brute-force oracle. Random query trees (Lucene's
+QueryUtils.check posture) mix Term, Phrase, nested Bool, Boost,
+ConstantScore, nested and top-level Prefix/Wildcard/Regexp/TermRange,
+Fuzzy, NumericRange/NumericSet/RangeField filters, a FunctionScore, a
+bare MatchAll and a MatchAll in a Bool; rescore must agree between its
+routes too, and so must payload queries and an index whose merged
+segment is forced above WAND_WINDOW.
 """
 
 import math
+import re
 
 import numpy as np
 import pandas as pd
@@ -31,8 +34,9 @@ from lucene_solr_1_spark.index.merge import merge_down
 from lucene_solr_1_spark.search import kernel
 from lucene_solr_1_spark.search import searcher as S
 from lucene_solr_1_spark.search.query import (
-    Bool, Boost, ConstantScore, FunctionScore, MatchAll, NumericRange, Occur,
-    PayloadScore, Phrase, Prefix, SpanNear, SpanOr, SpanTerm, Term, Wildcard,
+    Bool, Boost, ConstantScore, FunctionScore, Fuzzy, MatchAll, NumericRange,
+    NumericSet, Occur, PayloadScore, Phrase, Prefix, RangeField, Regexp,
+    SpanNear, SpanOr, SpanTerm, Term, TermRange, Wildcard,
 )
 
 from .oracle import OracleIndex
@@ -213,11 +217,13 @@ def test_routes_agree_with_after_paging_and_lmd(routed, monkeypatch):
 # ---------------- random query trees ----------------------------------------
 
 def _leaf(oracle: OracleIndex, rng: np.random.Generator, kind: str = ""):
-    """A Term, a 2-term Phrase, a Prefix or a Wildcard drawn from one
-    random document (`kind` picks one, else a weighted draw)."""
+    """A Term, a 2-term Phrase, a Prefix, a Wildcard, a Regexp, a
+    TermRange or a Fuzzy drawn from one random document (`kind` picks
+    one, else a weighted draw)."""
     d = int(rng.integers(oracle.n_docs))
     t = str(rng.choice(sorted(oracle.docs[d])))
-    kind = kind or str(rng.choice(["term", "term", "phrase", "prefix", "wildcard"]))
+    kind = kind or str(rng.choice(["term", "term", "phrase", "prefix", "wildcard",
+                                   "regexp", "range", "fuzzy"]))
     if kind == "phrase":
         at = {p: w for w, ps in oracle.positions[d].items() for p in ps}
         starts = [p for p in sorted(at) if p + 1 in at]
@@ -229,6 +235,14 @@ def _leaf(oracle: OracleIndex, rng: np.random.Generator, kind: str = ""):
     if kind == "wildcard":
         i = int(rng.integers(len(t)))
         return Wildcard(t[:i] + "?" + t[i + 1:])
+    if kind == "regexp":
+        return Regexp(f"{re.escape(t[:2])}.*|{re.escape(t)}")
+    if kind == "range":
+        return TermRange(t, t[:-1] + chr(ord(t[-1]) + 1), include_upper=bool(rng.integers(2)))
+    if kind == "fuzzy":
+        i = int(rng.integers(len(t)))
+        return Fuzzy(t[:i] + t[i + 1:] if len(t) > 3 else t + "x",
+                     int(rng.integers(1, 3)), prefix_length=int(rng.integers(3)))
     return Term(t)
 
 
@@ -250,33 +264,48 @@ def _tree(oracle: OracleIndex, rng: np.random.Generator, depth: int, kind: str =
     return Bool.of(*clauses)
 
 
+def _doc_values_filter(rng: np.random.Generator, j: int):
+    """A NumericRange (open at one end every other time), a NumericSet or
+    a RangeField under one of its four relations, by `j`."""
+    lo = int(rng.integers(20, 120))
+    if j % 3 == 0:
+        return NumericRange("dl", lo if j % 2 else None, lo + 150)
+    if j % 3 == 1:
+        return NumericSet("dl", tuple(range(lo, lo + 40, 2)))
+    rel = ("intersects", "within", "contains", "crosses")[j % 4]
+    return RangeField((("dl", "n_chars"),), (lo,), (lo * 8,), rel)
+
+
 def _random_queries(oracle: OracleIndex, seed: int, n: int) -> list:
     """Random Bool trees, random trees of any shape, top-level
-    Prefix/Wildcard (constant-score), trees under a NumericRange FILTER
-    and under a FunctionScore (the doc-values channel), and a MatchAll
-    beside a tree in a Bool, in turn."""
+    Prefix/Wildcard/Regexp/TermRange (constant-score) and Fuzzy, trees
+    under a doc-values FILTER and under a FunctionScore, a MatchAll
+    beside a tree in a Bool and a bare MatchAll, in turn."""
     rng = np.random.default_rng(seed)
     out = []
     for i in range(n):
+        j = i // 6
         if i % 6 == 0:
             out.append(_tree(oracle, rng, 2, kind="bool"))
         elif i % 6 == 1:
-            out.append(_leaf(oracle, rng, kind=("prefix", "wildcard")[i % 12 // 6]))
+            kinds = ("prefix", "wildcard", "regexp", "range", "fuzzy")
+            out.append(_leaf(oracle, rng, kind=kinds[j % len(kinds)]))
         elif i % 6 == 2:
             out.append(_tree(oracle, rng, 2))
         elif i % 6 == 3:
-            lo = int(rng.integers(20, 120))
             out.append(Bool.of((Occur.MUST, _tree(oracle, rng, 2)),
-                               (Occur.FILTER, NumericRange("dl", lo, lo + 150))))
+                               (Occur.FILTER, _doc_values_filter(rng, j))))
         elif i % 6 == 4:
             out.append(FunctionScore(_tree(oracle, rng, 1), "dl",
-                                     ("multiply", "sum")[i % 12 // 6], 0.01))
-        elif i % 12 // 6:  # every doc but the tree's matches
+                                     ("multiply", "sum")[j % 2], 0.01))
+        elif j % 3 == 0:  # every doc but the tree's matches
             out.append(Bool.of((Occur.MUST, MatchAll()),
                                (Occur.MUST_NOT, _tree(oracle, rng, 1))))
-        else:
+        elif j % 3 == 1:
             out.append(Bool.of((Occur.SHOULD, MatchAll()),
                                (Occur.SHOULD, _tree(oracle, rng, 1))))
+        else:
+            out.append(MatchAll())
     return out
 
 
@@ -290,15 +319,10 @@ def _has_phrase(q) -> bool:
 
 def _route(s, q):
     """The route search() must take: none for a query that rewrites to
-    nothing, Spark for a top-level multi-term query (scanned by
-    predicate), a doc-values channel or a MatchAll inside the plan, else
-    the driver (every key set here is far below MAX_DOCS_PER_SLICE)."""
-    prepared = s._prepare(q)
-    if prepared.plan is None:
-        return None
-    spark = (prepared.mtq or prepared.nrs or prepared.vsf
-             or "matchall" in kernel.plan_node_types(prepared.plan))
-    return "spark" if spark else "driver"
+    nothing, else the driver — the index's doc_count plus every key set
+    here is far below MAX_DOCS_PER_SLICE, multi-term, doc-values and
+    MatchAll plans included."""
+    return None if s._prepare(q).plan is None else "driver"
 
 
 def test_random_trees_agree_on_every_entry_point(routed, monkeypatch):
@@ -306,7 +330,7 @@ def test_random_trees_agree_on_every_entry_point(routed, monkeypatch):
     for q in _random_queries(oracle, SEED + 4, 30):
         route = _route(s, q)
         hits = _three_routes(s, monkeypatch, q, route=route)
-        if isinstance(q, (Prefix, Wildcard)):
+        if isinstance(q, (Prefix, Wildcard, Regexp, TermRange, MatchAll)):
             assert (hits["score"] == 1.0).all(), q
         if len(hits):
             after = (float(hits["score"].iloc[-1]), int(hits["global_doc_id"].iloc[-1]))

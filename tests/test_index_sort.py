@@ -17,7 +17,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from lucene_solr_1_spark.index.builder import add_documents, build_index
+from lucene_solr_1_spark.index.builder import add_documents, build_index, norms_paths
 from lucene_solr_1_spark.search.query import Bool, MatchAll, Occur, Term
 from lucene_solr_1_spark.search.searcher import LuceneSparkSearcher
 
@@ -32,9 +32,14 @@ def sorted_searcher(spark, tiny_corpus_pdf, tmp_path_factory):
     return LuceneSparkSearcher(spark, d)
 
 
+def _docmap(searcher):
+    """The searcher's docmap files as a Spark scan."""
+    return searcher.spark.read.parquet(*norms_paths(searcher.index_dir, searcher.manifest))
+
+
 def _stored_lengths(searcher):
     """(global_doc_id -> n_chars, content) from the docmap."""
-    pdf = searcher._norms.select(
+    pdf = _docmap(searcher).select(
         "segment_id", "doc_id", "n_chars", "content"
     ).toPandas()
     pdf["global_doc_id"] = pdf["segment_id"].map(searcher.doc_base) + pdf["doc_id"]
@@ -172,7 +177,7 @@ def test_unsorted_search_unaffected(spark, tiny_corpus_pdf, tmp_path_factory):
     ref = tiny_corpus_pdf.sort_values(["repo", "path", "commit"]).reset_index(
         drop=True
     )
-    got = s._norms.select("segment_id", "doc_id", "path").toPandas()
+    got = _docmap(s).select("segment_id", "doc_id", "path").toPandas()
     got["gid"] = got["segment_id"].map(s.doc_base) + got["doc_id"]
     got = got.sort_values("gid")
     assert got["path"].tolist() == ref["path"].tolist()

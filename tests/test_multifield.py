@@ -172,7 +172,7 @@ def test_numeric_set_standalone(searcher, oracle):
 
 def test_numeric_set_equals_dense_range(searcher):
     """An integer doc-value set covering [lo, hi] contiguously must be
-    result-identical to the NumericRange filter — same cogrouped channel,
+    result-identical to the NumericRange filter — same doc-values sets,
     two different set_ids."""
     from lucene_solr_1_spark.search.query import NumericSet
 
@@ -211,9 +211,9 @@ def test_numeric_set_local_mode_matches(searcher):
 
 
 def test_numeric_must_not_with_matchall(searcher, oracle):
-    """*:* minus a numeric range — exercises sentinel dispatch + cogroup
-    together (segments whose docs ALL fall outside the range must still
-    be dispatched and returned)."""
+    """*:* minus a numeric range — a matchall plan with a doc-values set
+    (segments whose docs ALL fall outside the range must still be
+    scored and returned)."""
     q = Bool.of(
         (Occur.SHOULD, MatchAll()),
         (Occur.MUST_NOT, NumericRange("dl", 0, 50)),
@@ -267,7 +267,7 @@ def test_search_many_with_numeric_filter(searcher):
 
 
 def test_parsed_numeric_range_end_to_end(searcher, oracle):
-    """parse('return AND dl:[50 TO 200]') runs the cogrouped doc-values
+    """parse('return AND dl:[50 TO 200]') runs the doc-values
     filter; as a MUST clause the constant-score range adds 1.0."""
     q = parse("return AND dl:[50 TO 200]")
     hits = searcher.search(q, k=10, with_stored=False)

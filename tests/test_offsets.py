@@ -6,7 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from lucene_solr_1_spark.index.builder import add_documents, build_index
+from lucene_solr_1_spark.index.builder import add_documents, build_index, norms_paths
 from lucene_solr_1_spark.kernels.analyzer import _TOKEN_RE
 from lucene_solr_1_spark.search.query import Term
 from lucene_solr_1_spark.search.searcher import LuceneSparkSearcher
@@ -42,7 +42,8 @@ def test_offsets_roundtrip_and_mixed_case(spark, tmp_path):
     assert "alpha" in got.loc["p/2", "snippet"]
     # spans agree with a direct reference tokenization of every doc
     stored = (
-        s._norms.select("path", "content", "off_starts", "off_ends")
+        s.spark.read.parquet(*norms_paths(s.index_dir, s.manifest))
+        .select("path", "content", "off_starts", "off_ends")
         .toPandas()
         .set_index("path")
     )

@@ -113,7 +113,7 @@ def _random_query_r2(rng: np.random.Generator):
 def test_randomized_r2_invariances(spark, tmp_path_factory, seed):
     """Round-2 query shapes under two universal invariants: WAND ==
     exhaustive, and results independent of segment count (1 vs n) —
-    covers multi-field merge, cogrouped numeric filters, span matching
+    covers multi-field merge, numeric doc-values filters, span matching
     and fuzzy rewrite without per-shape oracle code."""
     rng = np.random.default_rng(seed)
     pdf = _random_corpus_ml(rng, int(rng.integers(30, 90)))

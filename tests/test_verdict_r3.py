@@ -94,8 +94,8 @@ def test_function_score_in_batch_and_explainable(spark, tmp_path):
     np.testing.assert_array_equal(
         got["score"].to_numpy(np.float32), single["score"].to_numpy(np.float32)
     )
-    # composes inside Bool with a FILTER clause (cogroup carries both
-    # the filter set and the value source)
+    # composes inside Bool with a FILTER clause (the doc-values sets
+    # carry both the filter set and the value source)
     from lucene_solr_1_spark.search.query import NumericRange
 
     mixed = s.search(
