@@ -498,6 +498,25 @@ class SegmentData:
         self._decoded[key] = out
         return out
 
+    def docs(self, key) -> np.ndarray:
+        """The sorted docIDs of `key` alone, for a clause that only
+        matches (a FILTER or MUST_NOT term, a constant-score expansion):
+        the memoized postings' docs when decoded, else only the doc
+        streams, memoized beside the postings."""
+        if isinstance(key, str):
+            key = ("content", key)
+        got = self._decoded.get(key)
+        if got is not None:
+            return got[0]
+        memo = (key, "docs")
+        got = self._decoded.get(memo)
+        if got is None:
+            parts = [_decode_docs(r, shift) for shift, r in self._parts(key)]
+            got = (_EMPTY_I if not parts else parts[0] if len(parts) == 1
+                   else np.concatenate(parts))
+            self._decoded[memo] = got
+        return got
+
     def positions(self, key):
         """(docs, freqs, starts, pos): the flat position array and each
         posting's run start in it (by freqs), or None. Decoded once and
@@ -565,11 +584,17 @@ class SliceData(SegmentData):
         return self.rows.get(key, [])
 
 
-def _decode_postings(r, shift: int):
-    """(docs shifted by `shift`, freqs, norms) of one posting row."""
+def _decode_docs(r, shift: int) -> np.ndarray:
+    """The docIDs of one posting row, shifted by `shift`."""
     docs = np.cumsum(decode_all(bytes(r.docs_enc), np.asarray(r.docs_offsets)))
     if shift:
         docs += shift
+    return docs
+
+
+def _decode_postings(r, shift: int):
+    """(docs shifted by `shift`, freqs, norms) of one posting row."""
+    docs = _decode_docs(r, shift)
     freqs = decode_all(bytes(r.freqs_enc), np.asarray(r.freqs_offsets))
     norms = np.frombuffer(bytes(r.norms_enc), dtype=np.uint8).astype(np.int64)
     return docs, freqs, norms
@@ -741,7 +766,7 @@ def eval_node(node: dict, seg: SegmentData, cache):
         # constant-score union of the expansion's posting rows (multi-term
         # query CONSTANT_SCORE_REWRITE: score = boost, no per-term BM25)
         # over the expanded (field, term) keys the plan lists
-        parts = [seg.postings(tuple(term))[0] for term in node["keys"]]
+        parts = [seg.docs(tuple(term)) for term in node["keys"]]
         parts = [d for d in parts if len(d)]
         if not parts:
             return _EMPTY_I, _EMPTY_F
@@ -832,52 +857,110 @@ def eval_node(node: dict, seg: SegmentData, cache):
     raise ValueError(f"unknown node {t}")
 
 
+def _member(a: np.ndarray, b: np.ndarray):
+    """(hit, idx): which docIDs of `a` occur in `b`, and where — `idx[i]`
+    is a[i]'s position in `b` wherever hit[i]. One binary search of `b`
+    per entry of `a`, so a short list probes a long one in
+    O(|a| log |b|) (HERO's small-against-large intersection) with no
+    sort of the union, as np.isin does. Both must be sorted, unique
+    docID arrays."""
+    idx = np.searchsorted(b, a)
+    if len(b) == 0:
+        return np.zeros(len(a), dtype=bool), idx
+    np.minimum(idx, len(b) - 1, out=idx)
+    return b[idx] == a, idx
+
+
+def _match_docs(node, seg, cache) -> np.ndarray:
+    """The docs a non-scoring clause (FILTER, MUST_NOT) matches: a term
+    reads only its doc stream."""
+    if node["type"] == "term":
+        return seg.docs(_node_key(node, node["term"]))
+    return eval_node(node, seg, cache)[0]
+
+
 def _eval_bool(node, seg, cache):
-    musts, shoulds, filters, must_nots = [], [], [], []
+    """BooleanQuery. With a MUST or FILTER clause the candidates are the
+    required clauses' doc lists intersected shortest first
+    (ConjunctionDISI leads with its cheapest iterator), and a MUST or
+    SHOULD term is scored only at the candidates; any other clause is
+    evaluated whole and joined by _member. Scores add the MUST clauses,
+    then the SHOULD clauses, each in clause order, so every float64 sum
+    keeps one order. Without one it is a pure disjunction."""
+    by = {"MUST": [], "SHOULD": [], "FILTER": [], "MUST_NOT": []}
     for cl in node["clauses"]:
-        sub = eval_node(cl["node"], seg, cache)
-        {"MUST": musts, "SHOULD": shoulds, "FILTER": filters, "MUST_NOT": must_nots}[
-            cl["occur"]
-        ].append(sub)
-    msm = node["msm"]
-
-    if musts or filters:
-        cand = None
-        for d, _ in musts + filters:
-            cand = d if cand is None else cand[np.isin(cand, d, assume_unique=True)]
-        scores = np.zeros(len(cand), dtype=np.float64)
-        for d, s in musts:
-            idx = np.searchsorted(d, cand)
-            scores += s[idx]
-        if shoulds:
-            scnt = np.zeros(len(cand), dtype=np.int64)
-            for d, s in shoulds:
-                m = np.isin(cand, d, assume_unique=True)
-                idx = np.searchsorted(d, cand[m])
-                scores[m] += s[idx]
-                scnt[m] += 1
-            if msm > 0:
-                keep = scnt >= msm
-                cand, scores = cand[keep], scores[keep]
-        docs = cand
+        by[cl["occur"]].append(cl["node"])
+    if by["MUST"] or by["FILTER"]:
+        docs, scores = _eval_conjunction(by, node["msm"], seg, cache)
     else:
-        # pure disjunction with minShouldMatch (MinShouldMatchSumScorer)
-        eff_msm = max(msm, 1)
-        if not shoulds:
-            return _EMPTY_I, _EMPTY_F
-        alldocs = np.concatenate([d for d, _ in shoulds])
-        allscores = np.concatenate([s for _, s in shoulds])
-        docs, inv = np.unique(alldocs, return_inverse=True)
-        scores = np.zeros(len(docs), dtype=np.float64)
-        np.add.at(scores, inv, allscores)
-        cnt = np.bincount(inv, minlength=len(docs))
-        keep = cnt >= eff_msm
+        docs, scores = _eval_disjunction(by["SHOULD"], max(node["msm"], 1), seg, cache)
+    for nd in by["MUST_NOT"]:
+        if not len(docs):
+            break
+        keep = ~_member(docs, _match_docs(nd, seg, cache))[0]
         docs, scores = docs[keep], scores[keep]
-
-    for d, _ in must_nots:
-        m = ~np.isin(docs, d, assume_unique=True)
-        docs, scores = docs[m], scores[m]
     return docs, scores
+
+
+def _eval_conjunction(by: dict, msm: int, seg, cache):
+    # a MUST term keeps its postings to be scored at the candidates;
+    # any other MUST clause is evaluated whole
+    musts = [None if nd["type"] == "term" else eval_node(nd, seg, cache)
+             for nd in by["MUST"]]
+    lists = [seg.postings(_node_key(nd, nd["term"]))[0] if ev is None else ev[0]
+             for nd, ev in zip(by["MUST"], musts)]
+    lists += [_match_docs(nd, seg, cache) for nd in by["FILTER"]]
+    lists.sort(key=len)
+    cand = lists[0]
+    for d in lists[1:]:
+        if not len(cand):
+            break
+        cand = cand[_member(cand, d)[0]]
+    if not len(cand):
+        return _EMPTY_I, _EMPTY_F
+    scores = np.zeros(len(cand), dtype=np.float64)
+    for nd, ev in zip(by["MUST"], musts):
+        if ev is None:
+            docs, freqs, norms = seg.postings(_node_key(nd, nd["term"]))
+            idx = np.searchsorted(docs, cand)
+            scores += _score_postings(nd, freqs[idx], norms[idx], cache).astype(np.float64)
+        else:
+            scores += ev[1][np.searchsorted(ev[0], cand)]
+    if by["SHOULD"]:
+        scnt = np.zeros(len(cand), dtype=np.int64)
+        for nd in by["SHOULD"]:
+            if nd["type"] == "term":
+                docs, freqs, norms = seg.postings(_node_key(nd, nd["term"]))
+                if not len(docs):
+                    continue
+                hit, idx = _member(cand, docs)
+                idx = idx[hit]
+                s = _score_postings(nd, freqs[idx], norms[idx], cache).astype(np.float64)
+            else:
+                docs, s = eval_node(nd, seg, cache)
+                hit, idx = _member(cand, docs)
+                s = s[idx[hit]]
+            scores[hit] += s
+            scnt[hit] += 1
+        if msm > 0:
+            keep = scnt >= msm
+            cand, scores = cand[keep], scores[keep]
+    return cand, scores
+
+
+def _eval_disjunction(shoulds: list, msm: int, seg, cache):
+    """Pure disjunction with minShouldMatch (MinShouldMatchSumScorer)."""
+    if not shoulds:
+        return _EMPTY_I, _EMPTY_F
+    subs = [eval_node(nd, seg, cache) for nd in shoulds]
+    alldocs = np.concatenate([d for d, _ in subs])
+    allscores = np.concatenate([s for _, s in subs])
+    docs, inv = np.unique(alldocs, return_inverse=True)
+    scores = np.zeros(len(docs), dtype=np.float64)
+    np.add.at(scores, inv, allscores)
+    cnt = np.bincount(inv, minlength=len(docs))
+    keep = cnt >= msm
+    return docs[keep], scores[keep]
 
 
 def _eval_dismax(node, seg, cache):
@@ -919,10 +1002,11 @@ def _eval_phrase(node, seg, cache):
     if any(p is None for p in post):
         return _EMPTY_I, _EMPTY_F
     slop = int(node.get("slop", 0))
-    # candidate docs: conjunction of all terms
-    cand = post[0][0]
-    for d, *_ in post[1:]:
-        cand = cand[np.isin(cand, d, assume_unique=True)]
+    # candidate docs: conjunction of all terms, shortest first
+    lists = sorted((p[0] for p in post), key=len)
+    cand = lists[0]
+    for d in lists[1:]:
+        cand = cand[_member(cand, d)[0]]
     if len(cand) == 0:
         return _EMPTY_I, _EMPTY_F
     if slop == 0:
@@ -2113,7 +2197,7 @@ def apply_live(docs: np.ndarray, scores64: np.ndarray, deleted):
     `deleted` is a sorted int64 array of tombstoned local docIDs."""
     if deleted is None or len(deleted) == 0 or len(docs) == 0:
         return docs, scores64
-    keep = ~np.isin(docs, deleted, assume_unique=True)
+    keep = ~_member(docs, deleted)[0]
     return docs[keep], scores64[keep]
 
 
@@ -2135,8 +2219,10 @@ def score_exhaustive(plan: dict, seg: SegmentData, cache: np.ndarray, k: int,
                      after=None, doc_base: int = 0, deleted=None):
     docs, scores64 = eval_node(plan, seg, cache)
     docs, scores64 = apply_live(docs, scores64, deleted)
-    docs, scores64 = apply_after(docs, scores64, after, doc_base)
+    # every live match counts, paged or not (PagingTopScoreDocCollector
+    # counts totalHits before its after test)
     total = len(docs)
+    docs, scores64 = apply_after(docs, scores64, after, doc_base)
     d, s = top_k(docs, scores64, k)
     return d, s, total, "EQUAL_TO"
 
@@ -2494,18 +2580,19 @@ def score_wand(plan: dict, seg: SegmentData, cache: np.ndarray, k: int,
         if window_dead or (not req_parts and not opt_parts):
             continue
         if req_parts:
-            # conjunction inside the window: leapfrog = sorted intersect
-            docs_u = req_parts[0][0]
-            for dd, _ in req_parts[1:]:
-                docs_u = docs_u[np.isin(docs_u, dd, assume_unique=True)]
+            # conjunction inside the window: shortest list first
+            lists = sorted((dd for dd, _ in req_parts), key=len)
+            docs_u = lists[0]
+            for dd in lists[1:]:
+                docs_u = docs_u[_member(docs_u, dd)[0]]
             if len(docs_u) == 0:
                 continue
             ssum = np.zeros(len(docs_u), dtype=np.float64)
             for dd, s in req_parts:
                 ssum += s[np.searchsorted(dd, docs_u)]
             for dd, s in opt_parts:
-                m = np.isin(docs_u, dd, assume_unique=True)
-                ssum[m] += s[np.searchsorted(dd, docs_u[m])]
+                m, idx = _member(docs_u, dd)
+                ssum[m] += s[idx[m]]
         else:
             alld = np.concatenate([dd for dd, _ in opt_parts])
             alls = np.concatenate([s for _, s in opt_parts])
@@ -2513,8 +2600,8 @@ def score_wand(plan: dict, seg: SegmentData, cache: np.ndarray, k: int,
             ssum = np.zeros(len(docs_u), dtype=np.float64)
             np.add.at(ssum, inv, alls)
         docs_u, ssum = apply_live(docs_u, ssum, deleted)
-        docs_u, ssum = apply_after(docs_u, ssum, after, doc_base)
         total += len(docs_u)
+        docs_u, ssum = apply_after(docs_u, ssum, after, doc_base)
         cd = np.concatenate((best_docs, docs_u))
         cs = np.concatenate((best_scores.astype(np.float64), ssum))
         best_docs, best_scores = top_k(cd, cs, k)

@@ -9,7 +9,8 @@ Weight once and runs it per leaf slice):
     against the term dictionary (TopTermsRewrite cap 1024), rewritten and
     compiled behind the global-stats barrier: per-term docFreq summed
     across segments, docCount/sumTTF from the manifest — baked into a
-    picklable float32 plan (createWeight analog). The term dictionary
+    picklable float32 plan (createWeight analog), memoized per (query,
+    similarity) for the searcher's lifetime. The term dictionary
     (Terms.intersect) and the stats (TermStates.build) are read on the
     driver from the segment files' field/term/doc_freq/ttf columns (no
     Spark job; index/segfiles.py).
@@ -41,12 +42,15 @@ then reports relation GREATER_THAN_OR_EQUAL_TO, with total_hits counting
 only the windows it scored. Lucene's rule of counting exactly up to
 TOTAL_HITS_THRESHOLD = 1000 hits (IndexSearcher.java:101) before pruning
 is not implemented. A segment of at most K.WAND_WINDOW docs is scored
-exhaustively, alone or in a slice, so its count is always exact.
+exhaustively, alone or in a slice, so its count is always exact. A
+searchAfter page counts every match, not only those past the mark
+(PagingTopScoreDocCollector counts before its after test).
 """
 
 from __future__ import annotations
 
 import re
+import threading
 from functools import cached_property, partial
 from typing import NamedTuple
 
@@ -74,14 +78,23 @@ from .query import (
 # doc) stays within it is one slice, scored on the driver.
 MAX_DOCS_PER_SLICE = 250_000
 
+# whole results kept per searcher (search()'s result cache)
+RESULT_CACHE_SIZE = 128
+
+# prepared plans kept per searcher (_prepare's memo): LRUQueryCache's
+# default maxSize
+PLAN_CACHE_SIZE = 1000
+
 _STORED_COLUMNS = [
     "segment_id", "doc_id", "repo", "path", "commit", "lang", "dl",
     "n_chars", "content",
 ]
 
-# the Spark route's hit rows (one per per-slice top-k hit)
-_HIT_SCHEMA = (
-    "query string, segment_id string, doc_id bigint, score float, "
+# the Spark route's rows: one per (query, segment) part of a slice's
+# top-k, its hits as arrays, so a part with no hit still carries its
+# total
+_PART_SCHEMA = (
+    "query string, segment_id string, doc_id array<bigint>, score array<float>, "
     "total bigint, relation string"
 )
 
@@ -104,6 +117,43 @@ _NO_ROWS = pd.DataFrame(columns=["field", "term"])
 
 # the dictionary of a field no segment holds: (terms, doc_freqs)
 _NO_TERMS = (np.empty(0, object), np.empty(0, np.int64))
+
+
+class _LRU:
+    """A bounded least-recently-used map, LRUQueryCache's policy: a hit
+    moves to the back, an insert evicts from the front. An unhashable
+    key is never cached: get misses and put does nothing. Safe to share
+    between threads."""
+
+    def __init__(self, size: int):
+        self.size = size
+        self._d: dict = {}
+        self._lock = threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._d)
+
+    def clear(self) -> None:
+        with self._lock:
+            self._d.clear()
+
+    def get(self, key):
+        with self._lock:
+            try:
+                value = self._d.pop(key)
+            except (KeyError, TypeError):  # TypeError: unhashable key
+                return None
+            self._d[key] = value  # re-insert = most recent
+            return value
+
+    def put(self, key, value) -> None:
+        with self._lock:
+            try:
+                self._d[key] = value
+            except TypeError:
+                return
+            while len(self._d) > self.size:
+                self._d.pop(next(iter(self._d)))
 
 
 class _Slice(NamedTuple):
@@ -339,7 +389,7 @@ def _slice_task(batches, *, index_dir: str, manifest: dict, slices: list,
                 **score):
     """mapInPandas body of the Spark route: leaf slice `id` (one per
     task) read from its own segment files — the keys' posting rows and
-    the doc-values sets — through _score_slice, returned as _HIT_SCHEMA
+    the doc-values sets — through _score_slice, returned as _PART_SCHEMA
     rows tagged with the plan name."""
     for pdf in batches:
         for i in pdf["id"].tolist():
@@ -348,17 +398,16 @@ def _slice_task(batches, *, index_dir: str, manifest: dict, slices: list,
                 s for s in manifest["segments"] if s["segment_id"] in sl.sids]}
             rows = segfiles.read_postings(index_dir, mine, keys, columns)
             dv = _doc_values(index_dir, mine, nrs, vsf) if nrs or vsf else {}
-            hits = [(name, p) for name, parts in
-                    _score_slice(sl, sl.view(rows), dv, extras[i], **score).items()
-                    for p in parts]
-            lens = [len(p[1]) for _, p in hits]
+            parts = [(name, p) for name, ps in
+                     _score_slice(sl, sl.view(rows), dv, extras[i], **score).items()
+                     for p in ps]
             yield pd.DataFrame({
-                "query": np.repeat(np.asarray([n for n, _ in hits], dtype=object), lens),
-                "segment_id": np.repeat(np.asarray([p[0] for _, p in hits], dtype=object), lens),
-                "doc_id": np.concatenate([p[1] for _, p in hits]).astype(np.int64),
-                "score": np.concatenate([p[2] for _, p in hits]).astype(np.float32),
-                "total": np.repeat(np.asarray([p[3] for _, p in hits], np.int64), lens),
-                "relation": np.repeat(np.asarray([p[4] for _, p in hits], dtype=object), lens),
+                "query": [n for n, _ in parts],
+                "segment_id": [p[0] for _, p in parts],
+                "doc_id": [p[1].astype(np.int64) for _, p in parts],
+                "score": [p[2].astype(np.float32) for _, p in parts],
+                "total": np.asarray([p[3] for _, p in parts], np.int64),
+                "relation": [p[4] for _, p in parts],
             })
 
 
@@ -405,14 +454,12 @@ class LuceneSparkSearcher:
         # shipped to the scoring kernels alongside the query plan
         self.tombstones = read_tombstones(index_dir, self.manifest)
         # whole-result LRU keyed by (query, k, wand, after) — the
-        # LRUQueryCache analog at query granularity: the index is
-        # IMMUTABLE under this manifest generation, so entries never go
-        # stale; a reopened searcher (new generation) starts empty.
-        self._result_cache: dict = {}
-        self.result_cache_size = 128
-        import threading
-
-        self._cache_lock = threading.Lock()
+        # LRUQueryCache analog at query granularity — and the plan memo
+        # keyed by (query, similarity): the index is IMMUTABLE under this
+        # manifest generation, so entries never go stale; a reopened
+        # searcher (new generation) starts empty.
+        self._result_cache = _LRU(RESULT_CACHE_SIZE)
+        self._plans = _LRU(PLAN_CACHE_SIZE)
         # the analyzer the index was BUILT with (manifest-persisted name):
         # query terms are re-analyzed with the same chain so a stemmed
         # index stems query terms too (QueryParser-with-analyzer parity).
@@ -853,25 +900,10 @@ class LuceneSparkSearcher:
         repeated queries against an immutable manifest skip all Spark
         jobs."""
         cache_key = (q, k, use_wand, with_stored, after, similarity)
-        with self._cache_lock:
-            try:
-                cached = self._result_cache.pop(cache_key)
-            except (KeyError, TypeError):  # TypeError: unhashable query
-                cached = None
-            else:
-                self._result_cache[cache_key] = cached  # re-insert = MRU
-        if cached is not None:
-            out = cached.copy()
-            out.attrs.update(cached.attrs)
-            return out
-        hits = self._search_uncached(q, k, use_wand, with_stored, after, similarity)
-        with self._cache_lock:
-            try:
-                self._result_cache[cache_key] = hits
-            except TypeError:
-                return hits
-            while len(self._result_cache) > self.result_cache_size:
-                self._result_cache.pop(next(iter(self._result_cache)))
+        hits = self._result_cache.get(cache_key)
+        if hits is None:
+            hits = self._search_uncached(q, k, use_wand, with_stored, after, similarity)
+            self._result_cache.put(cache_key, hits)
         out = hits.copy()
         out.attrs.update(hits.attrs)
         return out
@@ -939,6 +971,19 @@ class LuceneSparkSearcher:
     # ---------------- prepare → score → merge ------------------------------
 
     def _prepare(self, q: Query, similarity=None) -> _Prepared:
+        """_plan_query's result, memoized per (query, similarity) for the
+        searcher's lifetime (an unhashable query or similarity is
+        prepared uncached). Callers share the memoized plan, so nothing
+        may write into it after compile_plan: search_sorted and rescore
+        wrap it in new nodes."""
+        key = (q, similarity)
+        prepared = self._plans.get(key)
+        if prepared is None:
+            prepared = self._plan_query(q, similarity)
+            self._plans.put(key, prepared)
+        return prepared
+
+    def _plan_query(self, q: Query, similarity=None) -> _Prepared:
         """analyze → rewrite, then one of two: a top-level multi-term
         query takes MultiTermQuery's default CONSTANT_SCORE_REWRITE —
         every matching term listed under the plan's "keys", score 1.0, no
@@ -1105,12 +1150,12 @@ class LuceneSparkSearcher:
             **score,
         )
         n = len(slices)
-        hits = (self.spark.range(n, numPartitions=n)
-                .mapInPandas(task, schema=_HIT_SCHEMA).toPandas())
-        for (name, sid), g in hits.groupby(["query", "segment_id"], sort=False):
-            parts[name].append((
-                sid, g["doc_id"].to_numpy(np.int64), g["score"].to_numpy(np.float32),
-                int(g["total"].iloc[0]), g["relation"].iloc[0],
+        rows = (self.spark.range(n, numPartitions=n)
+                .mapInPandas(task, schema=_PART_SCHEMA).toPandas())
+        for r in rows.itertuples(index=False):
+            parts[r.query].append((
+                r.segment_id, np.asarray(r.doc_id, np.int64),
+                np.asarray(r.score, np.float32), int(r.total), r.relation,
             ))
         return parts
 

@@ -339,6 +339,26 @@ def test_random_trees_agree_on_every_entry_point(routed, monkeypatch):
             _three_routes(s, monkeypatch, q, route=route, similarity="lmd")
 
 
+def test_after_page_counts_every_match(routed, monkeypatch):
+    """A searchAfter page reports the unpaged total_hits on the driver,
+    Spark and cache routes alike: PagingTopScoreDocCollector counts each
+    match before its after test."""
+    s, oracle, _ = routed
+    rng = np.random.default_rng(SEED + 8)
+    paged = 0
+    for q in [Term("return"), MatchAll()] + [_tree(oracle, rng, 2, kind="bool")
+                                            for _ in range(8)]:
+        route = _route(s, q)
+        hits = _three_routes(s, monkeypatch, q, route=route)
+        if len(hits) < 2:
+            continue
+        after = (float(hits["score"].iloc[1]), int(hits["global_doc_id"].iloc[1]))
+        page = _three_routes(s, monkeypatch, q, route=route, after=after)
+        assert page.attrs == hits.attrs, q
+        paged += 1
+    assert paged >= 4
+
+
 def test_rescore_routes_agree_on_random_trees(routed, monkeypatch):
     s, oracle, _ = routed
     queries = _random_queries(oracle, SEED + 5, 8)

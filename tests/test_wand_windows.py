@@ -101,6 +101,23 @@ def test_wand_equals_exhaustive_over_windows(segment, name, window, paged):
         assert wt == et
 
 
+@pytest.mark.parametrize("name", list(SHAPES))
+def test_after_page_counts_every_live_match(segment, name):
+    """Paged or not, the exhaustive total is every live match, and so is
+    WAND's wherever it reports EQUAL_TO."""
+    seg, _df, _n, cache, deleted = segment
+    plan = _plan(segment, SHAPES[name])
+    kw = dict(doc_base=DOC_BASE, deleted=deleted)
+    _d, _s, unpaged, _r = K.score_exhaustive(plan, seg, cache, K_TOP, **kw)
+    after = _after(segment, plan)
+    _d, _s, et, _r = K.score_exhaustive(plan, seg, cache, K_TOP, after=after, **kw)
+    assert et == unpaged
+    for window in WINDOWS:
+        _d, _s, wt, wr = K.score_wand(plan, seg, cache, K_TOP, window=window,
+                                      after=after, **kw)
+        assert wt == et if wr == "EQUAL_TO" else wt <= et
+
+
 def test_wand_prunes_some_window(segment):
     """At least one case skips a window that holds matches: relation
     GREATER_THAN_OR_EQUAL_TO and a total below the exhaustive count."""
