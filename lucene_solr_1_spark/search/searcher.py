@@ -23,19 +23,27 @@ Weight once and runs it per leaf slice):
     most K.WAND_WINDOW docs, read as one docBase-shifted segment
     (K.SliceData, the MultiPostingsEnum analog) and scored
     exhaustively; a larger segment is its own slice and keeps block-max
-    WAND. A batch whose work fits one thread (the summed global ttf of
-    its keys, plus doc_count when a plan reads every doc — a matchall,
-    a doc-values set or a value source — at most MAX_DOCS_PER_SLICE) is
-    scored on the driver, as IndexSearcher.search runs a single slice
-    on the caller thread — a Spark dispatch costs ~100x the kernel work
-    of such a query. A bigger batch runs the same step as one Spark
-    task per slice, reading the slice's own segment files (leaves on
-    executors, no shuffle); search_local runs it on the driver over its
-    persistent per-slice cache.
- 3. _merge: NumPy k-way merge with the reference tie-break: score desc,
-    then global docID asc (TopDocs.merge, TopDocs.java:203-265); the
-    top-k stored fields are read on the driver from their segments'
-    docmaps.
+    WAND. Above the kernel every docID is global: the doc-values sets
+    and rescore's first-pass docs are sorted global arrays that each
+    slice cuts to its own span on the way in, and a slice's hits leave
+    it as global docIDs (the leaf collector adding docBase). A batch
+    whose work fits one thread (the summed global ttf of its keys, plus
+    doc_count when a plan reads every doc — a matchall, a doc-values
+    set or a value source — at most MAX_DOCS_PER_SLICE) is scored on
+    the driver, as IndexSearcher.search runs a single slice on the
+    caller thread — a Spark dispatch costs ~100x the kernel work of
+    such a query. A bigger batch runs the same step as one Spark task
+    per slice, reading the slice's own segment files (leaves on
+    executors, no shuffle) and returning one row per (query, slice);
+    search_local runs it on the driver over its persistent per-slice
+    cache.
+ 3. _merge: NumPy k-way merge of the slices' global hits with the
+    reference tie-break: score desc, then global docID asc
+    (TopDocs.merge, TopDocs.java:203-265); only the top k are mapped
+    back to (segment_id, local docID), by _locate (ReaderUtil.subIndex),
+    and their stored fields are read on the driver from their segments'
+    docmaps. explain reads the slice holding its doc through the same
+    views and doc-values sets.
 
 Total hits: a WAND segment kernel prunes as soon as it holds k hits and
 then reports relation GREATER_THAN_OR_EQUAL_TO, with total_hits counting
@@ -90,11 +98,11 @@ _STORED_COLUMNS = [
     "n_chars", "content",
 ]
 
-# the Spark route's rows: one per (query, segment) part of a slice's
-# top-k, its hits as arrays, so a part with no hit still carries its
+# the Spark route's rows: one per (query, slice), the slice's top-k as
+# global docIDs and scores, so a slice with no hit still carries its
 # total
 _PART_SCHEMA = (
-    "query string, segment_id string, doc_id array<bigint>, score array<float>, "
+    "query string, global_doc_id array<bigint>, score array<float>, "
     "total bigint, relation string"
 )
 
@@ -173,39 +181,19 @@ class _Slice(NamedTuple):
             return K.SegmentData(rows, self.n_docs)
         return K.SliceData(rows, self.n_docs, dict(zip(self.sids, self.offsets.tolist())))
 
-    def allowed(self, dv: dict) -> dict | None:
-        """The members' doc-values sets ({segment_id: {set_id: sorted
-        docIDs | (docs, values)}}) as one set per set_id in slice
-        docIDs."""
-        if len(self.sids) == 1 or not dv:
-            return dv.get(self.sids[0])
-        out: dict = {}
-        for sid, shift in zip(self.sids, self.offsets):
-            for set_id, payload in dv.get(sid, {}).items():
-                out.setdefault(set_id, []).append((shift, payload))
-        for set_id, parts in out.items():
-            if isinstance(parts[0][1], tuple):  # (docs, values)
-                out[set_id] = (np.concatenate([d + s for s, (d, _) in parts]),
-                               np.concatenate([v for _, (_, v) in parts]))
-            else:
-                out[set_id] = np.concatenate([d + s for s, d in parts])
-        return out or None
-
-    def split(self, docs, scores, total: int, relation: str) -> list:
-        """A slice's hits as _merge parts, one (segment_id, local docs,
-        scores, total, relation) per member with hits (ReaderUtil.subIndex
-        by one searchsorted); the first part carries the slice's total."""
-        if len(self.sids) == 1:
-            return [(self.sids[0], docs, scores, total, relation)]
-        member = np.searchsorted(self.offsets, docs, side="right") - 1
-        parts = []
-        for m in np.unique(member):
-            sel = member == m
-            parts.append((self.sids[m], docs[sel] - self.offsets[m], scores[sel], 0, relation))
-        if not parts:
-            parts = [(self.sids[0], docs, scores, 0, relation)]
-        parts[0] = (*parts[0][:3], total, relation)
-        return parts
+    def allowed(self, sets: dict) -> dict | None:
+        """The global doc sets ({set_id: sorted global docIDs | (docs,
+        values)}: doc-values sets, rescore's first pass) cut to this
+        slice's span [base, base + n_docs), in slice docIDs."""
+        if not sets:
+            return None
+        out = {}
+        for set_id, payload in sets.items():
+            docs = payload[0] if isinstance(payload, tuple) else payload
+            lo, hi = np.searchsorted(docs, (self.base, self.base + self.n_docs))
+            cut = docs[lo:hi] - self.base
+            out[set_id] = (cut, payload[1][lo:hi]) if isinstance(payload, tuple) else cut
+        return out
 
 
 # ---------------- the term dictionary (Terms.intersect) --------------------
@@ -324,17 +312,21 @@ def _range_match(nr, vals: dict) -> np.ndarray:
 def _doc_values(index_dir: str, manifest: dict, nrs, vsf) -> dict:
     """The doc-values sets of the manifest's segments, read from the
     docmap files' columns (the NumericDocValues / points read of each
-    leaf): {segment_id: {set_id: sorted docIDs}} for each NumericRange,
-    NumericSet or RangeField, and {"values:<field>": (sorted docs,
-    float64 values)} for each value-source field."""
+    leaf) and laid end to end in doc_base order: {set_id: sorted global
+    docIDs} for each NumericRange, NumericSet or RangeField, and
+    {"values:<field>": (sorted global docs, float64 values)} for each
+    value-source field."""
     cols = _docvalue_columns(nrs, vsf)
-    out = {}
-    for sid, pdf in segfiles.read_docvalues(index_dir, manifest, cols).items():
-        vals = {c: pdf[c].to_numpy(np.float64) for c in cols}
-        docs = vals["doc_id"] = pdf["doc_id"].to_numpy(np.int64)
-        sets = {K.numeric_set_id(nr): docs[_range_match(nr, vals)] for nr in nrs}
-        sets.update({f"values:{f}": (docs, vals[f]) for f in vsf})
-        out[sid] = sets
+    base = {s["segment_id"]: s["doc_base"] for s in manifest["segments"]}
+    read = segfiles.read_docvalues(index_dir, manifest, cols)
+    order = sorted(read, key=base.__getitem__)
+    docs = np.concatenate([read[sid]["doc_id"].to_numpy(np.int64) + base[sid]
+                           for sid in order] + [np.empty(0, np.int64)])
+    vals = {c: np.concatenate([read[sid][c].to_numpy(np.float64) for sid in order]
+                              + [np.empty(0)]) for c in cols}
+    vals["doc_id"] = docs
+    out = {K.numeric_set_id(nr): docs[_range_match(nr, vals)] for nr in nrs}
+    out.update({f"values:{f}": (docs, vals[f]) for f in vsf})
     return out
 
 
@@ -371,26 +363,24 @@ def _score_segment(seg, plans: dict, caches, k: int, use_wand: bool, after,
     return out
 
 
-def _score_slice(sl: _Slice, seg, dv: dict, extra: dict, *, plans: dict,
-                 caches, k: int, use_wand: bool, after) -> dict:
+def _score_slice(sl: _Slice, seg, sets: dict, *, plans: dict, caches, k: int,
+                 use_wand: bool, after) -> dict:
     """The one per-slice step of every route: the slice's view `seg`
-    scored by _score_segment under its doc-values sets (`dv`, per
-    segment) and rescore's driver-held `extra` sets (already in slice
-    docIDs). Returns {name: [(segment_id, local docs, scores, total,
-    relation), ...]} for _merge."""
-    allowed = {**(sl.allowed(dv) or {}), **extra} or None
+    scored by _score_segment under the global doc sets `sets` (the
+    doc-values sets and rescore's first pass) cut to the slice. Returns
+    {name: (global docs, scores, total, relation)} for _merge."""
     res = _score_segment(seg, plans, caches, k, use_wand, after, sl.base,
-                         sl.deleted, allowed)
-    return {name: sl.split(*r) for name, r in res.items()}
+                         sl.deleted, sl.allowed(sets))
+    return {name: (docs + sl.base, *rest) for name, (docs, *rest) in res.items()}
 
 
 def _slice_task(batches, *, index_dir: str, manifest: dict, slices: list,
-                keys: set, columns: list, nrs: set, vsf: set, extras: list,
+                keys: set, columns: list, nrs: set, vsf: set, extra: dict,
                 **score):
     """mapInPandas body of the Spark route: leaf slice `id` (one per
     task) read from its own segment files — the keys' posting rows and
     the doc-values sets — through _score_slice, returned as _PART_SCHEMA
-    rows tagged with the plan name."""
+    rows, one per plan."""
     for pdf in batches:
         for i in pdf["id"].tolist():
             sl = slices[i]
@@ -398,16 +388,13 @@ def _slice_task(batches, *, index_dir: str, manifest: dict, slices: list,
                 s for s in manifest["segments"] if s["segment_id"] in sl.sids]}
             rows = segfiles.read_postings(index_dir, mine, keys, columns)
             dv = _doc_values(index_dir, mine, nrs, vsf) if nrs or vsf else {}
-            parts = [(name, p) for name, ps in
-                     _score_slice(sl, sl.view(rows), dv, extras[i], **score).items()
-                     for p in ps]
+            res = _score_slice(sl, sl.view(rows), {**dv, **extra}, **score)
             yield pd.DataFrame({
-                "query": [n for n, _ in parts],
-                "segment_id": [p[0] for _, p in parts],
-                "doc_id": [p[1].astype(np.int64) for _, p in parts],
-                "score": [p[2].astype(np.float32) for _, p in parts],
-                "total": np.asarray([p[3] for _, p in parts], np.int64),
-                "relation": [p[4] for _, p in parts],
+                "query": list(res),
+                "global_doc_id": [r[0].astype(np.int64) for r in res.values()],
+                "score": [r[1] for r in res.values()],
+                "total": np.asarray([r[2] for r in res.values()], np.int64),
+                "relation": [r[3] for r in res.values()],
             })
 
 
@@ -447,7 +434,7 @@ class LuceneSparkSearcher:
         }
         self._df_cache: dict = {}
         self._ttf_cache: dict = {}
-        self._dv_sets: dict = {}  # set_id -> {segment_id: payload}
+        self._dv_sets: dict = {}  # set_id -> global docs | (docs, values)
         from ..index.deletes import read_tombstones
 
         # tombstoned local docIDs per segment (live-docs analog) — tiny,
@@ -1012,7 +999,7 @@ class LuceneSparkSearcher:
                slices: list | None = None) -> dict:
         """Score a batch of prepared queries: the one route decision and
         the one per-slice loop of every entry point. Returns {name:
-        [(segment_id, docs, scores, total, relation), ...]} for _merge.
+        [(global docs, scores, total, relation) per slice]} for _merge.
 
         Routes (IndexSearcher.search's `leafSlices.length <= 1` branch):
         with `source="files"` a batch whose cost — the summed global ttf
@@ -1023,11 +1010,10 @@ class LuceneSparkSearcher:
         slice (_score_spark). `source="cache"` (search_local) scores here
         from the persistent per-slice cache, whatever the size. Here each
         slice holding a key (every slice when a plan reads every doc) is
-        one _score_slice call: its tombstones and doc-values sets are in
-        slice docIDs and its hits are split back into (segment_id, local
-        docID) parts. `slices` replaces the searcher's (self._slices) on
-        the files route. `extra` adds driver-held doc sets ({segment_id:
-        {set_id: sorted docIDs}}, rescore's first-pass docs)."""
+        one _score_slice call, which cuts the batch's global doc sets to
+        the slice. `slices` replaces the searcher's (self._slices) on the
+        files route. `extra` adds driver-held doc sets ({set_id: sorted
+        global docIDs}, rescore's first-pass docs)."""
         parts: dict = {n: [] for n in prepared}
         plans = {n: p.plan for n, p in prepared.items() if p.plan is not None}
         if not plans:
@@ -1040,8 +1026,7 @@ class LuceneSparkSearcher:
         whole = bool(nrs or vsf) or any(
             "matchall" in K.plan_node_types(p) for p in plans.values())
         slices = self._slices if source == "cache" else slices or self._slices
-        extras = ([sl.allowed(extra) or {} for sl in slices] if extra
-                  else [{}] * len(slices))
+        extra = extra or {}
         score = dict(plans=plans, caches=self.caches, k=k, use_wand=use_wand,
                      after=after)
         if source == "cache":
@@ -1050,13 +1035,13 @@ class LuceneSparkSearcher:
               + (self.doc_count if whole else 0)) <= MAX_DOCS_PER_SLICE:
             views = self._file_slices(keys, plans, slices)
         else:
-            return self._score_spark(slices, keys, nrs, vsf, extras, score, parts)
-        dv = self._local_allowed_maps(nrs, vsf) if nrs or vsf else {}
+            return self._score_spark(slices, keys, nrs, vsf, extra, score, parts)
+        sets = {**self._local_allowed_maps(nrs, vsf), **extra}
         for i in (range(len(slices)) if whole else views):
             sl = slices[i]
             seg = views.get(i) or sl.view(_NO_ROWS)
-            for n, p in _score_slice(sl, seg, dv, extras[i], **score).items():
-                parts[n].extend(p)
+            for n, r in _score_slice(sl, seg, sets, **score).items():
+                parts[n].append(r)
         return parts
 
     def _leaf_slices(self, max_docs: int) -> list[_Slice]:
@@ -1136,15 +1121,16 @@ class LuceneSparkSearcher:
         }
 
     def _score_spark(self, slices: list, keys: set, nrs: set, vsf: set,
-                     extras: list, score: dict, parts: dict) -> dict:
+                     extra: dict, score: dict, parts: dict) -> dict:
         """The Spark route of _score: one job of one mapInPandas task per
         leaf slice (spark.range(n, numPartitions=n) — no scan, no
         shuffle), each running the driver's per-slice step over its own
-        segment files (_slice_task); executors must see the index
-        directory, as the merge's tasks do."""
+        segment files (_slice_task) and cutting the driver-held `extra`
+        sets itself; executors must see the index directory, as the
+        merge's tasks do."""
         task = partial(
             _slice_task, index_dir=self.index_dir, manifest=self.manifest,
-            slices=slices, keys=keys, nrs=nrs, vsf=vsf, extras=extras,
+            slices=slices, keys=keys, nrs=nrs, vsf=vsf, extra=extra,
             columns=self._kernel_columns(self._postings_columns,
                                          *score["plans"].values()),
             **score,
@@ -1154,34 +1140,51 @@ class LuceneSparkSearcher:
                 .mapInPandas(task, schema=_PART_SCHEMA).toPandas())
         for r in rows.itertuples(index=False):
             parts[r.query].append((
-                r.segment_id, np.asarray(r.doc_id, np.int64),
+                np.asarray(r.global_doc_id, np.int64),
                 np.asarray(r.score, np.float32), int(r.total), r.relation,
             ))
         return parts
 
+    @cached_property
+    def _leaves(self) -> tuple[np.ndarray, np.ndarray]:
+        """(doc_bases, segment_ids) of the segments holding docs, in
+        doc_base order: an empty segment shares its doc_base with the
+        next one and owns no docID."""
+        segs = sorted((s for s in self.manifest["segments"] if s["doc_count"]),
+                      key=lambda s: s["doc_base"])
+        return (np.asarray([s["doc_base"] for s in segs], np.int64),
+                np.asarray([s["segment_id"] for s in segs], object))
+
+    def _locate(self, gids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(segment_ids, local docIDs) of global docIDs: ReaderUtil.subIndex
+        by one searchsorted over the doc_bases, the only way back from a
+        global docID to its segment."""
+        bases, sids = self._leaves
+        i = np.searchsorted(bases, gids, side="right") - 1
+        return sids[i], gids - bases[i]
+
     def _merge(self, parts: list, k: int | None) -> pd.DataFrame:
-        """TopDocs.merge (TopDocs.java:203-265), the one top-k merge:
-        per-segment hits ranked score desc, then global docID asc, cut to
-        k (None keeps all); total_hits sums the segments' totals and the
-        relation is EQUAL_TO only if every segment's is. NumPy only — it
-        runs on every driver-local query."""
-        total = sum(p[3] for p in parts)
-        equal = all(p[4] == "EQUAL_TO" for p in parts)
-        parts = [p for p in parts if len(p[1])]
-        seg = np.repeat(np.arange(len(parts)), [len(p[1]) for p in parts])
-        docs = np.concatenate([p[1] for p in parts] + [np.empty(0, np.int64)])
-        scores = np.concatenate([p[2] for p in parts] + [np.empty(0, np.float32)])
-        bases = np.asarray([self.doc_base.get(p[0], 0) for p in parts], dtype=np.int64)
-        gids = bases[seg] + docs
+        """TopDocs.merge (TopDocs.java:203-265), the one top-k merge: the
+        slices' global hits ranked score desc, then global docID asc, cut
+        to k (None keeps all), and only those mapped to (segment_id,
+        local docID); total_hits sums the slices' totals and the relation
+        is EQUAL_TO only if every slice's is. NumPy only — it runs on
+        every driver-local query."""
+        total = sum(p[2] for p in parts)
+        equal = all(p[3] == "EQUAL_TO" for p in parts)
+        gids = np.concatenate([p[0] for p in parts] + [np.empty(0, np.int64)])
+        scores = np.concatenate([p[1] for p in parts] + [np.empty(0, np.float32)])
         order = np.lexsort((gids, -scores.astype(np.float64)))[:k]
+        gids = gids[order]
+        sids, docs = self._locate(gids)
         # every column is a fresh fancy-indexed array, so the frame can
         # take it without a copy and still never alias a decode cache
         out = pd.DataFrame({
             "rank": np.arange(len(order)),
-            "segment_id": np.asarray([p[0] for p in parts], dtype=object)[seg[order]],
-            "doc_id": docs[order],
+            "segment_id": sids,
+            "doc_id": docs,
             "score": scores[order],
-            "global_doc_id": gids[order],
+            "global_doc_id": gids,
         }, copy=False)
         out.attrs["total_hits"] = total
         out.attrs["relation"] = "EQUAL_TO" if equal else "GREATER_THAN_OR_EQUAL_TO"
@@ -1329,17 +1332,14 @@ class LuceneSparkSearcher:
                     }},
                 ],
             })
-        first = {
-            sid: {"rescore:first": np.sort(g.to_numpy(np.int64))}
-            for sid, g in hits.groupby("segment_id")["doc_id"]
-        }
+        first = {"rescore:first": np.sort(hits["global_doc_id"].to_numpy(np.int64))}
         second = self._score(
             {"q": prepared}, first_k, use_wand=False, extra=first
         )
         merged = hits.merge(
-            self._merge(second["q"], None)[["segment_id", "doc_id", "score"]]
+            self._merge(second["q"], None)[["global_doc_id", "score"]]
             .rename(columns={"score": "score2"}),
-            on=["segment_id", "doc_id"],
+            on="global_doc_id",
             how="left",
         )
         first32 = merged["score"].to_numpy(np.float32)
@@ -1352,10 +1352,8 @@ class LuceneSparkSearcher:
         combined[matched] = np.float32(
             first32[matched].astype(np.float64) + float(weight) * score2[matched]
         )
-        out = self._merge([
-            (sid, merged["doc_id"].to_numpy(np.int64)[idx], combined[idx], 0, "EQUAL_TO")
-            for sid, idx in merged.groupby("segment_id").indices.items()
-        ], k)
+        out = self._merge(
+            [(merged["global_doc_id"].to_numpy(np.int64), combined, 0, "EQUAL_TO")], k)
         out.attrs.update(hits.attrs)
         return self._with_stored(out) if with_stored else out
 
@@ -1388,24 +1386,17 @@ class LuceneSparkSearcher:
 
     def _local_allowed_maps(self, nrs: set, vsf: set) -> dict:
         """The doc-values sets of a batch (NumericRange sets + FunctionScore
-        values), {segment_id: {set_id: sorted docIDs | (docs, values)}}:
-        each distinct set_id is read once from the docmap files
-        (_doc_values) and kept for the searcher's lifetime."""
+        values) in _doc_values' global form, {set_id: sorted global
+        docIDs | (docs, values)}: each distinct set_id is read once from
+        the docmap files and kept for the searcher's lifetime."""
         need_nrs = {nr for nr in nrs if K.numeric_set_id(nr) not in self._dv_sets}
         need_vsf = {f for f in vsf if f"values:{f}" not in self._dv_sets}
         if need_nrs or need_vsf:
-            fresh: dict = {}
-            read = _doc_values(self.index_dir, self.manifest, need_nrs, need_vsf)
-            for sid, sets in read.items():
-                for set_id, payload in sets.items():
-                    fresh.setdefault(set_id, {})[sid] = payload
             # published whole: a concurrent search never sees a set half-filled
-            self._dv_sets.update(fresh)
-        out: dict = {}
-        for set_id in [K.numeric_set_id(nr) for nr in nrs] + [f"values:{f}" for f in vsf]:
-            for sid, payload in self._dv_sets.get(set_id, {}).items():
-                out.setdefault(sid, {})[set_id] = payload
-        return out
+            self._dv_sets.update(
+                _doc_values(self.index_dir, self.manifest, need_nrs, need_vsf))
+        ids = [K.numeric_set_id(nr) for nr in nrs] + [f"values:{f}" for f in vsf]
+        return {set_id: self._dv_sets[set_id] for set_id in ids}
 
     def highlight_passages(
         self, hits: pd.DataFrame, q: Query, window: int = 10
@@ -1598,30 +1589,30 @@ class LuceneSparkSearcher:
         222-226 formula terms). The reference's similarity property tests
         assert explanation value == scorer score; tests do the same here.
         `similarity` swaps the scoring model exactly as in search(): the
-        plan is search()'s (_prepare), read from the segment files."""
+        plan is search()'s (_prepare), evaluated over the view of the
+        leaf slice holding the doc (_file_slices) under the same cut
+        doc-values sets."""
         prepared = self._prepare(q, similarity)
         if prepared.plan is None:
             return {"value": 0.0, "description": "MatchNone", "details": []}
-        # locate the owning segment
-        sid, base = None, -1
-        for s, b in self.doc_base.items():
-            if b <= global_doc_id and b > base:
-                sid, base = s, b
-        local = global_doc_id - base
-        rows = segfiles.read_postings(
-            self.index_dir, self.manifest, prepared.keys,
-            self._kernel_columns(self._postings_columns, prepared.plan),
-        )
-        seg = K.SegmentData(rows[rows["segment_id"] == sid],
-                            self.seg_doc_count.get(sid, local + 1))
-        return self._explain_node(prepared.plan, seg, local)
+        i, sl = next(((i, sl) for i, sl in enumerate(self._slices)
+                      if sl.base <= global_doc_id < sl.base + sl.n_docs), (None, None))
+        if sl is None:
+            raise ValueError(f"global_doc_id {global_doc_id} is not in the index")
+        seg =(self._file_slices(prepared.keys, {"q": prepared.plan}, self._slices).get(i)
+               or sl.view(_NO_ROWS))
+        seg = seg.with_allowed(sl.allowed(self._local_allowed_maps(prepared.nrs, prepared.vsf)))
+        local = int(self._locate(np.asarray([global_doc_id]))[1][0])
+        return self._explain_node(prepared.plan, seg, global_doc_id - sl.base, local)
 
-    def _explain_node(self, node: dict, seg, local: int) -> dict:
+    def _explain_node(self, node: dict, seg, doc: int, local: int) -> dict:
+        """The Explanation of `node` at `doc` of the slice view `seg`;
+        descriptions name the segment-local docID `local`."""
         from ..kernels.smallfloat import byte4_to_int
 
         docs, scores = K.eval_node(node, seg, self.caches)
-        i = np.searchsorted(docs, local)
-        matched = i < len(docs) and docs[i] == local
+        i = np.searchsorted(docs, doc)
+        matched = i < len(docs) and docs[i] == doc
         value = float(np.float32(scores[i])) if matched else 0.0
         t = node["type"]
         if t == "term":
@@ -1629,7 +1620,7 @@ class LuceneSparkSearcher:
                 return {"value": 0.0, "description": f"no match on term {node['term']!r}", "details": []}
             fld = node.get("field", "content")
             d, f, n = seg.postings((fld, node["term"]))
-            j = np.searchsorted(d, local)
+            j = np.searchsorted(d, doc)
             freq = int(f[j])
             dl = int(byte4_to_int(np.asarray([int(n[j])]))[0])
             sim_name = node.get("sim", {}).get("name") if "sim" in node else None
@@ -1647,13 +1638,13 @@ class LuceneSparkSearcher:
         details = []
         if t == "bool":
             for cl in node["clauses"]:
-                sub = self._explain_node(cl["node"], seg, local)
+                sub = self._explain_node(cl["node"], seg, doc, local)
                 sub["description"] = f"{cl['occur']}: " + sub["description"]
                 details.append(sub)
         elif t in ("dismax",):
-            details = [self._explain_node(s, seg, local) for s in node["nodes"]]
+            details = [self._explain_node(s, seg, doc, local) for s in node["nodes"]]
         elif t == "const":
-            details = [self._explain_node(node["node"], seg, local)]
+            details = [self._explain_node(node["node"], seg, doc, local)]
         return {
             "value": value,
             "description": {"bool": "sum of", "dismax": "max plus tie-broken sum of",

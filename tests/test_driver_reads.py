@@ -146,8 +146,19 @@ def _spark_fuzzy(spark, d, q) -> list:
     return [(r["term"], int(r["dist"])) for r in rows]
 
 
-def _spark_doc_values(spark, d, nr) -> dict:
-    """{segment_id: sorted docs} of a doc-values filter over the norms scan."""
+def _end_to_end(d, pdf: pd.DataFrame) -> pd.DataFrame:
+    """`pdf`'s rows in global docIDs: each segment's rows sorted by
+    doc_id and shifted by its doc_base, the segments laid end to end in
+    doc_base order."""
+    parts = []
+    for s in sorted(mf.read_manifest(d)["segments"], key=lambda s: s["doc_base"]):
+        g = pdf[pdf["segment_id"] == s["segment_id"]].sort_values("doc_id")
+        parts.append(g.assign(doc_id=g["doc_id"].to_numpy(np.int64) + s["doc_base"]))
+    return pd.concat(parts)
+
+
+def _spark_doc_values(spark, d, nr) -> np.ndarray:
+    """The global docs of a doc-values filter over the norms scan."""
     if isinstance(nr, RangeField):
         def rel(name):
             cond = F.lit(True)
@@ -168,7 +179,7 @@ def _spark_doc_values(spark, d, nr) -> dict:
         if nr.upper is not None:
             cond = cond & (F.col(nr.field) <= int(nr.upper))
     pdf = _norms(spark, d).where(cond).select("segment_id", "doc_id").toPandas()
-    return {sid: np.sort(g.to_numpy(np.int64)) for sid, g in pdf.groupby("segment_id")["doc_id"]}
+    return _end_to_end(d, pdf)["doc_id"].to_numpy(np.int64)
 
 
 # ---------------- the term dictionary --------------------------------------
@@ -262,11 +273,9 @@ DV = [
 def test_doc_values_sets_equal_the_norms_filter(spark, index, nr):
     m = mf.read_manifest(index)
     got = S._doc_values(index, m, {nr}, set())
-    want = _spark_doc_values(spark, index, nr)
-    assert set(got) == {s["segment_id"] for s in m["segments"]}
-    for sid, sets in got.items():
-        np.testing.assert_array_equal(sets[S.K.numeric_set_id(nr)],
-                                      want.get(sid, np.empty(0, np.int64)))
+    assert set(got) == {S.K.numeric_set_id(nr)}
+    np.testing.assert_array_equal(got[S.K.numeric_set_id(nr)],
+                                  _spark_doc_values(spark, index, nr))
 
 
 def test_value_sources_read_the_live_generation(spark, index):
@@ -274,12 +283,12 @@ def test_value_sources_read_the_live_generation(spark, index):
     got = S._doc_values(index, m, set(), {"dl", "n_chars"})
     pdf = _norms(spark, index).select("segment_id", "doc_id", "dl", "n_chars").toPandas()
     assert (pdf["dl"] == 77).sum() >= 7  # the generation's updated values
-    for sid, g in pdf.groupby("segment_id"):
-        g = g.sort_values("doc_id")
-        for f in ("dl", "n_chars"):
-            docs, vals = got[sid][f"values:{f}"]
-            np.testing.assert_array_equal(docs, g["doc_id"].to_numpy(np.int64))
-            np.testing.assert_array_equal(vals, g[f].to_numpy(np.float64))
+    want = _end_to_end(index, pdf)
+    assert set(got) == {"values:dl", "values:n_chars"}
+    for f in ("dl", "n_chars"):
+        docs, vals = got[f"values:{f}"]
+        np.testing.assert_array_equal(docs, want["doc_id"].to_numpy(np.int64))
+        np.testing.assert_array_equal(vals, want[f].to_numpy(np.float64))
 
 
 def test_unknown_doc_values_field_raises_before_any_route(searcher, monkeypatch):

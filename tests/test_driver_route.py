@@ -14,9 +14,12 @@ shapes must match the brute-force oracle. Random query trees (Lucene's
 QueryUtils.check posture) mix Term, Phrase, nested Bool, Boost,
 ConstantScore, nested and top-level Prefix/Wildcard/Regexp/TermRange,
 Fuzzy, NumericRange/NumericSet/RangeField filters, a FunctionScore, a
-bare MatchAll and a MatchAll in a Bool; rescore must agree between its
-routes too, and so must payload queries and an index whose merged
-segment is forced above WAND_WINDOW.
+bare MatchAll and a MatchAll in a Bool, and explain must give each
+tree's top hit its score; rescore must agree between its routes too,
+and so must payload queries and an index whose merged segment is forced
+above WAND_WINDOW. Hits carry global docIDs from slice to result: the
+Spark route returns one row per (query, slice), and a hit maps back
+past an empty segment to the segment that holds it.
 """
 
 import math
@@ -26,7 +29,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from lucene_solr_1_spark.corpus import KEYWORDS, make_corpus_pandas
+from lucene_solr_1_spark.corpus import CORPUS_DDL, KEYWORDS, make_corpus_pandas
 from lucene_solr_1_spark.index import deletes as D
 from lucene_solr_1_spark.index import manifest as mf
 from lucene_solr_1_spark.index.builder import add_documents, build_index
@@ -333,10 +336,108 @@ def test_random_trees_agree_on_every_entry_point(routed, monkeypatch):
         if isinstance(q, (Prefix, Wildcard, Regexp, TermRange, MatchAll)):
             assert (hits["score"] == 1.0).all(), q
         if len(hits):
+            top = s.explain(q, int(hits["global_doc_id"].iloc[0]))
+            assert np.float32(top["value"]) == hits["score"].iloc[0], q
             after = (float(hits["score"].iloc[-1]), int(hits["global_doc_id"].iloc[-1]))
             _three_routes(s, monkeypatch, q, route=route, after=after)
         if not _has_phrase(q):  # LM similarities score single-term stats only
             _three_routes(s, monkeypatch, q, route=route, similarity="lmd")
+
+
+def test_explain_reads_the_doc_values_search_scores_with(routed):
+    """A hit of a doc-values FILTER and of a FunctionScore explains to its
+    float32 score on the driver route, from whichever segment of the
+    five-segment slice it comes; a docID outside the index raises."""
+    s, _, _ = routed
+    for q in (Bool.of((Occur.MUST, Term("return")),
+                      (Occur.FILTER, NumericRange("dl", 0, 100000))),
+              FunctionScore(Term("return"), "dl", "multiply", 0.01)):
+        assert _route(s, q) == "driver"
+        hits = s.search(q, k=K, with_stored=False)
+        assert len(hits) == K and hits["segment_id"].nunique() > 1, q
+        for gid, score in zip(hits["global_doc_id"], hits["score"]):
+            assert np.float32(s.explain(q, int(gid))["value"]) == score, (q, gid)
+        for gid in (-1, sum(sl.n_docs for sl in s._slices)):
+            with pytest.raises(ValueError, match="not in the index"):
+                s.explain(q, gid)
+
+
+def test_spark_route_returns_one_row_per_query_and_slice(routed, monkeypatch, tmp_path):
+    """A forced Spark search_many of three queries over the one slice of
+    five segments gets one mapInPandas row per query, and each query's
+    total_hits is the driver's, also on a page past a query's last hit,
+    which is empty."""
+    s, oracle, deleted = routed
+    path = sorted(set(oracle.pdf["path"]) - deleted)[0]
+    queries = {
+        "term": Term("return"),
+        "or": Bool.of((Occur.SHOULD, Term("return")), (Occur.SHOULD, Term("class"))),
+        "path": Term(path, field="path"),
+    }
+    driver = s.search_many(queries, k=K)
+    hit = driver[driver["query"] == "path"]
+    after = (float(hit["score"].iloc[0]), int(hit["global_doc_id"].iloc[0]))
+    s._result_cache.clear()
+    driver_page = s.search(queries["path"], k=K, with_stored=False, after=after)
+    log = tmp_path / "rows"
+    task = S._slice_task
+
+    def counted(batches, **kw):  # runs in the Python worker: logs to a file
+        for out in task(batches, **kw):
+            with open(log, "a") as fh:
+                fh.write(f"{len(out)}\n")
+            yield out
+
+    def rows() -> list:
+        got = [int(n) for n in log.read_text().split()]
+        log.unlink()
+        return got
+
+    monkeypatch.setattr(S, "_slice_task", counted)
+    monkeypatch.setattr(S, "MAX_DOCS_PER_SLICE", -1)
+    dispatched = s.search_many(queries, k=K)
+    assert rows() == [3]
+    assert dispatched.attrs == driver.attrs
+    assert driver.attrs["total_hits"]["term"] > K
+    pd.testing.assert_frame_equal(dispatched, driver)
+    s._result_cache.clear()
+    page = s.search(queries["path"], k=K, with_stored=False, after=after)
+    assert rows() == [1]
+    assert len(page) == 0 and page.attrs == driver_page.attrs
+    assert page.attrs["total_hits"] == 1
+
+
+def test_hits_locate_past_an_empty_segment(spark, tmp_path, monkeypatch):
+    """An index built from no rows holds one empty segment, whose doc_base
+    the appended segment shares: every hit of the driver, cache and
+    forced Spark routes, of rescore and of search_sorted names the
+    appended segment, and its doc_base plus doc_id is its global docID."""
+    corpus = make_corpus_pandas(12)
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(corpus.iloc[:0], schema=CORPUS_DDL), d,
+                num_segments=2, index_sort="n_chars")
+    add_documents(spark, spark.createDataFrame(corpus), d, num_segments=1)
+    s = S.LuceneSparkSearcher(spark, d)
+    (empty,) = [sid for sid, n in s.seg_doc_count.items() if n == 0]
+    (full,) = [sid for sid, n in s.seg_doc_count.items() if n == len(corpus)]
+    assert s.doc_base[empty] == s.doc_base[full] == 0
+    q = Term("return")
+
+    def check(hits):
+        assert len(hits) and (hits["segment_id"] == full).all()
+        np.testing.assert_array_equal(
+            hits["segment_id"].map(s.doc_base) + hits["doc_id"], hits["global_doc_id"])
+
+    check(s.search(q, k=K, with_stored=True))
+    check(s.search_local(q, k=K))
+    check(s.rescore(q, Term("class"), first_k=K, k=K))
+    check(s.search_sorted(q, k=K))
+    with monkeypatch.context() as m:
+        m.setattr(S, "MAX_DOCS_PER_SLICE", -1)
+        s._result_cache.clear()
+        check(s.search(q, k=K, with_stored=True))
+        check(s.rescore(q, Term("class"), first_k=K, k=K))
+        check(s.search_sorted(q, k=K))
 
 
 def test_after_page_counts_every_match(routed, monkeypatch):

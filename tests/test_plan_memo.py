@@ -155,7 +155,6 @@ def test_routes_leave_the_shared_plan_unchanged(spark, index, monkeypatch):
             after = (float(hits["score"].iloc[-1]), int(hits["global_doc_id"].iloc[-1]))
             _three_routes(s, monkeypatch, q, route=_route(s, q), after=after)
             s.rescore(Term("return"), q, first_k=20, k=K_TOP)
-            if not (prepared.nrs or prepared.vsf):  # explain reads no doc values
-                s.explain(q, int(hits["global_doc_id"].iloc[0]))
+            s.explain(q, int(hits["global_doc_id"].iloc[0]))
         assert s._prepare(q) is prepared, q
         assert _same(prepared.plan, before), q
