@@ -1,16 +1,20 @@
 """Per-segment DAAT scoring kernels — pure NumPy, run inside Arrow UDFs.
 
-Two physical strategies over the same logical plan (results identical,
-equivalence-tested per TestBlockMaxConjunction/TestApproximationSearchEquivalence):
+One scorer (eval_node), driven two ways over the same logical plan
+(results identical, equivalence-tested per
+TestBlockMaxConjunction/TestApproximationSearchEquivalence):
 
 - exhaustive: decode every posting block of the query terms, vector-score,
   select top-k (the reference's non-TOP_SCORES path).
-- block-max WAND: per-block score upper bounds from the stored impact
-  metadata (block_max_freq, block_min_norm) let whole windows of the doc
-  space be skipped once the top-k floor θ exceeds their UB
+- block-max WAND: bounds and picks windows, never scores. Per-window
+  score upper bounds from the stored impact metadata (block_max_freq,
+  block_min_norm) order fixed windows of the doc space
   (search/WANDScorer.java, search/ImpactsDISI.java:95-127,
-  search/MaxScoreCache.java:61-124). Windows are processed in descending
-  UB order, so the first non-competitive window ends the search (MaxScore).
+  search/MaxScoreCache.java:61-124). The windows are scored in
+  descending bound order in batches of 1, 2, 4, ..., each batch by one
+  eval_node call over a view of the segment cut to its windows; θ (the
+  kth score so far) is recomputed after each batch, and the first window
+  whose bound is below θ ends the search (MaxScore).
 
 Per-clause scores are float32 (kernels/bm25.py, bit-order-exact);
 disjunction sums accumulate in float64 and cast to float32 at the end
@@ -910,22 +914,27 @@ def _eval_conjunction(by: dict, msm: int, seg, cache):
     lists = [seg.postings(_node_key(nd, nd["term"]))[0] if ev is None else ev[0]
              for nd, ev in zip(by["MUST"], musts)]
     lists += [_match_docs(nd, seg, cache) for nd in by["FILTER"]]
-    lists.sort(key=len)
-    cand = lists[0]
-    for d in lists[1:]:
+    # shortest first; at[i] holds the candidates' positions in lists[i]
+    rank = sorted(range(len(lists)), key=lambda i: len(lists[i]))
+    cand = lists[rank[0]]
+    at = {rank[0]: np.arange(len(cand))}
+    for i in rank[1:]:
         if not len(cand):
             break
-        cand = cand[_member(cand, d)[0]]
+        hit, idx = _member(cand, lists[i])
+        cand = cand[hit]
+        at = {j: p[hit] for j, p in at.items()}
+        at[i] = idx[hit]
     if not len(cand):
         return _EMPTY_I, _EMPTY_F
     scores = np.zeros(len(cand), dtype=np.float64)
-    for nd, ev in zip(by["MUST"], musts):
+    for i, (nd, ev) in enumerate(zip(by["MUST"], musts)):
         if ev is None:
-            docs, freqs, norms = seg.postings(_node_key(nd, nd["term"]))
-            idx = np.searchsorted(docs, cand)
+            _docs, freqs, norms = seg.postings(_node_key(nd, nd["term"]))
+            idx = at[i]
             scores += _score_postings(nd, freqs[idx], norms[idx], cache).astype(np.float64)
         else:
-            scores += ev[1][np.searchsorted(ev[0], cand)]
+            scores += ev[1][at[i]]
     if by["SHOULD"]:
         scnt = np.zeros(len(cand), dtype=np.int64)
         for nd in by["SHOULD"]:
@@ -958,8 +967,9 @@ def _eval_disjunction(shoulds: list, msm: int, seg, cache):
     docs, inv = np.unique(alldocs, return_inverse=True)
     scores = np.zeros(len(docs), dtype=np.float64)
     np.add.at(scores, inv, allscores)
-    cnt = np.bincount(inv, minlength=len(docs))
-    keep = cnt >= msm
+    if msm <= 1:  # every doc of the union matches a clause
+        return docs, scores
+    keep = np.bincount(inv, minlength=len(docs)) >= msm
     return docs[keep], scores[keep]
 
 
@@ -2312,43 +2322,6 @@ def wand_applicable(plan: dict) -> bool:
     return False
 
 
-def _wand_groups(plan: dict):
-    """[(required, scoring, mode, param, [((field, term), node), ...])] —
-    one group per clause. mode "dismax" combines member SCORES under
-    param = tie ((1-tie)·max + tie·sum; a plain term is the tie-0
-    singleton degenerate); mode "syn" merges member IMPACTS (freqs sum,
-    norms agree) and scores ONCE through param = the synonym node
-    (SynonymQuery.java impact merging). required: conjunction member
-    (MUST/FILTER); scoring: contributes to the sum (not FILTER)."""
-    def entry(nd):
-        return (_node_key(nd, nd["term"]), nd)
-
-    def syn_group(required, scoring, nd):
-        members = [(_node_key(nd, t), nd) for t in nd["terms"]]
-        return (required, scoring, "syn", nd, members)
-
-    if plan["type"] == "term":
-        return [(False, True, "dismax", 0.0, [entry(plan)])]
-    if plan["type"] == "dismax":
-        return [(False, True, "dismax", float(plan["tie"]),
-                 [entry(sub) for sub in plan["nodes"]])]
-    if plan["type"] == "synonym":
-        return [syn_group(False, True, plan)]
-    out = []
-    for cl in plan["clauses"]:
-        nd = cl["node"]
-        required = cl["occur"] in ("MUST", "FILTER")
-        scoring = cl["occur"] != "FILTER"
-        if nd["type"] == "dismax":
-            out.append((required, scoring, "dismax", float(nd["tie"]),
-                        [entry(sub) for sub in nd["nodes"]]))
-        elif nd["type"] == "synonym":
-            out.append(syn_group(required, scoring, nd))
-        else:
-            out.append((required, scoring, "dismax", 0.0, [entry(nd)]))
-    return out
-
-
 def _wand_weight_positive(node: dict) -> bool:
     """True iff every posting of this node scores STRICTLY > 0 — the
     safety condition for pruning UB-0 windows. BM25: weight > 0 (idf > 0
@@ -2370,242 +2343,184 @@ def _spec_positive(spec: dict) -> bool:
     return spec["boost"] > 0
 
 
+def _window_geometry(seg: SegmentData, key, window: int, n_win: int):
+    """(block max freqs, block min norms, covered windows, reduce index) of
+    `key`'s posting blocks, or None when `seg` has no such key; memoized
+    in `seg`'s decode memo, so a warm query only scores the impacts.
+
+    Block b holds the docs (last[b-1], last[b]]; the blocks overlapping
+    window w are the run [a_w, b_w), and w is covered when the run is not
+    empty. The reduce index interleaves each covered window's (a_w, b_w),
+    so `ufunc.reduceat(vals, idx)[::2]` reduces each covered window's
+    blocks; the impact arrays carry one trailing copy of block 0 for the
+    end index b_w = n_blocks."""
+    memo = (key, "wand", window, n_win)
+    if memo in seg._decoded:
+        return seg._decoded[memo]
+    r = seg.rows.get(key)
+    got = None
+    if r is not None:
+        last = np.asarray(r.block_last_doc, dtype=np.int64)
+        first = np.concatenate(([0], last[:-1] + 1))
+        starts = np.arange(n_win, dtype=np.int64) * window
+        a = np.searchsorted(last, starts)
+        b = np.searchsorted(first, starts + window)
+        win = np.flatnonzero(b > a)
+        maxf, minn = (np.asarray(v, dtype=np.int64)
+                      for v in (r.block_max_freq, r.block_min_norm))
+        got = (np.append(maxf, maxf[0]), np.append(minn, minn[0]), win,
+               np.column_stack((a[win], b[win])).ravel())
+    seg._decoded[memo] = got
+    return got
+
+
+def _window_bounds(node: dict, seg: SegmentData, cache, window: int,
+                   n_win: int):
+    """Each window's score upper bound for a wand_applicable node, from
+    the stored impacts (ImpactsDISI/MaxScoreCache), or None when a scoring
+    leaf can score 0 (its zero-score matches would sit in bound-0
+    windows). Every leaf weight is positive, so a bound is 0 exactly
+    where the node cannot match.
+
+    - term: the max over the window's blocks of the impact (max freq,
+      min norm) scored through the node's own similarity — a bound
+      because every WAND-safe sim is monotone ↑freq/↓dl
+      (SimScorer.score(maxFreq, minNorm));
+    - synonym: impacts merged first (SynonymQuery's impact merging): Σ
+      member max-freqs scored once against the member-min norm;
+    - dismax (0 <= tie <= 1): (1-tie)·max + tie·sum of the member
+      bounds, a monotone combiner;
+    - bool (MUST/SHOULD): the sum of the clause bounds, 0 wherever a
+      MUST clause's is (BlockMaxConjunctionScorer's lead skip)."""
+    t = node["type"]
+    if t in ("term", "synonym"):
+        if not _wand_weight_positive(node):
+            return None
+        ub = np.zeros(n_win, dtype=np.float64)
+        if t == "term":
+            g = _window_geometry(seg, _node_key(node, node["term"]), window, n_win)
+            if g is not None:
+                maxf, minn, win, idx = g
+                s = _score_postings(node, maxf, minn, cache).astype(np.float64)
+                ub[win] = np.maximum.reduceat(s, idx)[::2]
+            return ub
+        freqs = np.zeros(n_win, dtype=np.int64)
+        norms = np.full(n_win, 255, dtype=np.int64)
+        covered = np.zeros(n_win, dtype=bool)
+        for term in node["terms"]:
+            g = _window_geometry(seg, _node_key(node, term), window, n_win)
+            if g is not None:
+                maxf, minn, win, idx = g
+                freqs[win] += np.maximum.reduceat(maxf, idx)[::2]
+                norms[win] = np.minimum(norms[win], np.minimum.reduceat(minn, idx)[::2])
+                covered[win] = True
+        ub[covered] = _score_postings(node, freqs[covered], norms[covered], cache)
+        return ub
+    if t == "dismax":
+        subs = [_window_bounds(sub, seg, cache, window, n_win) for sub in node["nodes"]]
+        if any(s is None for s in subs):
+            return None
+        gmax, gsum = subs[0].copy(), subs[0].copy()
+        for s in subs[1:]:
+            np.maximum(gmax, s, out=gmax)
+            gsum += s
+        return gmax + float(node["tie"]) * (gsum - gmax)
+    ub = np.zeros(n_win, dtype=np.float64)
+    must = np.ones(n_win, dtype=bool)
+    for cl in node["clauses"]:
+        s = _window_bounds(cl["node"], seg, cache, window, n_win)
+        if s is None:
+            return None
+        ub += s
+        if cl["occur"] == "MUST":
+            must &= s > 0
+    ub[~must] = 0.0
+    return ub
+
+
+class _WindowView(SegmentData):
+    """`seg` read inside the windows `wins` (sorted window indices):
+    postings() and docs() are `seg`'s decoded arrays (its memo) cut by
+    `searchsorted` to the docs of those windows — a slice, not a copy,
+    where they are one run of the array. A wand_applicable plan reads
+    nothing else, so the view holds no rows or positions of its own."""
+
+    def __init__(self, seg: SegmentData, wins: np.ndarray, window: int):
+        self.n_docs, self.allowed = seg.n_docs, seg.allowed
+        self._seg, self._cuts = seg, {}
+        self._lo = wins * window
+        self._hi = self._lo + window
+
+    def _take(self, docs: np.ndarray):
+        a = np.searchsorted(docs, self._lo)
+        b = np.searchsorted(docs, self._hi)
+        if (a[1:] == b[:-1]).all():
+            return slice(a[0], b[-1])
+        return _run_take(a, b - a)
+
+    def postings(self, key):
+        got = self._cuts.get(key)
+        if got is None:
+            docs, freqs, norms = self._seg.postings(key)
+            idx = self._take(docs)
+            got = self._cuts[key] = (docs[idx], freqs[idx], norms[idx])
+        return got
+
+    def docs(self, key) -> np.ndarray:
+        d = self._seg.docs(key)
+        return d[self._take(d)]
+
+
 def score_wand(plan: dict, seg: SegmentData, cache: np.ndarray, k: int,
                window: int = WAND_WINDOW, after=None, doc_base: int = 0,
                deleted=None):
-    """Block-max pruned top-k — identical results to score_exhaustive.
+    """Block-max pruned top-k — identical results to score_exhaustive,
+    because the exhaustive evaluator scores every doc: this code only
+    bounds and picks windows (WANDScorer/ImpactsDISI pick the docs, the
+    leaf scorers score them).
 
-    Doc space is cut into fixed windows; each window's UB = Σ_t max UB of
-    the blocks of t overlapping it (from stored impacts). Windows are
-    visited in UB-descending order; once θ (kth score so far) ≥ next UB,
-    the remaining windows can never contribute — stop (MaxScore/BMW hybrid,
-    safe because UB bounds every doc score in the window).
-    """
-    groups = _wand_groups(plan)
-    if groups is None or any(
-        not _wand_weight_positive(nd)
-        for req, sc, mode, param, members in groups if sc
-        for _, nd in members
-    ):
+    The doc space is cut into windows of `window` docs with upper bounds
+    from the stored impacts (_window_bounds), visited in bound order in
+    batches of 1, 2, 4, ... windows. Each batch is one eval_node call
+    over a _WindowView of its windows; after it the live, after and top-k
+    steps run and θ (the kth score so far) is recomputed. A batch ends
+    before the first window of bound 0 (it holds no match, and nor does
+    any later one) or of bound strictly below θ (no doc there can enter
+    the top k: an equal bound may still hold an equal score with a
+    smaller docID, which wins the tie-break, HitQueue.java), and the
+    scoring stops there. The count is exact (EQUAL_TO) unless a window
+    of positive bound was left unscored."""
+    n_win = max(1, -(-seg.n_docs // window))
+    ub = _window_bounds(plan, seg, cache, window, n_win)
+    if ub is None:
         # zero-weight scoring terms (boost 0) produce UB-0 windows whose
         # legitimate zero-score matches pruning would drop — exhaustive
         return score_exhaustive(
             plan, seg, cache, k, after=after, doc_base=doc_base, deleted=deleted
         )
-    n_win = max(1, -(-seg.n_docs // window))
-    win_ub = np.zeros(n_win, dtype=np.float64)
-    group_info = []
-    for required, scoring, mode, param, members in groups:
-        present = []
-        # dismax accumulators (scored member UBs)
-        gmax = gsum = None
-        # synonym accumulators (merged impacts: Σ max-freq, min norm)
-        fsum = nmin = None
-        gcov = None
-        for key, node in members:
-            r = seg.rows.get(key)
-            if r is None:
-                continue
-            blk_last = np.asarray(r.block_last_doc, dtype=np.int64)
-            blk_maxf = np.asarray(r.block_max_freq, dtype=np.int64)
-            blk_minn = np.asarray(r.block_min_norm, dtype=np.int64)
-            # block b covers (blk_last[b-1], blk_last[b]] → window range
-            blk_first = np.concatenate(([0], blk_last[:-1] + 1))
-            w_lo = blk_first // window
-            w_hi = blk_last // window
-            covered = np.zeros(n_win, dtype=bool)
-            covered[w_lo] = True
-            covered[w_hi] = True
-            span = w_hi - w_lo - 1  # interior windows of blocks spanning >= 3
-            m = span > 0
-            interior = (
-                _run_take((w_lo + 1)[m], span[m]) if m.any() else None
-            )
-            if interior is not None:
-                covered[interior] = True
-
-            def scatter(vals, init, op):
-                # per-term per-window reduce over block values — vectorized
-                # scatter over window endpoints + (rare) interiors: a hot
-                # term's ~78k blocks/segment must not become a Python loop
-                out = np.full(n_win, init, dtype=np.float64)
-                op(out, w_lo, vals)
-                op(out, w_hi, vals)
-                if interior is not None:
-                    op(out, interior, np.repeat(vals[m], span[m]))
-                return out
-
-            if mode == "dismax":
-                # UB scored through the node's OWN similarity over the
-                # impact pair (max freq, min norm): valid because every
-                # supported sim is monotone ↑freq/↓dl and float-rounded
-                # compositions of monotone ops stay monotone
-                # (SimScorer.score(maxFreq, minNorm) analog)
-                ub = _score_postings(node, blk_maxf, blk_minn, cache).astype(
-                    np.float64
-                )
-                tmax = scatter(ub, 0.0, np.maximum.at)
-                if gmax is None:
-                    gmax, gsum = tmax.copy(), tmax.copy()
-                else:
-                    np.maximum(gmax, tmax, out=gmax)
-                    gsum += tmax
-            else:  # "syn": merge impacts, score once afterwards
-                tf_w = scatter(blk_maxf.astype(np.float64), 0.0, np.maximum.at)
-                tn_w = scatter(blk_minn.astype(np.float64), 255.0, np.minimum.at)
-                if fsum is None:
-                    fsum, nmin = tf_w.copy(), tn_w.copy()
-                else:
-                    fsum += tf_w
-                    np.minimum(nmin, tn_w, out=nmin)
-            present.append((key, node, r))
-            gcov = covered.copy() if gcov is None else (gcov | covered)
-        if not present:
-            if required:
-                # a MUST group with no member in the segment ⇒ no matches
-                return _EMPTY_I, np.empty(0, dtype=F32), 0, "EQUAL_TO"
-            continue
-        if scoring:
-            if mode == "dismax":
-                # group window UB = (1-tie)*max + tie*sum of member UBs —
-                # monotone combiner, so it bounds every doc in the window
-                win_ub += gmax + param * (gsum - gmax)
-            else:
-                # merged-impacts UB: Σ member max-freqs scored against the
-                # member-min norm bounds every doc's summed-freq score
-                # (freq-monotone ↑, dl-monotone ↓)
-                gub = _score_postings(
-                    param, fsum.astype(np.int64), nmin.astype(np.int64), cache
-                ).astype(np.float64)
-                gub[~gcov] = 0.0
-                win_ub += gub
-        if required:
-            # conjunction member: windows where NO member has a block can
-            # never match (BlockMaxConjunctionScorer lead-iterator skip)
-            win_ub[~gcov] = 0.0
-        group_info.append((required, scoring, mode, param, present))
-    if not group_info:
-        return _EMPTY_I, np.empty(0, dtype=F32), 0, "EQUAL_TO"
-
-    order = np.argsort(-win_ub, kind="stable")
-    best_docs = _EMPTY_I
-    best_scores = np.empty(0, dtype=F32)
-    theta = -np.inf
-    total = 0
-    pruned = False
-    for w in order:
-        if win_ub[w] <= 0:
-            # every weight is positive, so a UB-0 window (and every later
-            # one) holds no match: the count so far is exact
+    order = np.argsort(-ub, kind="stable")
+    ub = ub[order]
+    best_docs, best_scores = _EMPTY_I, np.empty(0, dtype=F32)
+    theta, total, pos, size = -np.inf, 0, 0, 1
+    while pos < n_win:
+        bounds = ub[pos:pos + size]
+        # bounds descend, so the windows to score are a prefix
+        n = int(np.count_nonzero((bounds > 0) & (bounds >= theta)))
+        if n:
+            view = _WindowView(seg, np.sort(order[pos:pos + n]), window)
+            docs, scores64 = eval_node(plan, view, cache)
+            docs, scores64 = apply_live(docs, scores64, deleted)
+            total += len(docs)
+            docs, scores64 = apply_after(docs, scores64, after, doc_base)
+            best_docs, best_scores = top_k(
+                np.concatenate((best_docs, docs)),
+                np.concatenate((best_scores.astype(np.float64), scores64)), k)
+            if len(best_docs) >= k:
+                theta = float(best_scores[-1])
+            pos += n
+        if n < len(bounds):
             break
-        # strict <: a window whose UB equals θ may still hold an equal-score
-        # doc with a SMALLER docID, which wins the tie-break (HitQueue.java)
-        if len(best_docs) >= k and win_ub[w] < theta:
-            pruned = True
-            break
-        lo_doc, hi_doc = w * window, (w + 1) * window
-        # gather (doc, score) within this window across groups
-        req_parts, opt_parts = [], []
-        window_dead = False
-        for required, scoring, mode, param, present in group_info:
-            if mode == "syn":
-                # merge member impacts inside the window, score ONCE —
-                # the same unique + freq-sum ops as the exhaustive
-                # synonym eval, so WAND stays bit-identical
-                mdocs, mfreqs, mnorms = [], [], []
-                for key, node, r in present:
-                    docs, freqs, norms = seg.postings(key)
-                    a = np.searchsorted(docs, lo_doc)
-                    b = np.searchsorted(docs, hi_doc)
-                    if a == b:
-                        continue
-                    mdocs.append(docs[a:b])
-                    mfreqs.append(freqs[a:b])
-                    mnorms.append(norms[a:b])
-                if not mdocs:
-                    if required:
-                        window_dead = True
-                        break
-                    continue
-                alld = np.concatenate(mdocs)
-                dd, inv = np.unique(alld, return_inverse=True)
-                fr = np.zeros(len(dd), dtype=np.int64)
-                np.add.at(fr, inv, np.concatenate(mfreqs))
-                nr = np.zeros(len(dd), dtype=np.int64)
-                nr[inv] = np.concatenate(mnorms)  # same doc ⇒ same norm
-                if scoring:
-                    sgrp = _score_postings(param, fr, nr, cache).astype(
-                        np.float64
-                    )
-                else:
-                    sgrp = np.zeros(len(dd), dtype=np.float64)
-                (req_parts if required else opt_parts).append((dd, sgrp))
-                continue
-            mdocs, mscores = [], []
-            for key, node, r in present:
-                docs, freqs, norms = seg.postings(key)
-                a = np.searchsorted(docs, lo_doc)
-                b = np.searchsorted(docs, hi_doc)
-                if a == b:
-                    continue
-                dd = docs[a:b]
-                if scoring:
-                    sc = _score_postings(
-                        node, freqs[a:b], norms[a:b], cache
-                    ).astype(np.float64)
-                else:
-                    sc = np.zeros(len(dd), dtype=np.float64)  # FILTER: no score
-                mdocs.append(dd)
-                mscores.append(sc)
-            if not mdocs:
-                if required:
-                    window_dead = True
-                    break
-                continue
-            if len(mdocs) == 1:
-                dd, sgrp = mdocs[0], mscores[0]
-            else:
-                # dismax combine inside the window — the same unique +
-                # scatter max/sum ops as _eval_dismax, so WAND stays
-                # bit-identical to the exhaustive path
-                alld = np.concatenate(mdocs)
-                alls = np.concatenate(mscores)
-                dd, inv = np.unique(alld, return_inverse=True)
-                mx = np.zeros(len(dd), dtype=np.float64)
-                np.maximum.at(mx, inv, alls)
-                sm = np.zeros(len(dd), dtype=np.float64)
-                np.add.at(sm, inv, alls)
-                sgrp = mx + param * (sm - mx)
-            (req_parts if required else opt_parts).append((dd, sgrp))
-        if window_dead or (not req_parts and not opt_parts):
-            continue
-        if req_parts:
-            # conjunction inside the window: shortest list first
-            lists = sorted((dd for dd, _ in req_parts), key=len)
-            docs_u = lists[0]
-            for dd in lists[1:]:
-                docs_u = docs_u[_member(docs_u, dd)[0]]
-            if len(docs_u) == 0:
-                continue
-            ssum = np.zeros(len(docs_u), dtype=np.float64)
-            for dd, s in req_parts:
-                ssum += s[np.searchsorted(dd, docs_u)]
-            for dd, s in opt_parts:
-                m, idx = _member(docs_u, dd)
-                ssum[m] += s[idx[m]]
-        else:
-            alld = np.concatenate([dd for dd, _ in opt_parts])
-            alls = np.concatenate([s for _, s in opt_parts])
-            docs_u, inv = np.unique(alld, return_inverse=True)
-            ssum = np.zeros(len(docs_u), dtype=np.float64)
-            np.add.at(ssum, inv, alls)
-        docs_u, ssum = apply_live(docs_u, ssum, deleted)
-        total += len(docs_u)
-        docs_u, ssum = apply_after(docs_u, ssum, after, doc_base)
-        cd = np.concatenate((best_docs, docs_u))
-        cs = np.concatenate((best_scores.astype(np.float64), ssum))
-        best_docs, best_scores = top_k(cd, cs, k)
-        if len(best_docs) >= k:
-            theta = float(best_scores[-1])
-    relation = "GREATER_THAN_OR_EQUAL_TO" if pruned else "EQUAL_TO"
-    return best_docs, best_scores, total, relation
+        size *= 2
+    pruned = pos < n_win and ub[pos] > 0
+    return best_docs, best_scores, total, (
+        "GREATER_THAN_OR_EQUAL_TO" if pruned else "EQUAL_TO")

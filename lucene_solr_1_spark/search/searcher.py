@@ -45,9 +45,14 @@ Weight once and runs it per leaf slice):
     docmaps. explain reads the slice holding its doc through the same
     views and doc-values sets.
 
-Total hits: a WAND segment kernel prunes as soon as it holds k hits and
-then reports relation GREATER_THAN_OR_EQUAL_TO, with total_hits counting
-only the windows it scored. Lucene's rule of counting exactly up to
+Total hits: a WAND segment kernel scores its windows in bound order, in
+batches of 1, 2, 4, ... windows, and stops at the first window whose
+bound is below θ, the kth score after the batches before it. If it left
+a window that could match, it reports relation GREATER_THAN_OR_EQUAL_TO,
+and total_hits counts only the windows it scored: every window of a
+batch counts, so the total can exceed what a window-at-a-time scorer
+would report.
+Lucene's rule of counting exactly up to
 TOTAL_HITS_THRESHOLD = 1000 hits (IndexSearcher.java:101) before pruning
 is not implemented. A segment of at most K.WAND_WINDOW docs is scored
 exhaustively, alone or in a slice, so its count is always exact. A

@@ -6,12 +6,16 @@ other tests build has segments that small, so their WAND-vs-exhaustive
 checks compare the exhaustive path with itself. Here the kernels are
 called directly on one ~600-doc segment with tombstones, with windows of
 16, 64 and 256 docs, so WAND really visits, bounds and skips windows.
+A Hypothesis differential adds random flat plans, similarities, windows
+of 16-512 docs, k, tombstones and searchAfter pages.
 """
 
 import copy
+import math
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from lucene_solr_1_spark.corpus import make_corpus_pandas
 from lucene_solr_1_spark.index.segment import build_segment_frames
@@ -19,7 +23,7 @@ from lucene_solr_1_spark.kernels import bm25
 from lucene_solr_1_spark.search import kernel as K
 from lucene_solr_1_spark.search import searcher as S
 from lucene_solr_1_spark.search.query import (
-    Bool, DisjunctionMax, Occur, Synonym, Term,
+    Bool, Boost, DisjunctionMax, Occur, Synonym, Term,
 )
 
 N_DOCS = 600
@@ -180,3 +184,112 @@ def test_score_segment_routes_by_window(segment, monkeypatch, n_docs, kernel):
     np.testing.assert_array_equal(docs, ed)
     np.testing.assert_array_equal(scores, es)
     assert total == et
+
+
+@pytest.mark.parametrize("name", list(SHAPES))
+def test_wand_scores_each_batch_with_one_eval_node(segment, monkeypatch, name):
+    """score_wand has no scorer of its own: it scores batches of 1, 2, 4,
+    ... windows, each with one top-level eval_node call over a view of
+    the batch, so 38 windows take at most ceil(log2(38)) + 1 calls."""
+    seg, _df, _n, cache, deleted = segment
+    window = 16
+    n_win = -(-seg.n_docs // window)
+    assert n_win == 38
+    plan = _plan(segment, SHAPES[name])
+    real = K.eval_node
+    depth, top = [0], [0]
+
+    def spy(node, view, cache_):
+        top[0] += depth[0] == 0
+        depth[0] += 1
+        try:
+            return real(node, view, cache_)
+        finally:
+            depth[0] -= 1
+
+    monkeypatch.setattr(K, "eval_node", spy)
+    K.score_wand(plan, seg, cache, K_TOP, window=window,
+                 doc_base=DOC_BASE, deleted=deleted)
+    assert 1 <= top[0] <= math.ceil(math.log2(n_win)) + 1
+
+
+# the fixture's hot, mid and rare terms, plus one it lacks
+_VOCAB = (HOT, HOT2, MID, MID2, RARE, RARE2, "static", "class", "id_0242",
+          "no_such_term")
+# synonyms score multi-term stats, which only these sims model
+_MULTI_TERM_SIMS = (None, "classic", "boolean")
+
+
+@st.composite
+def _wand_case(draw):
+    """A flat wand_applicable query (term, synonym and dismax leaves under
+    MUST/SHOULD) with positive boosts under a WAND-safe similarity, and a
+    window, k, tombstone set and optional searchAfter mark."""
+    sim = draw(st.sampled_from((None, *sorted(K._WAND_SAFE_SIMS))))
+    kinds = ("term", "synonym", "dismax") if sim in _MULTI_TERM_SIMS else (
+        "term", "dismax")
+    boost = st.floats(0.1, 4.0, allow_nan=False)
+
+    def term():
+        return Term(draw(st.sampled_from(_VOCAB)))
+
+    def leaf():
+        kind = draw(st.sampled_from(kinds))
+        if kind == "term":
+            q = term()
+        elif kind == "synonym":
+            q = Synonym(tuple(draw(st.lists(st.sampled_from(_VOCAB), min_size=2,
+                                            max_size=3, unique=True))))
+        else:
+            q = DisjunctionMax(tuple(term() for _ in range(draw(st.integers(1, 3)))),
+                               draw(st.floats(0.0, 1.0)))
+        return Boost(q, draw(boost)) if draw(st.booleans()) else q
+
+    if draw(st.booleans()):
+        q = leaf()
+    else:
+        occurs = draw(st.lists(st.sampled_from((Occur.MUST, Occur.SHOULD)),
+                               min_size=1, max_size=4))
+        msm = 0 if Occur.MUST in occurs else draw(st.integers(0, 1))
+        q = Bool.of(*((o, leaf()) for o in occurs), min_should_match=msm)
+    deleted = draw(st.sets(st.integers(0, N_DOCS - 1), max_size=60))
+    return (q, sim, draw(st.integers(16, 512)), draw(st.integers(1, 50)),
+            np.array(sorted(deleted), dtype=np.int64), draw(st.booleans()),
+            draw(st.integers(0, 49)))
+
+
+@settings(max_examples=150, deadline=None)
+@given(case=_wand_case())
+def test_wand_equals_exhaustive_hypothesis(segment, case):
+    """Over random flat plans, sims, windows, k, tombstones and pages,
+    score_wand returns exhaustive scoring's docs and float32 scores bit
+    for bit, its total wherever it reports EQUAL_TO, and never more."""
+    seg, df, n_docs, cache, _deleted = segment
+    q, sim_name, window, k, deleted, paged, at = case
+    sim = None if sim_name is None else {
+        "name": sim_name,
+        "ttf": {key: int(r.ttf) for key, r in seg.rows.items()},
+        "field_tokens": {"content": sum(int(r.ttf) for (f, _t), r in seg.rows.items()
+                                        if f == "content")},
+    }
+    plan = K.compile_plan(q, df, n_docs, sim=sim)
+    assert K.wand_applicable(plan)
+    kw = dict(doc_base=DOC_BASE, deleted=deleted)
+    after = None
+    if paged:
+        d, s, _t, _r = K.score_exhaustive(plan, seg, cache, 50, **kw)
+        if len(d):
+            i = at % len(d)
+            after = (float(s[i]), int(d[i]) + DOC_BASE)
+    ed, es, et, er = K.score_exhaustive(plan, seg, cache, k, after=after, **kw)
+    wd, ws, wt, wr = K.score_wand(plan, seg, cache, k, window=window,
+                                  after=after, **kw)
+    assert er == "EQUAL_TO"
+    np.testing.assert_array_equal(wd, ed)
+    assert ws.dtype == es.dtype == np.float32
+    np.testing.assert_array_equal(ws.view(np.uint32), es.view(np.uint32))
+    if wr == "EQUAL_TO":
+        assert wt == et
+    else:
+        assert wr == "GREATER_THAN_OR_EQUAL_TO" and wt <= et
+
