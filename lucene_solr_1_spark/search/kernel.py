@@ -2443,7 +2443,14 @@ class _WindowView(SegmentData):
     postings() and docs() are `seg`'s decoded arrays (its memo) cut by
     `searchsorted` to the docs of those windows — a slice, not a copy,
     where they are one run of the array. A wand_applicable plan reads
-    nothing else, so the view holds no rows or positions of its own."""
+    nothing else, so the view holds no rows or decode memo of its own, and
+    any other reader (positions(), payloads(), _parts()) fails here."""
+
+    def __getattr__(self, name):
+        # only reached for what __init__ does not set: rows and _decoded,
+        # which positions(), payloads() and _parts() read
+        raise AttributeError(
+            f"a WAND window view serves only postings() and docs(), not {name!r}")
 
     def __init__(self, seg: SegmentData, wins: np.ndarray, window: int):
         self.n_docs, self.allowed = seg.n_docs, seg.allowed

@@ -213,6 +213,22 @@ def test_wand_scores_each_batch_with_one_eval_node(segment, monkeypatch, name):
     assert 1 <= top[0] <= math.ceil(math.log2(n_win)) + 1
 
 
+def test_window_view_serves_only_postings_and_docs(segment):
+    """The batch view cuts postings() and docs() to its windows; a reader
+    it does not cut (positions, payloads, rows) fails by name instead of
+    reading the whole segment or a missing attribute."""
+    seg = segment[0]
+    view = K._WindowView(seg, np.array([1, 3]), 16)
+    docs = seg.postings(HOT)[0]
+    want = docs[((docs >= 16) & (docs < 32)) | ((docs >= 48) & (docs < 64))]
+    np.testing.assert_array_equal(view.postings(HOT)[0], want)
+    np.testing.assert_array_equal(view.docs(HOT), want)
+    for read in (lambda: view.positions(HOT), lambda: view.payloads(HOT),
+                 lambda: view.rows):
+        with pytest.raises(AttributeError, match="only postings"):
+            read()
+
+
 # the fixture's hot, mid and rare terms, plus one it lacks
 _VOCAB = (HOT, HOT2, MID, MID2, RARE, RARE2, "static", "class", "id_0242",
           "no_such_term")
